@@ -37,7 +37,7 @@ class GraftTable(
   /** The stored tombstone count, when the descriptor carries one — read
     * per call (a driver-side file read, no Spark job) so it tracks
     * appends; lets resolve's "auto" delete strategy size itself without
-    * a count job. */
+    * a count job on a flat or LG log (a bucketed read never needs it). */
   private def deleteHint: Option[Long] =
     CellLogStore.readDeleteCount(spark, logDir)
 
@@ -81,7 +81,9 @@ class GraftTable(
 
   /** Group-commit a mutation batch (any mix of puts/deletes/atomics).
     * On a hash-sharded table the batch carries LOGICAL keys and the
-    * write path prefixes them (reference mutations hash at apply time). */
+    * write path prefixes them (reference mutations hash at apply time).
+    * The stored tombstone-count hint is kept inside the same write job
+    * ([[CellLogStore.appendTracked]]). */
   def put(batch: DataFrame): Unit = {
     val missing = graft.model.CellOp.schema.fieldNames
       .filterNot(batch.columns.contains)
@@ -93,8 +95,7 @@ class GraftTable(
         batch.withColumn("row_key",
           graft.functions.cellfunctions.hashed_key(col("row_key")))
       else batch
-    CellLogStore.append(stored, logDir, desc = desc)
-    bumpDeleteHint(batch)
+    CellLogStore.appendTracked(stored, logDir, desc, opsPresent)
   }
 
   /** Group-commit ops whose row keys are ALREADY in storage space —
@@ -102,28 +103,8 @@ class GraftTable(
     * commit ops): on a hash-sharded table those keys carry the shard
     * prefix, and [[put]] would prefix them a second time, targeting
     * nonexistent rows. */
-  def putStored(batch: DataFrame): Unit = {
-    CellLogStore.append(batch, logDir, desc = desc)
-    bumpDeleteHint(batch)
-  }
-
-  /** Maintain the descriptor-carried tombstone count on the write path.
-    * Three regimes, each paying the least it can:
-    *  - declared op-set WITHOUT deletes: nothing to do — no job, no IO;
-    *  - declared WITH deletes: count the batch's tombstones (one job on
-    *    the batch the caller just materialized — the declared-deletes
-    *    table accepts that write-side cost to keep reads probe-free);
-    *  - UNDECLARED ops: don't guess — clear the stored hint (a file
-    *    touch, no job), and resolve falls back to its own count. A
-    *    wrong low hint would defeat the window strategy's OOM guard.
-    */
-  private def bumpDeleteHint(batch: DataFrame): Unit = opsPresent match {
-    case Some(ops) if !OpType.deletes.exists(ops.contains) => ()
-    case Some(_) =>
-      val n = batch.where(col("op").isin(OpType.deletes: _*)).count()
-      CellLogStore.bumpDeleteCount(spark, logDir, n)
-    case None => CellLogStore.clearDeleteCount(spark, logDir)
-  }
+  def putStored(batch: DataFrame): Unit =
+    CellLogStore.appendTracked(batch, logDir, desc, opsPresent)
 
   def put(ops: Seq[CellOp]): Unit = {
     val session = spark
@@ -377,11 +358,7 @@ object Graft {
       "cannot change the bucket count under stored data (files are physically " +
         "hash-clustered) — compact to a new dir with the new descriptor to " +
         "migrate")
-    // writeDesc rewrites the whole properties file — carry the delete
-    // hint across the swap
-    val hint = CellLogStore.readDeleteCount(spark, logDir)
     CellLogStore.writeDesc(spark, logDir, desc, ops)
-    hint.foreach(n => CellLogStore.setDeleteCount(spark, logDir, n))
     new GraftTable(spark, logDir, desc, ops)
   }
 

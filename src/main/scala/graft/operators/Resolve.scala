@@ -3,6 +3,7 @@ package graft.operators
 import graft.functions.cellfunctions._
 import graft.model.{OpType, TableDesc}
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.plans.physical.ClusteredDistribution
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -61,9 +62,10 @@ object Resolve {
       useTopKAggregate: Boolean = false,
       deleteStrategy: String = "auto",
       /** Known tombstone count of the log, when carried by a stored
-        * table's descriptor — lets "auto" pick its strategy without
-        * running a count job. A strategy HINT only: both strategies are
-        * exact, so a stale count cannot affect correctness. */
+        * table's descriptor — lets "auto" size its strategy on an
+        * unclustered log without running a count job. A strategy HINT
+        * only: both strategies are exact, so a stale count cannot
+        * affect correctness. */
       deleteCountHint: Option[Long] = None): DataFrame = {
 
     val bounded = snapshotSeq.fold(log)(s => log.where(col("seq") <= s))
@@ -105,16 +107,28 @@ object Resolve {
     //    left-join them to the data cells — no sort at all; the dels
     //    side is usually broadcast-sized. Wins when deletes are sparse,
     //    which is the realistic shape of a mutation log.
-    // "auto" counts the deletes (a pushed-filter scan of the op column)
-    // and picks join only when the tombstone side is broadcast-sized —
-    // then every per-granularity join is a broadcast and the data side
-    // never re-sorts or re-shuffles for deletes at all.
+    // "auto" picks by the input's physical layout first, its tombstone
+    // count second:
+    //  - input already clustered on row_key (a bucketed scan, through
+    //    any row_key/seq/range filter): window. Every delete window's
+    //    distribution is row_key-prefixed, so the windows plan with
+    //    ZERO exchange and drop tombstoned cells in the same ordered
+    //    pass that reads them — tera's ScanDrop shape — where a join
+    //    would add one broadcast job per granularity, each re-scanning
+    //    the same bucket files. No count is needed.
+    //  - otherwise (flat / LG-partitioned logs): count the deletes (the
+    //    ad-hoc probe, the stored hint, or a pushed-filter scan of the
+    //    op column) and pick join only when the tombstone side is
+    //    broadcast-sized — then the data side never re-sorts or
+    //    re-shuffles for deletes at all, where the window's sorts on a
+    //    shuffled log would cost more.
     val presentDels = deletes.filter(present.contains)
     val keepData = col("op").isin(dataOps.filter(present.contains): _*)
 
     val strategy =
       if (presentDels.isEmpty) "none"
       else deleteStrategy match {
+        case "auto" if clusteredOnRowKey(bounded) => "window"
         case "auto" =>
           // the probe's count is EXACT and already paid for — a stored
           // hint (possibly stale) only decides when no probe ran
@@ -390,6 +404,16 @@ object Resolve {
         .unionAll(folded(marked.where(col("_has_atomic") === 1).drop("_has_atomic"),
           presentData))
     }
+  }
+
+  /** True when the log's physical plan already delivers its rows
+    * clustered by `row_key` — a bucketed scan reports
+    * `HashPartitioning(row_key)`, and filters keep it. Plan-build-time
+    * only: planning the input runs no job. */
+  private def clusteredOnRowKey(log: DataFrame): Boolean = {
+    val plan = log.queryExecution.sparkPlan
+    plan.output.find(_.name == "row_key").exists(k =>
+      plan.outputPartitioning.satisfies(ClusteredDistribution(Seq(k))))
   }
 
   /** Wide row view — `RowReader::ToMap` equivalent

@@ -88,18 +88,19 @@ private[graft] object BucketedCatalog {
     * to it. The batch pre-shuffles onto the bucket function itself
     * (murmur3 % n — the same hash bucketBy uses), so each task owns
     * whole buckets and an append lands ONE file per bucket, not
-    * tasks×buckets files.
+    * tasks×buckets files. `aboveExchange` wraps the batch right above
+    * that shuffle (e.g. an observation counted inside the write job).
     */
   def write(batch: DataFrame, logDir: String, mode: SaveMode, n: Int,
       schema: StructType, bucketCol: String, sortCols: Seq[String],
-      bloomCol: String): Unit = {
+      bloomCol: String,
+      aboveExchange: DataFrame => DataFrame = identity): Unit = {
     val spark = batch.sparkSession
     val name = catalogName(logDir)
     if (mode == SaveMode.Append)
       ensureRegistered(spark, logDir, n, schema, bucketCol, sortCols)
     else if (spark.catalog.tableExists(name)) spark.sql(s"DROP TABLE $name")
-    batch
-      .repartition(n, col(bucketCol))
+    aboveExchange(batch.repartition(n, col(bucketCol)))
       .sortWithinPartitions(sortCols.map(col): _*)
       .write.mode(mode)
       .option(s"parquet.bloom.filter.enabled#$bloomCol", "true")

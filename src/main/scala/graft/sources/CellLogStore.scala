@@ -1,8 +1,8 @@
 package graft.sources
 
-import graft.model.{CfSpec, TableDesc}
+import graft.model.{CfSpec, OpType, TableDesc}
 import graft.operators.Resolve
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Durable cell-log storage: append-only parquet, range-clustered by
@@ -36,10 +36,20 @@ object CellLogStore {
       TableDesc.RowTombstoneLg).otherwise(byCf)
   }
 
+  /** Writes `batch` in the descriptor's layout. With `countDeletes`,
+    * also returns the batch's tombstone count, taken inside the write
+    * job itself by a Spark [[Observation]] placed ABOVE the write's
+    * exchange — below a range exchange it would count every tombstone
+    * twice, since the range partitioner's sampling job re-runs the
+    * plan under the exchange. None when the metrics never arrive. */
   private def writeBatch(batch: DataFrame, logDir: String, mode: SaveMode,
-      desc: TableDesc, numFiles: Int = 0): Unit = {
+      desc: TableDesc, numFiles: Int = 0,
+      countDeletes: Boolean = false): Option[Long] = {
     val n = if (numFiles > 0) numFiles
       else batch.sparkSession.sessionState.conf.numShufflePartitions
+    val tally = if (countDeletes) Some(Observation()) else None
+    val counted: DataFrame => DataFrame = df => tally.fold(df)(obs =>
+      df.observe(obs, count(when(col("op").isin(OpType.deletes: _*), 1))))
     // layout guard (the bucketed mirror of the LG hasFlatFiles check):
     // a flat file landing in a bucketed location poisons every later
     // catalog read with INVALID_BUCKET_FILE, and a bucketed file in a
@@ -71,10 +81,10 @@ object CellLogStore {
           "(one physical clustering per table)")
       BucketedCatalog.write(batch, logDir, mode, desc.buckets,
         graft.model.CellOp.schemaFor(desc.rawKeyBinary), "row_key",
-        CellSortCols, "row_key")
+        CellSortCols, "row_key", counted)
     } else if (desc.lgs.isEmpty)
-      writerFor(batch
-        .repartitionByRange(n, col("row_key"), col("cf"), col("qualifier"))
+      writerFor(counted(batch
+        .repartitionByRange(n, col("row_key"), col("cf"), col("qualifier")))
         .sortWithinPartitions(col("row_key"), col("cf"), col("qualifier"),
           col("ts"), col("seq")))
         .parquet(logDir)
@@ -90,15 +100,18 @@ object CellLogStore {
             "(or open it with an LG-free descriptor) before appending")
       // lg leads the range clustering so a task writes into one LG dir,
       // not a file per LG per task (small-files explosion at scale)
-      writerFor(batch
+      writerFor(counted(batch
         .withColumn("lg", lgColumn(desc))
         .repartitionByRange(n, col("lg"), col("row_key"), col("cf"),
-          col("qualifier"))
+          col("qualifier")))
         .sortWithinPartitions(col("row_key"), col("cf"), col("qualifier"),
           col("ts"), col("seq")))
         .partitionBy("lg")
         .parquet(logDir)
     }
+    tally.flatMap(obs => scala.util.Try(scala.concurrent.Await.result(
+      obs.future, scala.concurrent.duration.Duration(60, "s")).getLong(0))
+      .toOption)
   }
 
   /** True when the directory directly holds parquet data files (a flat,
@@ -115,24 +128,54 @@ object CellLogStore {
       desc: TableDesc = TableDesc()): Unit =
     writeBatch(batch, logDir, SaveMode.Append, desc, numFiles)
 
+  /** Group-commit a batch of a stored table whose log may hold the op
+    * tags `ops` (None = undeclared), keeping its tombstone-count hint
+    * current. Three regimes, each paying the least it can:
+    *  - declared op-set WITHOUT deletes: nothing to track;
+    *  - declared WITH deletes: the append's own write job counts the
+    *    batch's tombstones — no extra job;
+    *  - undeclared: don't guess — drop the stored hint (a file touch),
+    *    and resolve falls back to its own probe. A wrong low hint would
+    *    defeat the window strategy's OOM guard.
+    */
+  def appendTracked(batch: DataFrame, logDir: String, desc: TableDesc,
+      ops: Option[Set[Int]]): Unit = {
+    val spark = batch.sparkSession
+    ops match {
+      case Some(o) if !OpType.deletes.exists(o.contains) =>
+        append(batch, logDir, desc = desc)
+      case Some(_) =>
+        writeBatch(batch, logDir, SaveMode.Append, desc, countDeletes = true)
+        match {
+          case Some(n) => bumpDeleteCount(spark, logDir, n)
+          case None => clearDeleteCount(spark, logDir)
+        }
+      case None =>
+        append(batch, logDir, desc = desc)
+        clearDeleteCount(spark, logDir)
+    }
+  }
+
   /** Replace a log's content wholesale (index rebuilds, imports).
     * Parquet Overwrite clears the directory INCLUDING the metadata
     * files, so the descriptor is rewritten after the data lands. */
   def replace(batch: DataFrame, logDir: String, desc: TableDesc,
       ops: Option[Set[Int]] = None): Unit = {
     val spark = batch.sparkSession
-    writeBatch(batch, logDir, SaveMode.Overwrite, desc)
-    writeDesc(spark, logDir, desc, ops)
     // the hint must describe THIS batch, not assume it is delete-free:
     // a replacement carrying tombstones with a 0 hint would steer
     // resolve's "auto" to the broadcast-join path on an arbitrarily
-    // delete-heavy log. A declared delete-free op-set skips the count.
-    val delCount =
-      if (ops.exists(_.intersect(graft.model.OpType.deletes.toSet).isEmpty)) 0L
-      else read(spark, logDir)
-        .where(col("op").isin(graft.model.OpType.deletes.map(x => x: Any): _*))
-        .count()
-    setDeleteCount(spark, logDir, delCount)
+    // delete-heavy log. A declared delete-free op-set skips the count;
+    // otherwise the write job itself counts.
+    val deleteFree = ops.exists(o => !OpType.deletes.exists(o.contains))
+    val delCount = writeBatch(batch, logDir, SaveMode.Overwrite, desc,
+      countDeletes = !deleteFree)
+    writeDesc(spark, logDir, desc, ops)
+    if (deleteFree) setDeleteCount(spark, logDir, 0L)
+    else delCount match {
+      case Some(n) => setDeleteCount(spark, logDir, n)
+      case None => clearDeleteCount(spark, logDir)
+    }
   }
 
   /** True when the log is LG-partitioned (`lg=<name>/` directories).
@@ -270,9 +313,21 @@ object CellLogStore {
 
   private val DescFile = "_graft_desc.properties"
 
+  /** Keys [[writeDesc]] owns. Every other key in the file is engine
+    * state riding beside the descriptor (the delete hint, the txn-ts
+    * allocator) and survives a descriptor rewrite. */
+  private def isDescKey(k: String): Boolean =
+    Set("cf.default", "hashKeys", "kvMode", "rawKey", "buckets", "ops")
+      .contains(k) || k.startsWith("cf.named.") || k.startsWith("lg.")
+
   def writeDesc(spark: SparkSession, logDir: String, desc: TableDesc,
       ops: Option[Set[Int]] = None): Unit = {
     val p = new java.util.Properties()
+    loadProps(spark, logDir).foreach { old =>
+      old.stringPropertyNames().forEach { k =>
+        if (!isDescKey(k)) p.setProperty(k, old.getProperty(k))
+      }
+    }
     def put(key: String, s: CfSpec): Unit =
       p.setProperty(key, s"${s.maxVersions},${s.minVersions},${s.ttlSec}")
     put("cf.default", desc.default)
@@ -283,10 +338,7 @@ object CellLogStore {
     if (desc.buckets > 0) p.setProperty("buckets", desc.buckets.toString)
     desc.lgs.foreach { case (cf, lg) => p.setProperty(s"lg.$cf", lg) }
     ops.foreach(o => p.setProperty("ops", o.toSeq.sorted.mkString(",")))
-    val path = new org.apache.hadoop.fs.Path(logDir, DescFile)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(path, true)
-    try p.store(out, "graft table descriptor") finally out.close()
+    storeProps(spark, logDir, p)
   }
 
   def readDesc(spark: SparkSession, logDir: String)
@@ -316,12 +368,15 @@ object CellLogStore {
     }
 
   // ---- descriptor-carried delete hint ------------------------------
+  // On an input NOT already clustered by row_key (flat and LG logs),
   // Resolve's "auto" tombstone strategy sizes itself on the delete
-  // count; for a stored table that count rides the descriptor file —
-  // maintained by the write path (the side that materializes the batch
-  // anyway) — so reopening and resolving never runs a count job. The
-  // count is a strategy hint only: both strategies are exact, so a
-  // stale value cannot affect correctness.
+  // count; a bucketed read always takes the ordered window and never
+  // asks. For a stored table the count rides the descriptor file,
+  // maintained by the write path: the append's own write job counts
+  // the batch's tombstones ([[appendTracked]]), so neither a put nor a
+  // reopen-and-resolve runs a count job. The count is a strategy hint
+  // only: both strategies are exact, so a stale value cannot affect
+  // correctness.
 
   private def loadProps(spark: SparkSession, logDir: String)
       : Option[java.util.Properties] = {

@@ -492,6 +492,77 @@ class GraftApiSpec extends AnyFunSuite {
     assert(told.cells().collect().isEmpty) // fallback count still correct
   }
 
+  test("put keeps the delete hint exact on flat, bucketed and LG layouts") {
+    import graft.model.TableDesc
+    val session = spark
+    import session.implicits._
+    val ops = Some(Set(OpType.Value, OpType.DelRow, OpType.DelQualifiers))
+    // 200 cells per batch: enough rows for the flat and LG range
+    // exchanges to run their sampling job, which re-runs the plan below
+    // the exchange — a tally placed there would count twice
+    def batch(seq0: Long, dels: Int): Seq[CellOp] =
+      (0 until 200).map(i => CellOp(f"r$i%03d", "cf", "q", 100,
+        OpType.Value, "v".getBytes, seq0 + i)) ++
+      (0 until dels).map(i => CellOp(f"r$i%03d", "cf", "q", 200,
+        if (i % 2 == 0) OpType.DelRow else OpType.DelQualifiers, null,
+        seq0 + 1000 + i))
+    Seq(TableDesc(), TableDesc(buckets = 4),
+        TableDesc(lgs = Map("cf" -> "hot"))).foreach { desc =>
+      val dir = Files.createTempDirectory("graft-hint-exact").toString
+      val t = Graft.createTable(spark, dir, desc, ops)
+      t.put(batch(0L, 3).toDF())
+      t.put(batch(10000L, 4).toDF())
+      assert(graft.sources.CellLogStore.readDeleteCount(spark, dir) ==
+        Some(7L), s"layout $desc")
+      assert(t.log.where(col("op") =!= OpType.Value).count() == 7)
+    }
+  }
+
+  test("put on a declared-deletes table runs no extra job for the hint") {
+    import graft.model.TableDesc
+    val session = spark
+    import session.implicits._
+    val batch = (0 until 50).map(i => CellOp(f"r$i%03d", "cf", "q", 100,
+      if (i % 10 == 0) OpType.DelRow else OpType.Value,
+      if (i % 10 == 0) null else "v".getBytes, i.toLong)).toDF()
+    def jobsOfPut(desc: TableDesc, ops: Set[Int]): Int = {
+      val dir = Files.createTempDirectory("graft-hint-jobs").toString
+      val t = Graft.createTable(spark, dir, desc, Some(ops))
+      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        t.put(batch)
+        Thread.sleep(1000) // let listener-bus events drain
+        jobs.get()
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    Seq(TableDesc(), TableDesc(buckets = 4)).foreach { desc =>
+      val withDeletes = jobsOfPut(desc, Set(OpType.Value, OpType.DelRow))
+      val deleteFree = jobsOfPut(desc, Set(OpType.Value))
+      assert(withDeletes <= deleteFree,
+        s"layout $desc: $withDeletes jobs with deletes vs $deleteFree without")
+    }
+  }
+
+  test("alterTable keeps the txn-ts allocator") {
+    import graft.model.{CfSpec, TableDesc}
+    val dir = Files.createTempDirectory("graft-alter-txnts").toString
+    val t = Graft.createTable(spark, dir, ops = Some(Set(OpType.Value)))
+    t.put(Seq(CellOp("r", "cf", "q", 100, OpType.Value, "v".getBytes, 1)))
+    // reserved but never written: the log's max ts stays 100, so only
+    // the stored allocator knows these are taken
+    val first = t.allocateTxnTs(5)
+    val t2 = Graft.alterTable(spark, dir, TableDesc(CfSpec(maxVersions = 2)))
+    val second = t2.allocateTxnTs()
+    assert(second >= first + 5, s"reissued a reserved ts: $first then $second")
+    assert(t2.log.where(col("ts") >= first).count() == 0)
+  }
+
   test("KV table lifecycle: put / overwrite / expire / compact / reopen") {
     val dir = Files.createTempDirectory("graft-kv").toString
     val t = Graft.createKvTable(spark, dir)

@@ -134,6 +134,46 @@ class PlanSpec extends AnyFunSuite {
       plan)
   }
 
+  test("bucketed table with declared deletes: gets plan one pruned scan, no exchange") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("plan-bkt-del").toString
+    val t = Graft.createTable(spark, dir, TableDesc(buckets = 4),
+      ops = Some(Set(OpType.Value, OpType.DelRow, OpType.DelQualifiers)))
+    t.put((0 until 100).flatMap(i => Seq(
+      CellOp(f"r$i%03d", "cf", "q0", 1L, OpType.Value, s"a$i".getBytes, i * 2L),
+      CellOp(f"r$i%03d", "cf", "q1", 1L, OpType.Value, s"b$i".getBytes, i * 2L + 1)))
+      .toDF())
+    t.put(Seq(
+      CellOp("r007", "", "", 2L, OpType.DelRow, null, 300L),
+      CellOp("r042", "cf", "q0", 2L, OpType.DelQualifiers, null, 301L)).toDF())
+
+    // the bucketed scan is already clustered on row_key, so "auto"
+    // resolves the tombstones in the ordered window: no hash exchange,
+    // no BroadcastExchange, one scan pruned to the key's bucket
+    val gets = Seq(
+      "get" -> t.get("r042"),
+      "snapshot get" -> t.snapshot(299L).where(col("row_key") === "r042"))
+    gets.foreach { case (what, df) =>
+      val plan = planOf(df)
+      assert(!plan.contains("Exchange"), s"$what:\n$plan")
+      assert(!plan.contains("BroadcastExchange"), s"$what:\n$plan")
+      assert("FileScan".r.findAllIn(plan).size == 1, s"$what:\n$plan")
+      assert(plan.contains("SelectedBucketsCount: 1 out of"), s"$what:\n$plan")
+    }
+    def quals(df: org.apache.spark.sql.DataFrame): Set[String] =
+      df.collect().map(_.getAs[String]("qualifier")).toSet
+    assert(quals(t.get("r042")) == Set("q1"))
+    assert(quals(t.snapshot(299L).where(col("row_key") === "r042")) ==
+      Set("q0", "q1"))
+    assert(t.get("r007").count() == 0)
+
+    val range = t.scan.withStart("r000").withStop("r010").run()
+    val rplan = planOf(range)
+    assert(!rplan.contains("BroadcastExchange"), rplan)
+    // r007 is row-deleted: 9 rows x 2 cells
+    assert(range.count() == 18)
+  }
+
   test("KV-TTL resolve plans as hash aggregation with map-side combine") {
     val plan = planOf(graft.operators.KvStore.resolve(
       graft.sources.CellLogs.kvTtlLog(spark, sfDir), nowUs = 1700000050000000L))
