@@ -7,6 +7,7 @@ import graft.sources.{CellLogStore, Tables}
 import graft.streaming.Observers
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SortedRunsCollect
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** The user-facing SDK surface — what `tera::Client`/`tera::Table`
@@ -82,7 +83,9 @@ class GraftTable(
   /** Group-commit a mutation batch (any mix of puts/deletes/atomics).
     * On a hash-sharded table the batch carries LOGICAL keys and the
     * write path prefixes them (reference mutations hash at apply time).
-    * The stored tombstone-count hint is kept inside the same write job
+    * A local batch (`Seq[CellOp]`, `Seq.toDF`) commits from the driver
+    * with no Spark job; a distributed one is a Spark write. Either way
+    * the stored tombstone-count hint is kept without an extra job
     * ([[CellLogStore.appendTracked]]). */
   def put(batch: DataFrame): Unit = {
     val missing = graft.model.CellOp.schema.fieldNames
@@ -312,21 +315,29 @@ object Graft {
         "(one physical clustering per table)")
     CellLogStore.writeDesc(spark, logDir, desc, ops)
     CellLogStore.setDeleteCount(spark, logDir, 0L)
+    SortedRunsCollect.install(spark)
     new GraftTable(spark, logDir, desc, ops)
   }
 
   /** Open a table. A descriptor stored next to the log is authoritative
     * (like the reference's master-held schema); `desc` is the fallback
     * for bare log directories.
+    *
+    * Opening or creating a table installs the session's ordered-collect
+    * strategy ([[SortedRunsCollect]]): an ordered scan's `collect()`
+    * then merges per-partition sorted runs on the driver instead of
+    * range-shuffling the result.
     */
   def openTable(spark: SparkSession, logDir: String,
-      desc: TableDesc = TableDesc()): GraftTable =
+      desc: TableDesc = TableDesc()): GraftTable = {
+    SortedRunsCollect.install(spark)
     CellLogStore.readDesc(spark, logDir) match {
       case Some((stored, ops)) =>
         require(!stored.kvMode, s"$logDir is a KV-mode table (use openKvTable)")
         new GraftTable(spark, logDir, stored, ops)
       case None => new GraftTable(spark, logDir, desc)
     }
+  }
 
   /** Online schema change (tera `UpdateTable`, master_rpc.proto:207-216;
     * README.md:20 "online schema change"): replace the stored

@@ -22,14 +22,19 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * handler surfaces the filter/codec ops as SQL builtins).
   *
   * Injected functions are catalog-registered (not temp), so they
-  * resolve in any database context and survive `newSession()`.
+  * resolve in any database context and survive `newSession()`. The
+  * ordered-collect planner strategy
+  * ([[org.apache.spark.sql.graft.SortedRunsCollect]]) is injected too.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit = {
     Graft.functionBuilders.foreach { case (name, builder) =>
       ext.injectFunction((
         FunctionIdentifier(name),
         new ExpressionInfo("graft", name),
         builder))
     }
+    ext.injectPlannerStrategy(_ =>
+      org.apache.spark.sql.graft.SortedRunsCollect)
+  }
 }

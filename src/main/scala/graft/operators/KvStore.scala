@@ -59,14 +59,14 @@ object KvStore {
         graft.sources.BucketedCatalog.write(batch, logDir, SaveMode.Append,
           b, graft.model.KvEntry.schemaFor(
             graft.sources.CellLogStore.binaryKeyMode(spark, logDir)),
-          "key", KvSortCols, "key")
+          "key", KvSortCols)
       case None =>
         val n = spark.sessionState.conf.numShufflePartitions
         batch
           .repartitionByRange(n, col("key"))
           .sortWithinPartitions(col("key"), col("seq"))
           .write.mode(SaveMode.Append)
-          .option("parquet.bloom.filter.enabled#key", "true")
+          .options(graft.sources.CellLogStore.bloomOptions("key"))
           .parquet(logDir)
     }
   }
@@ -104,14 +104,14 @@ object KvStore {
         graft.sources.BucketedCatalog.write(live, outDir, SaveMode.Overwrite,
           b, graft.model.KvEntry.schemaFor(
             graft.sources.CellLogStore.binaryKeyMode(spark, logDir)),
-          "key", KvSortCols, "key")
+          "key", KvSortCols)
       case None =>
         val n = spark.sessionState.conf.numShufflePartitions
         live
           .repartitionByRange(n, col("key"))
           .sortWithinPartitions(col("key"))
           .write.mode(SaveMode.Overwrite)
-          .option("parquet.bloom.filter.enabled#key", "true")
+          .options(graft.sources.CellLogStore.bloomOptions("key"))
           .parquet(outDir)
     }
     graft.sources.CellLogStore.readDesc(spark, logDir).foreach {

@@ -37,15 +37,18 @@ private[graft] object BucketedCatalog {
       schema: StructType, bucketCol: String, sortCols: Seq[String]): String = {
     val name = catalogName(logDir)
     if (spark.catalog.tableExists(name)) {
-      val spec = spark.sessionState.catalog
+      val meta = spark.sessionState.catalog
         .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(name))
-        .bucketSpec
       // count AND columns: an entry bucketed on another column would
       // report the wrong partitioning, not just the wrong bucket ids
-      val specOk = spec.exists(bs => bs.numBuckets == n &&
+      val specOk = meta.bucketSpec.exists(bs => bs.numBuckets == n &&
         bs.bucketColumnNames == Seq(bucketCol) &&
         bs.sortColumnNames == sortCols)
-      if (!specOk) spark.sql(s"DROP TABLE $name")
+      // and an entry without the bloom options appends bloom-less files
+      val bloomOk = CellLogStore.bloomOptions(bucketCol).forall {
+        case (k, v) => meta.storage.properties.get(k).contains(v)
+      }
+      if (!specOk || !bloomOk) spark.sql(s"DROP TABLE $name")
     }
     if (!spark.catalog.tableExists(name)) {
       val cols = StructType(schema.map(_.copy(nullable = true))).toDDL
@@ -56,8 +59,15 @@ private[graft] object BucketedCatalog {
       // \' — Spark's lexer is backslash-style; SQL-standard doubling
       // ('') would tokenize as two adjacent strings and fail to parse
       val loc = logDir.replace("\\", "\\\\").replace("'", "\\'")
+      // writer options on an APPEND to an existing catalog table are
+      // dropped (the write takes the entry's own storage properties),
+      // so the per-file key bloom rides the entry: tera's per-SST
+      // blooms (table_schema.proto:62) let point gets skip files
+      val opts = CellLogStore.bloomOptions(bucketCol)
+        .map { case (k, v) => s"'$k' = '$v'" }.mkString(", ")
       spark.sql(
         s"""CREATE TABLE $name ($cols) USING parquet
+           |OPTIONS ($opts)
            |CLUSTERED BY ($bucketCol)
            |SORTED BY (${sortCols.mkString(", ")}) INTO $n BUCKETS
            |LOCATION '$loc'""".stripMargin)
@@ -75,10 +85,17 @@ private[graft] object BucketedCatalog {
     */
   def read(spark: SparkSession, logDir: String, n: Int,
       schema: StructType, bucketCol: String,
-      sortCols: Seq[String]): DataFrame = {
+      sortCols: Seq[String]): DataFrame =
+    spark.table(refresh(spark, logDir, n, schema, bucketCol, sortCols))
+
+  /** Register the log's entry if needed and drop this session's cached
+    * file listing of it (metadata-only; the next read re-lists);
+    * returns the table name. */
+  def refresh(spark: SparkSession, logDir: String, n: Int,
+      schema: StructType, bucketCol: String, sortCols: Seq[String]): String = {
     val name = ensureRegistered(spark, logDir, n, schema, bucketCol, sortCols)
     spark.catalog.refreshTable(name)
-    spark.table(name)
+    name
   }
 
   /** Write a batch into the bucketed layout. An append MUST see a
@@ -93,7 +110,6 @@ private[graft] object BucketedCatalog {
     */
   def write(batch: DataFrame, logDir: String, mode: SaveMode, n: Int,
       schema: StructType, bucketCol: String, sortCols: Seq[String],
-      bloomCol: String,
       aboveExchange: DataFrame => DataFrame = identity): Unit = {
     val spark = batch.sparkSession
     val name = catalogName(logDir)
@@ -103,7 +119,7 @@ private[graft] object BucketedCatalog {
     aboveExchange(batch.repartition(n, col(bucketCol)))
       .sortWithinPartitions(sortCols.map(col): _*)
       .write.mode(mode)
-      .option(s"parquet.bloom.filter.enabled#$bloomCol", "true")
+      .options(CellLogStore.bloomOptions(bucketCol))   // kept by an Overwrite
       .option("path", logDir)
       .bucketBy(n, bucketCol)
       .sortBy(sortCols.head, sortCols.tail: _*)

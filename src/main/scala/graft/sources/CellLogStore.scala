@@ -4,15 +4,18 @@ import graft.model.{CfSpec, OpType, TableDesc}
 import graft.operators.Resolve
 import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Durable cell-log storage: append-only parquet, range-clustered by
   * row key, plus the background compaction job.
   *
   * Reference analogues: `TabletWriter` group commit batches mutations
   * into one LevelDB write (tera src/io/tablet_writer.cc:107-230) — here
-  * a DataFrame of CellOps IS the batch and one parquet append is the
-  * group commit (S7/S8). Background compaction physically applies the
-  * fold/drop logic to bound read amplification
+  * a DataFrame of CellOps IS the batch (S7/S8). A driver-resident batch
+  * (a local `Seq[CellOp]`) commits from the driver as one sorted file
+  * per touched bucket, with no Spark job ([[DriverCommit]]); any other
+  * batch is one distributed parquet append. Background compaction
+  * physically applies the fold/drop logic to bound read amplification
   * (src/io/default_compact_strategy.cc:59-120) — here a rewrite of the
   * resolved log (§4).
   *
@@ -37,29 +40,32 @@ object CellLogStore {
   }
 
   /** Writes `batch` in the descriptor's layout. With `countDeletes`,
-    * also returns the batch's tombstone count, taken inside the write
-    * job itself by a Spark [[Observation]] placed ABOVE the write's
-    * exchange — below a range exchange it would count every tombstone
-    * twice, since the range partitioner's sampling job re-runs the
-    * plan under the exchange. None when the metrics never arrive. */
+    * also returns the batch's tombstone count.
+    *
+    * A driver-resident append ([[DriverCommit]]: the batch's optimized
+    * plan is a `LocalRelation` whose columns match the log schema) on a
+    * flat or bucketed log is written from the driver with no Spark job,
+    * and its tombstones are counted there. Every other write — a
+    * distributed batch, `numFiles`, Overwrite, the LG layout — is a
+    * Spark write; its count is a Spark [[Observation]] placed ABOVE the
+    * write's exchange (below a range exchange it would count every
+    * tombstone twice, since the range partitioner's sampling job
+    * re-runs the plan under the exchange). None when the metrics never
+    * arrive. */
   private def writeBatch(batch: DataFrame, logDir: String, mode: SaveMode,
       desc: TableDesc, numFiles: Int = 0,
       countDeletes: Boolean = false): Option[Long] = {
-    val n = if (numFiles > 0) numFiles
-      else batch.sparkSession.sessionState.conf.numShufflePartitions
-    val tally = if (countDeletes) Some(Observation()) else None
-    val counted: DataFrame => DataFrame = df => tally.fold(df)(obs =>
-      df.observe(obs, count(when(col("op").isin(OpType.deletes: _*), 1))))
+    val spark = batch.sparkSession
     // layout guard (the bucketed mirror of the LG hasFlatFiles check):
     // a flat file landing in a bucketed location poisons every later
     // catalog read with INVALID_BUCKET_FILE, and a bucketed file in a
     // flat log is unreadable noise — refuse a mismatched append NOW,
     // while the state is still recoverable. One props read.
     if (mode == SaveMode.Append) {
-      val stored = bucketCount(batch.sparkSession, logDir)
+      val stored = bucketCount(spark, logDir)
       if (desc.buckets > 0)
         require(stored.contains(desc.buckets) ||
-            (stored.isEmpty && !hasFlatFiles(batch.sparkSession, logDir)),
+            (stored.isEmpty && !hasFlatFiles(spark, logDir)),
           s"$logDir holds a ${stored.fold("flat")(b => s"$b-bucket")} log " +
             s"but the write descriptor says buckets=${desc.buckets}; open " +
             "the table to pick up its stored descriptor (or compact to a " +
@@ -70,19 +76,59 @@ object CellLogStore {
             "append carries a bucket-less descriptor; open the table to " +
             "pick up its stored descriptor before writing")
     }
+    if (desc.buckets > 0)
+      require(desc.lgs.isEmpty,
+        "bucketed layout and locality groups are mutually exclusive " +
+          "(one physical clustering per table)")
+    val schema = graft.model.CellOp.schemaFor(desc.rawKeyBinary)
+    val local =
+      if (mode == SaveMode.Append && numFiles == 0 && desc.lgs.isEmpty)
+        DriverCommit.localRows(batch, schema)
+      else None
+    local match {
+      case Some(rows) =>
+        DriverCommit.write(spark, rows, schema, logDir, CellSortCols,
+          "row_key", Some(desc.buckets).filter(_ > 0).map("row_key" -> _))
+        if (desc.buckets > 0)
+          BucketedCatalog.refresh(spark, logDir, desc.buckets, schema,
+            "row_key", CellSortCols)
+        if (!countDeletes) None
+        else {
+          val op = schema.fieldIndex("op")
+          Some(rows.count(r => OpType.deletes.contains(r.getInt(op))).toLong)
+        }
+      case None =>
+        writeDistributed(batch, logDir, mode, desc, schema, numFiles,
+          countDeletes)
+    }
+  }
+
+  /** Spark-path bloom options for `column`: parquet's adaptive bloom
+    * keeps candidate filters from 1 MiB down to 2 KiB and writes the
+    * smallest that holds the file's distinct keys. A bloom with no
+    * expected NDV is 1 MiB in every file, however small. */
+  private[graft] def bloomOptions(column: String): Map[String, String] = Map(
+    s"parquet.bloom.filter.enabled#$column" -> "true",
+    "parquet.bloom.filter.adaptive.enabled" -> "true",
+    "parquet.bloom.filter.candidates.number" -> "10")
+
+  private def writeDistributed(batch: DataFrame, logDir: String,
+      mode: SaveMode, desc: TableDesc, schema: StructType, numFiles: Int,
+      countDeletes: Boolean): Option[Long] = {
+    val n = if (numFiles > 0) numFiles
+      else batch.sparkSession.sessionState.conf.numShufflePartitions
+    val tally = if (countDeletes) Some(Observation()) else None
+    val counted: DataFrame => DataFrame = df => tally.fold(df)(obs =>
+      df.observe(obs, count(when(col("op").isin(OpType.deletes: _*), 1))))
     // row-key bloom filters per file ≙ tera's per-SST blooms
     // (table_schema.proto:62): point gets skip files cheaply
     val writerFor = (df: DataFrame) => df
       .write.mode(mode)
-      .option("parquet.bloom.filter.enabled#row_key", "true")
-    if (desc.buckets > 0) {
-      require(desc.lgs.isEmpty,
-        "bucketed layout and locality groups are mutually exclusive " +
-          "(one physical clustering per table)")
-      BucketedCatalog.write(batch, logDir, mode, desc.buckets,
-        graft.model.CellOp.schemaFor(desc.rawKeyBinary), "row_key",
-        CellSortCols, "row_key", counted)
-    } else if (desc.lgs.isEmpty)
+      .options(bloomOptions("row_key"))
+    if (desc.buckets > 0)
+      BucketedCatalog.write(batch, logDir, mode, desc.buckets, schema,
+        "row_key", CellSortCols, counted)
+    else if (desc.lgs.isEmpty)
       writerFor(counted(batch
         .repartitionByRange(n, col("row_key"), col("cf"), col("qualifier")))
         .sortWithinPartitions(col("row_key"), col("cf"), col("qualifier"),
@@ -475,6 +521,9 @@ object CellLogStore {
     */
   def compact(spark: SparkSession, logDir: String, outDir: String,
       desc: TableDesc = TableDesc(), nowUs: Long = Long.MaxValue): Unit = {
+    // the source's txn-ts allocator, carried to the output below
+    val txnTs = loadProps(spark, logDir).flatMap(p =>
+      Option(p.getProperty("nextTxnTs")))
     val resolved = Resolve.resolve(read(spark, logDir), desc, nowUs)
       .select(col("row_key"), col("cf"), col("qualifier"), col("ts"),
         lit(graft.model.OpType.Value).as("op"), col("value"), col("seq"))
@@ -484,6 +533,12 @@ object CellLogStore {
     // (folds and tombstones physically applied), so declare that op-set
     // and a zero delete count
     writeDesc(spark, outDir, desc, Some(Set(graft.model.OpType.Value)))
-    setDeleteCount(spark, outDir, 0L)
+    // the txn-ts allocator carries over: timestamps reserved on the
+    // source but never written must not be reissued on the output
+    loadProps(spark, outDir).foreach { p =>
+      p.setProperty("deleteCount", "0")
+      txnTs.foreach(p.setProperty("nextTxnTs", _))
+      storeProps(spark, outDir, p)
+    }
   }
 }

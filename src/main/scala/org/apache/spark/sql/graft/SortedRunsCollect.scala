@@ -1,0 +1,145 @@
+package org.apache.spark.sql.graft
+
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
+
+import org.apache.spark.SparkEnv
+import org.apache.spark.io.CompressionCodec
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Attribute, SortOrder, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, ReturnAnswer, Sort}
+import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, RangePartitioning, UnknownPartitioning}
+import org.apache.spark.sql.execution.{SortExec, SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+
+/** Plans a root global sort whose result goes to the driver
+  * (`ReturnAnswer(Sort(_, global = true, _))`, i.e. an ordered
+  * `collect()`) as [[SortedRunsCollectExec]]: every partition sorts
+  * locally, one job collects the sorted runs, and the driver k-way
+  * merges them. Spark's own plan for the same query range-partitions
+  * first, and the range partitioner's sampling job re-runs the whole
+  * child plan — two extra jobs and a shuffle to deliver rows that all
+  * end up in one place anyway. tera's `ResultStream` hands a client
+  * each tablet's rows in key order the same way
+  * (include/tera/scan.h:47-56).
+  *
+  * `Limit(Sort)` keeps Spark's `TakeOrderedAndProject` (the strategy
+  * never sees it: the root is a Limit), and streaming plans are left
+  * alone.
+  */
+object SortedRunsCollect extends SparkStrategy {
+  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+    case ReturnAnswer(Sort(order, true, child, _)) if !child.isStreaming =>
+      SortedRunsCollectExec(order, planLater(child)) :: Nil
+    case _ => Nil
+  }
+
+  /** Add the strategy to the session's extra strategies, once. */
+  def install(spark: SparkSession): Unit = {
+    val exp = spark.experimental
+    if (!exp.extraStrategies.contains(SortedRunsCollect))
+      exp.synchronized {
+        if (!exp.extraStrategies.contains(SortedRunsCollect))
+          exp.extraStrategies = exp.extraStrategies :+ SortedRunsCollect
+      }
+  }
+}
+
+/** Global sort of `child` by `sortOrder`. `executeCollect` sorts each
+  * partition (spilling like any `SortExec`), ships the runs as
+  * compressed UnsafeRow bytes in one job, and merges them on the
+  * driver, breaking ties by partition index — Spark's
+  * `TakeOrderedAndProjectExec` without a limit. Every other consumer
+  * (`rdd`, `toLocalIterator`, `cache`) goes through `doExecute`, which
+  * keeps Spark's range-partitioned sort so the rows never have to fit
+  * on the driver.
+  */
+case class SortedRunsCollectExec(sortOrder: Seq[SortOrder], child: SparkPlan)
+    extends UnaryExecNode {
+
+  override def output: Seq[Attribute] = child.output
+  override def outputOrdering: Seq[SortOrder] = sortOrder
+  // doExecute's range partitioner may yield fewer partitions than
+  // asked for; claim nothing a parent could rely on
+  override def outputPartitioning: Partitioning = UnknownPartitioning(0)
+
+  override protected def doExecute(): RDD[InternalRow] =
+    SortExec(sortOrder, global = true,
+      ShuffleExchangeExec(
+        RangePartitioning(sortOrder, conf.numShufflePartitions), child))
+      .execute()
+
+  override def executeCollect(): Array[InternalRow] = {
+    val runs = SortExec(sortOrder, global = false, child).execute()
+      .mapPartitionsInternal(rows => Iterator(SortedRunsCollectExec.encode(rows)))
+      .collect()
+    SortedRunsCollectExec.merge(
+      runs.toIndexedSeq.map(SortedRunsCollectExec.decode(_, output.length)),
+      new LazilyGeneratedOrdering(sortOrder, output))
+  }
+
+  override protected def withNewChildInternal(newChild: SparkPlan)
+      : SortedRunsCollectExec = copy(child = newChild)
+}
+
+object SortedRunsCollectExec {
+
+  private def codec = CompressionCodec.createCodec(SparkEnv.get.conf)
+
+  /** One sorted partition (a `SortExec` emits UnsafeRows) as
+    * (size, bytes) records, compressed, -1 terminated — the layout
+    * Spark's own collect ships. */
+  private def encode(rows: Iterator[InternalRow]): Array[Byte] = {
+    val bytes = new ByteArrayOutputStream()
+    val out = new DataOutputStream(codec.compressedOutputStream(bytes))
+    val buffer = new Array[Byte](4096)
+    rows.foreach { r =>
+      val u = r.asInstanceOf[UnsafeRow]
+      out.writeInt(u.getSizeInBytes)
+      u.writeToStream(out, buffer)
+    }
+    out.writeInt(-1)
+    out.close()
+    bytes.toByteArray
+  }
+
+  private def decode(run: Array[Byte], numFields: Int): Iterator[InternalRow] = {
+    val in = new DataInputStream(
+      codec.compressedInputStream(new ByteArrayInputStream(run)))
+    new Iterator[InternalRow] {
+      private var nextSize = in.readInt()
+      def hasNext: Boolean = nextSize >= 0
+      def next(): InternalRow = {
+        val bytes = new Array[Byte](nextSize)
+        in.readFully(bytes)
+        val row = new UnsafeRow(numFields)
+        row.pointTo(bytes, nextSize)
+        nextSize = in.readInt()
+        if (nextSize < 0) in.close()
+        row
+      }
+    }
+  }
+
+  /** K-way merge of sorted runs; equal rows come out in run order. */
+  private def merge(runs: Seq[Iterator[InternalRow]],
+      ord: Ordering[InternalRow]): Array[InternalRow] = {
+    val heads = new java.util.PriorityQueue[(InternalRow, Int)](
+      math.max(1, runs.length), (a: (InternalRow, Int), b: (InternalRow, Int)) => {
+        val c = ord.compare(a._1, b._1)
+        if (c != 0) c else Integer.compare(a._2, b._2)
+      })
+    runs.zipWithIndex.foreach { case (it, i) =>
+      if (it.hasNext) heads.add((it.next(), i))
+    }
+    val out = Array.newBuilder[InternalRow]
+    while (!heads.isEmpty) {
+      val (row, i) = heads.poll()
+      out += row
+      if (runs(i).hasNext) heads.add((runs(i).next(), i))
+    }
+    out.result()
+  }
+}

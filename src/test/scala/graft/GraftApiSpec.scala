@@ -506,14 +506,19 @@ class GraftApiSpec extends AnyFunSuite {
       (0 until dels).map(i => CellOp(f"r$i%03d", "cf", "q", 200,
         if (i % 2 == 0) OpType.DelRow else OpType.DelQualifiers, null,
         seq0 + 1000 + i))
-    Seq(TableDesc(), TableDesc(buckets = 4),
-        TableDesc(lgs = Map("cf" -> "hot"))).foreach { desc =>
+    // local batches commit from the driver (flat, bucketed) or through
+    // a Spark write (LG); repartitioned ones always take the Spark write
+    for (desc <- Seq(TableDesc(), TableDesc(buckets = 4),
+        TableDesc(lgs = Map("cf" -> "hot")));
+        distributed <- Seq(false, true)) {
+      def input(cells: Seq[CellOp]) =
+        if (distributed) cells.toDF().repartition(3) else cells.toDF()
       val dir = Files.createTempDirectory("graft-hint-exact").toString
       val t = Graft.createTable(spark, dir, desc, ops)
-      t.put(batch(0L, 3).toDF())
-      t.put(batch(10000L, 4).toDF())
+      t.put(input(batch(0L, 3)))
+      t.put(input(batch(10000L, 4)))
       assert(graft.sources.CellLogStore.readDeleteCount(spark, dir) ==
-        Some(7L), s"layout $desc")
+        Some(7L), s"layout $desc, distributed $distributed")
       assert(t.log.where(col("op") =!= OpType.Value).count() == 7)
     }
   }
@@ -844,6 +849,11 @@ class GraftApiSpec extends AnyFunSuite {
       val derived = ext.newSession()
       assert(derived.sql("SELECT be64_decode(be64_encode(7L)) AS x")
         .collect()(0).getLong(0) == 7L)
+      // and the ordered-collect strategy is injected with them
+      val ordered = ext.range(10).toDF().orderBy(col("id").desc)
+      assert(ordered.queryExecution.executedPlan.toString
+        .contains("SortedRunsCollect"), ordered.queryExecution.executedPlan)
+      assert(ordered.collect().map(_.getLong(0)).toSeq == (9L to 0L by -1L))
     } finally {
       SparkSession.setActiveSession(prior)
       SparkSession.setDefaultSession(prior)
@@ -869,5 +879,205 @@ class GraftApiSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(again == first)
     Graft.clearCaches()
+  }
+
+  /** Spark jobs started while `body` runs (listener-bus drained). */
+  private def jobsDuring(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.sql.graft.Shim.waitListenerBus(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.sql.graft.Shim.waitListenerBus(spark)
+      jobs.get()
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** A table of every driver-commit flavour (flat, bucketed,
+    * hash-keyed, binary-keyed) with its batch as a local DataFrame. */
+  private def driverCommitCases(): Seq[(String, model.TableDesc,
+      org.apache.spark.sql.DataFrame)] = {
+    import graft.model.TableDesc
+    val session = spark
+    import session.implicits._
+    val ops = (0 until 120).map(i => CellOp(f"r${i % 40}%03d", "cf",
+      s"q${i % 3}", 100L + i % 7,
+      if (i % 17 == 0) OpType.DelQualifiers else OpType.Value,
+      if (i % 17 == 0) null else s"v$i".getBytes, i.toLong))
+    val binary = ops.map(o => (o.row_key.getBytes("UTF-8") :+ 0.toByte,
+        o.cf, o.qualifier, o.ts, o.op, o.value, o.seq))
+      .toDF("row_key", "cf", "qualifier", "ts", "op", "value", "seq")
+    Seq(("flat", TableDesc(), ops.toDF()),
+      ("bucketed", TableDesc(buckets = 4), ops.toDF()),
+      ("hash-keyed", TableDesc(hashKeys = true), ops.toDF()),
+      ("binary-key", TableDesc(rawKeyBinary = true), binary))
+  }
+
+  private def cellSet(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
+    df.collect().map(r => r.toSeq.map {
+      case b: Array[Byte] => b.toSeq
+      case v => v
+    }).toSet
+
+  test("driver commit: a local batch and the same rows distributed resolve identically") {
+    val ops = Some(Set(OpType.Value, OpType.DelQualifiers))
+    driverCommitCases().foreach { case (name, desc, local) =>
+      val a = Graft.createTable(spark,
+        Files.createTempDirectory("graft-dc-local").toString, desc, ops)
+      val b = Graft.createTable(spark,
+        Files.createTempDirectory("graft-dc-dist").toString, desc, ops)
+      // half the batch per put: the second commit lands next to the first
+      val (first, second) = (local.where(col("seq") < 60L),
+        local.where(col("seq") >= 60L))
+      a.put(first); a.put(second)
+      b.put(first.repartition(3)); b.put(second.repartition(3))
+      assert(cellSet(a.cells()) == cellSet(b.cells()), name)
+      assert(cellSet(a.log) == cellSet(b.log), name)
+      assert(a.cells().count() > 0, name)
+      assert(graft.sources.CellLogStore.readDeleteCount(spark, a.logDir) ==
+        graft.sources.CellLogStore.readDeleteCount(spark, b.logDir), name)
+    }
+  }
+
+  test("driver commit: a local put starts no Spark job") {
+    driverCommitCases().foreach { case (name, desc, local) =>
+      val t = Graft.createTable(spark,
+        Files.createTempDirectory("graft-dc-jobs").toString, desc,
+        Some(Set(OpType.Value, OpType.DelQualifiers)))
+      assert(jobsDuring(t.put(local)) == 0, name)
+      // the distributed twin is a Spark write
+      assert(jobsDuring(t.put(local.repartition(2))) > 0, name)
+    }
+  }
+
+  test("driver commit: point gets find every row written by driver puts on a bucketed table") {
+    import graft.model.TableDesc
+    val dir = Files.createTempDirectory("graft-dc-get").toString
+    val t = Graft.createTable(spark, dir, TableDesc(buckets = 8),
+      Some(Set(OpType.Value)))
+    val keys = (0 until 24).map(i => f"k$i%04d")
+    keys.grouped(5).zipWithIndex.foreach { case (ks, b) =>
+      t.put(ks.map(k => CellOp(k, "cf", "q", 1L, OpType.Value,
+        s"$k-$b".getBytes, b.toLong * 100 + ks.indexOf(k))))
+    }
+    // one file per touched bucket per commit, each carrying its bucket id
+    val names = new java.io.File(dir).list().filter(_.endsWith(".parquet"))
+    assert(names.nonEmpty && names.forall(n =>
+      org.apache.spark.sql.execution.datasources.BucketingUtils
+        .getBucketId(n).exists(id => id >= 0 && id < 8)), names.toSeq)
+    keys.foreach { k =>
+      val got = t.get(k).collect()
+      assert(got.length == 1 &&
+        new String(got(0).getAs[Array[Byte]]("value")).startsWith(k), k)
+    }
+    assert(t.get(keys.head).queryExecution.executedPlan.toString
+      .contains("SelectedBucketsCount: 1 out of 8"))
+  }
+
+  test("driver commit: no in-progress file remains, also after a failed write") {
+    import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+    import org.apache.spark.unsafe.types.UTF8String
+    val dir = Files.createTempDirectory("graft-dc-tmp").toString
+    val t = Graft.createTable(spark, dir, model.TableDesc(buckets = 4),
+      Some(Set(OpType.Value)))
+    t.put(Seq(CellOp("a", "cf", "q", 1L, OpType.Value, "v".getBytes, 1L),
+      CellOp("b", "cf", "q", 1L, OpType.Value, "v".getBytes, 2L)))
+    // a row whose value column throws once the parquet writer reaches
+    // it: the sort (on key columns) passes, the file is half written
+    def row(k: String, bad: Boolean) = new GenericInternalRow(Array[Any](
+        UTF8String.fromString(k), UTF8String.fromString("cf"),
+        UTF8String.fromString("q"), 1L, OpType.Value, "v".getBytes, 3L)) {
+      override def getBinary(i: Int): Array[Byte] =
+        if (bad) throw new IllegalStateException("boom") else super.getBinary(i)
+    }
+    val err = intercept[IllegalStateException] {
+      graft.sources.DriverCommit.write(spark,
+        Seq(row("c", bad = false), row("d", bad = true)),
+        model.CellOp.schema, dir, Seq("row_key"), "row_key")
+    }
+    assert(err.getMessage == "boom")
+    val files = new java.io.File(dir).list().toSet
+    val hidden = files.filter(_.startsWith("."))
+    // only the checksum files of visible data files may be hidden
+    assert(hidden.forall(h => h.endsWith(".crc") &&
+      files.contains(h.stripPrefix(".").stripSuffix(".crc"))), hidden)
+    assert(t.log.count() == 2)
+  }
+
+  test("compact carries the txn-ts allocator to the compacted table") {
+    val dir = Files.createTempDirectory("graft-compact-txnts").toString
+    val t = Graft.createTable(spark, dir, ops = Some(Set(OpType.Value)))
+    t.put(Seq(CellOp("r", "cf", "q", 100, OpType.Value, "v".getBytes, 1)))
+    // reserved but never written: only the allocator knows them
+    val first = t.allocateTxnTs(5)
+    val out = Files.createTempDirectory("graft-compact-txnts-out").toString
+    t.compact(out)
+    val second = Graft.openTable(spark, out).allocateTxnTs()
+    assert(second > first + 4, s"reissued a reserved ts: $first then $second")
+  }
+
+  test("ordered scan collect equals a driver-side sort of the unordered scan") {
+    import graft.model.TableDesc
+    val session = spark
+    import session.implicits._
+    Seq(TableDesc(), TableDesc(buckets = 4),
+        TableDesc(lgs = Map("a" -> "hot"))).foreach { desc =>
+      val dir = Files.createTempDirectory("graft-merge-scan").toString
+      val t = Graft.createTable(spark, dir,
+        desc.copy(default = model.CfSpec(maxVersions = 3)),
+        Some(Set(OpType.Value)))
+      // several commits (local and distributed) so the runs interleave
+      (0 until 3).foreach { b =>
+        val ops = (0 until 90).map(i => CellOp(f"r${(i * 7 + b) % 60}%03d",
+          if (i % 2 == 0) "a" else "b", s"q${i % 4}", 1000L * b + i,
+          OpType.Value, s"v$b-$i".getBytes, b * 1000L + i))
+        if (b == 1) t.put(ops.toDF().repartition(4)) else t.put(ops)
+      }
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().toSeq.map(r => (r.getAs[String]("row_key"),
+          r.getAs[String]("cf"), r.getAs[String]("qualifier"),
+          r.getAs[Long]("ts"), new String(r.getAs[Array[Byte]]("value"))))
+      val ordered = t.scan.run()
+      assert(ordered.queryExecution.executedPlan.toString
+        .contains("SortedRunsCollect"), desc)
+      val got = rows(ordered)
+      val want = rows(t.scan.unordered.run())
+        .sortBy { case (k, cf, q, ts, _) => (k, cf, q, -ts) }
+      assert(got.length > 60, desc)
+      assert(got == want, desc)
+    }
+  }
+
+  test("ordered frames stay globally ordered through toLocalIterator, rdd and writes") {
+    import scala.jdk.CollectionConverters._
+    val dir = Files.createTempDirectory("graft-merge-other").toString
+    // bucketed: each scan partition is one bucket, so its rows
+    // interleave with every other partition's in key order
+    val t = Graft.createTable(spark, dir, model.TableDesc(buckets = 4),
+      Some(Set(OpType.Value)))
+    val session = spark
+    import session.implicits._
+    t.put((0 until 400).map(i => CellOp(f"r${(i * 37) % 400}%04d", "cf", "q",
+      1L, OpType.Value, "v".getBytes, i.toLong)).toDF().repartition(4))
+    val df = t.scan.run()
+    val want = df.collect().map(_.getString(0)).toSeq
+    assert(want == want.sorted && want.length == 400)
+    assert(df.toLocalIterator().asScala.map(_.getString(0)).toSeq == want)
+    assert(df.rdd.map(_.getString(0)).collect().toSeq == want)
+    val out = Files.createTempDirectory("graft-merge-write").toString + "/o"
+    // keep the write's range partitions apart: several ordered files
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    spark.conf.set(coalesce, "false")
+    try df.write.parquet(out) finally spark.conf.unset(coalesce)
+    val parts = new java.io.File(out).list().filter(_.endsWith(".parquet")).sorted
+    assert(parts.length > 1, parts.toSeq)
+    val written = parts.toSeq.flatMap(p => spark.read.parquet(s"$out/$p")
+      .collect().map(_.getString(0)))
+    assert(written == want)
   }
 }

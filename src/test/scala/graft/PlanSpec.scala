@@ -797,4 +797,50 @@ class PlanSpec extends AnyFunSuite {
     assert(plan.contains("partial_sum"), plan)
     assert(plan.contains("HashAggregate"), plan)
   }
+
+  test("ordered scan collect: sorted-run merge, one job, no range exchange") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("plan-merge").toString
+    val t = Graft.createTable(spark, dir, TableDesc(buckets = 8),
+      Some(Set(OpType.Value, OpType.DelRow)))
+    t.put((0 until 400).map(i => CellOp(f"r$i%04d", "cf", "q", 1L,
+      OpType.Value, s"v$i".getBytes, i.toLong)).toDF().repartition(4))
+    t.put(Seq(CellOp("r0150", "", "", 2L, OpType.DelRow, null, 1000L)))
+    val df = t.scan.withStart("r0100").withStop("r0200").run()
+    val before = planOf(df)
+    assert(before.contains("SortedRunsCollect"), before)
+    assert(!before.toLowerCase.contains("rangepartitioning"), before)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.sql.graft.Shim.waitListenerBus(spark)
+    spark.sparkContext.addSparkListener(listener)
+    val keys =
+      try {
+        val rows = df.collect().map(_.getString(0)).toSeq
+        org.apache.spark.sql.graft.Shim.waitListenerBus(spark)
+        assert(jobs.get() == 1, s"ordered scan ran ${jobs.get()} jobs")
+        rows
+      } finally spark.sparkContext.removeSparkListener(listener)
+    assert(keys == (100 until 200).filter(_ != 150).map(i => f"r$i%04d"))
+    val after = planOf(df)
+    assert(!after.contains("Exchange"), after)
+  }
+
+  test("ordered scan with a limit still plans TakeOrderedAndProject") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("plan-merge-limit").toString
+    val t = Graft.createTable(spark, dir, ops = Some(Set(OpType.Value)))
+    t.put((0 until 50).map(i => CellOp(f"r$i%03d", "cf", "q", 1L,
+      OpType.Value, "v".getBytes, i.toLong)).toDF())
+    val df = t.scan.withLimit(5).run()
+    val plan = planOf(df)
+    assert(plan.contains("TakeOrderedAndProject"), plan)
+    assert(!plan.contains("SortedRunsCollect"), plan)
+    assert(df.collect().map(_.getString(0)).toSeq ==
+      (0 until 5).map(i => f"r$i%03d"))
+  }
 }

@@ -116,6 +116,44 @@ class ScaleOpsSpec extends AnyFunSuite {
     val (lo, hi) = ("user00010000", "user00015000")
     val touched = ranges.count { case (mn, mx) => mx >= lo && mn < hi }
     assert(touched <= 2, s"5% range scan touches $touched of 8 files")
+
+    // every file the engine writes carries a row_key bloom sized to its
+    // rows: small flat appends (driver and Spark path), bucketed appends
+    // (driver and Spark path) and a bucketed compaction
+    import spark.implicits._
+    def small(n: Int, seq0: Long) = (0 until n).map(i => CellOp(
+      f"s$i%05d", "cf", "q", 1L, OpType.Value, "v".getBytes, seq0 + i))
+    CellLogStore.append(small(40, 1000000L).toDF(), dir)
+    CellLogStore.append(small(60, 2000000L).toDF().repartition(2), dir)
+    val bdir = Files.createTempDirectory("graft-layout-bkt").toString
+    val bt = Graft.createTable(spark, bdir, graft.model.TableDesc(buckets = 4),
+      Some(Set(OpType.Value)))
+    bt.put(small(80, 0L))
+    bt.put(small(80, 100L).toDF().repartition(3))
+    val cdir = Files.createTempDirectory("graft-layout-bkt-c").toString
+    bt.compact(cdir)
+    Seq(dir, bdir, cdir).foreach { d =>
+      val fs2 = new org.apache.hadoop.fs.Path(d).getFileSystem(conf)
+      val written = fs2.listStatus(new org.apache.hadoop.fs.Path(d))
+        .filter(_.getPath.getName.endsWith(".parquet"))
+      assert(written.nonEmpty, d)
+      written.foreach { f =>
+        val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
+        try {
+          rd.getFooter.getBlocks.asScala.foreach { block =>
+            val key = block.getColumns.asScala
+              .find(_.getPath.toDotString == "row_key").get
+            assert(key.getBloomFilterOffset >= 0,
+              s"${f.getPath}: no bloom filter on row_key")
+            val bytes = rd.readBloomFilter(key).getBitsetSize
+            if (block.getRowCount <= 100)
+              assert(bytes <= 64 * 1024,
+                s"${f.getPath}: $bytes-byte bloom for ${block.getRowCount} rows")
+          }
+        } finally rd.close()
+      }
+    }
   }
 
   test("salted join matches plain join on a skewed key") {
