@@ -262,7 +262,7 @@ class GraftKvTable(val spark: SparkSession, val logDir: String) {
     val withTtl =
       if (batch.columns.contains("ttl_sec")) batch
       else batch.withColumn("ttl_sec", lit(0L))
-    val seqBase = KvStore.nextSeqEra(spark, logDir)
+    val seqBase = CellLogStore.nextSeqEra(log)
     KvStore.append(withTtl.select(
       col("key"), col("value"),
       when(col("ttl_sec") <= 0L, lit(0L))

@@ -1623,7 +1623,7 @@ object SparkEntry {
     }),
     "q_io_bucketed_store_roundtrip" -> ((s, dir) => {
       // the same dump/load cycle THROUGH a stored bucketed table: the
-      // oracle gate then exercises the bucketed write + catalog-read
+      // oracle gate then exercises the bucketed write + bucketed read
       // path end to end (create -> put -> reopen -> resolve -> export).
       // Built once per process like every store-backed fixture — Bench
       // repeats must time the read path, not table construction.
@@ -1640,7 +1640,7 @@ object SparkEntry {
     "q_s3c_bucketed_point_get" -> ((s, dir) => {
       // point get THROUGH the stored bucketed table (same cached
       // fixture as the round-trip row): the scan prunes to one of 8
-      // buckets via the catalog bucket spec + row_key equality
+      // buckets via the descriptor's bucket spec + row_key equality
       val tmp = bktFixtureDirs.getOrElseUpdate(dir, {
         val d = java.nio.file.Files
           .createTempDirectory("graft-bkt-roundtrip").toString

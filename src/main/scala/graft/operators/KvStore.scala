@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.{CellLogStore, LogLayout}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -15,7 +16,8 @@ import org.apache.spark.sql.functions._
   * Scale: latest-version resolution is a hash aggregation with map-side
   * `max_by` partial combine — no window sort; the expiry predicate is a
   * per-row filter that pushes into the scan when applied to a stored
-  * table.
+  * table. Storage reads and writes go through [[LogLayout]], the same
+  * module as cell logs, in the layout the stored descriptor declares.
   */
 object KvStore {
 
@@ -39,83 +41,36 @@ object KvStore {
     resolveEntries(kv, nowUs).select(col("key"), col("value"))
 
   // ---- durable KV log storage -------------------------------------
-  // Same posture as CellLogStore for the cell model: append-only
-  // parquet, range-clustered by key (row-group min/max stats give
-  // range scans pruning; per-file key blooms serve point gets), the
-  // descriptor persisted next to the data.
+  // Append-only parquet, flat (range-clustered by key) or bucketed
+  // (resolve's per-key `max_by` then plans with zero shuffle and a
+  // point lookup prunes to one bucket), every file carrying a key bloom.
 
-  private val KvSortCols = Seq("key", "seq")
+  private def storedDesc(spark: SparkSession, logDir: String) =
+    CellLogStore.readDesc(spark, logDir).map(_._1)
 
-  /** Group-commit a KV batch (key, value, expire_ts_us, seq). A
-    * bucketed KV table (descriptor `buckets` > 0) appends through its
-    * catalog entry; [[resolve]]'s per-key `max_by` aggregate then plans
-    * with zero shuffle and point lookups prune to one bucket — the same
-    * win [[graft.sources.BucketedCatalog]] documents for cell logs.
-    */
-  def append(batch: DataFrame, logDir: String): Unit = {
-    val spark = batch.sparkSession
-    graft.sources.CellLogStore.bucketCount(spark, logDir) match {
-      case Some(b) =>
-        graft.sources.BucketedCatalog.write(batch, logDir, SaveMode.Append,
-          b, graft.model.KvEntry.schemaFor(
-            graft.sources.CellLogStore.binaryKeyMode(spark, logDir)),
-          "key", KvSortCols)
-      case None =>
-        val n = spark.sessionState.conf.numShufflePartitions
-        batch
-          .repartitionByRange(n, col("key"))
-          .sortWithinPartitions(col("key"), col("seq"))
-          .write.mode(SaveMode.Append)
-          .options(graft.sources.CellLogStore.bloomOptions("key"))
-          .parquet(logDir)
-    }
-  }
+  private def layout(stored: Option[graft.model.TableDesc]): LogLayout =
+    LogLayout.kv(stored.exists(_.rawKeyBinary), stored.fold(0)(_.buckets))
 
-  def read(spark: SparkSession, logDir: String): DataFrame = {
-    val schema = graft.model.KvEntry.schemaFor(
-      graft.sources.CellLogStore.binaryKeyMode(spark, logDir))
-    graft.sources.CellLogStore.bucketCount(spark, logDir) match {
-      case Some(b) =>
-        graft.sources.BucketedCatalog.read(spark, logDir, b, schema,
-          "key", KvSortCols)
-      case None =>
-        spark.read.schema(schema).parquet(logDir)
-    }
-  }
+  /** Group-commit a KV batch (key, value, expire_ts_us, seq). */
+  def append(batch: DataFrame, logDir: String): Unit =
+    layout(storedDesc(batch.sparkSession, logDir))
+      .write(batch, logDir, SaveMode.Append)
 
-  /** Next free seq era for KV batches (see CellLogStore.nextSeqEra). */
-  def nextSeqEra(spark: SparkSession, logDir: String): Long = {
-    val row = read(spark, logDir).agg(max(col("seq"))).collect()(0)
-    if (row.isNullAt(0)) graft.sources.CellLogStore.SeqEra
-    else ((row.getLong(0) >> 50) + 1) * graft.sources.CellLogStore.SeqEra
-  }
+  def read(spark: SparkSession, logDir: String): DataFrame =
+    layout(storedDesc(spark, logDir)).read(spark, logDir)
 
   /** Compaction: rewrite the log as its resolved entries — dead KVs
     * (expired at `nowUs`, superseded writes) are physically dropped
     * (tera KvCompactStrategy::Drop, src/io/ttlkv_compact_strategy.cc:
     * 40-70); live KVs KEEP their baked expiry so later reads still
-    * expire them.
+    * expire them. The layout carries over, like the cell-log compact.
     */
   def compact(spark: SparkSession, logDir: String, outDir: String,
       nowUs: Long): Unit = {
-    val live = resolveEntries(read(spark, logDir), nowUs)
-    graft.sources.CellLogStore.bucketCount(spark, logDir) match {
-      case Some(b) =>   // layout carries over, like the cell-log compact
-        graft.sources.BucketedCatalog.write(live, outDir, SaveMode.Overwrite,
-          b, graft.model.KvEntry.schemaFor(
-            graft.sources.CellLogStore.binaryKeyMode(spark, logDir)),
-          "key", KvSortCols)
-      case None =>
-        val n = spark.sessionState.conf.numShufflePartitions
-        live
-          .repartitionByRange(n, col("key"))
-          .sortWithinPartitions(col("key"))
-          .write.mode(SaveMode.Overwrite)
-          .options(graft.sources.CellLogStore.bloomOptions("key"))
-          .parquet(outDir)
-    }
-    graft.sources.CellLogStore.readDesc(spark, logDir).foreach {
-      case (desc, _) => graft.sources.CellLogStore.writeDesc(spark, outDir, desc)
-    }
+    val desc = storedDesc(spark, logDir)
+    val kv = layout(desc)
+    kv.write(resolveEntries(kv.read(spark, logDir), nowUs), outDir,
+      SaveMode.Overwrite)
+    desc.foreach(CellLogStore.writeDesc(spark, outDir, _))
   }
 }

@@ -2,42 +2,28 @@ package graft.sources
 
 import graft.model.{CfSpec, OpType, TableDesc}
 import graft.operators.Resolve
-import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
-/** Durable cell-log storage: append-only parquet, range-clustered by
-  * row key, plus the background compaction job.
+/** Durable cell-log storage: append-only parquet plus the background
+  * compaction job, and the stored descriptor next to the data.
   *
   * Reference analogues: `TabletWriter` group commit batches mutations
   * into one LevelDB write (tera src/io/tablet_writer.cc:107-230) — here
   * a DataFrame of CellOps IS the batch (S7/S8). A driver-resident batch
   * (a local `Seq[CellOp]`) commits from the driver as one sorted file
   * per touched bucket, with no Spark job ([[DriverCommit]]); any other
-  * batch is one distributed parquet append. Background compaction
-  * physically applies the fold/drop logic to bound read amplification
-  * (src/io/default_compact_strategy.cc:59-120) — here a rewrite of the
-  * resolved log (§4).
+  * batch is one distributed parquet write through [[LogLayout.write]].
+  * Background compaction physically applies the fold/drop logic to
+  * bound read amplification (src/io/default_compact_strategy.cc:59-120)
+  * — here a rewrite of the resolved log (§4).
   *
-  * Scale design: appends are range-repartitioned and sorted by
-  * (row_key, cf, qualifier), so parquet row-group min/max statistics
-  * give range scans tablet-style partition pruning, and resolve's
-  * row_key shuffle reads pre-clustered files. `spark.sql.files.
-  * maxPartitionBytes` then bounds per-task memory at any table size.
+  * The physical layout — flat, LG-partitioned or bucketed; clustering,
+  * sort order, blooms — is [[LogLayout]]'s, picked from the descriptor
+  * on every read and write. `spark.sql.files.maxPartitionBytes` bounds
+  * per-task memory at any table size.
   */
 object CellLogStore {
-
-  /** The LG partition value of each op: row-wide tombstones go to the
-    * shared [[TableDesc.RowTombstoneLg]] (every scan reads it — the
-    * Spark-first stand-in for tera replicating row-deletes into each
-    * LG's LevelDB); everything else to its cf's LG. */
-  private def lgColumn(desc: TableDesc): Column = {
-    val byCf = desc.lgs.foldRight(lit(TableDesc.DefaultLg): Column) {
-      case ((cf, lg), acc) => when(col("cf") === cf, lg).otherwise(acc)
-    }
-    when(col("op") === graft.model.OpType.DelRow,
-      TableDesc.RowTombstoneLg).otherwise(byCf)
-  }
 
   /** Writes `batch` in the descriptor's layout. With `countDeletes`,
     * also returns the batch's tombstone count.
@@ -58,7 +44,7 @@ object CellLogStore {
     val spark = batch.sparkSession
     // layout guard (the bucketed mirror of the LG hasFlatFiles check):
     // a flat file landing in a bucketed location poisons every later
-    // catalog read with INVALID_BUCKET_FILE, and a bucketed file in a
+    // bucketed read with INVALID_BUCKET_FILE, and a bucketed file in a
     // flat log is unreadable noise — refuse a mismatched append NOW,
     // while the state is still recoverable. One props read.
     if (mode == SaveMode.Append) {
@@ -80,84 +66,37 @@ object CellLogStore {
       require(desc.lgs.isEmpty,
         "bucketed layout and locality groups are mutually exclusive " +
           "(one physical clustering per table)")
-    val schema = graft.model.CellOp.schemaFor(desc.rawKeyBinary)
+    val layout = LogLayout.cells(desc)
     val local =
       if (mode == SaveMode.Append && numFiles == 0 && desc.lgs.isEmpty)
-        DriverCommit.localRows(batch, schema)
+        DriverCommit.localRows(batch, layout.schema)
       else None
     local match {
       case Some(rows) =>
-        DriverCommit.write(spark, rows, schema, logDir, CellSortCols,
-          "row_key", Some(desc.buckets).filter(_ > 0).map("row_key" -> _))
-        if (desc.buckets > 0)
-          BucketedCatalog.refresh(spark, logDir, desc.buckets, schema,
-            "row_key", CellSortCols)
+        DriverCommit.write(spark, rows, layout.schema, logDir, layout.sortCols,
+          layout.key, Some(desc.buckets).filter(_ > 0).map(layout.key -> _))
         if (!countDeletes) None
         else {
-          val op = schema.fieldIndex("op")
+          val op = layout.schema.fieldIndex("op")
           Some(rows.count(r => OpType.deletes.contains(r.getInt(op))).toLong)
         }
       case None =>
-        writeDistributed(batch, logDir, mode, desc, schema, numFiles,
-          countDeletes)
+        // an LG-partitioned append next to existing FLAT files would
+        // leave a mixed-depth layout that partition discovery rejects
+        // (and a basePath read would prune the flat rows as lg=null) —
+        // refuse now, while the state is still recoverable
+        if (mode == SaveMode.Append && desc.lgs.nonEmpty)
+          require(!hasFlatFiles(spark, logDir),
+            s"$logDir holds un-partitioned parquet but the descriptor declares " +
+              "locality groups; compact/replace the log into an LG layout " +
+              "(or open it with an LG-free descriptor) before appending")
+        val tally = if (countDeletes) Some(Observation()) else None
+        layout.write(batch, logDir, mode, numFiles, df => tally.fold(df)(obs =>
+          df.observe(obs, count(when(col("op").isin(OpType.deletes: _*), 1)))))
+        tally.flatMap(obs => scala.util.Try(scala.concurrent.Await.result(
+          obs.future, scala.concurrent.duration.Duration(60, "s")).getLong(0))
+          .toOption)
     }
-  }
-
-  /** Spark-path bloom options for `column`: parquet's adaptive bloom
-    * keeps candidate filters from 1 MiB down to 2 KiB and writes the
-    * smallest that holds the file's distinct keys. A bloom with no
-    * expected NDV is 1 MiB in every file, however small. */
-  private[graft] def bloomOptions(column: String): Map[String, String] = Map(
-    s"parquet.bloom.filter.enabled#$column" -> "true",
-    "parquet.bloom.filter.adaptive.enabled" -> "true",
-    "parquet.bloom.filter.candidates.number" -> "10")
-
-  private def writeDistributed(batch: DataFrame, logDir: String,
-      mode: SaveMode, desc: TableDesc, schema: StructType, numFiles: Int,
-      countDeletes: Boolean): Option[Long] = {
-    val n = if (numFiles > 0) numFiles
-      else batch.sparkSession.sessionState.conf.numShufflePartitions
-    val tally = if (countDeletes) Some(Observation()) else None
-    val counted: DataFrame => DataFrame = df => tally.fold(df)(obs =>
-      df.observe(obs, count(when(col("op").isin(OpType.deletes: _*), 1))))
-    // row-key bloom filters per file ≙ tera's per-SST blooms
-    // (table_schema.proto:62): point gets skip files cheaply
-    val writerFor = (df: DataFrame) => df
-      .write.mode(mode)
-      .options(bloomOptions("row_key"))
-    if (desc.buckets > 0)
-      BucketedCatalog.write(batch, logDir, mode, desc.buckets, schema,
-        "row_key", CellSortCols, counted)
-    else if (desc.lgs.isEmpty)
-      writerFor(counted(batch
-        .repartitionByRange(n, col("row_key"), col("cf"), col("qualifier")))
-        .sortWithinPartitions(col("row_key"), col("cf"), col("qualifier"),
-          col("ts"), col("seq")))
-        .parquet(logDir)
-    else {
-      // an LG-partitioned append next to existing FLAT files would
-      // leave a mixed-depth layout that partition discovery rejects
-      // (and a basePath read would prune the flat rows as lg=null) —
-      // refuse now, while the state is still recoverable
-      if (mode == SaveMode.Append)
-        require(!hasFlatFiles(batch.sparkSession, logDir),
-          s"$logDir holds un-partitioned parquet but the descriptor declares " +
-            "locality groups; compact/replace the log into an LG layout " +
-            "(or open it with an LG-free descriptor) before appending")
-      // lg leads the range clustering so a task writes into one LG dir,
-      // not a file per LG per task (small-files explosion at scale)
-      writerFor(counted(batch
-        .withColumn("lg", lgColumn(desc))
-        .repartitionByRange(n, col("lg"), col("row_key"), col("cf"),
-          col("qualifier")))
-        .sortWithinPartitions(col("row_key"), col("cf"), col("qualifier"),
-          col("ts"), col("seq")))
-        .partitionBy("lg")
-        .parquet(logDir)
-    }
-    tally.flatMap(obs => scala.util.Try(scala.concurrent.Await.result(
-      obs.future, scala.concurrent.duration.Duration(60, "s")).getLong(0))
-      .toOption)
   }
 
   /** True when the directory directly holds parquet data files (a flat,
@@ -248,18 +187,19 @@ object CellLogStore {
     // to the matching reader — routing through readLgs would re-probe
     // the directory it just listed
     val props = loadProps(spark, logDir)
-    val bin = props.fold(fallbackBinaryKey)(isBinaryKeyed)
-    props.flatMap(p => Option(p.getProperty("buckets")))
-      .map(_.toInt).filter(_ > 0) match {
-      case Some(n) => readBucketed(spark, logDir, n, bin)
-      case None =>
-        if (hasLgLayout(spark, logDir)) readLgsKnown(spark, logDir, None, bin)
-        else readFlat(spark, logDir, bin)
-    }
+    val layout = LogLayout.cells(TableDesc(
+      buckets = props.fold(0)(bucketsIn),
+      rawKeyBinary = props.fold(fallbackBinaryKey)(isBinaryKeyed)))
+    if (layout.buckets == 0 && hasLgLayout(spark, logDir))
+      layout.readLgs(spark, logDir, None)
+    else layout.read(spark, logDir)
   }
 
   private def isBinaryKeyed(p: java.util.Properties): Boolean =
     p.getProperty("rawKey") == "binary"
+
+  private def bucketsIn(p: java.util.Properties): Int =
+    p.getProperty("buckets", "0").toInt max 0
 
   /** True when the stored descriptor declares binary raw keys. One
     * driver-side properties read — plan-build-time cost. */
@@ -269,63 +209,21 @@ object CellLogStore {
   /** The stored bucket count, when the descriptor declares a bucketed
     * layout. One driver-side properties read — plan-build-time cost. */
   def bucketCount(spark: SparkSession, logDir: String): Option[Int] =
-    loadProps(spark, logDir)
-      .flatMap(p => Option(p.getProperty("buckets")))
-      .map(_.toInt).filter(_ > 0)
+    loadProps(spark, logDir).map(bucketsIn).filter(_ > 0)
 
-  private val CellSortCols = Seq("row_key", "cf", "qualifier", "ts", "seq")
-
-  /** Catalog identifier for a bucketed log (see [[BucketedCatalog]]). */
-  def catalogName(logDir: String): String =
-    BucketedCatalog.catalogName(logDir)
-
-  /** Read a bucketed cell log THROUGH the session catalog — the scan
-    * then reports `HashPartitioning(row_key)`, which satisfies every
-    * resolve distribution (all are clustered on row_key-prefixed keys)
-    * by the subset rule: the whole fold pipeline plans with zero
-    * Exchange, and `row_key = lit` prunes to one bucket.
-    */
-  private def readBucketed(spark: SparkSession, logDir: String,
-      n: Int, binaryKey: Boolean = false): DataFrame =
-    BucketedCatalog.read(spark, logDir, n,
-      graft.model.CellOp.schemaFor(binaryKey), "row_key", CellSortCols)
-
-  private def readFlat(spark: SparkSession, logDir: String,
-      binaryKey: Boolean = false): DataFrame =
-    spark.read.schema(graft.model.CellOp.schemaFor(binaryKey)).parquet(logDir)
-
-  /** Read an LG-partitioned log, pruned to `wanted` LGs (None = all).
-    * The wanted set always includes [[TableDesc.RowTombstoneLg]] — a
-    * row-wide delete must be visible to every CF's resolve. The filter
-    * lands on the partition column, so unwanted LG directories are
-    * pruned at file-listing time, never opened (tera: a projected scan
-    * opens only the LGs holding its CFs, src/io/tablet_io.cc:1018-1024).
-    */
+  /** Read an LG-partitioned log, pruned to `wanted` LGs (None = all;
+    * see [[LogLayout.readLgs]]). */
   def readLgs(spark: SparkSession, logDir: String,
-      wanted: Option[Seq[String]]): DataFrame =
+      wanted: Option[Seq[String]]): DataFrame = {
+    val layout = LogLayout.cells(
+      TableDesc(rawKeyBinary = binaryKeyMode(spark, logDir)))
     // a descriptor can declare LGs over a log whose FILES are not (yet)
     // LG-partitioned: a table before its first append, or hand-imported
     // parquet. Filtering a null lg column would silently drop every row
     // — fall back to the plain read (all CFs in all files; the scan's
     // cf projection still applies downstream).
-    if (!hasLgLayout(spark, logDir))
-      readFlat(spark, logDir, binaryKeyMode(spark, logDir))
-    else readLgsKnown(spark, logDir, wanted, binaryKeyMode(spark, logDir))
-
-  private def readLgsKnown(spark: SparkSession, logDir: String,
-      wanted: Option[Seq[String]], binaryKey: Boolean = false): DataFrame = {
-    val withLg = spark.read
-      .schema(graft.model.CellOp.schemaFor(binaryKey)
-        .add(org.apache.spark.sql.types.StructField("lg",
-          org.apache.spark.sql.types.StringType)))
-      .parquet(logDir)
-    val pruned = wanted match {
-      case Some(names) =>
-        val keep = (names :+ graft.model.TableDesc.RowTombstoneLg).distinct
-        withLg.where(col("lg").isin(keep: _*))
-      case None => withLg
-    }
-    pruned.drop("lg")
+    if (!hasLgLayout(spark, logDir)) layout.read(spark, logDir)
+    else layout.readLgs(spark, logDir, wanted)
   }
 
   /** Seq-era width for generated mutation batches:
@@ -341,13 +239,18 @@ object CellLogStore {
     * prewrite/commit): the stored max seq rounded UP to a [[SeqEra]]
     * boundary. Ops built with `seqBase + monotonically_increasing_id()`
     * then stay above every existing seq and below the next era — the
-    * arrival-order contract CellOp.seq requires. One pushed
-    * max-aggregation over the seq column; empty log → era 1.
+    * arrival-order contract CellOp.seq (and KvEntry.seq) requires. One
+    * pushed max-aggregation over the seq column of `log`, a cell or KV
+    * log; empty log → era 1.
     */
-  def nextSeqEra(spark: SparkSession, logDir: String): Long = {
-    val row = read(spark, logDir).agg(max(col("seq"))).collect()(0)
+  def nextSeqEra(log: DataFrame): Long = {
+    val row = log.agg(max(col("seq"))).collect()(0)
     if (row.isNullAt(0)) SeqEra else ((row.getLong(0) >> 50) + 1) * SeqEra
   }
+
+  /** [[nextSeqEra]] of the cell log at `logDir`. */
+  def nextSeqEra(spark: SparkSession, logDir: String): Long =
+    nextSeqEra(read(spark, logDir))
 
   // ---- durable table metadata -------------------------------------
   // The reference persists schema knobs in the master's meta table

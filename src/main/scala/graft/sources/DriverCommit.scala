@@ -24,7 +24,10 @@ import org.apache.spark.sql.types.StructType
   * write a file there. The files come out of Spark's own parquet writer
   * (`ParquetFileFormat.prepareWrite`), so codec, row metadata and page
   * settings match the Spark write path, and each lands under a hidden
-  * in-progress name first, then renames into place.
+  * in-progress name first, then renames into place. The caller passes
+  * the log's [[LogLayout]] sort, bloom and bucket columns, so a driver
+  * commit lays files out as [[LogLayout.write]] would; logs are read by
+  * path, so the next read in any session lists the new files.
   */
 private[graft] object DriverCommit {
 

@@ -1,0 +1,136 @@
+package graft.sources
+
+import graft.model.{CellOp, KvEntry, OpType, TableDesc}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
+import org.apache.spark.sql.execution.datasources.DataSource
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+
+/** Physical layout of one log directory, cell or KV — the one owner of
+  * how a log sits on disk. tera keeps the tablet layout in the table
+  * schema (table_schema.proto:31-64); here the stored descriptor says
+  * which of three layouts a log has:
+  *  - flat: files range-clustered by `rangeCols`, so parquet min/max
+  *    statistics prune range scans like tablet ranges;
+  *  - LG-partitioned: the same under one `lg=<name>/` directory per
+  *    locality group, `lg` giving each row's partition value;
+  *  - bucketed: hash-clustered by `key` into `buckets` files per
+  *    commit with Spark's bucket function, so a scan REPORTS
+  *    `HashPartitioning(key)`: resolve plans with zero shuffle and a
+  *    point lookup prunes to one bucket.
+  * Every file is sorted by `sortCols` and carries a `key` bloom filter
+  * (tera's per-SST blooms, table_schema.proto:62). Flat and bucketed
+  * logs are read and written BY PATH, the bucket spec attached to the
+  * relation: there is no catalog entry, and every read lists the files
+  * afresh, whichever session wrote them.
+  */
+private[graft] final case class LogLayout(
+    schema: StructType,
+    key: String,
+    rangeCols: Seq[String],
+    sortCols: Seq[String],
+    buckets: Int = 0,
+    lg: Option[Column] = None) {
+
+  private def bucketSpec: Option[BucketSpec] =
+    Some(buckets).filter(_ > 0).map(BucketSpec(_, Seq(key), sortCols))
+
+  /** Read a flat or bucketed log. */
+  def read(spark: SparkSession, dir: String): DataFrame =
+    spark.baseRelationToDataFrame(DataSource(spark, "parquet",
+      paths = Seq(dir), userSpecifiedSchema = Some(schema),
+      bucketSpec = bucketSpec).resolveRelation(checkFilesExist = false))
+
+  /** Read an LG-partitioned log, pruned to `wanted` LGs (None = all).
+    * The wanted set always includes [[TableDesc.RowTombstoneLg]] — a
+    * row-wide delete must be visible to every CF's resolve. The filter
+    * lands on the partition column, so unwanted LG directories are
+    * pruned at file-listing time, never opened (tera: a projected scan
+    * opens only the LGs holding its CFs, src/io/tablet_io.cc:1018-1024).
+    */
+  def readLgs(spark: SparkSession, dir: String,
+      wanted: Option[Seq[String]]): DataFrame = {
+    val withLg = spark.read
+      .schema(schema.add(StructField("lg", StringType)))
+      .parquet(dir)
+    val pruned = wanted match {
+      case Some(names) =>
+        val keep = (names :+ TableDesc.RowTombstoneLg).distinct
+        withLg.where(col("lg").isin(keep: _*))
+      case None => withLg
+    }
+    pruned.drop("lg")
+  }
+
+  /** Write `batch` into `dir` — every Spark-path log write. The batch
+    * is first reconciled to the log schema (`Dataset.to` over the
+    * all-nullable schema): columns match by name, safe casts widen,
+    * extra columns drop, and an unsafe cast fails here, before any file
+    * lands. Then the key clustering: a hash exchange on the bucket
+    * function (one file per bucket per commit), or a range exchange
+    * over `numFiles` partitions (default: the shuffle partitions), led
+    * by `lg` on an LG log so a task writes into one LG directory. Then
+    * the within-file sort. `aboveExchange` wraps the batch right above
+    * the exchange (e.g. an observation counted inside the write job:
+    * below a range exchange the sampling job would count it twice).
+    */
+  def write(batch: DataFrame, dir: String, mode: SaveMode, numFiles: Int = 0,
+      aboveExchange: DataFrame => DataFrame = identity): Unit = {
+    val spark = batch.sparkSession
+    val logRows = batch.to(StructType(schema.map(_.copy(nullable = true))))
+    val rows = lg.fold(logRows)(logRows.withColumn("lg", _))
+    val partCols = lg.map(_ => "lg").toSeq
+    val clustered =
+      if (buckets > 0) rows.repartition(buckets, col(key))
+      else rows.repartitionByRange(
+        if (numFiles > 0) numFiles
+        else spark.sessionState.conf.numShufflePartitions,
+        (partCols ++ rangeCols).map(col): _*)
+    val sorted = aboveExchange(clustered)
+      .sortWithinPartitions(sortCols.map(col): _*)
+    val cmd = DataSource(spark, "parquet", partitionColumns = partCols,
+      bucketSpec = bucketSpec,
+      options = LogLayout.bloomOptions(key) + ("path" -> dir))
+      .planForWriting(mode, sorted.queryExecution.analyzed)
+    spark.sessionState.executePlan(cmd).assertCommandExecuted()
+  }
+}
+
+private[graft] object LogLayout {
+
+  /** Spark-path bloom options for `column`: parquet's adaptive bloom
+    * keeps candidate filters from 1 MiB down to 2 KiB and writes the
+    * smallest that holds the file's distinct keys. A bloom with no
+    * expected NDV is 1 MiB in every file, however small. */
+  def bloomOptions(column: String): Map[String, String] = Map(
+    s"parquet.bloom.filter.enabled#$column" -> "true",
+    "parquet.bloom.filter.adaptive.enabled" -> "true",
+    "parquet.bloom.filter.candidates.number" -> "10")
+
+  /** The cell-log layout `desc` declares: clustered by
+    * (row_key, cf, qualifier), sorted by (row_key, cf, qualifier, ts,
+    * seq), bucketed or LG-partitioned when the descriptor says so. */
+  def cells(desc: TableDesc): LogLayout = LogLayout(
+    CellOp.schemaFor(desc.rawKeyBinary), "row_key",
+    Seq("row_key", "cf", "qualifier"),
+    Seq("row_key", "cf", "qualifier", "ts", "seq"), desc.buckets,
+    Some(desc.lgs).filter(_.nonEmpty).map(lgColumn))
+
+  /** A KV log's layout: clustered by key, sorted by (key, seq). */
+  def kv(binaryKey: Boolean, buckets: Int): LogLayout = LogLayout(
+    KvEntry.schemaFor(binaryKey), "key", Seq("key"), Seq("key", "seq"),
+    buckets)
+
+  /** The LG partition value of each op: row-wide tombstones go to the
+    * shared [[TableDesc.RowTombstoneLg]] (every scan reads it — the
+    * Spark-first stand-in for tera replicating row-deletes into each
+    * LG's LevelDB); everything else to its cf's LG. */
+  private def lgColumn(lgs: Map[String, String]): Column = {
+    val byCf = lgs.foldRight(lit(TableDesc.DefaultLg): Column) {
+      case ((cf, lg), acc) => when(col("cf") === cf, lg).otherwise(acc)
+    }
+    when(col("op") === OpType.DelRow, TableDesc.RowTombstoneLg)
+      .otherwise(byCf)
+  }
+}

@@ -90,10 +90,9 @@ class GraftApiSpec extends AnyFunSuite {
     val gplan = t.get("alice").queryExecution.executedPlan.toString
     assert(gplan.contains("SelectedBucketsCount: 1 out of 8"), gplan)
 
-    // fresh-session reopen: the catalog entry is gone, the descriptor
-    // re-registers the bucket spec, answers and plan shape survive
-    spark.sql(s"DROP TABLE ${graft.sources.CellLogStore.catalogName(dir)}")
-    val re = Graft.openTable(spark, dir)
+    // fresh-session reopen: the descriptor alone carries the bucket
+    // spec, answers and plan shape survive
+    val re = Graft.openTable(spark.newSession(), dir)
     assert(re.desc.buckets == 8)
     assert(Codecs.decodeBE64(re.get("alice").where(col("qualifier") === "visits")
       .collect()(0).getAs[Array[Byte]]("value")) == 5L)
@@ -117,7 +116,7 @@ class GraftApiSpec extends AnyFunSuite {
     }
     // layout-mismatch appends are refused BEFORE any file lands: a flat
     // (default-desc) write into this bucketed log would poison every
-    // later catalog read with INVALID_BUCKET_FILE
+    // later bucketed read with INVALID_BUCKET_FILE
     val stray = Seq(CellOp("x", "cf", "q", 1, OpType.Value, null, 99)).toDF()
     intercept[IllegalArgumentException] {
       graft.sources.CellLogStore.append(stray, dir)
@@ -126,38 +125,26 @@ class GraftApiSpec extends AnyFunSuite {
       graft.sources.CellLogStore.append(stray, dir,
         desc = model.TableDesc(buckets = 4))
     }
-    // a stale catalog entry (table re-created at this path with another
-    // bucket count) loses to the descriptor: reads re-register
-    spark.sql(s"DROP TABLE ${graft.sources.CellLogStore.catalogName(cdir)}")
-    spark.sql(
-      s"""CREATE TABLE ${graft.sources.CellLogStore.catalogName(cdir)}
-         |(row_key STRING, cf STRING, qualifier STRING, ts BIGINT, op INT,
-         | value BINARY, seq BIGINT) USING parquet
-         |CLUSTERED BY (row_key) INTO 2 BUCKETS LOCATION '$cdir'""".stripMargin)
-    assert(Codecs.decodeBE64(
-      Graft.openTable(spark, cdir).get("alice")
-        .where(col("qualifier") === "visits")
-        .collect()(0).getAs[Array[Byte]]("value")) == 5L)
   }
 
   test("bucketed catalog: location with a quote registers intact") {
-    // the registration DDL inlines the path into a SQL string literal;
-    // Spark's lexer is backslash-style, so ' escapes as \' (doubling
-    // would tokenize as two adjacent strings -> parse error) and \ as
-    // \\. Only the quote is driven end-to-end here: a backslash in a
-    // directory NAME dies upstream of the DDL (Hadoop's glob layer
-    // treats \ as its own escape during LOCATION resolution), so the
-    // \\ escaping matters for paths that embed literal \t-style
-    // sequences, which the lexer would otherwise unescape.
+    // bucketed logs are read and written by path: a quote in the
+    // directory name must reach the file listing intact, on the driver
+    // commit, the bucketed read and its bucket pruning alike
     val dir = Files.createTempDirectory("graft-esc").toString + "/o'brien"
     Files.createDirectories(java.nio.file.Paths.get(dir))
     val t = Graft.createTable(spark, dir, model.TableDesc(buckets = 4),
       ops = Some(Set(OpType.Value)))
     t.put(Seq(CellOp("alice", "cf", "q", 100, OpType.Value, "x".getBytes, 1)))
-    // the catalog read resolves files at the REAL location
+    // a distributed batch takes the Spark write, also by path
+    import spark.implicits._
+    t.put(Seq(CellOp("bob", "cf", "q", 100, OpType.Value, "y".getBytes, 2))
+      .toDF().repartition(2))
+    // the read resolves files at the REAL location
     val got = t.get("alice").collect()
     assert(got.length == 1 &&
       new String(got(0).getAs[Array[Byte]]("value")) == "x")
+    assert(t.get("bob").count() == 1)
     assert(t.get("alice").queryExecution.executedPlan.toString
       .contains("SelectedBucketsCount: 1 out of 4"))
   }
@@ -680,9 +667,8 @@ class GraftApiSpec extends AnyFunSuite {
     val gplan = t.get("a", 5000000L).queryExecution.executedPlan.toString
     assert(gplan.contains("SelectedBucketsCount: 1 out of 4"), gplan)
 
-    // fresh-session reopen re-registers from the descriptor
-    spark.sql(s"DROP TABLE ${graft.sources.CellLogStore.catalogName(dir)}")
-    assert(kvSet(Graft.openKvTable(spark, dir), 5000000L)
+    // fresh-session reopen: the descriptor alone carries the layout
+    assert(kvSet(Graft.openKvTable(spark.newSession(), dir), 5000000L)
       == Set(("a", "1b"), ("b", "2")))
 
     // compaction carries the bucketed layout
@@ -692,6 +678,133 @@ class GraftApiSpec extends AnyFunSuite {
     assert(c.log.count() == 1)
     assert(graft.sources.CellLogStore.bucketCount(spark, cdir).contains(4))
     assert(kvSet(c, Long.MaxValue) == Set(("a", "1b")))
+  }
+
+  /** The parquet data files under `dir`, LG directories included. */
+  private def dataFiles(dir: String): Seq[java.nio.file.Path] = {
+    val walk = Files.walk(java.nio.file.Paths.get(dir))
+    try {
+      import scala.jdk.CollectionConverters._
+      walk.iterator().asScala
+        .filter(_.getFileName.toString.endsWith(".parquet")).toList
+    } finally walk.close()
+  }
+
+  /** (name, type) of every column each data file under `dir` carries. */
+  private def fileSchemas(dir: String): Set[Seq[(String, String)]] =
+    dataFiles(dir).map(f => spark.read.parquet(f.toString).schema
+      .map(c => (c.name, c.dataType.simpleString))).toSet
+
+  test("off-schema batches reconcile to the log schema on every layout") {
+    import graft.model.TableDesc
+    import spark.implicits._
+    val ops = Seq(
+      CellOp("a", "cf", "q", 100, OpType.Value, "1".getBytes, 1),
+      CellOp("a", "cf", "q", 200, OpType.Value, "2".getBytes, 2),
+      CellOp("b", "hot", "q", 100, OpType.Value, "3".getBytes, 3),
+      CellOp("c", "cf", "q", 100, OpType.Value, "4".getBytes, 4),
+      CellOp("c", "cf", "q", 150, OpType.DelRow, null, 5)).toDF()
+    // reordered columns, INT ts/seq and an extra column: a distributed
+    // batch, so it takes the Spark write
+    val offSchema = ops.select(col("seq").cast("int").as("seq"),
+      col("qualifier"), col("row_key"), col("cf"),
+      col("ts").cast("int").as("ts"), col("op"), lit("x").as("note"),
+      col("value")).repartition(2)
+    val logSchema = CellOp.schema.map(c => (c.name, c.dataType.simpleString))
+    def cellSet(t: GraftTable): Set[(String, String, String, Long, String)] =
+      t.cells().collect().map(r => (r.getAs[String]("row_key"),
+        r.getAs[String]("cf"), r.getAs[String]("qualifier"),
+        r.getAs[Long]("ts"), new String(r.getAs[Array[Byte]]("value")))).toSet
+    Seq(TableDesc(), TableDesc(buckets = 4),
+        TableDesc(lgs = Map("hot" -> "hot"))).foreach { desc =>
+      def table(): GraftTable = Graft.createTable(spark,
+        Files.createTempDirectory("graft-offschema").toString, desc)
+      val ref = table()
+      ref.put(ops)
+      val t = table()
+      t.put(offSchema)
+      assert(cellSet(t) == cellSet(ref) && cellSet(t).size == 2, desc)
+      assert(fileSchemas(t.logDir) == Set(logSchema), desc)
+      // a string ts is no safe cast: refused, local or distributed,
+      // before any file lands
+      val before = dataFiles(t.logDir).toSet
+      val stringTs = ops.withColumn("ts", col("ts").cast("string"))
+      Seq(stringTs, stringTs.repartition(2)).foreach { bad =>
+        intercept[org.apache.spark.sql.AnalysisException](t.put(bad))
+      }
+      assert(dataFiles(t.logDir).toSet == before, desc)
+    }
+
+    // KV entries, flat and bucketed
+    val entries = Seq(("k1", "1", 1L), ("k2", "2", 2L), ("k1", "1b", 3L))
+      .toDF("key", "v", "seq")
+      .select(col("key"), encode(col("v"), "UTF-8").as("value"),
+        lit(0L).as("expire_ts_us"), col("seq"))
+    val kvOffSchema = entries.select(col("seq").cast("int").as("seq"),
+      lit("x").as("note"), col("expire_ts_us").cast("int").as("expire_ts_us"),
+      col("value"), col("key")).repartition(2)
+    val kvSchema = model.KvEntry.schema
+      .map(c => (c.name, c.dataType.simpleString))
+    def kvSet(t: GraftKvTable): Set[(String, String)] = t.kvs().collect()
+      .map(r => (r.getString(0), new String(r.getAs[Array[Byte]]("value"))))
+      .toSet
+    Seq(0, 4).foreach { buckets =>
+      def table(): GraftKvTable = Graft.createKvTable(spark,
+        Files.createTempDirectory("graft-kv-offschema").toString, buckets)
+      val ref = table()
+      ref.putEntries(entries)
+      val t = table()
+      t.putEntries(kvOffSchema)
+      assert(kvSet(t) == kvSet(ref) &&
+        kvSet(t) == Set(("k1", "1b"), ("k2", "2")), buckets)
+      assert(fileSchemas(t.logDir) == Set(kvSchema), buckets)
+      val before = dataFiles(t.logDir).toSet
+      intercept[org.apache.spark.sql.AnalysisException] {
+        t.putEntries(entries.withColumn("expire_ts_us",
+          col("expire_ts_us").cast("string")))
+      }
+      assert(dataFiles(t.logDir).toSet == before, buckets)
+    }
+  }
+
+  test("bucketed tables leave the session catalog untouched and read across sessions") {
+    import graft.model.TableDesc
+    import spark.implicits._
+    def tables(): Set[String] =
+      spark.catalog.listTables().collect().map(_.name).toSet
+    val before = tables()
+    def tmp(name: String) = Files.createTempDirectory(name).toString
+    val dir = tmp("graft-nocat")
+    val t = Graft.createTable(spark, dir, TableDesc(buckets = 4),
+      Some(Set(OpType.Value)))
+    t.put(Seq(CellOp("a", "cf", "q", 1L, OpType.Value, "1".getBytes, 1L)))
+    t.put(Seq(CellOp("b", "cf", "q", 1L, OpType.Value, "2".getBytes, 2L))
+      .toDF().repartition(2))
+    assert(t.get("a").count() == 1)
+    assert(t.scan.run().count() == 2)
+    val cdir = tmp("graft-nocat-c")
+    t.compact(cdir)
+    assert(Graft.openTable(spark, cdir).get("b").count() == 1)
+    val kdir = tmp("graft-nocat-kv")
+    val kv = Graft.createKvTable(spark, kdir, buckets = 4)
+    kv.put(Seq(("k1", "1".getBytes, 0L)), 1L)
+    kv.put(Seq(("k2", "2".getBytes, 0L)).toDF("key", "value", "ttl_sec")
+      .repartition(2), 1L)
+    assert(kv.get("k1").count() == 1)
+    val kcdir = tmp("graft-nocat-kv-c")
+    kv.compact(kcdir)
+    assert(Graft.openKvTable(spark, kcdir).kvs().count() == 2)
+    assert(tables() == before)
+
+    // a put made through another session shows on this session's next
+    // read, with no refresh step
+    val other = spark.newSession()
+    Graft.openTable(other, dir)
+      .put(Seq(CellOp("c", "cf", "q", 1L, OpType.Value, "3".getBytes, 3L)))
+    assert(t.get("c").count() == 1)
+    Graft.openKvTable(other, kdir).put(Seq(("k3", "3".getBytes, 0L)), 1L)
+    assert(kv.get("k3").count() == 1)
+    assert(tables() == before)
   }
 
   test("relational bulk load round-trips: resolve == source projection") {

@@ -117,9 +117,10 @@ class ScaleOpsSpec extends AnyFunSuite {
     val touched = ranges.count { case (mn, mx) => mx >= lo && mn < hi }
     assert(touched <= 2, s"5% range scan touches $touched of 8 files")
 
-    // every file the engine writes carries a row_key bloom sized to its
+    // every file the engine writes carries a key bloom sized to its
     // rows: small flat appends (driver and Spark path), bucketed appends
-    // (driver and Spark path) and a bucketed compaction
+    // (driver and Spark path) and a bucketed compaction; KV appends and
+    // compactions, flat and bucketed
     import spark.implicits._
     def small(n: Int, seq0: Long) = (0 until n).map(i => CellOp(
       f"s$i%05d", "cf", "q", 1L, OpType.Value, "v".getBytes, seq0 + i))
@@ -132,7 +133,16 @@ class ScaleOpsSpec extends AnyFunSuite {
     bt.put(small(80, 100L).toDF().repartition(3))
     val cdir = Files.createTempDirectory("graft-layout-bkt-c").toString
     bt.compact(cdir)
-    Seq(dir, bdir, cdir).foreach { d =>
+    val kvDirs = Seq(0, 4).flatMap { buckets =>
+      val kdir = Files.createTempDirectory("graft-layout-kv").toString
+      val kv = Graft.createKvTable(spark, kdir, buckets = buckets)
+      kv.put((0 until 80).map(i => (f"k$i%05d", "v".getBytes, 0L)), 1L)
+      val kcdir = Files.createTempDirectory("graft-layout-kv-c").toString
+      kv.compact(kcdir)
+      Seq(kdir, kcdir).map(_ -> "key")
+    }
+    val audited = Seq(dir, bdir, cdir).map(_ -> "row_key") ++ kvDirs
+    audited.foreach { case (d, keyCol) =>
       val fs2 = new org.apache.hadoop.fs.Path(d).getFileSystem(conf)
       val written = fs2.listStatus(new org.apache.hadoop.fs.Path(d))
         .filter(_.getPath.getName.endsWith(".parquet"))
@@ -143,9 +153,9 @@ class ScaleOpsSpec extends AnyFunSuite {
         try {
           rd.getFooter.getBlocks.asScala.foreach { block =>
             val key = block.getColumns.asScala
-              .find(_.getPath.toDotString == "row_key").get
+              .find(_.getPath.toDotString == keyCol).get
             assert(key.getBloomFilterOffset >= 0,
-              s"${f.getPath}: no bloom filter on row_key")
+              s"${f.getPath}: no bloom filter on $keyCol")
             val bytes = rd.readBloomFilter(key).getBitsetSize
             if (block.getRowCount <= 100)
               assert(bytes <= 64 * 1024,

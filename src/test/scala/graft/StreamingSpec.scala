@@ -351,8 +351,8 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     val logDir = tmp("bktobs")
     // bucketed files are plain parquet under the log dir, so the file
-    // stream discovers them; acks append THROUGH the registered catalog
-    // table — regression for the CTAS-clears-location hazard
+    // stream discovers them; acks append by path into the same bucketed
+    // layout, and the next read lists them without any refresh
     val t = Graft.createTable(spark, logDir,
       graft.model.TableDesc(buckets = 4))
     val writes = Seq(
