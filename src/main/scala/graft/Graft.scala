@@ -3,9 +3,9 @@ package graft
 import graft.model.{CellOp, OpType, TableDesc}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import graft.operators.{Resolve, ScanFilter, ScanQuery}
-import graft.sources.{CellLogStore, Tables}
+import graft.sources.{CellLogStore, Sidecar, TableState, Tables}
 import graft.streaming.Observers
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.SortedRunsCollect
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -31,29 +31,32 @@ class GraftTable(
       * lets every resolve skip its op-distribution probe. */
     val opsPresent: Option[Set[Int]] = None) {
 
-  /** The raw tagged mutation log. */
-  def log: DataFrame =
-    CellLogStore.read(spark, logDir, fallbackBinaryKey = desc.rawKeyBinary)
+  /** The log and the stored tombstone count through ONE state read per
+    * call (a driver-side file read, no Spark job), so the count tracks
+    * appends; it lets resolve's "auto" delete strategy size itself
+    * without a count job on a flat or LG log (a bucketed read never
+    * needs it). The stored state lays the log out; this table's `desc`
+    * is the fallback for a bare directory. */
+  private def source: CellLogStore.Source =
+    CellLogStore.source(spark, logDir, desc)
 
-  /** The stored tombstone count, when the descriptor carries one — read
-    * per call (a driver-side file read, no Spark job) so it tracks
-    * appends; lets resolve's "auto" delete strategy size itself without
-    * a count job on a flat or LG log (a bucketed read never needs it). */
-  private def deleteHint: Option[Long] =
-    CellLogStore.readDeleteCount(spark, logDir)
+  /** The raw tagged mutation log. */
+  def log: DataFrame = source.log
 
   /** Resolved visible cells (versions/TTL/tombstones/folds applied). */
-  def cells(nowUs: Long = Long.MaxValue): DataFrame =
-    Resolve.resolve(log, desc, nowUs, opsPresent = opsPresent,
-      deleteCountHint = deleteHint)
+  def cells(nowUs: Long = Long.MaxValue): DataFrame = {
+    val src = source
+    Resolve.resolve(src.log, desc, nowUs, opsPresent = opsPresent,
+      deleteCountHint = src.deleteHint)
+  }
 
   /** Scan builder over this table. On an LG-partitioned table a
     * CF-projected scan reads only the matching `lg=` directories. */
-  def scan: ScanQuery = ScanQuery(log, desc, opsPresent = opsPresent,
-    deleteCountHint = deleteHint,
-    lgRead =
-      if (desc.lgs.isEmpty) None
-      else Some(wanted => CellLogStore.readLgs(spark, logDir, Some(wanted))))
+  def scan: ScanQuery = {
+    val src = source
+    ScanQuery(src.log, desc, opsPresent = opsPresent,
+      deleteCountHint = src.deleteHint, lgRead = src.lgRead)
+  }
 
   /** Storage form of a logical row key: murmur-hex-prefixed on a
     * hash-sharded table (tera `hash_method_`, src/sdk/table_impl.cc:98),
@@ -126,9 +129,11 @@ class GraftTable(
     CellLogStore.allocateTxnTs(spark, logDir, n)
 
   /** Time-travel read bound by sequence number (tera snapshots). */
-  def snapshot(seq: Long): DataFrame =
-    Resolve.resolve(log, desc, snapshotSeq = Some(seq), opsPresent = opsPresent,
-      deleteCountHint = deleteHint)
+  def snapshot(seq: Long): DataFrame = {
+    val src = source
+    Resolve.resolve(src.log, desc, snapshotSeq = Some(seq),
+      opsPresent = opsPresent, deleteCountHint = src.deleteHint)
+  }
 
   /** Background compaction into `outDir` (physically applies folds,
     * drops dead versions — keeps read amplification bounded). */
@@ -154,7 +159,7 @@ class GraftTable(
         "binary keys may themselves contain")
     val valueOnly = Some(Set(graft.model.OpType.Value))
     val idxOps = graft.operators.SecondaryIndex.buildOps(cells(), cf, qualifier)
-    if (CellLogStore.readDesc(spark, indexLogDir).isEmpty) {
+    if (TableState.read(spark, indexLogDir).isEmpty) {
       val idx = Graft.createTable(spark, indexLogDir, ops = valueOnly)
       idx.put(idxOps)
       idx
@@ -195,9 +200,10 @@ class GraftTable(
       value: String): DataFrame = {
     val cand = graft.operators.SecondaryIndex.candidatesEq(index.cells(), value)
       .select(col("base_key").as("row_key"))
-    val prunedLog = log.join(cand, Seq("row_key"), "left_semi")
+    val src = source
+    val prunedLog = src.log.join(cand, Seq("row_key"), "left_semi")
     Resolve.resolve(prunedLog, desc, opsPresent = opsPresent,
-        deleteCountHint = deleteHint)
+        deleteCountHint = src.deleteHint)
       .where(col("cf") === cf && col("qualifier") === qualifier &&
         decode(col("value"), "UTF-8") === value)
       .select(col("row_key").as("base_key"))
@@ -246,10 +252,11 @@ class GraftKvTable(val spark: SparkSession, val logDir: String) {
 
   /** Binary point get (binary-keyed KV tables): exact-bytes equality. */
   def get(key: Array[Byte], nowUs: Long): DataFrame = {
-    require(CellLogStore.binaryKeyMode(spark, logDir),
+    val kv = KvStore.layout(spark, logDir)
+    require(kv.schema(kv.key).dataType == org.apache.spark.sql.types.BinaryType,
       "binary get on a readable-key KV table (keys are StringType; use " +
         "get(String, nowUs))")
-    kvs(nowUs).where(col("key") === lit(key))
+    KvStore.resolve(kv.read(spark, logDir), nowUs).where(col("key") === lit(key))
   }
 
   /** Group-commit (key, value[, ttl_sec]) rows. Expiry is baked at
@@ -262,12 +269,14 @@ class GraftKvTable(val spark: SparkSession, val logDir: String) {
     val withTtl =
       if (batch.columns.contains("ttl_sec")) batch
       else batch.withColumn("ttl_sec", lit(0L))
-    val seqBase = CellLogStore.nextSeqEra(log)
-    KvStore.append(withTtl.select(
+    val kv = KvStore.layout(spark, logDir)
+    val seqBase = CellLogStore.nextSeqEra(kv.read(spark, logDir))
+    kv.write(withTtl.select(
       col("key"), col("value"),
       when(col("ttl_sec") <= 0L, lit(0L))
         .otherwise(lit(nowUs) + col("ttl_sec") * 1000000L).as("expire_ts_us"),
-      (lit(seqBase) + monotonically_increasing_id()).as("seq")), logDir)
+      (lit(seqBase) + monotonically_increasing_id()).as("seq")), logDir,
+      SaveMode.Append)
   }
 
   def put(kvs: Seq[(String, Array[Byte], Long)], nowUs: Long): Unit = {
@@ -301,7 +310,7 @@ object Graft {
     // like the reference master, creating over an existing table is an
     // error — silently replacing the descriptor of a non-empty log could
     // flip key hashing or TTL semantics under stored data
-    require(CellLogStore.readDesc(spark, logDir).isEmpty,
+    require(TableState.read(spark, logDir).isEmpty,
       s"table already exists at $logDir (use openTable)")
     require(!desc.kvMode, s"use createKvTable for a KV-mode table")
     require(!(desc.hashKeys && desc.rawKeyBinary),
@@ -313,8 +322,7 @@ object Graft {
     require(desc.buckets == 0 || desc.lgs.isEmpty,
       "bucketed layout and locality groups are mutually exclusive " +
         "(one physical clustering per table)")
-    CellLogStore.writeDesc(spark, logDir, desc, ops)
-    CellLogStore.setDeleteCount(spark, logDir, 0L)
+    TableState.write(spark, logDir, TableState(desc, ops, deleteCount = Some(0L)))
     SortedRunsCollect.install(spark)
     new GraftTable(spark, logDir, desc, ops)
   }
@@ -331,10 +339,10 @@ object Graft {
   def openTable(spark: SparkSession, logDir: String,
       desc: TableDesc = TableDesc()): GraftTable = {
     SortedRunsCollect.install(spark)
-    CellLogStore.readDesc(spark, logDir) match {
-      case Some((stored, ops)) =>
-        require(!stored.kvMode, s"$logDir is a KV-mode table (use openKvTable)")
-        new GraftTable(spark, logDir, stored, ops)
+    TableState.read(spark, logDir) match {
+      case Some(s) =>
+        require(!s.desc.kvMode, s"$logDir is a KV-mode table (use openKvTable)")
+        new GraftTable(spark, logDir, s.desc, s.ops)
       case None => new GraftTable(spark, logDir, desc)
     }
   }
@@ -348,10 +356,10 @@ object Graft {
     * `hashKeys` would re-address every row, flipping `kvMode` changes
     * the log schema — both refused.
     */
-  def alterTable(spark: SparkSession, logDir: String, desc: TableDesc): GraftTable = {
-    val (stored, ops) = CellLogStore.readDesc(spark, logDir)
-      .getOrElse(throw new IllegalArgumentException(
-        s"no table descriptor at $logDir (create the table first)"))
+  def alterTable(spark: SparkSession, logDir: String,
+      desc: TableDesc): GraftTable = Sidecar.locked {
+    val state = TableState.require(spark, logDir)
+    val stored = state.desc
     require(!stored.kvMode && !desc.kvMode,
       "alterTable is for cell tables; a KV-mode table has no resolve knobs " +
         "to alter (and its log is KvEntry-schema)")
@@ -369,8 +377,8 @@ object Graft {
       "cannot change the bucket count under stored data (files are physically " +
         "hash-clustered) — compact to a new dir with the new descriptor to " +
         "migrate")
-    CellLogStore.writeDesc(spark, logDir, desc, ops)
-    new GraftTable(spark, logDir, desc, ops)
+    TableState.write(spark, logDir, state.copy(desc = desc))
+    new GraftTable(spark, logDir, desc, state.ops)
   }
 
   /** Bulk-load a relational DataFrame as a new cell table (the
@@ -394,19 +402,19 @@ object Graft {
     * point lookup prunes to one bucket (see [[TableDesc.buckets]]). */
   def createKvTable(spark: SparkSession, logDir: String,
       buckets: Int = 0, binaryKeys: Boolean = false): GraftKvTable = {
-    require(CellLogStore.readDesc(spark, logDir).isEmpty,
+    require(TableState.read(spark, logDir).isEmpty,
       s"table already exists at $logDir (use openKvTable)")
     require(buckets >= 0, s"buckets must be >= 0, got $buckets")
-    CellLogStore.writeDesc(spark, logDir,
-      TableDesc(kvMode = true, buckets = buckets, rawKeyBinary = binaryKeys))
+    TableState.write(spark, logDir, TableState(
+      TableDesc(kvMode = true, buckets = buckets, rawKeyBinary = binaryKeys)))
     new GraftKvTable(spark, logDir)
   }
 
   /** Open a KV-mode table (a stored descriptor must agree on the mode;
     * a bare directory of KvEntry parquet also opens). */
   def openKvTable(spark: SparkSession, logDir: String): GraftKvTable = {
-    CellLogStore.readDesc(spark, logDir).foreach { case (stored, _) =>
-      require(stored.kvMode, s"$logDir is not a KV-mode table (use openTable)")
+    TableState.read(spark, logDir).foreach { s =>
+      require(s.desc.kvMode, s"$logDir is not a KV-mode table (use openTable)")
     }
     new GraftKvTable(spark, logDir)
   }

@@ -359,7 +359,9 @@ object Bpe {
 
   // ---- persisted word dictionary (the incremental-training store) ----
 
-  private val DictPropsFile = "_graft_bpe_dict.properties"
+  private val DictProps = graft.sources.Sidecar("_graft_bpe_dict.properties",
+    "BPE dictionary", "build with writeWordCounts (or the previous " +
+      "write/append/compact was torn mid-commit)")
 
   /** Persist the corpus word dictionary: `(word, cnt)` parquet
     * segments at the directory root + a tokenizer sidecar written
@@ -383,17 +385,15 @@ object Bpe {
     * there is no duplicate-id contract — counts merge by addition. */
   def appendToWordCounts(newDocs: DataFrame, dir: String): Unit = {
     val spark = newDocs.sparkSession
-    requireDictProps(spark, dir)
-    val props = new org.apache.hadoop.fs.Path(dir, DictPropsFile)
-    props.getFileSystem(spark.sessionState.newHadoopConf())
-      .delete(props, false)
+    DictProps.require(spark, dir)
+    DictProps.down(spark, dir)
     wordCounts(newDocs).write.mode("append").parquet(dir)
     writeDictProps(spark, dir)
   }
 
   /** The merged dictionary: segments fold in one hash aggregation. */
   def readWordCounts(spark: SparkSession, dir: String): DataFrame = {
-    requireDictProps(spark, dir)
+    DictProps.require(spark, dir)
     spark.read.parquet(dir)
       .groupBy(col("word")).agg(sum(col("cnt")).as("cnt"))
   }
@@ -402,10 +402,8 @@ object Bpe {
     * root rewrite as the other stores; counts merge by sum). */
   def compactWordCounts(dir: String): Unit = {
     val spark = SparkSession.active
-    requireDictProps(spark, dir)
-    val props = new org.apache.hadoop.fs.Path(dir, DictPropsFile)
-    props.getFileSystem(spark.sessionState.newHadoopConf())
-      .delete(props, false)
+    DictProps.require(spark, dir)
+    DictProps.down(spark, dir)
     IndexFiles.rewriteRoot(spark, dir,
       _.groupBy(col("word")).agg(sum(col("cnt")).as("cnt")))
     writeDictProps(spark, dir)
@@ -423,34 +421,17 @@ object Bpe {
     trainFromDict(dict, numMerges)
   }
 
-  private def writeDictProps(spark: SparkSession, dir: String): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val path = new org.apache.hadoop.fs.Path(dir, DictPropsFile)
-    val tmp = new org.apache.hadoop.fs.Path(dir, DictPropsFile + ".tmp")
-    val fs = path.getFileSystem(conf)
-    val out = fs.create(tmp, true)
-    try out.write("tokenizer=lower_ws\n".getBytes("UTF-8"))
-    finally out.close()
-    fs.delete(path, false)
-    if (!fs.rename(tmp, path))
-      throw new java.io.IOException(s"failed to move $tmp to $path")
-  }
-
-  private def requireDictProps(spark: SparkSession, dir: String): Unit = {
-    val path = new org.apache.hadoop.fs.Path(dir, DictPropsFile)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(path),
-      s"no BPE dictionary sidecar at $path — build with writeWordCounts " +
-        "(or the previous write/append/compact was torn mid-commit)")
-  }
+  private def writeDictProps(spark: SparkSession, dir: String): Unit =
+    DictProps.write(spark, dir, "tokenizer" -> "lower_ws")
 
   // ---- persistence (same sidecar discipline as the other stores) ----
 
-  private val PropsFile = "_graft_bpe.properties"
+  private val ModelProps = graft.sources.Sidecar("_graft_bpe.properties",
+    "BPE", "train and save a model first")
 
   /** Persist the merge table beside the corpus: `merges/` parquet
-    * (rank, left, right) first, properties sidecar LAST (write-then-
-    * rename), so a torn write leaves a refusing directory. */
+    * (rank, left, right) first, properties sidecar LAST, so a torn
+    * write leaves a refusing directory. */
   def save(spark: SparkSession, model: BpeModel, dir: String): Unit = {
     import spark.implicits._
     model.merges.zipWithIndex
@@ -458,29 +439,12 @@ object Bpe {
       .toDF("rank", "left", "right")
       .repartition(1)
       .write.mode("overwrite").parquet(s"$dir/merges")
-    val conf = spark.sessionState.newHadoopConf()
-    val path = new org.apache.hadoop.fs.Path(dir, PropsFile)
-    val tmp = new org.apache.hadoop.fs.Path(dir, PropsFile + ".tmp")
-    val fs = path.getFileSystem(conf)
-    val out = fs.create(tmp, true)
-    try out.write(
-      s"tokenizer=lower_ws\nend_of_word=$EndOfWord\nmerges=${model.merges.length}\n"
-        .getBytes("UTF-8"))
-    finally out.close()
-    fs.delete(path, false)
-    if (!fs.rename(tmp, path))
-      throw new java.io.IOException(s"failed to move $tmp to $path")
+    ModelProps.write(spark, dir, "tokenizer" -> "lower_ws",
+      "end_of_word" -> EndOfWord, "merges" -> model.merges.length)
   }
 
   def load(spark: SparkSession, dir: String): BpeModel = {
-    val path = new org.apache.hadoop.fs.Path(dir, PropsFile)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(path),
-      s"no BPE sidecar at $path — train and save a model first")
-    val props = new java.util.Properties()
-    val in = fs.open(path)
-    try props.load(in) finally in.close()
-    val n = props.getProperty("merges").toInt
+    val n = ModelProps.require(spark, dir).int("merges")
     val merges = spark.read.parquet(s"$dir/merges")
       .orderBy(col("rank"))
       .collect()

@@ -31,7 +31,8 @@ object Curation {
   /** Absorbed-state sidecar in the fingerprint store dir: present iff
     * the last multi-store absorb (fp parquet + minhash index) fully
     * committed. */
-  private val StateFile = "_graft_curation.properties"
+  private val State = graft.sources.Sidecar("_graft_curation.properties",
+    "curation state", "re-run the corpus bootstrap")
 
   /** Built-in pipeline stage labels, in evaluation order (user gates
     * from `extraGates` slot in after `lang` under their own names). */
@@ -214,16 +215,13 @@ object Curation {
     // exact dedup: lowest batch id per print wins — unless the print
     // is already in the store, in which case the CORPUS owns it and
     // every batch copy drops
-    val fpPath = new org.apache.hadoop.fs.Path(fpDir)
-    val fs = fpPath.getFileSystem(spark.sessionState.newHadoopConf())
     val fpHasData = IndexFiles.hasDataFiles(spark, fpDir)
     // absorb is a MULTI-store commit (fp parquet + minhash index); the
     // state sidecar goes down before it and back after, so a torn
     // commit refuses loudly here instead of silently running with
     // fingerprints whose signatures never made the index
-    val statePath = new org.apache.hadoop.fs.Path(fpDir, StateFile)
-    require(!fpHasData || fs.exists(statePath),
-      s"fingerprint store at $fpDir holds data but no $StateFile sidecar " +
+    require(!fpHasData || State.read(spark, fpDir).isDefined,
+      s"fingerprint store at $fpDir holds data but no ${State.name} sidecar " +
         "— a previous absorb died mid-commit; rebuild the state (re-run " +
         "the corpus bootstrap) rather than curating against a torn store")
     // bootstrap: a missing or still-empty store means no corpus yet
@@ -322,7 +320,7 @@ object Curation {
       // the fp append and the index append leaves a store the next
       // round refuses (see the require above), never one that silently
       // drops re-deliveries whose signatures were lost
-      fs.delete(statePath, false)
+      State.down(spark, fpDir)
       labeled.where(col("_stage") === "kept")
         .select(col("_fp").as("fp"))
         .write.mode("append").parquet(fpDir)
@@ -338,9 +336,7 @@ object Curation {
           TextAnalysis.writeDatasheetStore(kept, dsDir, batchId,
             shortDocTokens = minTokens)
       }
-      val out = fs.create(statePath, true)
-      try out.write("absorbed=true\n".getBytes("UTF-8"))
-      finally out.close()
+      State.write(spark, fpDir, "absorbed" -> true)
     }
     val report = labeled.groupBy(col("_stage").as("stage"))
       .agg(count(lit(1)).as("docs"))

@@ -1082,12 +1082,12 @@ object Dedup {
   // increment cannot silently run with a mismatched shingle length or
   // hash count.
 
-  private val MinhashPropsFile = "_graft_minhash.properties"
+  private val MinhashProps = graft.sources.Sidecar(
+    "_graft_minhash.properties", "minhash index", "build with writeMinhashIndex")
 
   /** Build and persist the corpus minhash index under `dir`. Parquet
-    * first, sidecar last (write-then-rename, raw stream writes — a
-    * failed write must throw, and a concurrent reader must never see a
-    * sidecar without its parquet). */
+    * first, sidecar last (a concurrent reader must never see a sidecar
+    * without its parquet). */
   def writeMinhashIndex(docs: DataFrame, dir: String,
       shingleLen: Int = 3, numHashes: Int = 64): Unit = {
     minhashSignaturesHashed(
@@ -1097,33 +1097,16 @@ object Dedup {
   }
 
   private def writeMinhashProps(spark: SparkSession, dir: String,
-      shingleLen: Int, numHashes: Int): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val path = new org.apache.hadoop.fs.Path(dir, MinhashPropsFile)
-    val tmp = new org.apache.hadoop.fs.Path(dir, MinhashPropsFile + ".tmp")
-    val fs = path.getFileSystem(conf)
-    val out = fs.create(tmp, true)
-    try out.write(
-      s"shingleLen=$shingleLen\nnumHashes=$numHashes\n".getBytes("UTF-8"))
-    finally out.close()
-    fs.delete(path, false)
-    if (!fs.rename(tmp, path))
-      throw new java.io.IOException(s"failed to move $tmp to $path")
-  }
+      shingleLen: Int, numHashes: Int): Unit =
+    MinhashProps.write(spark, dir,
+      "shingleLen" -> shingleLen, "numHashes" -> numHashes)
 
   /** The index's recorded (shingleLen, numHashes); refuses when the
     * sidecar is absent (a bare parquet directory is NOT an index — its
     * parameters would be guesses). */
   private def readMinhashProps(spark: SparkSession, dir: String): (Int, Int) = {
-    val path = new org.apache.hadoop.fs.Path(dir, MinhashPropsFile)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(path),
-      s"no minhash index sidecar at $path — build with writeMinhashIndex")
-    val props = new java.util.Properties()
-    val in = fs.open(path)
-    try props.load(in) finally in.close()
-    (props.getProperty("shingleLen").toInt,
-      props.getProperty("numHashes").toInt)
+    val p = MinhashProps.require(spark, dir)
+    (p.int("shingleLen"), p.int("numHashes"))
   }
 
   /** Incrementally grow a stored minhash index: signature ONLY the new
@@ -1147,9 +1130,7 @@ object Dedup {
     // directory readMinhashProps refuses loudly — never a valid-looking
     // index silently missing the batch's signatures. (A concurrent
     // match during the append window is refused the same way.)
-    val props = new org.apache.hadoop.fs.Path(dir, MinhashPropsFile)
-    props.getFileSystem(spark.sessionState.newHadoopConf())
-      .delete(props, false)
+    MinhashProps.down(spark, dir)
     minhashSignaturesHashed(
         shingleHashRows(newDocs, shingleLen, distinctRows = false), numHashes)
       .write.mode("append").parquet(dir)
@@ -1162,10 +1143,8 @@ object Dedup {
     * sidecar-less directory that still HOLDS data files is neither: it
     * is a crash-invalidated index, and callers must refuse rather than
     * bootstrap over it — [[minhashIndexHasData]] distinguishes. */
-  def hasMinhashIndex(spark: SparkSession, dir: String): Boolean = {
-    val path = new org.apache.hadoop.fs.Path(dir, MinhashPropsFile)
-    path.getFileSystem(spark.sessionState.newHadoopConf()).exists(path)
-  }
+  def hasMinhashIndex(spark: SparkSession, dir: String): Boolean =
+    MinhashProps.read(spark, dir).isDefined
 
   /** Whether `dir` holds index data files (regardless of sidecar
     * validity) — true with [[hasMinhashIndex]] false means a torn
@@ -1194,9 +1173,7 @@ object Dedup {
       dropDocs: Option[DataFrame] = None): Unit = {
     val spark = org.apache.spark.sql.SparkSession.active
     val (shingleLen, numHashes) = readMinhashProps(spark, dir)
-    val props = new org.apache.hadoop.fs.Path(dir, MinhashPropsFile)
-    props.getFileSystem(spark.sessionState.newHadoopConf())
-      .delete(props, false)
+    MinhashProps.down(spark, dir)
     IndexFiles.rewriteRoot(spark, dir, IndexFiles.minus(dropDocs, "doc_id"))
     writeMinhashProps(spark, dir, shingleLen, numHashes)
   }
@@ -1430,7 +1407,10 @@ object Dedup {
   // derived from maxDistance), so the sidecar pins only the
   // fingerprint definition (tokenizer + algorithm).
 
-  private val SimhashPropsFile = "_graft_simhash.properties"
+  private val SimhashProps = graft.sources.Sidecar(
+    "_graft_simhash.properties", "simhash index",
+    "build with writeSimhashIndex (or the previous write/append/compact " +
+      "was torn mid-commit)")
 
   /** Build and persist `(doc_id, fp)` simhash fingerprints of the
     * corpus — parquet first, sidecar last, like every store here. */
@@ -1445,10 +1425,8 @@ object Dedup {
     * Caller keeps the id space disjoint, as with the minhash index. */
   def appendToSimhashIndex(newDocs: DataFrame, dir: String): Unit = {
     val spark = newDocs.sparkSession
-    requireSimhashProps(spark, dir)
-    val props = new org.apache.hadoop.fs.Path(dir, SimhashPropsFile)
-    props.getFileSystem(spark.sessionState.newHadoopConf())
-      .delete(props, false)
+    SimhashProps.require(spark, dir)
+    SimhashProps.down(spark, dir)
     newDocs.select(col("doc_id"), simhash64(tokens(col("text"))).as("fp"))
       .write.mode("append").parquet(dir)
     writeSimhashProps(spark, dir)
@@ -1457,7 +1435,7 @@ object Dedup {
   /** The stored fingerprint frame `(doc_id, fp)` — also the static
     * side of [[graft.streaming.Observers.streamingSimhashMatches]]. */
   def readSimhashIndex(spark: SparkSession, dir: String): DataFrame = {
-    requireSimhashProps(spark, dir)
+    SimhashProps.require(spark, dir)
     spark.read.parquet(dir)
   }
 
@@ -1467,10 +1445,8 @@ object Dedup {
   def compactSimhashIndex(dir: String,
       dropDocs: Option[DataFrame] = None): Unit = {
     val spark = SparkSession.active
-    requireSimhashProps(spark, dir)
-    val props = new org.apache.hadoop.fs.Path(dir, SimhashPropsFile)
-    props.getFileSystem(spark.sessionState.newHadoopConf())
-      .delete(props, false)
+    SimhashProps.require(spark, dir)
+    SimhashProps.down(spark, dir)
     IndexFiles.rewriteRoot(spark, dir, IndexFiles.minus(dropDocs, "doc_id"))
     writeSimhashProps(spark, dir)
   }
@@ -1486,24 +1462,6 @@ object Dedup {
       readSimhashIndex(spark, dir), maxDistance, maxBucketSize)
   }
 
-  private def writeSimhashProps(spark: SparkSession, dir: String): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val path = new org.apache.hadoop.fs.Path(dir, SimhashPropsFile)
-    val tmp = new org.apache.hadoop.fs.Path(dir, SimhashPropsFile + ".tmp")
-    val fs = path.getFileSystem(conf)
-    val out = fs.create(tmp, true)
-    try out.write("algo=simhash64\ntokenizer=ws\n".getBytes("UTF-8"))
-    finally out.close()
-    fs.delete(path, false)
-    if (!fs.rename(tmp, path))
-      throw new java.io.IOException(s"failed to move $tmp to $path")
-  }
-
-  private def requireSimhashProps(spark: SparkSession, dir: String): Unit = {
-    val path = new org.apache.hadoop.fs.Path(dir, SimhashPropsFile)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(path),
-      s"no simhash index sidecar at $path — build with writeSimhashIndex " +
-        "(or the previous write/append/compact was torn mid-commit)")
-  }
+  private def writeSimhashProps(spark: SparkSession, dir: String): Unit =
+    SimhashProps.write(spark, dir, "algo" -> "simhash64", "tokenizer" -> "ws")
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.sources.{CellLogStore, LogLayout}
+import graft.sources.{LogLayout, TableState}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -45,19 +45,21 @@ object KvStore {
   // (resolve's per-key `max_by` then plans with zero shuffle and a
   // point lookup prunes to one bucket), every file carrying a key bloom.
 
-  private def storedDesc(spark: SparkSession, logDir: String) =
-    CellLogStore.readDesc(spark, logDir).map(_._1)
+  /** The KV log layout the stored state declares (flat, string keys
+    * for a directory without one). One state read. */
+  private[graft] def layout(spark: SparkSession, logDir: String): LogLayout =
+    layoutOf(TableState.read(spark, logDir))
 
-  private def layout(stored: Option[graft.model.TableDesc]): LogLayout =
-    LogLayout.kv(stored.exists(_.rawKeyBinary), stored.fold(0)(_.buckets))
+  private def layoutOf(stored: Option[TableState]): LogLayout =
+    LogLayout.kv(stored.exists(_.desc.rawKeyBinary),
+      stored.fold(0)(_.desc.buckets))
 
   /** Group-commit a KV batch (key, value, expire_ts_us, seq). */
   def append(batch: DataFrame, logDir: String): Unit =
-    layout(storedDesc(batch.sparkSession, logDir))
-      .write(batch, logDir, SaveMode.Append)
+    layout(batch.sparkSession, logDir).write(batch, logDir, SaveMode.Append)
 
   def read(spark: SparkSession, logDir: String): DataFrame =
-    layout(storedDesc(spark, logDir)).read(spark, logDir)
+    layout(spark, logDir).read(spark, logDir)
 
   /** Compaction: rewrite the log as its resolved entries — dead KVs
     * (expired at `nowUs`, superseded writes) are physically dropped
@@ -67,10 +69,10 @@ object KvStore {
     */
   def compact(spark: SparkSession, logDir: String, outDir: String,
       nowUs: Long): Unit = {
-    val desc = storedDesc(spark, logDir)
-    val kv = layout(desc)
+    val stored = TableState.read(spark, logDir)
+    val kv = layoutOf(stored)
     kv.write(resolveEntries(kv.read(spark, logDir), nowUs), outDir,
       SaveMode.Overwrite)
-    desc.foreach(CellLogStore.writeDesc(spark, outDir, _))
+    stored.foreach(s => TableState.write(spark, outDir, TableState(s.desc)))
   }
 }

@@ -352,36 +352,19 @@ object NodeEmbedding {
   // after the commit, so a torn write leaves a loudly-refusing
   // directory, never a valid-looking store missing rows.
 
-  private val EmbPropsFile = "_graft_emb.properties"
+  private val EmbProps = graft.sources.Sidecar("_graft_emb.properties",
+    "embedding store", "build with writeEmbeddings")
 
   private def writeEmbProps(spark: org.apache.spark.sql.SparkSession,
-      dir: String, dim: Int): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val path = new org.apache.hadoop.fs.Path(dir, EmbPropsFile)
-    val tmp = new org.apache.hadoop.fs.Path(dir, EmbPropsFile + ".tmp")
-    val fs = path.getFileSystem(conf)
-    val out = fs.create(tmp, true)
-    try out.write(s"dim=$dim\n".getBytes("UTF-8"))
-    finally out.close()
-    fs.delete(path, false)
-    if (!fs.rename(tmp, path))
-      throw new java.io.IOException(s"failed to move $tmp to $path")
-  }
+      dir: String, dim: Int): Unit =
+    EmbProps.write(spark, dir, "dim" -> dim)
 
   /** The store's recorded dim; refuses when the sidecar is absent — a
     * bare parquet directory (or one whose append died mid-commit) is
     * NOT an embedding store. */
   private def readEmbProps(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Int = {
-    val path = new org.apache.hadoop.fs.Path(dir, EmbPropsFile)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(path),
-      s"no embedding store sidecar at $path — build with writeEmbeddings")
-    val props = new java.util.Properties()
-    val in = fs.open(path)
-    try props.load(in) finally in.close()
-    props.getProperty("dim").toInt
-  }
+      dir: String): Int =
+    EmbProps.require(spark, dir).int("dim")
 
   /** One aggregated action validating a `(node, emb)` frame against the
     * store contract: unique non-null node ids, every vector exactly
@@ -436,9 +419,7 @@ object NodeEmbedding {
     require(overlap == 0,
       s"append batch shares node ids with the store at $dir — " +
         "appended ids must be disjoint (compact with dropNodes to replace)")
-    val props = new org.apache.hadoop.fs.Path(dir, EmbPropsFile)
-    props.getFileSystem(spark.sessionState.newHadoopConf())
-      .delete(props, false)
+    EmbProps.down(spark, dir)
     newEmb.select(col("node"), col("emb"))
       .write.mode("append").parquet(dir)
     writeEmbProps(spark, dir, dim)
@@ -452,9 +433,7 @@ object NodeEmbedding {
       dropNodes: Option[DataFrame] = None): Unit = {
     val spark = org.apache.spark.sql.SparkSession.active
     val dim = readEmbProps(spark, dir)
-    val props = new org.apache.hadoop.fs.Path(dir, EmbPropsFile)
-    props.getFileSystem(spark.sessionState.newHadoopConf())
-      .delete(props, false)
+    EmbProps.down(spark, dir)
     IndexFiles.rewriteRoot(spark, dir, IndexFiles.minus(dropNodes, "node"))
     writeEmbProps(spark, dir, dim)
   }

@@ -59,7 +59,6 @@ object Resolve {
       nowUs: Long = Long.MaxValue,
       snapshotSeq: Option[Long] = None,
       opsPresent: Option[Set[Int]] = None,
-      useTopKAggregate: Boolean = false,
       deleteStrategy: String = "auto",
       /** Known tombstone count of the log, when carried by a stored
         * table's descriptor — lets "auto" size its strategy on an
@@ -232,27 +231,7 @@ object Resolve {
           .select(col("row_key"), col("cf"), col("qualifier"),
             col("_c.ts").as("ts"), col("_c.value").as("value"),
             col("_c.seq").as("seq"))
-      else if (useTopKAggregate && allSpecs.forall(_.maxVersions <= 256)) {
-        // opt-in bounded top-k aggregate: O(k) buffer in partial AND
-        // final stages — no sort of the version history, and the shuffle
-        // carries at most k rows per column. Wins when columns hold DEEP
-        // histories; for shallow ones the window sort's better constants
-        // win (measured at sf0.1), hence opt-in rather than default.
-        val kmax = allSpecs.map(_.maxVersions).max
-        val topk = org.apache.spark.sql.graft.Shim.column(
-          graft.functions.TopKVersions(
-            org.apache.spark.sql.graft.Shim.expression(
-              struct(col("ts"), col("seq"), col("value"))),
-            kmax).toAggregateExpression())
-        df.groupBy(col("row_key"), col("cf"), col("qualifier"))
-          .agg(topk.as("_vs"))
-          .select(col("row_key"), col("cf"), col("qualifier"),
-            posexplode(col("_vs")))
-          .where(col("pos") < cfKnob(_.maxVersions.toLong))
-          .select(col("row_key"), col("cf"), col("qualifier"),
-            col("col.ts").as("ts"), col("col.value").as("value"),
-            col("col.seq").as("seq"))
-      } else df
+      else df
         .withColumn("_vrank", row_number().over(versionOrder))
         .where(col("_vrank") <= cfKnob(_.maxVersions.toLong))
         .select(outCols: _*)

@@ -177,7 +177,7 @@ case class ScanQuery(
     /** LG-pruned log source for an LG-partitioned table: given the LG
       * names a projected scan touches, returns the log restricted to
       * those LG partition directories (plus the row-tombstone LG) —
-      * [[graft.sources.CellLogStore.readLgs]]. `None` = single-LG
+      * [[graft.sources.CellLogStore.Source]]. `None` = single-LG
       * layout, `log` is the whole table. */
     lgRead: Option[Seq[String] => DataFrame] = None) {
 

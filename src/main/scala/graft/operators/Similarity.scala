@@ -215,48 +215,25 @@ object Similarity {
   // ---- IVF index persistence --------------------------------------
   // Centroids are nlist × dim doubles — a few KB to a few MB — and the
   // expensive part of the index is the `iters` full training passes, so
-  // they persist NEXT TO the data like the table descriptor does
-  // (CellLogStore.writeDesc; the reference's analogue: schema knobs
+  // they persist NEXT TO the data like the table state does
+  // (graft.sources.TableState; the reference's analogue: schema knobs
   // persist in master meta, tera table_schema.proto:31-64). A reopened
   // table probes without retraining.
 
-  private val CentroidsFile = "_graft_ivf_centroids.txt"
+  private val Centroids = graft.sources.Sidecar("_graft_ivf_centroids.txt",
+    "IVF centroids", "rebuild with writeIvfIndex")
 
   /** Persist centroids under `dir` (one row per line, exact-round-trip
-    * doubles via Double.toString/parseDouble). Write-then-rename, and
-    * raw stream writes rather than a PrintWriter (which swallows
-    * IOExceptions into an internal flag): a failed write must THROW,
-    * never persist a truncated index, and never expose a half-written
-    * file to a concurrent reader. */
+    * doubles via Double.toString/parseDouble), replaced by rename. */
   def writeCentroids(spark: org.apache.spark.sql.SparkSession, dir: String,
-      centroids: Array[Array[Double]]): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val path = new org.apache.hadoop.fs.Path(dir, CentroidsFile)
-    val tmp = new org.apache.hadoop.fs.Path(dir, CentroidsFile + ".tmp")
-    val fs = path.getFileSystem(conf)
-    val bytes = centroids.map(_.mkString(",")).mkString("", "\n", "\n")
-      .getBytes("UTF-8")
-    val out = fs.create(tmp, true)
-    try out.write(bytes) finally out.close()
-    fs.delete(path, false)
-    if (!fs.rename(tmp, path))
-      throw new java.io.IOException(s"failed to move $tmp to $path")
-  }
+      centroids: Array[Array[Double]]): Unit =
+    Centroids.write(spark, dir,
+      centroids.map(_.mkString(",")).mkString("", "\n", "\n"))
 
   def readCentroids(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Option[Array[Array[Double]]] = {
-    val path = new org.apache.hadoop.fs.Path(dir, CentroidsFile)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(path)) None
-    else {
-      val in = fs.open(path)
-      try {
-        val src = scala.io.Source.fromInputStream(in, "UTF-8")
-        Some(src.getLines().filter(_.nonEmpty)
-          .map(_.split(",").map(java.lang.Double.parseDouble)).toArray)
-      } finally in.close()
-    }
-  }
+      dir: String): Option[Array[Array[Double]]] =
+    Centroids.read(spark, dir).map(_.lines
+      .map(_.split(",").map(java.lang.Double.parseDouble)).toArray)
 
   /** Load persisted centroids from `indexDir`, or train and persist them
     * there. Loading is a driver-side file read — no Spark jobs, no
@@ -297,37 +274,22 @@ object Similarity {
   // re-assigned. Same crash discipline as the minhash sidecar: parquet
   // first, sidecar last; appends invalidate-then-revalidate.
 
-  private val IvfPropsFile = "_graft_ivf.properties"
+  private val IvfProps = graft.sources.Sidecar("_graft_ivf.properties",
+    "IVF index", "build with writeIvfIndex")
 
   private def writeIvfProps(spark: org.apache.spark.sql.SparkSession,
-      dir: String, dim: Int, nlist: Int, quantized: Boolean): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val path = new org.apache.hadoop.fs.Path(dir, IvfPropsFile)
-    val tmp = new org.apache.hadoop.fs.Path(dir, IvfPropsFile + ".tmp")
-    val fs = path.getFileSystem(conf)
-    val out = fs.create(tmp, true)
-    try out.write(
-      s"dim=$dim\nnlist=$nlist\nquantized=$quantized\n".getBytes("UTF-8"))
-    finally out.close()
-    fs.delete(path, false)
-    if (!fs.rename(tmp, path))
-      throw new java.io.IOException(s"failed to move $tmp to $path")
-  }
+      dir: String, dim: Int, nlist: Int, quantized: Boolean): Unit =
+    IvfProps.write(spark, dir,
+      "dim" -> dim, "nlist" -> nlist, "quantized" -> quantized)
 
   /** The index's recorded (dim, nlist, quantized); refuses when the
     * sidecar is absent — a bare parquet directory (or one whose append
     * died mid-commit) is NOT an index. */
   private def readIvfProps(spark: org.apache.spark.sql.SparkSession,
       dir: String): (Int, Int, Boolean) = {
-    val path = new org.apache.hadoop.fs.Path(dir, IvfPropsFile)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(path),
-      s"no IVF index sidecar at $path — build with writeIvfIndex")
-    val props = new java.util.Properties()
-    val in = fs.open(path)
-    try props.load(in) finally in.close()
-    (props.getProperty("dim").toInt, props.getProperty("nlist").toInt,
-      props.getProperty("quantized", "false").toBoolean)
+    val p = IvfProps.require(spark, dir)
+    (p.int("dim"), p.int("nlist"),
+      p.opt("quantized")(_.toBoolean).getOrElse(false))
   }
 
   /** A stored inverted file, opened: assigned vectors (float form:
@@ -456,9 +418,7 @@ object Similarity {
       .foreach(r => require(r.getInt(0) == dim,
         s"batch embeddings have dim ${r.getInt(0)} but the index bakes " +
           s"in dim=$dim"))
-    val props = new org.apache.hadoop.fs.Path(dir, IvfPropsFile)
-    props.getFileSystem(spark.sessionState.newHadoopConf())
-      .delete(props, false)
+    IvfProps.down(spark, dir)
     indexRows(assignedCorpus(newEmb, centroids), quantized)
       .write.mode("append").parquet(dir)
     writeIvfProps(spark, dir, dim, nlist, quantized)
@@ -476,9 +436,7 @@ object Similarity {
       dropVecs: Option[DataFrame] = None): Unit = {
     val spark = org.apache.spark.sql.SparkSession.active
     val (dim, nlist, quantized) = readIvfProps(spark, dir)
-    val props = new org.apache.hadoop.fs.Path(dir, IvfPropsFile)
-    props.getFileSystem(spark.sessionState.newHadoopConf())
-      .delete(props, false)
+    IvfProps.down(spark, dir)
     IndexFiles.rewriteRoot(spark, dir, IndexFiles.minus(dropVecs, "vec_id"))
     writeIvfProps(spark, dir, dim, nlist, quantized)
   }
@@ -620,8 +578,10 @@ object Similarity {
   // the OLD batches. Approximate — recall vs [[bruteForceTopK]] is
   // measured in PipelineOpsSpec, like the int8/LSH/IVF paths.
 
-  private val PqCodebooksFile = "_graft_pq_codebooks.txt"
-  private val PqPropsFile = "_graft_pq.properties"
+  private val PqCodebooks = graft.sources.Sidecar("_graft_pq_codebooks.txt",
+    "PQ codebooks", "rebuild with writePqIndex")
+  private val PqProps = graft.sources.Sidecar("_graft_pq.properties",
+    "PQ index", "build with writePqIndex")
 
   /** Train per-subspace codebooks: `m` independent k-means (ksub
     * centers each, L2 assignment, mean update) over the subvector
@@ -687,68 +647,32 @@ object Similarity {
   }
 
   /** Codebook persistence: one line per (sub, code) in order —
-    * `sub|v0,v1,…` — exact-round-trip doubles, write-then-rename (the
-    * [[writeCentroids]] discipline). */
+    * `sub|v0,v1,…` — exact-round-trip doubles, replaced by rename. */
   private def writePqCodebooks(spark: org.apache.spark.sql.SparkSession,
-      dir: String, cb: Array[Array[Array[Double]]]): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val path = new org.apache.hadoop.fs.Path(dir, PqCodebooksFile)
-    val tmp = new org.apache.hadoop.fs.Path(dir, PqCodebooksFile + ".tmp")
-    val fs = path.getFileSystem(conf)
-    val bytes = cb.zipWithIndex.flatMap { case (book, s) =>
+      dir: String, cb: Array[Array[Array[Double]]]): Unit =
+    PqCodebooks.write(spark, dir, cb.zipWithIndex.flatMap { case (book, s) =>
       book.map(row => s"$s|${row.mkString(",")}")
-    }.mkString("", "\n", "\n").getBytes("UTF-8")
-    val out = fs.create(tmp, true)
-    try out.write(bytes) finally out.close()
-    fs.delete(path, false)
-    if (!fs.rename(tmp, path))
-      throw new java.io.IOException(s"failed to move $tmp to $path")
-  }
+    }.mkString("", "\n", "\n"))
 
   private def readPqCodebooks(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Option[Array[Array[Array[Double]]]] = {
-    val path = new org.apache.hadoop.fs.Path(dir, PqCodebooksFile)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(path)) None
-    else {
-      val in = fs.open(path)
-      try {
-        val src = scala.io.Source.fromInputStream(in, "UTF-8")
-        val rows = src.getLines().filter(_.nonEmpty).map { line =>
-          val Array(s, vals) = line.split("\\|", 2)
-          (s.toInt, vals.split(",").map(java.lang.Double.parseDouble))
-        }.toArray
-        Some(rows.groupBy(_._1).toArray.sortBy(_._1).map(_._2.map(_._2)))
-      } finally in.close()
+      dir: String): Option[Array[Array[Array[Double]]]] =
+    PqCodebooks.read(spark, dir).map { c =>
+      val rows = c.lines.map { line =>
+        val Array(s, vals) = line.split("\\|", 2)
+        (s.toInt, vals.split(",").map(java.lang.Double.parseDouble))
+      }.toArray
+      rows.groupBy(_._1).toArray.sortBy(_._1).map(_._2.map(_._2))
     }
-  }
 
   private def writePqProps(spark: org.apache.spark.sql.SparkSession,
-      dir: String, dim: Int, m: Int, ksub: Int, nlist: Int): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val path = new org.apache.hadoop.fs.Path(dir, PqPropsFile)
-    val tmp = new org.apache.hadoop.fs.Path(dir, PqPropsFile + ".tmp")
-    val fs = path.getFileSystem(conf)
-    val out = fs.create(tmp, true)
-    try out.write(
-      s"dim=$dim\nm=$m\nksub=$ksub\nnlist=$nlist\n".getBytes("UTF-8"))
-    finally out.close()
-    fs.delete(path, false)
-    if (!fs.rename(tmp, path))
-      throw new java.io.IOException(s"failed to move $tmp to $path")
-  }
+      dir: String, dim: Int, m: Int, ksub: Int, nlist: Int): Unit =
+    PqProps.write(spark, dir,
+      "dim" -> dim, "m" -> m, "ksub" -> ksub, "nlist" -> nlist)
 
   private def readPqProps(spark: org.apache.spark.sql.SparkSession,
       dir: String): (Int, Int, Int, Int) = {
-    val path = new org.apache.hadoop.fs.Path(dir, PqPropsFile)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(path),
-      s"no PQ index sidecar at $path — build with writePqIndex")
-    val props = new java.util.Properties()
-    val in = fs.open(path)
-    try props.load(in) finally in.close()
-    (props.getProperty("dim").toInt, props.getProperty("m").toInt,
-      props.getProperty("ksub").toInt, props.getProperty("nlist").toInt)
+    val p = PqProps.require(spark, dir)
+    (p.int("dim"), p.int("m"), p.int("ksub"), p.int("nlist"))
   }
 
   /** A stored PQ index, opened: code rows
@@ -814,9 +738,7 @@ object Similarity {
       .foreach(r => require(r.getInt(0) == dim,
         s"batch embeddings have dim ${r.getInt(0)} but the index bakes " +
           s"in dim=$dim"))
-    val props = new org.apache.hadoop.fs.Path(dir, PqPropsFile)
-    props.getFileSystem(spark.sessionState.newHadoopConf())
-      .delete(props, false)
+    PqProps.down(spark, dir)
     pqIndexRows(newEmb, centroids, cb).write.mode("append").parquet(dir)
     writePqProps(spark, dir, dim, m, ksub, nlist)
   }
@@ -832,9 +754,7 @@ object Similarity {
       dropVecs: Option[DataFrame] = None): Unit = {
     val spark = org.apache.spark.sql.SparkSession.active
     val (dim, m, ksub, nlist) = readPqProps(spark, dir)
-    val props = new org.apache.hadoop.fs.Path(dir, PqPropsFile)
-    props.getFileSystem(spark.sessionState.newHadoopConf())
-      .delete(props, false)
+    PqProps.down(spark, dir)
     IndexFiles.rewriteRoot(spark, dir, IndexFiles.minus(dropVecs, "vec_id"))
     writePqProps(spark, dir, dim, m, ksub, nlist)
   }

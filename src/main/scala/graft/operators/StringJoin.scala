@@ -442,7 +442,10 @@ object StringJoin {
 
   // ---- persisted string index (the edit ring's corpus store) ----
 
-  private val StringPropsFile = "_graft_strindex.properties"
+  private val StringProps = graft.sources.Sidecar(
+    "_graft_strindex.properties", "string index",
+    "build with writeStringIndex (or the previous write/append/compact " +
+      "was torn mid-commit)")
 
   /** Persist a `(doc_id, s)` string corpus as the edit ring's store —
     * the cheapest near-dup state after the simhash store (the strings
@@ -461,10 +464,8 @@ object StringJoin {
     * the minhash/simhash indexes). */
   def appendToStringIndex(newStrs: DataFrame, dir: String): Unit = {
     val spark = newStrs.sparkSession
-    requireStringProps(spark, dir)
-    val props = new org.apache.hadoop.fs.Path(dir, StringPropsFile)
-    props.getFileSystem(spark.sessionState.newHadoopConf())
-      .delete(props, false)
+    StringProps.require(spark, dir)
+    StringProps.down(spark, dir)
     newStrs.select(col("doc_id"), col("s")).where(col("s").isNotNull)
       .write.mode("append").parquet(dir)
     writeStringProps(spark, dir)
@@ -473,7 +474,7 @@ object StringJoin {
   /** The stored `(doc_id, s)` frame. */
   def readStringIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
-    requireStringProps(spark, dir)
+    StringProps.require(spark, dir)
     spark.read.parquet(dir)
   }
 
@@ -483,10 +484,8 @@ object StringJoin {
   def compactStringIndex(dir: String,
       dropDocs: Option[DataFrame] = None): Unit = {
     val spark = org.apache.spark.sql.SparkSession.active
-    requireStringProps(spark, dir)
-    val props = new org.apache.hadoop.fs.Path(dir, StringPropsFile)
-    props.getFileSystem(spark.sessionState.newHadoopConf())
-      .delete(props, false)
+    StringProps.require(spark, dir)
+    StringProps.down(spark, dir)
     IndexFiles.rewriteRoot(spark, dir, IndexFiles.minus(dropDocs, "doc_id"))
     writeStringProps(spark, dir)
   }
@@ -501,27 +500,8 @@ object StringJoin {
       maxDistance, maxBucketSize = maxBucketSize)
 
   private def writeStringProps(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val path = new org.apache.hadoop.fs.Path(dir, StringPropsFile)
-    val tmp = new org.apache.hadoop.fs.Path(dir, StringPropsFile + ".tmp")
-    val fs = path.getFileSystem(conf)
-    val out = fs.create(tmp, true)
-    try out.write("algo=passjoin\nkey=s\n".getBytes("UTF-8"))
-    finally out.close()
-    fs.delete(path, false)
-    if (!fs.rename(tmp, path))
-      throw new java.io.IOException(s"failed to move $tmp to $path")
-  }
-
-  private def requireStringProps(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    val path = new org.apache.hadoop.fs.Path(dir, StringPropsFile)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(path),
-      s"no string index sidecar at $path — build with writeStringIndex " +
-        "(or the previous write/append/compact was torn mid-commit)")
-  }
+      spark: org.apache.spark.sql.SparkSession, dir: String): Unit =
+    StringProps.write(spark, dir, "algo" -> "passjoin", "key" -> "s")
 
   /** [[setSimilarityJoin]] over documents' distinct n-gram shingle
     * sets (string shingles — oracle-replicable; for the narrow-shuffle

@@ -363,7 +363,10 @@ object TextAnalysis {
 
   // ---- persisted datasheet store (the incremental corpus report) ----
 
-  private val DatasheetPropsFile = "_graft_datasheet.properties"
+  private val DatasheetProps = graft.sources.Sidecar(
+    "_graft_datasheet.properties", "datasheet",
+    "build with writeDatasheetStore (or the previous write/append/compact " +
+      "was torn mid-commit)")
 
   /** Mergeable per-(source, lang) partials of [[corpusReport]] for one
     * batch: every report field restated in a form that folds exactly
@@ -442,9 +445,7 @@ object TextAnalysis {
       s"datasheet store at $dir already holds batch '$batch' — " +
         "appending it again would double-count; drop it first " +
         "(compactDatasheetStore dropBatches) or pick a fresh id")
-    val props = new org.apache.hadoop.fs.Path(dir, DatasheetPropsFile)
-    props.getFileSystem(spark.sessionState.newHadoopConf())
-      .delete(props, false)
+    DatasheetProps.down(spark, dir)
     datasheetPartials(docs, batch, shortDocTokens)
       .write.mode("append").parquet(dir)
     lengthPartials(docs, batch)
@@ -525,9 +526,7 @@ object TextAnalysis {
       dropBatches: Option[DataFrame] = None): Unit = {
     val spark = org.apache.spark.sql.SparkSession.active
     val shortDocTokens = readDatasheetProps(spark, dir)
-    val props = new org.apache.hadoop.fs.Path(dir, DatasheetPropsFile)
-    props.getFileSystem(spark.sessionState.newHadoopConf())
-      .delete(props, false)
+    DatasheetProps.down(spark, dir)
     IndexFiles.rewriteRoot(spark, dir,
       df => IndexFiles.minus(dropBatches, "batch")(df).coalesce(1))
     IndexFiles.rewriteRoot(spark, s"$dir/_lengths",
@@ -536,32 +535,13 @@ object TextAnalysis {
   }
 
   private def writeDatasheetProps(spark: org.apache.spark.sql.SparkSession,
-      dir: String, shortDocTokens: Int): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val path = new org.apache.hadoop.fs.Path(dir, DatasheetPropsFile)
-    val tmp = new org.apache.hadoop.fs.Path(dir, DatasheetPropsFile + ".tmp")
-    val fs = path.getFileSystem(conf)
-    val out = fs.create(tmp, true)
-    try out.write(
-      s"tokenizer=ws\nshort_doc_tokens=$shortDocTokens\n".getBytes("UTF-8"))
-    finally out.close()
-    fs.delete(path, false)
-    if (!fs.rename(tmp, path))
-      throw new java.io.IOException(s"failed to move $tmp to $path")
-  }
+      dir: String, shortDocTokens: Int): Unit =
+    DatasheetProps.write(spark, dir,
+      "tokenizer" -> "ws", "short_doc_tokens" -> shortDocTokens)
 
   private def readDatasheetProps(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Int = {
-    val path = new org.apache.hadoop.fs.Path(dir, DatasheetPropsFile)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(path),
-      s"no datasheet sidecar at $path — build with writeDatasheetStore " +
-        "(or the previous write/append/compact was torn mid-commit)")
-    val props = new java.util.Properties()
-    val in = fs.open(path)
-    try props.load(in) finally in.close()
-    props.getProperty("short_doc_tokens").toInt
-  }
+      dir: String): Int =
+    DatasheetProps.require(spark, dir).int("short_doc_tokens")
 
   /** Semantic benchmark decontamination: drop corpus rows whose
     * embedding is within `threshold` cosine of ANY benchmark embedding

@@ -40,7 +40,8 @@ import org.apache.spark.sql.functions._
   */
 object TextIndex {
 
-  private val PropsFile = "_graft_textindex.properties"
+  private val Props = graft.sources.Sidecar("_graft_textindex.properties",
+    "text index", "build with writeTextIndex")
   /** The one tokenizer this index format bakes in (recorded in the
     * sidecar so a future variant cannot silently mix). */
   private val Tokenizer = "lower_ws"
@@ -80,9 +81,7 @@ object TextIndex {
   def appendToTextIndex(newDocs: DataFrame, dir: String): Unit = {
     val spark = newDocs.sparkSession
     requireProps(spark, dir)
-    val props = new org.apache.hadoop.fs.Path(dir, PropsFile)
-    props.getFileSystem(spark.sessionState.newHadoopConf())
-      .delete(props, false)
+    Props.down(spark, dir)
     // materialize the batch's token aggregation once: it feeds both
     // segment writes, and an unmaterialized plan would re-run the
     // tokenize + shuffle (the dominant append cost) for docstats
@@ -95,28 +94,11 @@ object TextIndex {
     writeProps(spark, dir)
   }
 
-  private def writeProps(spark: SparkSession, dir: String): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val path = new org.apache.hadoop.fs.Path(dir, PropsFile)
-    val tmp = new org.apache.hadoop.fs.Path(dir, PropsFile + ".tmp")
-    val fs = path.getFileSystem(conf)
-    val out = fs.create(tmp, true)
-    try out.write(s"tokenizer=$Tokenizer\n".getBytes("UTF-8"))
-    finally out.close()
-    fs.delete(path, false)
-    if (!fs.rename(tmp, path))
-      throw new java.io.IOException(s"failed to move $tmp to $path")
-  }
+  private def writeProps(spark: SparkSession, dir: String): Unit =
+    Props.write(spark, dir, "tokenizer" -> Tokenizer)
 
   private def requireProps(spark: SparkSession, dir: String): Unit = {
-    val path = new org.apache.hadoop.fs.Path(dir, PropsFile)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(path),
-      s"no text index sidecar at $path — build with writeTextIndex")
-    val props = new java.util.Properties()
-    val in = fs.open(path)
-    try props.load(in) finally in.close()
-    val tok = props.getProperty("tokenizer")
+    val tok = Props.require(spark, dir)("tokenizer")(identity[String])
     require(tok == Tokenizer,
       s"index at $dir uses tokenizer '$tok'; this build understands '$Tokenizer'")
   }
@@ -145,9 +127,9 @@ object TextIndex {
       dropDocs: Option[DataFrame] = None): Unit = {
     val spark = org.apache.spark.sql.SparkSession.active
     requireProps(spark, dir)
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
-    fs.delete(new org.apache.hadoop.fs.Path(dir, PropsFile), false)
+    Props.down(spark, dir)
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sessionState.newHadoopConf())
     def rewrite(sub: String, shape: DataFrame => DataFrame): Unit = {
       val live = new org.apache.hadoop.fs.Path(s"$dir/$sub")
       val stage = new org.apache.hadoop.fs.Path(s"$dir/$sub.stage")

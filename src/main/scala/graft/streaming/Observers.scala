@@ -340,7 +340,7 @@ object Observers {
       lgPartitioned: Option[Boolean] = None): DataFrame = {
     // the stored descriptor decides the key mode: a binary-raw-key log's
     // row_key must stream as BinaryType, exactly like the batch readers
-    val stored = graft.sources.CellLogStore.readDesc(spark, logDir).map(_._1)
+    val stored = graft.sources.TableState.read(spark, logDir).map(_.desc)
     val schema = CellOp.schemaFor(stored.exists(_.rawKeyBinary))
     // LG-partitioned logs (lg=<name>/ dirs) need the partition column
     // in the stream schema; it is layout, not data — drop it.

@@ -258,8 +258,8 @@ class GraftApiSpec extends AnyFunSuite {
     // lg=hot and lg=default are pruned at file-listing time (the
     // resolved scan is a self-join, where input_file_name is undefined —
     // PlanSpec asserts the scan-level PartitionFilters)
-    val filesRead = graft.sources.CellLogStore
-      .readLgs(spark, dir, Some(Seq("cold")))
+    val filesRead = graft.sources.CellLogStore.source(spark, dir).lgRead.get
+      .apply(Seq("cold"))
       .select(input_file_name()).distinct().collect().map(_.getString(0))
     assert(filesRead.nonEmpty)
     assert(filesRead.forall(f => f.contains("lg=cold") || f.contains("lg=_row")),
@@ -351,13 +351,13 @@ class GraftApiSpec extends AnyFunSuite {
       CellOp("r3", "cf", "q", 100, OpType.DelQualifiers, null, 3)).toDF()
     // undeclared op-set: the hint must count the tombstones, not assume 0
     graft.sources.CellLogStore.replace(batch, dir, TableDesc(), None)
-    assert(graft.sources.CellLogStore.readDeleteCount(spark, dir) == Some(2L))
+    assert(deleteHint(dir) == Some(2L))
     // a declared delete-free op-set skips the count and records 0
     val valueOnly = Seq(
       CellOp("r1", "cf", "q", 100, OpType.Value, "a".getBytes, 1)).toDF()
     graft.sources.CellLogStore.replace(valueOnly, dir, TableDesc(),
       Some(Set(OpType.Value)))
-    assert(graft.sources.CellLogStore.readDeleteCount(spark, dir) == Some(0L))
+    assert(deleteHint(dir) == Some(0L))
   }
 
   test("secondary index on a hash-sharded base: incremental ops match storage keys") {
@@ -394,7 +394,7 @@ class GraftApiSpec extends AnyFunSuite {
     // and the stored descriptor is authoritative for a fresh open
     assert(Graft.openTable(spark, dir).cells().count() == 2)
     // the delete hint survived the descriptor rewrite
-    assert(graft.sources.CellLogStore.readDeleteCount(spark, dir).contains(0L))
+    assert(deleteHint(dir).contains(0L))
 
     // physical modes refuse to change under stored data
     intercept[IllegalArgumentException] {
@@ -443,7 +443,7 @@ class GraftApiSpec extends AnyFunSuite {
       CellOp("r2", "cf", "q", 100, OpType.Value, "b".getBytes, 2),
       CellOp("r1", "cf", "q", 100, OpType.DelRow, null, 3)))
     // the write path maintained the count
-    assert(graft.sources.CellLogStore.readDeleteCount(spark, dir) == Some(1L))
+    assert(deleteHint(dir) == Some(1L))
 
     // reopen: building the resolve plan runs NO jobs — no op probe (the
     // stored op-set) and no tombstone count (the stored hint)
@@ -469,13 +469,13 @@ class GraftApiSpec extends AnyFunSuite {
     // seeding 0+delta would ignore tombstones already in the log and
     // could steer auto to the join strategy against a window-sized log
     val oldDir = Files.createTempDirectory("graft-delhint-old").toString
-    graft.sources.CellLogStore.writeDesc(spark, oldDir,
-      TableDesc(CfSpec(maxVersions = Int.MaxValue)), ops)
+    graft.sources.TableState.write(spark, oldDir, graft.sources.TableState(
+      TableDesc(CfSpec(maxVersions = Int.MaxValue)), ops))
     val told = Graft.openTable(spark, oldDir)
     told.put(Seq(
       CellOp("r1", "cf", "q", 100, OpType.Value, "a".getBytes, 1),
       CellOp("r1", "cf", "q", 100, OpType.DelRow, null, 2)))
-    assert(graft.sources.CellLogStore.readDeleteCount(spark, oldDir).isEmpty)
+    assert(deleteHint(oldDir).isEmpty)
     assert(told.cells().collect().isEmpty) // fallback count still correct
   }
 
@@ -504,7 +504,7 @@ class GraftApiSpec extends AnyFunSuite {
       val t = Graft.createTable(spark, dir, desc, ops)
       t.put(input(batch(0L, 3)))
       t.put(input(batch(10000L, 4)))
-      assert(graft.sources.CellLogStore.readDeleteCount(spark, dir) ==
+      assert(deleteHint(dir) ==
         Some(7L), s"layout $desc, distributed $distributed")
       assert(t.log.where(col("op") =!= OpType.Value).count() == 7)
     }
@@ -676,9 +676,14 @@ class GraftApiSpec extends AnyFunSuite {
     t.compact(cdir, nowUs = 20000000L)
     val c = Graft.openKvTable(spark, cdir)
     assert(c.log.count() == 1)
-    assert(graft.sources.CellLogStore.bucketCount(spark, cdir).contains(4))
+    assert(graft.sources.TableState.read(spark, cdir)
+      .exists(_.desc.buckets == 4))
     assert(kvSet(c, Long.MaxValue) == Set(("a", "1b")))
   }
+
+  /** The stored tombstone-count hint of the table at `dir`. */
+  private def deleteHint(dir: String): Option[Long] =
+    graft.sources.TableState.read(spark, dir).flatMap(_.deleteCount)
 
   /** The parquet data files under `dir`, LG directories included. */
   private def dataFiles(dir: String): Seq[java.nio.file.Path] = {
@@ -1052,8 +1057,8 @@ class GraftApiSpec extends AnyFunSuite {
       assert(cellSet(a.cells()) == cellSet(b.cells()), name)
       assert(cellSet(a.log) == cellSet(b.log), name)
       assert(a.cells().count() > 0, name)
-      assert(graft.sources.CellLogStore.readDeleteCount(spark, a.logDir) ==
-        graft.sources.CellLogStore.readDeleteCount(spark, b.logDir), name)
+      assert(deleteHint(a.logDir) ==
+        deleteHint(b.logDir), name)
     }
   }
 
@@ -1192,5 +1197,141 @@ class GraftApiSpec extends AnyFunSuite {
     val written = parts.toSeq.flatMap(p => spark.read.parquet(s"$out/$p")
       .collect().map(_.getString(0)))
     assert(written == want)
+  }
+
+  private def stateFile(dir: String) =
+    java.nio.file.Paths.get(dir, "_graft_desc.properties")
+
+  test("table state: a zero-byte state file refuses open, naming the file") {
+    val dir = Files.createTempDirectory("graft-state-empty").toString
+    Graft.createTable(spark, dir, ops = Some(Set(OpType.Value)))
+    Files.write(stateFile(dir), Array.emptyByteArray)
+    Files.deleteIfExists(java.nio.file.Paths.get(dir, "._graft_desc.properties.crc"))
+    val e = intercept[IllegalStateException](Graft.openTable(spark, dir))
+    assert(e.getMessage.contains(stateFile(dir).toString) &&
+      e.getMessage.contains("cf.default"), e.getMessage)
+  }
+
+  test("table state: a torn replace refuses instead of opening a bare log") {
+    val dir = Files.createTempDirectory("graft-state-torn").toString
+    val t = Graft.createTable(spark, dir, model.TableDesc(hashKeys = true),
+      Some(Set(OpType.Value)))
+    t.put(Seq(CellOp("alice", "cf", "q", 100, OpType.Value, "a".getBytes, 1)))
+    // a write that died between deleting the old file and renaming its
+    // temp into place
+    def move(from: String, to: String): Unit = Files.move(
+      java.nio.file.Paths.get(dir, from), java.nio.file.Paths.get(dir, to))
+    move("_graft_desc.properties", "_graft_desc.properties.tmp")
+    move("._graft_desc.properties.crc", "._graft_desc.properties.tmp.crc")
+    val e = intercept[IllegalStateException](Graft.openTable(spark, dir))
+    assert(e.getMessage.contains(stateFile(dir).toString + " ") &&
+      e.getMessage.contains(stateFile(dir).toString + ".tmp"), e.getMessage)
+    intercept[IllegalStateException](t.get("alice"))
+    intercept[IllegalStateException](Graft.createTable(spark, dir))
+    // the rename completes the write: the table opens as it was
+    move("_graft_desc.properties.tmp", "_graft_desc.properties")
+    move("._graft_desc.properties.tmp.crc", "._graft_desc.properties.crc")
+    assert(Graft.openTable(spark, dir).get("alice").count() == 1)
+  }
+
+  test("table state: put, alterTable and allocateTxnTs replace the file by rename") {
+    import graft.model.{CfSpec, TableDesc}
+    val dir = Files.createTempDirectory("graft-state-rename").toString
+    val t = Graft.createTable(spark, dir, ops = Some(Set(OpType.Value, OpType.DelRow)))
+    def inode: AnyRef = Files.getAttribute(stateFile(dir), "unix:ino")
+    var last = inode
+    def replaced(by: String): Unit = {
+      val now = inode
+      assert(now != last, s"$by rewrote the state file in place")
+      assert(!Files.exists(java.nio.file.Paths.get(dir, "_graft_desc.properties.tmp")), by)
+      last = now
+    }
+    t.put(Seq(CellOp("r", "cf", "q", 100, OpType.Value, "v".getBytes, 1),
+      CellOp("r", "cf", "q", 200, OpType.DelRow, null, 2)))
+    replaced("put")
+    Graft.alterTable(spark, dir, TableDesc(CfSpec(maxVersions = 2)))
+    replaced("alterTable")
+    t.allocateTxnTs()
+    replaced("allocateTxnTs")
+    assert(deleteHint(dir).contains(1L))
+  }
+
+  test("table state: a state file as earlier builds wrote it opens unchanged") {
+    import graft.model.{CfSpec, TableDesc}
+    val dir = Files.createTempDirectory("graft-state-compat").toString
+    // java.util.Properties.store output: a comment, a date, escaped keys,
+    // hash order
+    Files.write(stateFile(dir), Seq(
+      "#graft table descriptor",
+      "#Sat Oct 17 12:00:00 UTC 2026",
+      "nextTxnTs=42",
+      "cf.named.a\\ b\\:c=2,0,0",
+      "hashKeys=true",
+      "deleteCount=3",
+      "ops=0,1",
+      "rawKey=readable",
+      "cf.default=3,1,86400",
+      "kvMode=false").mkString("", "\n", "\n").getBytes("ISO-8859-1"))
+    val desc = TableDesc(CfSpec(3, 1, 86400), Map("a b:c" -> CfSpec(2, 0, 0)),
+      hashKeys = true)
+    val ops = Some(Set(OpType.Value, OpType.DelRow))
+    val t = Graft.openTable(spark, dir)
+    assert(t.desc == desc && t.opsPresent == ops)
+    assert(deleteHint(dir).contains(3L))
+    assert(t.allocateTxnTs() == 42L)
+    // rewritten by this build, it reads back the same
+    val again = Graft.openTable(spark, dir)
+    assert(again.desc == desc && again.opsPresent == ops)
+    assert(deleteHint(dir).contains(3L))
+    assert(again.allocateTxnTs() == 43L)
+  }
+
+  test("puts from 4 threads keep the delete hint exact") {
+    val dir = Files.createTempDirectory("graft-state-threads").toString
+    val t = Graft.createTable(spark, dir,
+      ops = Some(Set(OpType.Value, OpType.DelRow)))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      (0 until 4).map { th =>
+        pool.submit(new java.util.concurrent.Callable[Unit] {
+          def call(): Unit = (0 until 5).foreach { b =>
+            val seq = th * 1000L + b * 10L
+            t.put(Seq(
+              CellOp(s"r$th-$b", "cf", "q", 100, OpType.Value, "v".getBytes, seq),
+              CellOp(s"x$th-$b", "cf", "q", 100, OpType.DelRow, null, seq + 1),
+              CellOp(s"y$th-$b", "cf", "q", 100, OpType.DelRow, null, seq + 2)))
+          }
+        })
+      }.foreach(_.get())
+    } finally pool.shutdown()
+    assert(t.log.where(col("op") =!= OpType.Value).count() == 40)
+    assert(deleteHint(dir).contains(40L))
+  }
+
+  test("KV put refuses once the seq space is exhausted") {
+    val session = spark
+    import session.implicits._
+    val dir = Files.createTempDirectory("graft-kv-era").toString
+    val t = Graft.createKvTable(spark, dir)
+    // a stored seq in the last era a signed Long holds
+    t.putEntries(Seq(("k", "old".getBytes, 0L, 8191L << 50))
+      .toDF("key", "value", "expire_ts_us", "seq"))
+    val e = intercept[IllegalStateException](
+      t.put(Seq(("k", "new".getBytes, 0L)), nowUs = 1L))
+    assert(e.getMessage.contains("seq"), e.getMessage)
+    assert(t.log.count() == 1)
+    assert(t.get("k").collect().map(r => new String(r.getAs[Array[Byte]]("value")))
+      .toSeq == Seq("old"))
+  }
+
+  test("an index rebuild keeps the index table's txn-ts allocator") {
+    val dir = Files.createTempDirectory("graft-ix-txnts").toString
+    val ixDir = Files.createTempDirectory("graft-ix-txnts-ix").toString
+    val t = Graft.createTable(spark, dir, ops = Some(Set(OpType.Value)))
+    t.put(Seq(CellOp("r1", "c", "seg", 100, OpType.Value, "A".getBytes, 1)))
+    val first = t.buildIndex(ixDir, "c", "seg").allocateTxnTs(5)
+    // the rebuild overwrites the index log, state file included
+    val second = t.buildIndex(ixDir, "c", "seg").allocateTxnTs()
+    assert(second >= first + 5, s"reissued a reserved ts: $first then $second")
   }
 }

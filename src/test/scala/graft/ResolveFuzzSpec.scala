@@ -137,11 +137,9 @@ class ResolveFuzzSpec extends AnyFunSuite {
       val nowUs = 6000000L
       val snapshot = if (rng.nextInt(4) == 0) Some(n.toLong / 2) else None
 
-      // alternate version strategies (window / bounded top-k) and
-      // tombstone strategies (window / join): all must match the
-      // reference exactly
+      // alternate tombstone strategies (window / join): both must match
+      // the reference exactly
       val got = Resolve.resolve(log.toDF(), desc, nowUs, snapshot,
-          useTopKAggregate = trial % 2 == 0,
           deleteStrategy = if (trial % 3 == 0) "window" else "join")
         .collect().map { r =>
           (r.getString(0), r.getString(1), r.getString(2), r.getLong(3),

@@ -370,7 +370,8 @@ class StreamingSpec extends AnyFunSuite {
     assert(seen.sorted == Seq("r1", "r2"))
     assert(Observers.pendingNotifications(t.log).count() == 0)
     // the acks appended as bucketed files, not a clobbered layout
-    assert(graft.sources.CellLogStore.bucketCount(spark, logDir).contains(4))
+    assert(graft.sources.TableState.read(spark, logDir)
+      .exists(_.desc.buckets == 4))
   }
 
   test("event-time windows with watermark over the change feed") {
