@@ -3,9 +3,9 @@ package graft
 import graft.model.{CellOp, OpType, TableDesc}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import graft.operators.{Resolve, ScanFilter, ScanQuery}
-import graft.sources.{CellLogStore, Sidecar, TableState, Tables}
+import graft.sources.{CellLogStore, TableState, Tables}
 import graft.streaming.Observers
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.SortedRunsCollect
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -120,11 +120,11 @@ class GraftTable(
 
   /** Reserve `n` consecutive batch-txn timestamps from this table's
     * monotone allocator (the timeoracle analogue,
-    * src/timeoracle/timeoracle.h:33-41) — returns the first. Use for
-    * [[graft.operators.BatchTxn]] start/commit timestamps: txns
-    * interleaved within one driver never collide (the allocator is
-    * JVM-synchronized; cross-driver writers keep prewrite's default
-    * collision check as the backstop). */
+    * src/timeoracle/timeoracle.h:33-41, [[CellLogStore.allocateTxnTs]])
+    * — returns the first. Use for [[graft.operators.BatchTxn]]
+    * start/commit timestamps: txns interleaved within one driver never
+    * collide (the allocator is JVM-synchronized; cross-driver writers
+    * keep prewrite's default collision check as the backstop). */
   def allocateTxnTs(n: Int = 1): Long =
     CellLogStore.allocateTxnTs(spark, logDir, n)
 
@@ -262,21 +262,20 @@ class GraftKvTable(val spark: SparkSession, val logDir: String) {
   /** Group-commit (key, value[, ttl_sec]) rows. Expiry is baked at
     * WRITE time — `expire_ts_us = nowUs + ttl_sec` (a missing or
     * non-positive `ttl_sec` never expires), exactly the reference's
-    * TTLKv write path. `nowUs` is explicit for determinism. Seqs are
-    * auto-allocated in a fresh era above everything stored.
+    * TTLKv write path. `nowUs` is explicit for determinism. Seqs come
+    * from the table's allocator ([[CellLogStore.withSeqs]]): a local
+    * batch reserves its row count and, once the allocator is seeded,
+    * commits from the driver with no Spark job.
     */
   def put(batch: DataFrame, nowUs: Long): Unit = {
     val withTtl =
       if (batch.columns.contains("ttl_sec")) batch
       else batch.withColumn("ttl_sec", lit(0L))
-    val kv = KvStore.layout(spark, logDir)
-    val seqBase = CellLogStore.nextSeqEra(kv.read(spark, logDir))
-    kv.write(withTtl.select(
+    KvStore.append(CellLogStore.withSeqs(withTtl.select(
       col("key"), col("value"),
       when(col("ttl_sec") <= 0L, lit(0L))
-        .otherwise(lit(nowUs) + col("ttl_sec") * 1000000L).as("expire_ts_us"),
-      (lit(seqBase) + monotonically_increasing_id()).as("seq")), logDir,
-      SaveMode.Append)
+        .otherwise(lit(nowUs) + col("ttl_sec") * 1000000L).as("expire_ts_us")),
+      logDir), logDir)
   }
 
   def put(kvs: Seq[(String, Array[Byte], Long)], nowUs: Long): Unit = {
@@ -357,7 +356,7 @@ object Graft {
     * the log schema — both refused.
     */
   def alterTable(spark: SparkSession, logDir: String,
-      desc: TableDesc): GraftTable = Sidecar.locked {
+      desc: TableDesc): GraftTable = TableState.locked(spark, logDir) {
     val state = TableState.require(spark, logDir)
     val stored = state.desc
     require(!stored.kvMode && !desc.kvMode,

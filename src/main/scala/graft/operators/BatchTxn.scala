@@ -30,8 +30,24 @@ import org.apache.spark.sql.functions._
   * [[graft.GraftTable.putStored]] — a plain `put` would hash the data
   * cells' keys a second time while the lock payload kept the logical
   * primary, and lock resolution would then roll back committed writes.
+  *
+  * Seqs: every builder numbers channel k of its frame (a prewrite's
+  * data cells are channel 0, its lock cells channel 1)
+  * `seqBase + monotonically_increasing_id() + k·2^31` — inside each
+  * partition's 2^33 id block, for channels of under 2^31 rows per
+  * partition. A frame thus spans `numPartitions << 33` seqs from
+  * `seqBase`, like any frame numbered by `monotonically_increasing_id`;
+  * its own partition count bounds numPartitions (a union has at least
+  * as many partitions as its largest child). Take `seqBase` above every
+  * seq the log holds: reserve that span from the table's allocator
+  * ([[graft.sources.CellLogStore.reserveSeqs]]), or use a caller's own
+  * monotone clock.
   */
 object BatchTxn {
+
+  /** Seqs of channel `k` of a builder's frame (see the object doc). */
+  private def seqs(seqBase: Long, k: Int): Column =
+    (lit(seqBase + (k.toLong << 31)) + monotonically_increasing_id()).as("seq")
 
   /** Batch CheckAndApply: each intent row carries its mutation (the
     * CellOp columns) plus a condition — `check_cf`, `check_qualifier`,
@@ -104,7 +120,7 @@ object BatchTxn {
 
   /** Expand accepted prewrites into their cell-log ops: the data cell at
     * `startTs` plus the `!L` lock cell pointing at the primary row.
-    * `seqBase` spacing as in [[graft.streaming.Observers.notifyOps]].
+    * `seqBase` as in the object doc.
     */
   def prewriteOps(accepted: DataFrame, startTs: Long, primaryKey: String,
       seqBase: Long): DataFrame =
@@ -122,17 +138,16 @@ object BatchTxn {
       primaryPayload: Column, seqBase: Long): DataFrame = {
     val base = accepted.where(!col("conflict"))
       .select(col("row_key"), col("cf"), col("qualifier"), col("value"))
-    val sub = graft.sources.CellLogStore.SeqSubEra
     val data = base.select(
       col("row_key"), col("cf"), col("qualifier"),
       lit(startTs).as("ts"), lit(OpType.Value).as("op"), col("value"),
-      (lit(seqBase) + monotonically_increasing_id()).as("seq"))
+      seqs(seqBase, 0))
     val lock = base.select(
       col("row_key"), col("cf"),
       concat(lit("!L"), col("qualifier")).as("qualifier"),
       lit(startTs).as("ts"), lit(OpType.Value).as("op"),
       primaryPayload.as("value"),
-      (lit(seqBase + sub) + monotonically_increasing_id()).as("seq"))
+      seqs(seqBase, 1))
     data.unionAll(lock)
   }
 
@@ -147,19 +162,18 @@ object BatchTxn {
     val locked = PercolatorRead.pendingLocks(log, snapshotTs = Long.MaxValue)
       .where(col("lock_ts") === startTs)
       .select(col("row_key"), col("cf"), col("qualifier"))
-    val sub = graft.sources.CellLogStore.SeqSubEra
     val writes = locked.select(
       col("row_key"), col("cf"),
       concat(lit("!W"), col("qualifier")).as("qualifier"),
       lit(commitTs).as("ts"), lit(OpType.Value).as("op"),
       be64_encode(lit(startTs)).as("value"),
-      (lit(seqBase) + monotonically_increasing_id()).as("seq"))
+      seqs(seqBase, 0))
     val unlocks = locked.select(
       col("row_key"), col("cf"),
       concat(lit("!L"), col("qualifier")).as("qualifier"),
       lit(startTs).as("ts"), lit(OpType.DelQualifiers).as("op"),
       lit(null).cast("binary").as("value"),
-      (lit(seqBase + sub) + monotonically_increasing_id()).as("seq"))
+      seqs(seqBase, 1))
     writes.unionAll(unlocks)
   }
 
@@ -179,18 +193,17 @@ object BatchTxn {
     val pend = PercolatorRead.pendingLocks(log, snapshotTs = Long.MaxValue)
       .where(col("lock_ts") === startTs)
       .select(col("row_key"), col("cf"), col("qualifier"))
-    val sub = graft.sources.CellLogStore.SeqSubEra
     val unlocks = pend.select(
       col("row_key"), col("cf"),
       concat(lit("!L"), col("qualifier")).as("qualifier"),
       lit(startTs).as("ts"), lit(OpType.DelQualifiers).as("op"),
       lit(null).cast("binary").as("value"),
-      (lit(seqBase) + monotonically_increasing_id()).as("seq"))
+      seqs(seqBase, 0))
     val dataDels = pend.select(
       col("row_key"), col("cf"), col("qualifier"),
       lit(startTs).as("ts"), lit(OpType.DelQualifier).as("op"),
       lit(null).cast("binary").as("value"),
-      (lit(seqBase + sub) + monotonically_increasing_id()).as("seq"))
+      seqs(seqBase, 1))
     unlocks.unionAll(dataDels)
   }
 
@@ -220,24 +233,23 @@ object BatchTxn {
       .groupBy(col("primary"), col("lock_ts"))
       .agg(max(col("commit_ts")).as("commit_ts"))
     val decided = pend.join(primCommits, Seq("primary", "lock_ts"), "left")
-    val sub = graft.sources.CellLogStore.SeqSubEra
     val fwdWrites = decided.where(col("commit_ts").isNotNull).select(
       col("row_key"), col("cf"),
       concat(lit("!W"), col("qualifier")).as("qualifier"),
       col("commit_ts").as("ts"), lit(OpType.Value).as("op"),
       be64_encode(col("lock_ts")).as("value"),
-      (lit(seqBase) + monotonically_increasing_id()).as("seq"))
+      seqs(seqBase, 0))
     val unlocks = decided.select(
       col("row_key"), col("cf"),
       concat(lit("!L"), col("qualifier")).as("qualifier"),
       col("lock_ts").as("ts"), lit(OpType.DelQualifiers).as("op"),
       lit(null).cast("binary").as("value"),
-      (lit(seqBase + sub) + monotonically_increasing_id()).as("seq"))
+      seqs(seqBase, 1))
     val dataDels = decided.where(col("commit_ts").isNull).select(
       col("row_key"), col("cf"), col("qualifier"),
       col("lock_ts").as("ts"), lit(OpType.DelQualifier).as("op"),
       lit(null).cast("binary").as("value"),
-      (lit(seqBase + 2 * sub) + monotonically_increasing_id()).as("seq"))
+      seqs(seqBase, 2))
     fwdWrites.unionAll(unlocks).unionAll(dataDels)
   }
 }

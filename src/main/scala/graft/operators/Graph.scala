@@ -2905,12 +2905,17 @@ object Graph {
         val sccOf = new Array[Long](n)
         val hasLab = new Array[Boolean](n)
         labArr.foreach { r =>
-          val nd = r.getLong(0)
-          if (!seen.add(nd)) dup = true
           if (r.isNullAt(1)) nullLab = true
+          // a null node is a row but no distinct node — the
+          // distributed count vs count_distinct check fails on it too
+          if (r.isNullAt(0)) dup = true
           else {
-            val j = java.util.Arrays.binarySearch(ix.ids, nd)
-            if (j >= 0) { sccOf(j) = r.getLong(1); hasLab(j) = true }
+            val nd = r.getLong(0)
+            if (!seen.add(nd)) dup = true
+            if (!r.isNullAt(1)) {
+              val j = java.util.Arrays.binarySearch(ix.ids, nd)
+              if (j >= 0) { sccOf(j) = r.getLong(1); hasLab(j) = true }
+            }
           }
         }
         require(!dup,

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.sources.{LogLayout, TableState}
+import graft.sources.{CellLogStore, LogLayout, TableState}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -54,9 +54,25 @@ object KvStore {
     LogLayout.kv(stored.exists(_.desc.rawKeyBinary),
       stored.fold(0)(_.desc.buckets))
 
-  /** Group-commit a KV batch (key, value, expire_ts_us, seq). */
-  def append(batch: DataFrame, logDir: String): Unit =
-    layout(batch.sparkSession, logDir).write(batch, logDir, SaveMode.Append)
+  /** Group-commit a KV batch (key, value, expire_ts_us, seq): a local
+    * batch commits from the driver with no Spark job. Once the table
+    * has reserved seqs, the state's seq counter is raised above the
+    * batch's max seq, like a cell append
+    * ([[graft.sources.CellLogStore.append]]). */
+  def append(batch: DataFrame, logDir: String): Unit = {
+    val spark = batch.sparkSession
+    TableState.locked(spark, logDir) {
+      val stored = TableState.read(spark, logDir)
+      val kv = layoutOf(stored)
+      val tally = kv.write(batch, logDir, SaveMode.Append,
+        maxSeq = stored.exists(_.nextSeq.isDefined))
+      stored.foreach { s =>
+        val next = s.written(
+          CellLogStore.maxSeqOf(tally, kv.read(spark, logDir)))
+        if (next != s) TableState.write(spark, logDir, next)
+      }
+    }
+  }
 
   def read(spark: SparkSession, logDir: String): DataFrame =
     layout(spark, logDir).read(spark, logDir)
@@ -65,7 +81,8 @@ object KvStore {
     * (expired at `nowUs`, superseded writes) are physically dropped
     * (tera KvCompactStrategy::Drop, src/io/ttlkv_compact_strategy.cc:
     * 40-70); live KVs KEEP their baked expiry so later reads still
-    * expire them. The layout carries over, like the cell-log compact.
+    * expire them. The layout and the seq counter carry over, like the
+    * cell-log compact.
     */
   def compact(spark: SparkSession, logDir: String, outDir: String,
       nowUs: Long): Unit = {
@@ -73,6 +90,7 @@ object KvStore {
     val kv = layoutOf(stored)
     kv.write(resolveEntries(kv.read(spark, logDir), nowUs), outDir,
       SaveMode.Overwrite)
-    stored.foreach(s => TableState.write(spark, outDir, TableState(s.desc)))
+    stored.foreach(s => TableState.write(spark, outDir,
+      TableState(s.desc, nextSeq = s.nextSeq)))
   }
 }

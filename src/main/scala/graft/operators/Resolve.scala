@@ -336,11 +336,12 @@ object Resolve {
         // grouping COLUMNS, not a key lambda: an opaque groupByKey key
         // is an appended attribute EnsureRequirements cannot equate
         // with row_key, which would force the shuffle back in.
-        // op and value extend the sort key past (ts, seq): seq eras are
-        // claimed via unsynchronized read-then-write (nextSeqEra), so
-        // two cells CAN share (ts, seq) — the full-struct key keeps the
-        // fold order total and deterministic, like the old whole-struct
-        // collect_list sort did.
+        // op and value extend the sort key past (ts, seq): seqs the
+        // engine reserves (CellLogStore.reserveSeqs) never repeat,
+        // but caller-supplied seqs (put batches, BatchTxn/notify
+        // bases) can, so two cells CAN share (ts, seq) — the
+        // full-struct key keeps the fold order total and deterministic,
+        // like the old whole-struct collect_list sort did.
         // Keyed by the log's ACTUAL key type: a Dataset encoder over
         // String would silently up-cast a binary raw key, replacing
         // invalid-UTF-8 bytes and collapsing distinct keys.

@@ -26,7 +26,8 @@ import org.apache.spark.sql.types.StructType
   * settings match the Spark write path, and each lands under a hidden
   * in-progress name first, then renames into place. The caller passes
   * the log's [[LogLayout]] sort, bloom and bucket columns, so a driver
-  * commit lays files out as [[LogLayout.write]] would; logs are read by
+  * commit lays files out as a Spark write of [[LogLayout.write]] would;
+  * [[LogLayout.write]] picks between the two. Logs are read by
   * path, so the next read in any session lists the new files.
   */
 private[graft] object DriverCommit {

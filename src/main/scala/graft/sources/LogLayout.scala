@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.model.{CellOp, KvEntry, OpType, TableDesc}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.execution.datasources.DataSource
 import org.apache.spark.sql.functions._
@@ -63,20 +63,67 @@ private[graft] final case class LogLayout(
     pruned.drop("lg")
   }
 
-  /** Write `batch` into `dir` — every Spark-path log write. The batch
-    * is first reconciled to the log schema (`Dataset.to` over the
-    * all-nullable schema): columns match by name, safe casts widen,
-    * extra columns drop, and an unsafe cast fails here, before any file
-    * lands. Then the key clustering: a hash exchange on the bucket
-    * function (one file per bucket per commit), or a range exchange
-    * over `numFiles` partitions (default: the shuffle partitions), led
-    * by `lg` on an LG log so a task writes into one LG directory. Then
-    * the within-file sort. `aboveExchange` wraps the batch right above
-    * the exchange (e.g. an observation counted inside the write job:
-    * below a range exchange the sampling job would count it twice).
+  /** Write `batch` into `dir` — every log write, cell or KV. A
+    * driver-resident append ([[DriverCommit.localRows]]: the batch's
+    * optimized plan is a `LocalRelation` whose columns match the log
+    * schema) to a flat or bucketed log is written from the driver with
+    * no Spark job ([[DriverCommit]]) and tallied there. Every other
+    * write — a distributed batch, `numFiles`, Overwrite, the LG layout —
+    * is a Spark write, tallied by an [[Observation]] inside its job.
+    * The tally holds what was asked for: the batch's tombstones
+    * (`countDeletes`, cell logs) and its max seq (`maxSeq`; an empty
+    * batch reports `Long.MinValue`); each is None when a Spark write's
+    * metrics never arrive.
     */
   def write(batch: DataFrame, dir: String, mode: SaveMode, numFiles: Int = 0,
-      aboveExchange: DataFrame => DataFrame = identity): Unit = {
+      countDeletes: Boolean = false, maxSeq: Boolean = false): LogLayout.Tally = {
+    val local =
+      if (mode == SaveMode.Append && numFiles == 0 && lg.isEmpty)
+        DriverCommit.localRows(batch, schema)
+      else None
+    local match {
+      case Some(rows) =>
+        DriverCommit.write(batch.sparkSession, rows, schema, dir, sortCols,
+          key, Some(buckets).filter(_ > 0).map(key -> _))
+        LogLayout.Tally(
+          Option.when(countDeletes) {
+            val op = schema.fieldIndex("op")
+            rows.count(r => OpType.deletes.contains(r.getInt(op))).toLong
+          },
+          Option.when(maxSeq) {
+            val seq = schema.fieldIndex("seq")
+            rows.iterator.filterNot(_.isNullAt(seq)).map(_.getLong(seq))
+              .maxOption.getOrElse(Long.MinValue)
+          })
+      case None =>
+        val tallies =
+          Seq(countDeletes -> count(when(col("op").isin(OpType.deletes: _*), 1)),
+            maxSeq -> coalesce(max(col("seq")), lit(Long.MinValue)))
+            .collect { case (true, agg) => agg }
+        val obs = if (tallies.isEmpty) None else Some(Observation())
+        sparkWrite(batch, dir, mode, numFiles, df =>
+          obs.fold(df)(df.observe(_, tallies.head, tallies.tail: _*)))
+        val row = obs.flatMap(o => scala.util.Try(scala.concurrent.Await.result(
+          o.future, scala.concurrent.duration.Duration(60, "s"))).toOption)
+        LogLayout.Tally(row.filter(_ => countDeletes).map(_.getLong(0)),
+          row.filter(_ => maxSeq).map(r => r.getLong(r.length - 1)))
+    }
+  }
+
+  /** The Spark write. The batch is first reconciled to the log schema
+    * (`Dataset.to` over the all-nullable schema): columns match by
+    * name, safe casts widen, extra columns drop, and an unsafe cast
+    * fails here, before any file lands. Then the key clustering: a hash
+    * exchange on the bucket function (one file per bucket per commit),
+    * or a range exchange over `numFiles` partitions (default: the
+    * shuffle partitions), led by `lg` on an LG log so a task writes
+    * into one LG directory. Then the within-file sort. `aboveExchange`
+    * wraps the batch right above the exchange: an observation there
+    * counts each row once, where below a range exchange the sampling
+    * job would count it twice.
+    */
+  private def sparkWrite(batch: DataFrame, dir: String, mode: SaveMode,
+      numFiles: Int, aboveExchange: DataFrame => DataFrame): Unit = {
     val spark = batch.sparkSession
     val logRows = batch.to(StructType(schema.map(_.copy(nullable = true))))
     val rows = lg.fold(logRows)(logRows.withColumn("lg", _))
@@ -98,6 +145,10 @@ private[graft] final case class LogLayout(
 }
 
 private[graft] object LogLayout {
+
+  /** What a [[LogLayout.write]] tallied: the batch's tombstones and its
+    * max seq, each when asked for and known. */
+  final case class Tally(deletes: Option[Long], maxSeq: Option[Long])
 
   /** Spark-path bloom options for `column`: parquet's adaptive bloom
     * keeps candidate filters from 1 MiB down to 2 KiB and writes the

@@ -39,6 +39,11 @@ object RelationalLoader {
     *
     * @param ts cell timestamp column (a source event-time column, or the
     *           default constant 0 for pure snapshot loads)
+    * @param seqBase first seq of the load; its seqs reach
+    *           `seqBase + (numPartitions << 33)`. The default
+    *           [[CellLogStore.SeqEra]] suits a load into a fresh table;
+    *           a load into a table that holds data takes a base above
+    *           its seqs from [[CellLogStore.reserveSeqs]]
     */
   def toCellLog(df: DataFrame, keyCol: String,
       cfMap: Map[String, Seq[String]], ts: Column = lit(0L),

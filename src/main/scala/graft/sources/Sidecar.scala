@@ -93,8 +93,9 @@ private[graft] final case class Sidecar(name: String, what: String,
 
 private[graft] object Sidecar {
 
-  /** The JVM-wide gate: every [[write]] holds it, and so does every
-    * read-modify-write of a [[TableState]] (reentrant). */
+  /** The JVM-wide gate: every [[write]] holds it for the write alone
+    * (reentrant). A [[TableState]] read-modify-write holds its table's
+    * own lock ([[TableState.locked]]) instead. */
   private val gate = new Object
   def locked[A](body: => A): A = gate.synchronized(body)
 
@@ -130,9 +131,9 @@ private[graft] object Sidecar {
 /** A table's state, the file `_graft_desc.properties` next to its log:
   * the descriptor (the master-meta analogue, table_schema.proto:31-64),
   * the declared op-set (so resolve skips its op probe), the tombstone
-  * count hint and the txn-ts allocator. One [[Sidecar]] file, replaced
-  * whole by every change; each read-modify-write runs under
-  * [[Sidecar.locked]].
+  * count hint and the allocator's two counters, txn timestamps and
+  * seqs. One [[Sidecar]] file, replaced whole by every change; each
+  * read-modify-write runs under the table's [[TableState.locked]].
   *
   * @param deleteCount tombstones in the log, when known — a strategy
   *   hint for resolve's "auto" delete strategy on flat and LG logs,
@@ -140,18 +141,46 @@ private[graft] object Sidecar {
   *   whose state predates the hint stays hint-less.
   * @param nextTxnTs the first unreserved batch-txn timestamp
   *   ([[CellLogStore.allocateTxnTs]]), once seeded
+  * @param nextSeq the first unreserved seq ([[CellLogStore.reserveSeqs]]),
+  *   once seeded; every append raises it above the seqs it writes
   */
 private[graft] final case class TableState(desc: TableDesc,
     ops: Option[Set[Int]] = None, deleteCount: Option[Long] = None,
-    nextTxnTs: Option[Long] = None)
+    nextTxnTs: Option[Long] = None, nextSeq: Option[Long] = None) {
+
+  /** This state after a write whose max seq is `maxSeq`: a seeded
+    * [[nextSeq]] rises above it and never falls (a range handed out but
+    * not yet written is not in the log). `maxSeq` is evaluated only
+    * when the counter is seeded. */
+  def written(maxSeq: => Long): TableState =
+    nextSeq.fold(this)(n => copy(nextSeq = Some(n max TableState.above(maxSeq))))
+}
 
 private[graft] object TableState {
 
   private val File = Sidecar("_graft_desc.properties", "table state",
     "create the table first")
 
+  /** The first value above `v`; saturates at `Long.MaxValue`, which no
+    * reservation hands out. */
+  def above(v: Long): Long = if (v == Long.MaxValue) v else v + 1
+
   def read(spark: SparkSession, logDir: String): Option[TableState] =
     File.read(spark, logDir).map(parse)
+
+  private val locks =
+    new java.util.concurrent.ConcurrentHashMap[String, Object]()
+
+  /** Runs `body` holding the lock of the table at `logDir` (one monitor
+    * per qualified path, reentrant): every read-modify-write of a
+    * table's state, and the batch write it tallies, runs under it.
+    * Writers of different tables never wait on each other. */
+  def locked[A](spark: SparkSession, logDir: String)(body: => A): A = {
+    val path = new Path(logDir)
+    val key = path.getFileSystem(spark.sessionState.newHadoopConf())
+      .makeQualified(path).toString
+    locks.computeIfAbsent(key, _ => new Object).synchronized(body)
+  }
 
   def require(spark: SparkSession, logDir: String): TableState =
     parse(File.require(spark, logDir))
@@ -168,7 +197,8 @@ private[graft] object TableState {
       d.lgs.toSeq.sorted.map { case (cf, lg) => s"lg.$cf" -> lg } ++
       s.ops.map("ops" -> _.toSeq.sorted.mkString(",")) ++
       s.deleteCount.map("deleteCount" -> _) ++
-      s.nextTxnTs.map("nextTxnTs" -> _): _*)
+      s.nextTxnTs.map("nextTxnTs" -> _) ++
+      s.nextSeq.map("nextSeq" -> _): _*)
   }
 
   private def parse(c: Sidecar.Content): TableState = {
@@ -187,6 +217,7 @@ private[graft] object TableState {
       rawKeyBinary = c.opt("rawKey")(_ == "binary").getOrElse(false))
     TableState(desc,
       c.opt("ops")(_.split(",").iterator.filter(_.nonEmpty).map(_.toInt).toSet),
-      c.opt("deleteCount")(_.toLong), c.opt("nextTxnTs")(_.toLong))
+      c.opt("deleteCount")(_.toLong), c.opt("nextTxnTs")(_.toLong),
+      c.opt("nextSeq")(_.toLong))
   }
 }

@@ -5,7 +5,6 @@ import graft.operators.Resolve
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
-import org.apache.spark.sql.Row
 
 /** Structured-Streaming reproduction of the reference's observer /
   * notification framework (tera Percolator-style observers:
@@ -200,11 +199,11 @@ object Observers {
   /** Notify mutations for a batch of observed-column writes: one
     * `_N_:cf:qual` VALUE cell per distinct (row, cf, qualifier), carrying
     * the notify timestamp as its payload (reference writes
-    * NumberToString(ts)). `seqBase` places the batch in arrival order;
-    * allocate successive bases with
-    * [[graft.sources.CellLogStore.nextSeqEra]] (ids from
-    * `monotonically_increasing_id` reach partition#<<33, so eras are
-    * 2^50 apart).
+    * NumberToString(ts)). `seqBase` places the batch in arrival order:
+    * reserve it from the table's allocator
+    * ([[graft.sources.CellLogStore.reserveSeqs]]) — ids from
+    * `monotonically_increasing_id` reach numPartitions << 33, the span
+    * to reserve ([[graft.sources.CellLogStore.withSeqs]] does both).
     */
   def notifyOps(mutations: DataFrame, notifyTs: Long, seqBase: Long): DataFrame =
     mutations
@@ -224,30 +223,21 @@ object Observers {
     * re-notification written with a later timestamp survives the ack.
     */
   def ackOps(notifications: DataFrame, startTs: Long, seqBase: Long): DataFrame =
-    ackBound(notifications, lit(startTs), seqBase)
+    ackCells(notifications
+        .select(col("row_key"), col("qualifier"), lit(startTs).as("ts"))
+        .distinct())
+      .withColumn("seq", lit(seqBase) + monotonically_increasing_id())
 
-  /** Ack each notification at ITS OWN delivered timestamp instead of a
-    * batch-global bound: a concurrent re-notification of a DIFFERENT
-    * row with a lower ts then survives (a global max-ts bound would
-    * tombstone it before it was ever delivered).
-    */
-  def ackOpsDelivered(notifications: DataFrame, seqBase: Long): DataFrame =
-    ackBound(notifications, col("ts"), seqBase)
-
-  private def ackBound(notifications: DataFrame, bound: Column,
-      seqBase: Long): DataFrame =
-    notifications
-      .select(col("row_key"), col("qualifier"), bound.as("ts"))
-      .groupBy(col("row_key"), col("qualifier"))
-      .agg(max(col("ts")).as("ts"))
-      .select(
-        col("row_key"),
-        lit(NotifyCf).as("cf"),
-        col("qualifier"),
-        col("ts"),
-        lit(graft.model.OpType.DelQualifiers).as("op"),
-        lit(null).cast("binary").as("value"),
-        (lit(seqBase) + monotonically_increasing_id()).as("seq"))
+  /** The ack tombstone, without its seq, of each (row_key, qualifier,
+    * ts) of `acks`. */
+  private def ackCells(acks: DataFrame): DataFrame =
+    acks.select(
+      col("row_key"),
+      lit(NotifyCf).as("cf"),
+      col("qualifier"),
+      col("ts"),
+      lit(graft.model.OpType.DelQualifiers).as("op"),
+      lit(null).cast("binary").as("value"))
 
   /** The full reference observer loop — discover pending `_N_` cells,
     * deliver, Ack — as one self-contained streaming query (tera
@@ -257,8 +247,14 @@ object Observers {
     * append the ack tombstones bounded at the batch's newest notify ts.
     * Ack rows are DEL ops, so the stream's own `op == VALUE` filter
     * never re-delivers them; re-notifications written later than the
-    * ack survive, exactly like the reference. Seq allocation per batch
-    * comes from [[graft.sources.CellLogStore.nextSeqEra]].
+    * ack survive, exactly like the reference.
+    *
+    * A delivering round collects the live set once, hands `onNotify`
+    * that set as a driver-resident frame, numbers its acks from exactly
+    * their count reserved from the table's seq allocator
+    * ([[graft.sources.CellLogStore.withSeqs]]) and commits them as a
+    * local batch from the driver — no max(seq) job and no Spark write
+    * for the acks.
     */
   def observeNotifications(table: graft.GraftTable, checkpointDir: String,
       hook: Option[ScanHook] = None,
@@ -283,25 +279,32 @@ object Observers {
         // checkpoint re-reads already-acked notify cells — the semi-join
         // against the resolved pending set drops them (the reference
         // scanner gets this from the LSM applying its tombstones).
-        // Materialized once (localCheckpoint — the live set is small by
-        // construction): isEmpty, delivery, and the ack write would
-        // otherwise each re-run the full-log resolve.
+        // Collected once (the live set is small by construction):
+        // delivery, the ack batch and the hook's count all read it.
         val live = batch.join(
           pendingNotifications(table.log)
             .select(col("row_key"), col("qualifier"), col("ts")),
           Seq("row_key", "qualifier", "ts"), "left_semi")
-          .localCheckpoint()
-        var delivered = 0L
-        if (!live.isEmpty) {
-          onNotify(live)
-          val era = graft.sources.CellLogStore.nextSeqEra(table.spark, table.logDir)
-          // keys came FROM the log (storage space) — putStored, and ack
-          // each row at its own delivered ts so a concurrent lower-ts
+        val rows = live.collect()
+        if (rows.nonEmpty) {
+          val spark = table.spark
+          onNotify(spark.createDataFrame(
+            java.util.Arrays.asList(rows: _*), live.schema))
+          // ack each (row, qualifier) at its newest DELIVERED ts, not a
+          // batch-global bound, so a concurrent lower-ts
           // re-notification of another row is not swallowed
-          table.putStored(ackOpsDelivered(live, era))
-          if (hook.isDefined) delivered = live.count()
+          val Seq(key, qual, ts) =
+            Seq("row_key", "qualifier", "ts").map(live.schema.fieldIndex)
+          val acks = rows.groupBy(r => (r.get(key) match {
+              case b: Array[Byte] => b.toSeq
+              case k => k
+            }, r.getString(qual))).values.map(_.maxBy(_.getLong(ts))).toSeq
+          // keys came FROM the log (storage space) — putStored
+          table.putStored(graft.sources.CellLogStore.withSeqs(
+            ackCells(spark.createDataFrame(java.util.Arrays.asList(acks: _*),
+              live.schema)), table.logDir))
         }
-        hook.foreach(_.after(id, delivered,
+        hook.foreach(_.after(id, rows.length,
           (System.nanoTime() - t0) / 1000000L))
       }
       .trigger(trigger)
@@ -425,47 +428,6 @@ object Observers {
         .start()
     }
   }
-
-  /** One observer scan round's metrics — what a ScanHook sees. */
-  case class ScanRound(
-      queryId: java.util.UUID,
-      batchId: Long,
-      numInputRows: Long,
-      triggerMs: Long,
-      timestamp: String)
-
-  /** Engine-level companion to [[ScanHook]]: adapts
-    * StreamingQueryListener progress events to per-round callbacks with
-    * the trigger metrics (batch id, trigger duration, timestamp).
-    * Caveat: with a foreachBatch sink (the observer loop's shape) the
-    * engine itself never executes the batch plan, so `numInputRows` is
-    * structurally 0 there — row counts come from [[ScanHook]], which
-    * the loop invokes directly. Returns the registered listener — pass
-    * it to [[removeScanHook]] when done.
-    */
-  def addScanHook(spark: SparkSession,
-      onRound: ScanRound => Unit,
-      onStart: java.util.UUID => Unit = _ => (),
-      onStop: java.util.UUID => Unit = _ => ())
-      : org.apache.spark.sql.streaming.StreamingQueryListener = {
-    import org.apache.spark.sql.streaming.StreamingQueryListener._
-    val l = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      override def onQueryStarted(e: QueryStartedEvent): Unit = onStart(e.id)
-      override def onQueryProgress(e: QueryProgressEvent): Unit =
-        onRound(ScanRound(e.progress.id, e.progress.batchId,
-          e.progress.numInputRows,
-          Option(e.progress.durationMs.get("triggerExecution"))
-            .map(_.longValue()).getOrElse(0L),
-          e.progress.timestamp))
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = onStop(e.id)
-    }
-    spark.streams.addListener(l)
-    l
-  }
-
-  def removeScanHook(spark: SparkSession,
-      l: org.apache.spark.sql.streaming.StreamingQueryListener): Unit =
-    spark.streams.removeListener(l)
 
   /** Streaming exact dedup over the change feed: drop re-deliveries of
     * the same document (by content fingerprint) within the watermark

@@ -87,17 +87,51 @@ class BatchTxnSpec extends AnyFunSuite {
     val p4 = BatchTxn.prewrite(t.log, m3, startTs = 30)
     assert(p4.where(col("conflict")).count() == 0)
 
-    // seq-era allocation: each era clears everything already stored
-    val era = graft.sources.CellLogStore.nextSeqEra(spark, t.logDir)
-    assert(era % graft.sources.CellLogStore.SeqEra == 0)
+    // seq allocation: the reserved base is above every stored seq
+    val base = graft.sources.CellLogStore.reserveSeqs(spark, t.logDir, 4L << 33)
     val maxSeq = t.log.agg(max(col("seq"))).collect()(0).getLong(0)
-    assert(era > maxSeq)
+    assert(base > maxSeq)
   }
 
   private def committedSet(log: org.apache.spark.sql.DataFrame): Set[(String, String)] =
     PercolatorRead.resolve(log, snapshotTs = Long.MaxValue)
       .collect().map(r => (r.getString(0), new String(r.getAs[Array[Byte]]("value"))))
       .toSet
+
+  test("every builder's frame spans numPartitions << 33 seqs from its base") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-txn-span").toString
+    val t = Graft.createTable(spark, dir)
+    val m = (0 until 40).map(i => (s"r$i", "cf", "q", s"v$i".getBytes))
+      .toDF("row_key", "cf", "qualifier", "value").repartition(3)
+    val accepted = BatchTxn.prewrite(t.log, m, startTs = 10)
+    def check(what: String, ops: org.apache.spark.sql.DataFrame,
+        base: Long): Unit = {
+      val seqs = ops.collect().map(_.getAs[Long]("seq"))
+      val span = ops.rdd.getNumPartitions.toLong << 33
+      assert(seqs.nonEmpty, what)
+      assert(seqs.distinct.length == seqs.length, s"$what: repeated seqs")
+      assert(seqs.forall(s => s >= base && s < base + span),
+        s"$what: a seq outside [$base, $base + $span)")
+    }
+    var base = t.log.count() + 1
+    val pre = BatchTxn.prewriteOps(accepted, 10, "r0", base)
+    check("prewriteOps", pre, base)
+    t.put(pre)
+    // a crashed txn at 20 whose primary committed: roll-forward and
+    // rollback channels both present in one resolve
+    base += 4L << 33
+    val pre2 = BatchTxn.prewriteOps(BatchTxn.prewrite(t.log,
+      m.withColumn("qualifier", lit("q2")), startTs = 20), 20, "r0", base)
+    t.put(pre2)
+    base += 4L << 33
+    val commit = BatchTxn.commitOps(t.log, 10, 11, base)
+    check("commitOps", commit, base)
+    t.put(commit.where(col("row_key") === "r0"))
+    base += 4L << 33
+    check("rollbackOps", BatchTxn.rollbackOps(t.log, 20, base), base)
+    check("resolveLockOps", BatchTxn.resolveLockOps(t.log, base), base)
+  }
 
   test("allocator-issued timestamps: interleaved txns never collide, reuse refused") {
     import spark.implicits._

@@ -1313,8 +1313,8 @@ class GraftApiSpec extends AnyFunSuite {
     import session.implicits._
     val dir = Files.createTempDirectory("graft-kv-era").toString
     val t = Graft.createKvTable(spark, dir)
-    // a stored seq in the last era a signed Long holds
-    t.putEntries(Seq(("k", "old".getBytes, 0L, 8191L << 50))
+    // a stored seq at the top of the seq space: no seq is left above it
+    t.putEntries(Seq(("k", "old".getBytes, 0L, Long.MaxValue))
       .toDF("key", "value", "expire_ts_us", "seq"))
     val e = intercept[IllegalStateException](
       t.put(Seq(("k", "new".getBytes, 0L)), nowUs = 1L))
@@ -1322,6 +1322,139 @@ class GraftApiSpec extends AnyFunSuite {
     assert(t.log.count() == 1)
     assert(t.get("k").collect().map(r => new String(r.getAs[Array[Byte]]("value")))
       .toSeq == Seq("old"))
+  }
+
+  test("seq allocator: two sessions reserving from 4 threads get disjoint ranges") {
+    val session = spark
+    import session.implicits._
+    val dir = Files.createTempDirectory("graft-seq-alloc").toString
+    val t = Graft.createTable(spark, dir)
+    t.put(Seq(CellOp("r", "cf", "q", 1, OpType.Value, "v".getBytes, 5)))
+    val sessions = Seq(spark, spark.newSession())
+    def reserve(s: SparkSession, n: Long): Long =
+      graft.sources.CellLogStore.reserveSeqs(s, dir, n)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    val ranges = try {
+      (0 until 4).map { th =>
+        pool.submit(new java.util.concurrent.Callable[Seq[(Long, Long)]] {
+          def call(): Seq[(Long, Long)] = (0 until 10).map { i =>
+            val n = 1L + (th * 10 + i) % 7
+            val base = reserve(sessions(th % 2), n)
+            (base, base + n)
+          }
+        })
+      }.flatMap(_.get())
+    } finally pool.shutdown()
+    val sorted = ranges.sortBy(_._1)
+    assert(sorted.head._1 > 5, "a reservation reused a stored seq")
+    sorted.zip(sorted.tail).foreach { case (a, b) =>
+      assert(a._2 <= b._1, s"overlapping reservations $a and $b")
+    }
+    // a put with a higher caller-supplied seq, from either session and
+    // by either write path, moves the next reservation above it
+    for ((s, i) <- sessions.zipWithIndex; distributed <- Seq(false, true)) {
+      val high = 1L << (40 + 2 * i + (if (distributed) 1 else 0))
+      val batch = Seq(CellOp(s"h$i", "cf", "q", 1, OpType.Value,
+        "v".getBytes, high)).toDF()
+      Graft.openTable(s, dir).put(
+        if (distributed) batch.repartition(2) else batch)
+      val next = reserve(sessions(1 - i), 1)
+      assert(next > high, s"session $i, distributed=$distributed: $next <= $high")
+    }
+  }
+
+  test("KV put of a local batch starts no Spark job after its first put") {
+    val session = spark
+    import session.implicits._
+    for (buckets <- Seq(0, 4)) {
+      val dir = Files.createTempDirectory("graft-kv-local").toString
+      val t = Graft.createKvTable(spark, dir, buckets = buckets)
+      // the first put seeds the table's seq allocator
+      t.put(Seq(("a", "1".getBytes, 0L)), nowUs = 1L)
+      assert(jobsDuring(t.put(Seq(("b", "2".getBytes, 0L),
+        ("a", "3".getBytes, 0L)), nowUs = 2L)) == 0, s"buckets=$buckets")
+      // a distributed put still numbers above every local one
+      t.put(Seq(("a", "4", 0L)).toDF("key", "value", "ttl_sec")
+        .select(col("key"), encode(col("value"), "UTF-8").as("value"),
+          col("ttl_sec")).repartition(2), nowUs = 3L)
+      assert(t.kvs().collect().map(r =>
+          r.getString(0) -> new String(r.getAs[Array[Byte]]("value"))).toMap ==
+        Map("a" -> "4", "b" -> "2"), s"buckets=$buckets")
+      assert(t.log.select("seq").distinct().count() == 4)
+    }
+  }
+
+  test("KV put on a bare directory of KvEntry parquet numbers above its seqs") {
+    val session = spark
+    import session.implicits._
+    val dir = Files.createTempDirectory("graft-kv-bare").toString
+    val t = Graft.openKvTable(spark, dir)
+    t.putEntries(Seq(("k", "old".getBytes, 0L, 1000L))
+      .toDF("key", "value", "expire_ts_us", "seq"))
+    t.put(Seq(("k", "new".getBytes, 0L)), nowUs = 1L)
+    t.put(Seq(("j", "x".getBytes, 0L), ("k", "newer".getBytes, 0L)), nowUs = 2L)
+    assert(t.kvs().collect().map(r =>
+        r.getString(0) -> new String(r.getAs[Array[Byte]]("value"))).toMap ==
+      Map("k" -> "newer", "j" -> "x"))
+    val seqs = t.log.collect().map(_.getAs[Long]("seq"))
+    assert(seqs.length == 4 && seqs.distinct.length == 4)
+    assert(seqs.count(_ > 1000L) == 3)
+    // the directory stays bare: no state file was written for it
+    assert(graft.sources.TableState.read(spark, dir).isEmpty)
+  }
+
+  test("seq counter stays a floor when a write's max seq is unknown") {
+    val dir = Files.createTempDirectory("graft-seq-floor").toString
+    val t = Graft.createTable(spark, dir)
+    t.put(Seq(CellOp("r", "cf", "q", 1, OpType.Value, "v".getBytes, 5)))
+    // a range handed out but not yet written is not in the log
+    val base = graft.sources.CellLogStore.reserveSeqs(spark, dir, 1000)
+    val s = graft.sources.TableState.require(spark, dir)
+    val unknown = graft.sources.LogLayout.Tally(None, None)
+    assert(s.written(graft.sources.CellLogStore.maxSeqOf(unknown, t.log))
+      .nextSeq.contains(base + 1000))
+    // ...and the log's own max still raises it
+    t.put(Seq(CellOp("r", "cf", "q", 2, OpType.Value, "w".getBytes, 1L << 40)))
+    assert(s.written(graft.sources.CellLogStore.maxSeqOf(unknown, t.log))
+      .nextSeq.contains((1L << 40) + 1))
+  }
+
+  test("table state locks: a writer of one table does not wait on another's") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val a = Files.createTempDirectory("graft-lock-a").toString
+    val b = Files.createTempDirectory("graft-lock-b").toString
+    val ta = Graft.createTable(spark, a)
+    val tb = Graft.createTable(spark, b)
+    def cell(seq: Long) = Seq(CellOp("r", "cf", "q", seq, OpType.Value,
+      "v".getBytes, seq))
+    val held = new java.util.concurrent.CountDownLatch(1)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val holder = new Thread(() =>
+      graft.sources.TableState.locked(spark, a) {
+        held.countDown()
+        release.await()
+      })
+    holder.start()
+    held.await()
+    val waiting = try {
+      // b's put and reservation proceed while a's lock is held...
+      Await.result(Future {
+        tb.put(cell(1))
+        graft.sources.CellLogStore.reserveSeqs(spark, b, 10)
+      }, 60.seconds)
+      // ...while a's own writer waits for it
+      val fa = Future(ta.put(cell(2)))
+      Thread.sleep(500)
+      assert(!fa.isCompleted, "a put ran while its table's lock was held")
+      fa
+    } finally {
+      release.countDown()
+      holder.join()
+    }
+    Await.result(waiting, 60.seconds)
+    assert(ta.log.count() == 1 && tb.log.count() == 1)
   }
 
   test("an index rebuild keeps the index table's txn-ts allocator") {

@@ -1376,6 +1376,21 @@ class GraphSpec extends AnyFunSuite {
       bow.toDF("src", "dst"), Seq((10L, 10L)).toDF("node", "scc_id")))
   }
 
+  test("bowtieRegions: a null scc node fails the one-row-per-node contract on both branches") {
+    val s = spark
+    import s.implicits._
+    val df = Seq((10L, 11L), (11L, 10L), (11L, 12L)).toDF("src", "dst")
+    val scc = Seq[(Option[Long], Long)]((Some(10L), 10L), (Some(11L), 10L),
+      (Some(12L), 12L), (None, 12L)).toDF("node", "scc_id")
+    // driver-local (default bound) and forced-distributed
+    for (driverMax <- Seq(Graph.DriverPeelMax, 0L)) {
+      val e = intercept[IllegalArgumentException](
+        Graph.bowtieImpl(df, scc, 200, driverMax).collect())
+      assert(e.getMessage.contains("exactly one row per node"),
+        s"driverMax=$driverMax: ${e.getMessage}")
+    }
+  }
+
   test("hits equals the driver path-count replay; star hub/authority shapes; overflow refuses") {
     val s = spark
     import s.implicits._

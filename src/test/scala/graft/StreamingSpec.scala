@@ -212,37 +212,18 @@ class StreamingSpec extends AnyFunSuite {
       override def after(batchId: Long, rows: Long, ms: Long): Unit =
         afters.add((batchId, rows, ms))
     }
-    val rounds = new java.util.concurrent.ConcurrentLinkedQueue[Observers.ScanRound]()
-    val started = new java.util.concurrent.atomic.AtomicInteger(0)
-    val stopped = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = Observers.addScanHook(spark,
-      onRound = rounds.add(_),
-      onStart = _ => started.incrementAndGet(),
-      onStop = _ => stopped.incrementAndGet())
-    try {
-      val q = Observers.observe(
-        Observers.cellLogStream(spark, logDir),
-        columns = Seq(("cf1", "q0")), checkpointDir = ckpt,
-        hook = Some(hook))((_, _) => ())
-      q.awaitTermination()
+    val q = Observers.observe(
+      Observers.cellLogStream(spark, logDir),
+      columns = Seq(("cf1", "q0")), checkpointDir = ckpt,
+      hook = Some(hook))((_, _) => ())
+    q.awaitTermination()
 
-      // the loop invoked the hook synchronously: every round paired,
-      // delivered == the observed-column subset (cf1 ∧ q0 → i % 6 == 0)
-      assert(befores.size() > 0 && befores.size() == afters.size())
-      assert(befores.asScala.toSet == afters.asScala.map(_._1).toSet)
-      assert(afters.asScala.map(_._2).sum == 10)
-      assert(afters.asScala.forall(_._3 >= 0))
-
-      // engine-level rounds arrive async with trigger metrics
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while ((stopped.get() == 0 || rounds.isEmpty) &&
-          System.nanoTime() < deadline)
-        Thread.sleep(100)
-      assert(started.get() >= 1 && stopped.get() >= 1)
-      val rs = rounds.asScala.toSeq
-      assert(rs.nonEmpty)
-      assert(rs.forall(r => r.batchId >= 0 && r.timestamp.nonEmpty))
-    } finally Observers.removeScanHook(spark, listener)
+    // the loop invoked the hook synchronously: every round paired,
+    // delivered == the observed-column subset (cf1 ∧ q0 → i % 6 == 0)
+    assert(befores.size() > 0 && befores.size() == afters.size())
+    assert(befores.asScala.toSet == afters.asScala.map(_._1).toSet)
+    assert(afters.asScala.map(_._2).sum == 10)
+    assert(afters.asScala.forall(_._3 >= 0))
   }
 
   test("observer discovers only newly-appended mutations on resume (N2)") {
@@ -315,8 +296,9 @@ class StreamingSpec extends AnyFunSuite {
       CellOp("r1", "data", "url", 100, OpType.Value, "a".getBytes, 1),
       CellOp("r2", "data", "url", 101, OpType.Value, "b".getBytes, 2)).toDF()
     t.put(writes)
+    // the notify frame's ids span its 4 shuffle partitions << 33
     t.put(Observers.notifyOps(writes, notifyTs = 100L,
-      seqBase = graft.sources.CellLogStore.nextSeqEra(spark, logDir)))
+      seqBase = CellLogStore.reserveSeqs(spark, logDir, 4L << 33)))
 
     val seen = scala.collection.mutable.ArrayBuffer.empty[String]
     val afters = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
@@ -359,8 +341,9 @@ class StreamingSpec extends AnyFunSuite {
       CellOp("r1", "data", "url", 100, OpType.Value, "a".getBytes, 1),
       CellOp("r2", "data", "url", 101, OpType.Value, "b".getBytes, 2)).toDF()
     t.put(writes)
+    // the notify frame's ids span its 4 shuffle partitions << 33
     t.put(Observers.notifyOps(writes, notifyTs = 100L,
-      seqBase = graft.sources.CellLogStore.nextSeqEra(spark, logDir)))
+      seqBase = CellLogStore.reserveSeqs(spark, logDir, 4L << 33)))
 
     val seen = scala.collection.mutable.ArrayBuffer.empty[String]
     val q = Observers.observeNotifications(t, tmp("bktobs-ckpt")) { batch =>
@@ -372,6 +355,109 @@ class StreamingSpec extends AnyFunSuite {
     // the acks appended as bucketed files, not a clobbered layout
     assert(graft.sources.TableState.read(spark, logDir)
       .exists(_.desc.buckets == 4))
+  }
+
+  test("an observer acks on a bare log directory, with no table state") {
+    import spark.implicits._
+    val logDir = tmp("bareobs")
+    val t = Graft.openTable(spark, logDir)
+    val writes = Seq(
+      CellOp("r1", "data", "url", 100, OpType.Value, "a".getBytes, 1),
+      CellOp("r2", "data", "url", 101, OpType.Value, "b".getBytes, 2)).toDF()
+    t.put(writes)
+    t.put(Observers.notifyOps(writes, notifyTs = 100L,
+      seqBase = CellLogStore.reserveSeqs(spark, logDir, 4L << 33)))
+    val seen = scala.collection.mutable.ArrayBuffer.empty[String]
+    val q = Observers.observeNotifications(t, tmp("bareobs-ckpt")) { batch =>
+      seen ++= batch.collect().map(_.getString(0))
+    }
+    q.awaitTermination(60000)
+    assert(q.exception.isEmpty, q.exception)
+    assert(seen.sorted == Seq("r1", "r2"))
+    assert(Observers.pendingNotifications(t.log).count() == 0)
+    // the directory stays bare: no state file was written for it
+    assert(graft.sources.TableState.read(spark, logDir).isEmpty)
+  }
+
+  test("an observer keeps acking when the log's max seq is in the last seq era") {
+    import spark.implicits._
+    val logDir = tmp("lastera")
+    val t = Graft.createTable(spark, logDir)
+    // caller-supplied seqs in the last 2^50-wide era a signed Long holds
+    val last = 8191L << 50
+    val writes = Seq(
+      CellOp("r1", "data", "url", 100, OpType.Value, "a".getBytes, last + 1),
+      CellOp("r2", "data", "url", 101, OpType.Value, "b".getBytes, last + 2)).toDF()
+    t.put(writes)
+    val ckpt = tmp("lastera-ckpt")
+    for (round <- 1 to 3) {
+      // each round re-notifies both rows above every seq so far
+      t.put(Observers.notifyOps(writes, notifyTs = 100L * round,
+        seqBase = last + (round.toLong << 40)))
+      val seen = scala.collection.mutable.ArrayBuffer.empty[String]
+      val q = Observers.observeNotifications(t, ckpt) { batch =>
+        seen ++= batch.collect().map(_.getString(0))
+      }
+      q.awaitTermination(60000)
+      assert(q.exception.isEmpty, q.exception)
+      assert(seen.sorted == Seq("r1", "r2"), s"round $round")
+      // the acks ordered above the notify cells: nothing pending
+      assert(Observers.pendingNotifications(t.log).count() == 0, s"round $round")
+    }
+    assert(t.log.agg(min(col("seq"))).collect()(0).getLong(0) > last)
+  }
+
+  test("a delivering observer round runs no max(seq) job and no Spark write for its acks") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    for (desc <- Seq(TableDesc(), TableDesc(buckets = 4))) {
+      val logDir = tmp("ackjobs")
+      val ckpt = tmp("ackjobs-ckpt")
+      val t = Graft.createTable(spark, logDir, desc)
+      val writes = Seq(
+        CellOp("r1", "data", "url", 100, OpType.Value, "a".getBytes, 1),
+        CellOp("r2", "data", "url", 101, OpType.Value, "b".getBytes, 2)).toDF()
+      t.put(writes)
+      // one delivering round: its jobs and the plans of its SQL executions
+      def round(notifyTs: Long, seqBase: Long): (Int, Seq[String]) = {
+        t.put(Observers.notifyOps(writes, notifyTs, seqBase))
+        val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+        val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+        val listener = new org.apache.spark.scheduler.SparkListener {
+          override def onJobStart(
+              e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+            jobs.incrementAndGet()
+          override def onOtherEvent(
+              e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+            case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+              plans.add(s.physicalPlanDescription)
+            case _ =>
+          }
+        }
+        val delivered = new java.util.concurrent.atomic.AtomicLong(0)
+        val hook = new Observers.ScanHook {
+          override def after(batchId: Long, rows: Long, ms: Long): Unit =
+            delivered.addAndGet(rows)
+        }
+        org.apache.spark.sql.graft.Shim.waitListenerBus(spark)
+        spark.sparkContext.addSparkListener(listener)
+        try {
+          Observers.observeNotifications(t, ckpt, hook = Some(hook))(_ => ())
+            .awaitTermination(60000)
+          org.apache.spark.sql.graft.Shim.waitListenerBus(spark)
+        } finally spark.sparkContext.removeSparkListener(listener)
+        assert(delivered.get() == 2, desc)
+        assert(Observers.pendingNotifications(t.log).count() == 0, desc)
+        (jobs.get(), plans.asScala.toSeq)
+      }
+      // the first ack reservation seeds the table's seq counter
+      round(100L, 1L << 40)
+      val (jobs, plans) = round(200L, 2L << 40)
+      assert(!plans.exists(_.contains("InsertIntoHadoopFsRelationCommand")),
+        s"$desc: the acks took a Spark write")
+      assert(!plans.exists(_.contains("max(seq")), s"$desc: a max(seq) job ran")
+      info(s"buckets=${desc.buckets}: $jobs jobs in a delivering round")
+    }
   }
 
   test("event-time windows with watermark over the change feed") {
