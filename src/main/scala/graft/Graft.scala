@@ -1,13 +1,18 @@
 package graft
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import graft.model.{CellOp, OpType, TableDesc}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import graft.operators.{Resolve, ScanFilter, ScanQuery}
-import graft.sources.{CellLogStore, TableState, Tables}
+import graft.operators.{CellFold, Resolve, ScanFilter, ScanQuery}
+import graft.sources.{CellLogStore, DriverRead, LogLayout, TableState, Tables}
 import graft.streaming.Observers
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.SortedRunsCollect
+import org.apache.spark.sql.graft.{PointGet, SortedRunsCollect}
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** The user-facing SDK surface — what `tera::Client`/`tera::Table`
@@ -66,8 +71,7 @@ class GraftTable(
 
   /** Point get: all visible cells of one row (routed by hashed key on a
     * hash table, like the reference reader — table_impl.cc:1417). */
-  def get(rowKey: String): DataFrame =
-    cells().where(col("row_key") === storageKey(rowKey))
+  def get(rowKey: String): DataFrame = pointGet(storageKey(rowKey))
 
   /** Binary point get ([[TableDesc.rawKeyBinary]] tables): exact-bytes
     * equality — binary tables never hash-shard, so the raw key IS the
@@ -76,7 +80,46 @@ class GraftTable(
     require(desc.rawKeyBinary,
       "binary get on a readable-key table (keys are StringType; use " +
         "get(String))")
-    cells().where(col("row_key") === lit(rowKey))
+    pointGet(rowKey)
+  }
+
+  /** The resolved cells of one storage key (a String, or a binary key's
+    * bytes). On a bucketed table the frame is one [[PointGet]] leaf over
+    * the files listed now: its `collect()` reads the key's bucket on the
+    * driver ([[graft.sources.DriverRead]]) and folds the row with
+    * [[CellFold]], with no Spark job; every other consumer runs the
+    * bucket-pruned resolve plan over the same files. */
+  private def pointGet(key: Any): DataFrame = {
+    val src = source
+    def resolved: DataFrame = Resolve.resolve(src.log, desc,
+        opsPresent = opsPresent, deleteCountHint = src.deleteHint)
+      .where(col("row_key") === lit(key))
+    src.stored.map(_.desc).filter(_.buckets > 0) match {
+      case None => resolved
+      case Some(stored) =>
+        val layout = LogLayout.cells(stored)
+        val (keyValue, keyBytes) = key match {
+          case s: String => (UTF8String.fromString(s), s.getBytes(UTF_8))
+          case b: Array[Byte] => (b, b)
+        }
+        def onDriver(): Seq[InternalRow] = {
+          val bucket = LogLayout.bucketOf(layout.schema(layout.key).dataType,
+            stored.buckets)(keyValue)
+          val ops = DriverRead.rows(spark, layout.bucketFiles(src.log, bucket),
+            layout.schema, layout.key, keyBytes).map { r =>
+            def str(i: Int) = if (r.isNullAt(i)) null else r.getUTF8String(i).toString
+            CellFold.Op(str(1), str(2), r.getLong(3), r.getInt(4), r.getBinary(5),
+              r.getLong(6))
+          }
+          CellFold.row(ops, desc, present = opsPresent).map(c =>
+            InternalRow(keyValue, UTF8String.fromString(c.cf),
+              UTF8String.fromString(c.qualifier), c.ts, c.value, c.seq))
+        }
+        PointGet.frame(spark,
+          StructType(layout.schema.filter(_.name != "op").map(_.copy(nullable = true))),
+          src.log.queryExecution.analyzed.stats.sizeInBytes,
+          () => onDriver(), () => resolved)
+    }
   }
 
   /** Wide-row view of a point get (`RowReader::ToMap`). */

@@ -23,8 +23,9 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   *
   * Injected functions are catalog-registered (not temp), so they
   * resolve in any database context and survive `newSession()`. The
-  * ordered-collect planner strategy
-  * ([[org.apache.spark.sql.graft.SortedRunsCollect]]) is injected too.
+  * planner strategy for root collects served on the driver
+  * ([[org.apache.spark.sql.graft.SortedRunsCollect]]: ordered collects
+  * and point gets) is injected too.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -298,41 +298,10 @@ object Resolve {
         // ops between compactions). groupByKey plans a clustered
         // distribution — a bucketed table satisfies it straight from
         // the scan (zero shuffle) — and the per-group sort is a
-        // spillable SortExec, never an in-memory array.
+        // spillable SortExec, never an in-memory array. The fold body is
+        // CellFold.column, the one a driver-side point get runs.
         val session = df.sparkSession
         import session.implicits._
-        import graft.functions.Codecs
-        // the streamed fold body, shared by both key types; mirrors
-        // foldMerge's expression semantics exactly, incl. null operands
-        // (a null Add/Append operand nulls the state — expression
-        // arithmetic/concat propagate null; a poison cell must not kill
-        // the scan). Input tuples are (ts, op, value, seq).
-        def foldColumn(it: Iterator[(Long, Int, Array[Byte], Long)])
-            : (Long, Array[Byte], Long) = {
-          var maxTs = Long.MinValue
-          var maxSeq = Long.MinValue
-          var state: Array[Byte] = null
-          it.foreach { case (ts, op, v, seq) =>
-            if (ts > maxTs) maxTs = ts
-            if (seq > maxSeq) maxSeq = seq
-            op match {
-              case Value => state = v
-              case Add => state = if (v == null) null
-                else Codecs.encodeBE64(
-                  (if (state == null) 0L else Codecs.decodeBE64(state)) +
-                    Codecs.decodeBE64(v))
-              case AddInt64 => state = if (v == null) null
-                else Codecs.encodeLE64(
-                  (if (state == null) 0L else Codecs.decodeLE64(state)) +
-                    Codecs.decodeLE64(v))
-              case PutIfAbsent => if (state == null) state = v
-              case Append => state = if (v == null) null
-                else (if (state == null) Array.emptyByteArray else state) ++ v
-              case _ => ()
-            }
-          }
-          (maxTs, state, maxSeq)
-        }
         // grouping COLUMNS, not a key lambda: an opaque groupByKey key
         // is an appended attribute EnsureRequirements cannot equate
         // with row_key, which would force the shuffle back in.
@@ -356,7 +325,7 @@ object Resolve {
               .as[(Array[Byte], String, String),
                 (Array[Byte], String, String, Long, Int, Array[Byte], Long)]
               .flatMapSortedGroups(sortKeys: _*) { case ((rk, cfn, q), it) =>
-                val (ts, v, seq) = foldColumn(it.map(r => (r._4, r._5, r._6, r._7)))
+                val (ts, v, seq) = CellFold.column(it.map(r => (r._4, r._5, r._6, r._7)))
                 Iterator((rk, cfn, q, ts, v, seq))
               }
               .toDF("row_key", "cf", "qualifier", "ts", "value", "seq")
@@ -365,7 +334,7 @@ object Resolve {
               .as[(String, String, String),
                 (String, String, String, Long, Int, Array[Byte], Long)]
               .flatMapSortedGroups(sortKeys: _*) { case ((rk, cfn, q), it) =>
-                val (ts, v, seq) = foldColumn(it.map(r => (r._4, r._5, r._6, r._7)))
+                val (ts, v, seq) = CellFold.column(it.map(r => (r._4, r._5, r._6, r._7)))
                 Iterator((rk, cfn, q, ts, v, seq))
               }
               .toDF("row_key", "cf", "qualifier", "ts", "value", "seq")

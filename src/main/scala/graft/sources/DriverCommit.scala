@@ -7,7 +7,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, AttributeReference, RowOrdering, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.datasources.BucketingUtils
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
@@ -65,15 +64,13 @@ private[graft] object DriverCommit {
     def attr(name: String) = attrs(schema.fieldIndex(name))
     val sorted = rows.sorted(RowOrdering.create(
       sortCols.map(c => SortOrder(attr(c), Ascending)), attrs))
-    // Spark's own bucket function (the one bucketBy writes and bucket
-    // pruning reads), compiled once per batch
     val files: Seq[(Option[Int], Seq[InternalRow])] = bucketing match {
       case Some((bucketCol, n)) =>
-        val bucketOf = UnsafeProjection.create(
-          Seq(HashPartitioning(Seq(attr(bucketCol)), n).partitionIdExpression),
-          attrs)
+        val key = schema.fieldIndex(bucketCol)
+        val keyType = schema(key).dataType
+        val bucketOf = LogLayout.bucketOf(keyType, n)
         // groupBy keeps each bucket's rows in sorted order
-        sorted.groupBy(r => bucketOf(r).getInt(0)).toSeq.sortBy(_._1)
+        sorted.groupBy(r => bucketOf(r.get(key, keyType))).toSeq.sortBy(_._1)
           .map { case (b, rs) => (Some(b), rs) }
       case None => Seq((None, sorted))
     }

@@ -1,11 +1,16 @@
 package graft.sources
 
 import graft.model.{CellOp, KvEntry, OpType, TableDesc}
+import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.BucketSpec
-import org.apache.spark.sql.execution.datasources.DataSource
+import org.apache.spark.sql.catalyst.expressions.BoundReference
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.datasources.{BucketingUtils, DataSource, HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.graft.Shim
+import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
 
 /** Physical layout of one log directory, cell or KV — the one owner of
   * how a log sits on disk. tera keeps the tablet layout in the table
@@ -41,6 +46,23 @@ private[graft] final case class LogLayout(
     spark.baseRelationToDataFrame(DataSource(spark, "parquet",
       paths = Seq(dir), userSpecifiedSchema = Some(schema),
       bucketSpec = bucketSpec).resolveRelation(checkFilesExist = false))
+
+  /** The files of `log` (a [[read]] of this bucketed log) that hold
+    * bucket `bucket`: the listing the read took, so Spark's hidden-file
+    * rule applies. A listed file with no bucket id in its name fails as
+    * Spark's bucketed scan fails (`INVALID_BUCKET_FILE`), whichever
+    * bucket is asked for. */
+  def bucketFiles(log: DataFrame, bucket: Int): Seq[FileStatus] = {
+    val index = log.queryExecution.analyzed.collectFirst {
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) => fs.location
+    }.getOrElse(throw new IllegalArgumentException(
+      s"not a file-source log read: ${log.queryExecution.analyzed}"))
+    index.listFiles(Nil, Nil).flatMap(_.files).map(_.fileStatus).filter { f =>
+      val id = BucketingUtils.getBucketId(f.getPath.getName).getOrElse(
+        throw Shim.invalidBucketFile(f.getPath.toUri.toString))
+      id == bucket
+    }
+  }
 
   /** Read an LG-partitioned log, pruned to `wanted` LGs (None = all).
     * The wanted set always includes [[TableDesc.RowTombstoneLg]] — a
@@ -149,6 +171,16 @@ private[graft] object LogLayout {
   /** What a [[LogLayout.write]] tallied: the batch's tombstones and its
     * max seq, each when asked for and known. */
   final case class Tally(deletes: Option[Long], maxSeq: Option[Long])
+
+  /** Spark's bucket id of a `keyType` key among `buckets` — the
+    * function `bucketBy` writes and bucket pruning reads,
+    * `HashPartitioning(...).partitionIdExpression`, bound once. A string
+    * key is passed as a `UTF8String`. */
+  def bucketOf(keyType: DataType, buckets: Int): Any => Int = {
+    val id = HashPartitioning(Seq(BoundReference(0, keyType, nullable = true)),
+      buckets).partitionIdExpression
+    key => id.eval(InternalRow(key)).asInstanceOf[Int]
+  }
 
   /** Spark-path bloom options for `column`: parquet's adaptive bloom
     * keeps candidate filters from 1 MiB down to 2 KiB and writes the

@@ -14,6 +14,11 @@ object Shim {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** Spark's `INVALID_BUCKET_FILE` error for a file in a bucketed
+    * location whose name carries no bucket id. */
+  def invalidBucketFile(path: String): Throwable =
+    org.apache.spark.sql.errors.QueryExecutionErrors.invalidBucketFile(path)
+
   /** Drain the listener bus (`private[spark]`) — metrics assertions
     * (e.g. the resource-contract specs summing task-result bytes) must
     * flush async listener events before reading their accumulators. */

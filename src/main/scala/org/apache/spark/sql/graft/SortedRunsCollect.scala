@@ -28,11 +28,16 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
   * `Limit(Sort)` keeps Spark's `TakeOrderedAndProject` (the strategy
   * never sees it: the root is a Limit), and streaming plans are left
   * alone.
+  *
+  * The same strategy plans a [[PointGet]] leaf as [[PointGetExec]],
+  * whose `collect()` reads on the driver with no job: one strategy for
+  * root collects served on the driver.
   */
 object SortedRunsCollect extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case ReturnAnswer(Sort(order, true, child, _)) if !child.isStreaming =>
       SortedRunsCollectExec(order, planLater(child)) :: Nil
+    case p: PointGet => PointGetExec(p.output, p.onDriver, p.plan) :: Nil
     case _ => Nil
   }
 

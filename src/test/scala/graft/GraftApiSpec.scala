@@ -448,20 +448,8 @@ class GraftApiSpec extends AnyFunSuite {
     // reopen: building the resolve plan runs NO jobs — no op probe (the
     // stored op-set) and no tombstone count (the stored hint)
     val t2 = Graft.openTable(spark, dir)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val df =
-      try {
-        val planned = t2.cells()
-        Thread.sleep(1000) // let listener-bus events drain
-        assert(jobs.get() == 0, s"plan construction ran ${jobs.get()} jobs")
-        planned
-      } finally spark.sparkContext.removeSparkListener(listener)
+    val (df, jobs) = JobCount.during(spark)(t2.cells())
+    assert(jobs == 0, s"plan construction ran $jobs jobs")
     // and the plan is still correct: r1 is tombstoned
     assert(df.collect().map(_.getString(0)).toSet == Set("r2"))
 
@@ -520,18 +508,7 @@ class GraftApiSpec extends AnyFunSuite {
     def jobsOfPut(desc: TableDesc, ops: Set[Int]): Int = {
       val dir = Files.createTempDirectory("graft-hint-jobs").toString
       val t = Graft.createTable(spark, dir, desc, Some(ops))
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        t.put(batch)
-        Thread.sleep(1000) // let listener-bus events drain
-        jobs.get()
-      } finally spark.sparkContext.removeSparkListener(listener)
+      JobCount.during(spark)(t.put(batch))._2
     }
     Seq(TableDesc(), TableDesc(buckets = 4)).foreach { desc =>
       val withDeletes = jobsOfPut(desc, Set(OpType.Value, OpType.DelRow))
@@ -999,22 +976,8 @@ class GraftApiSpec extends AnyFunSuite {
     Graft.clearCaches()
   }
 
-  /** Spark jobs started while `body` runs (listener-bus drained). */
-  private def jobsDuring(body: => Unit): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.sql.graft.Shim.waitListenerBus(spark)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      org.apache.spark.sql.graft.Shim.waitListenerBus(spark)
-      jobs.get()
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
+  /** Spark jobs started while `body` runs. */
+  private def jobsDuring(body: => Unit): Int = JobCount.during(spark)(body)._2
 
   /** A table of every driver-commit flavour (flat, bucketed,
     * hash-keyed, binary-keyed) with its batch as a local DataFrame. */
@@ -1466,5 +1429,106 @@ class GraftApiSpec extends AnyFunSuite {
     // the rebuild overwrites the index log, state file included
     val second = t.buildIndex(ixDir, "c", "seg").allocateTxnTs()
     assert(second >= first + 5, s"reissued a reserved ts: $first then $second")
+  }
+
+  /** Collected rows of a get or resolve frame, order-free. */
+  private def cellRows(rows: Array[org.apache.spark.sql.Row])
+      : Seq[(String, String, String, Long, Seq[Byte], Long)] =
+    rows.toSeq.map { r =>
+      val key = r.get(0) match {
+        case b: Array[Byte] => b.map("%02x".format(_)).mkString
+        case k => k.toString
+      }
+      (key, r.getString(1), r.getString(2), r.getLong(3),
+        Option(r.getAs[Array[Byte]](4)).map(_.toSeq).orNull, r.getLong(5))
+    }.sorted(Ordering.by((c: (String, String, String, Long, Seq[Byte], Long)) =>
+      (c._1, c._2, c._3, c._4, c._6)))
+
+  test("a collected get on a bucketed table starts no Spark job") {
+    import model.TableDesc
+    val session = spark
+    import session.implicits._
+    val ops = Some(Set(OpType.Value, OpType.DelRow, OpType.DelColumn,
+      OpType.DelQualifiers, OpType.DelQualifier, OpType.Add, OpType.Append))
+    def batch(round: Int): Seq[CellOp] = (0 until 12).flatMap { i =>
+      val k = f"k$i%02d"
+      val seq = round * 1000L + i * 10
+      Seq(
+        CellOp(k, "cf", "v", 10L + round, OpType.Value, s"$k-$round".getBytes, seq),
+        CellOp(k, "cf", "n", 10L + round, OpType.Add, Codecs.encodeBE64(i + round), seq + 1),
+        CellOp(k, "cf", "log", 10L + round, OpType.Append, s"$round".getBytes, seq + 2),
+        CellOp(k, "old", "q", 10L + round, OpType.Value, "o".getBytes, seq + 3)) ++
+        (if (round == 2 && i % 3 == 0)
+          Seq(CellOp(k, "", "", 11L, OpType.DelRow, null, seq + 4))
+        else if (round == 2 && i % 3 == 1)
+          Seq(CellOp(k, "old", "", 12L, OpType.DelColumn, null, seq + 4),
+            CellOp(k, "cf", "v", 11L, OpType.DelQualifier, null, seq + 5))
+        else if (round == 2)
+          Seq(CellOp(k, "cf", "log", 12L, OpType.DelQualifiers, null, seq + 4))
+        else Nil)
+    }
+    for ((name, desc) <- Seq(
+        "string" -> TableDesc(buckets = 4),
+        "hashed" -> TableDesc(buckets = 4, hashKeys = true),
+        "binary" -> TableDesc(buckets = 4, rawKeyBinary = true))) {
+      val dir = Files.createTempDirectory(s"graft-get-jobs-$name").toString
+      val t = Graft.createTable(spark, dir, desc, ops)
+      def put(cells: Seq[CellOp]): Unit = t.put(
+        if (desc.rawKeyBinary) cells.toDF().withColumn("row_key", col("row_key").cast("binary"))
+        else cells.toDF())
+      // local puts: driver commits, one file per touched bucket each
+      (1 to 3).foreach(round => put(batch(round)))
+      val (_, putJobs) = JobCount.during(spark)(put(batch(4).take(3)))
+      assert(putJobs == 0, s"$name: a local put ran $putJobs jobs")
+      (0 until 12).map(i => f"k$i%02d").foreach { k =>
+        val frame = if (desc.rawKeyBinary) t.get(k.getBytes("UTF-8")) else t.get(k)
+        val (got, jobs) = JobCount.during(spark)(frame.collect())
+        assert(jobs == 0, s"$name $k: collect ran $jobs jobs")
+        val want = t.cells().where(col("row_key") === (
+          if (desc.rawKeyBinary) lit(k.getBytes("UTF-8")) else lit(t.storageKey(k))))
+        assert(cellRows(got) == cellRows(want.collect()), s"$name $k")
+        assert(cellRows(got) == cellRows(frame.rdd.collect()), s"$name $k")
+        assert(got.nonEmpty, s"$name $k")
+      }
+    }
+  }
+
+  test("a get frame answers from the files listed when get was called") {
+    val dir = Files.createTempDirectory("graft-get-snap").toString
+    val t = Graft.createTable(spark, dir, model.TableDesc(buckets = 4),
+      Some(Set(OpType.Value)))
+    t.put(Seq(CellOp("alice", "cf", "q", 1L, OpType.Value, "a".getBytes, 1L)))
+    val frame = t.get("alice")
+    t.put(Seq(CellOp("alice", "cf", "q", 2L, OpType.Value, "b".getBytes, 2L),
+      CellOp("alice", "cf", "q2", 2L, OpType.Value, "c".getBytes, 3L)))
+    val rows = frame.collect()
+    assert(rows.length == 1 && new String(rows(0).getAs[Array[Byte]]("value")) == "a")
+    assert(frame.count() == rows.length)
+    assert(cellRows(frame.rdd.collect()) == cellRows(rows))
+    assert(t.get("alice").collect().map(r =>
+      new String(r.getAs[Array[Byte]]("value"))).toSet == Set("b", "c"))
+  }
+
+  test("a non-bucket file in a bucketed log fails the get with an error on both paths") {
+    val dir = Files.createTempDirectory("graft-get-stray").toString
+    val t = Graft.createTable(spark, dir, model.TableDesc(buckets = 4),
+      Some(Set(OpType.Value)))
+    t.put(Seq(CellOp("alice", "cf", "q", 1L, OpType.Value, "a".getBytes, 1L),
+      CellOp("bob", "cf", "q", 1L, OpType.Value, "b".getBytes, 2L)))
+    val data = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet"))
+    // a hidden file is skipped by both paths, as by Spark's listing
+    Files.copy(data.head.toPath, java.nio.file.Paths.get(dir, "_stray.parquet"))
+    assert(t.get("alice").collect().length == 1 && t.get("alice").count() == 1)
+    // a visible file with no bucket id fails every read of the log
+    Files.copy(data.head.toPath, java.nio.file.Paths.get(dir, "part-00000-stray.c000.parquet"))
+    def failure(read: => Any): String = {
+      val e = intercept[Exception](read)
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(_.getMessage).mkString(" / ")
+    }
+    Seq("alice", "bob").foreach { k =>
+      assert(failure(t.get(k).collect()).contains("INVALID_BUCKET_FILE"), k)
+      assert(failure(t.get(k).count()).contains("INVALID_BUCKET_FILE"), k)
+    }
   }
 }

@@ -289,20 +289,10 @@ class PipelineOpsSpec extends AnyFunSuite {
 
     // reopening runs NO jobs to acquire centroids (training would run
     // several collect passes) and returns bit-identical rows
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val reloaded = Similarity.loadOrTrainCentroids(emb, dim = 64,
-        nlist = 16, iters = 3, indexDir = dir)
-      Thread.sleep(1000)  // let listener-bus events drain
-      assert(jobs.get() == 0, s"reopen ran ${jobs.get()} Spark jobs")
-      assert(reloaded.map(_.toSeq).toSeq == trained.get.map(_.toSeq).toSeq)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (reloaded, jobs) = JobCount.during(spark)(Similarity.loadOrTrainCentroids(
+      emb, dim = 64, nlist = 16, iters = 3, indexDir = dir))
+    assert(jobs == 0, s"reopen ran $jobs Spark jobs")
+    assert(reloaded.map(_.toSeq).toSeq == trained.get.map(_.toSeq).toSeq)
 
     val second = Similarity.ivfTopK(queries, emb, k = 5, dim = 64,
         nlist = 16, nprobe = 8, indexDir = Some(dir))

@@ -810,21 +810,8 @@ class PlanSpec extends AnyFunSuite {
     val before = planOf(df)
     assert(before.contains("SortedRunsCollect"), before)
     assert(!before.toLowerCase.contains("rangepartitioning"), before)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.sql.graft.Shim.waitListenerBus(spark)
-    spark.sparkContext.addSparkListener(listener)
-    val keys =
-      try {
-        val rows = df.collect().map(_.getString(0)).toSeq
-        org.apache.spark.sql.graft.Shim.waitListenerBus(spark)
-        assert(jobs.get() == 1, s"ordered scan ran ${jobs.get()} jobs")
-        rows
-      } finally spark.sparkContext.removeSparkListener(listener)
+    val (keys, jobs) = JobCount.during(spark)(df.collect().map(_.getString(0)).toSeq)
+    assert(jobs == 1, s"ordered scan ran $jobs jobs")
     assert(keys == (100 until 200).filter(_ != 150).map(i => f"r$i%04d"))
     val after = planOf(df)
     assert(!after.contains("Exchange"), after)

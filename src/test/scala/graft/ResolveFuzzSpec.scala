@@ -2,8 +2,9 @@ package graft
 
 import graft.functions.Codecs
 import graft.model._
-import graft.operators.Resolve
+import graft.operators.{CellFold, Resolve}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{col, lit}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Differential fuzz: Spark resolve vs an independent in-memory
@@ -228,6 +229,110 @@ class ResolveFuzzSpec extends AnyFunSuite {
       assert(got == want,
         s"trial $trial mix=$mix mismatch (n=$n snap=$snapshot)\n" +
           s"only-spark: ${got -- want}\nonly-ref: ${want -- got}")
+    }
+  }
+
+  /** [[CellFold.row]] over every row of `log`, as reference tuples. */
+  private def foldRows(log: Seq[CellOp], desc: TableDesc, nowUs: Long,
+      snapshot: Option[Long], present: Option[Set[Int]] = None)
+      : Set[(String, String, String, Long, Option[Seq[Byte]])] =
+    log.groupBy(_.row_key).toSeq.flatMap { case (row, ops) =>
+      CellFold.row(ops.map(o => CellFold.Op(o.cf, o.qualifier, o.ts, o.op, o.value, o.seq)),
+          desc, nowUs, snapshot, present)
+        .map(c => (row, c.cf, c.qualifier, c.ts, Option(c.value).map(_.toSeq)))
+    }.toSet
+
+  /** The knobs of the first fuzz test: version caps, min_versions, TTL
+    * and a per-CF cap. */
+  private def randomDesc(rng: scala.util.Random): TableDesc = TableDesc(
+    CfSpec(
+      maxVersions = 1 + rng.nextInt(3),
+      minVersions = rng.nextInt(2),
+      ttlSec = if (rng.nextBoolean()) 0L else 3L),
+    cfs = if (rng.nextBoolean()) Map("cf1" -> CfSpec(maxVersions = 2)) else Map.empty)
+
+  test("CellFold == reference resolver on random and counter-mix logs") {
+    val rng = new scala.util.Random(20261018L)
+    (1 to 200).foreach { trial =>
+      val n = 10 + rng.nextInt(40)
+      val log = randomLog(rng, n)
+      val desc = randomDesc(rng)
+      val snapshot = if (rng.nextInt(4) == 0) Some(n.toLong / 2) else None
+      val got = foldRows(log, desc, 6000000L, snapshot)
+      val want = refResolve(log, desc, 6000000L, snapshot)
+      assert(got == want, s"trial $trial (n=$n desc=$desc snap=$snapshot)\n" +
+        s"only-fold: ${got -- want}\nonly-ref: ${want -- got}")
+    }
+    val mixes: Seq[Seq[Int]] = Seq(
+      Seq(Add), Seq(AddInt64), Seq(Value, Add), Seq(Value, AddInt64),
+      Seq(Value, Add, DelRow), Seq(Value, AddInt64, DelQualifiers))
+    (1 to 60).foreach { trial =>
+      val mix = mixes(trial % mixes.size)
+      val n = 10 + rng.nextInt(40)
+      val log = counterMixLog(rng, n, mix)
+      val desc = TableDesc(CfSpec(maxVersions = 1 + rng.nextInt(3)))
+      val snapshot = if (trial % 4 == 0) Some(n.toLong / 2) else None
+      val got = foldRows(log, desc, Long.MaxValue, snapshot, Some(mix.toSet))
+      val want = refResolve(log, desc, Long.MaxValue, snapshot)
+      assert(got == want, s"trial $trial mix=$mix (n=$n snap=$snapshot)\n" +
+        s"only-fold: ${got -- want}\nonly-ref: ${want -- got}")
+    }
+    // a declared op-set drops ops outside it, as resolve's steps do
+    val log = Seq(
+      CellOp("r", "cf", "q", 1L, Value, "a".getBytes, 1L),
+      CellOp("r", "cf", "q", 2L, DelRow, null, 2L))
+    assert(foldRows(log, TableDesc(), Long.MaxValue, None).isEmpty)
+    assert(foldRows(log, TableDesc(), Long.MaxValue, None, Some(Set(Value))).size == 1)
+    // a TTL whose microseconds overflow raises, on both folds
+    val overflowing = TableDesc(CfSpec(ttlSec = Long.MaxValue / 1000))
+    val live = log.take(1)
+    intercept[ArithmeticException](foldRows(live, overflowing, Long.MaxValue, None))
+    import spark.implicits._
+    val e = intercept[Exception](Resolve.resolve(live.toDF(), overflowing).collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[ArithmeticException]), e)
+  }
+
+  test("bucketed get: driver collect == distributed get == resolve, by key mode") {
+    val session = spark
+    import session.implicits._
+    val rng = new scala.util.Random(20261019L)
+    type Cells = Set[(String, String, Long, Option[Seq[Byte]], Long)]
+    def cells(rows: Array[org.apache.spark.sql.Row]): Cells = rows.map { r =>
+      (r.getString(1), r.getString(2), r.getLong(3),
+        Option(r.getAs[Array[Byte]]("value")).map(_.toSeq), r.getLong(5))
+    }.toSet
+    for (mode <- Seq("string", "binary", "hashed"); trial <- 1 to 4) {
+      val log = randomLog(rng, 30 + rng.nextInt(40))
+      val base = randomDesc(rng)
+      val desc = mode match {
+        case "binary" => base.copy(buckets = 2, rawKeyBinary = true)
+        case "hashed" => base.copy(buckets = 2, hashKeys = true)
+        case _ => base.copy(buckets = 2)
+      }
+      // a binary key that is not UTF-8
+      def binKey(row: String): Array[Byte] = Array[Byte](-1, 0) ++ row.getBytes("UTF-8")
+      val dir = java.nio.file.Files.createTempDirectory(s"fuzz-get-$mode").toString
+      val t = Graft.createTable(spark, dir, desc,
+        ops = if (trial % 2 == 0) Some((0 to 8).toSet) else None)
+      // three appends: several files per bucket
+      log.grouped(log.size / 3 + 1).foreach { part =>
+        t.put(if (mode != "binary") part.toDF()
+          else part.map(o => (binKey(o.row_key), o.cf, o.qualifier, o.ts, o.op, o.value, o.seq))
+            .toDF("row_key", "cf", "qualifier", "ts", "op", "value", "seq"))
+      }
+      Seq("r0", "r1", "r2", "absent").foreach { row =>
+        val frame = if (mode == "binary") t.get(binKey(row)) else t.get(row)
+        val key = if (mode == "binary") lit(binKey(row)) else lit(t.storageKey(row))
+        val driver = cells(frame.collect())
+        val what = s"$mode trial $trial row $row desc=$desc"
+        assert(driver == cells(frame.rdd.collect()), what)
+        assert(driver.size == frame.count(), what)
+        assert(driver == cells(t.cells().where(col("row_key") === key).collect()), what)
+        val want = refResolve(log.filter(_.row_key == row), desc, Long.MaxValue, None)
+        assert(driver.map(c => (c._1, c._2, c._3, c._4)) ==
+          want.map(c => (c._2, c._3, c._4, c._5)), what)
+      }
     }
   }
 }

@@ -421,12 +421,8 @@ class StreamingSpec extends AnyFunSuite {
       // one delivering round: its jobs and the plans of its SQL executions
       def round(notifyTs: Long, seqBase: Long): (Int, Seq[String]) = {
         t.put(Observers.notifyOps(writes, notifyTs, seqBase))
-        val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
         val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
         val listener = new org.apache.spark.scheduler.SparkListener {
-          override def onJobStart(
-              e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-            jobs.incrementAndGet()
           override def onOtherEvent(
               e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
             case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
@@ -441,14 +437,14 @@ class StreamingSpec extends AnyFunSuite {
         }
         org.apache.spark.sql.graft.Shim.waitListenerBus(spark)
         spark.sparkContext.addSparkListener(listener)
-        try {
-          Observers.observeNotifications(t, ckpt, hook = Some(hook))(_ => ())
-            .awaitTermination(60000)
-          org.apache.spark.sql.graft.Shim.waitListenerBus(spark)
-        } finally spark.sparkContext.removeSparkListener(listener)
+        val (_, jobs) =
+          try JobCount.during(spark) {
+            Observers.observeNotifications(t, ckpt, hook = Some(hook))(_ => ())
+              .awaitTermination(60000)
+          } finally spark.sparkContext.removeSparkListener(listener)
         assert(delivered.get() == 2, desc)
         assert(Observers.pendingNotifications(t.log).count() == 0, desc)
-        (jobs.get(), plans.asScala.toSeq)
+        (jobs, plans.asScala.toSeq)
       }
       // the first ack reservation seeds the table's seq counter
       round(100L, 1L << 40)
