@@ -6,7 +6,7 @@ import graft.model.{CellOp, OpType, TableDesc}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import graft.operators.{CellFold, Resolve, ScanFilter, ScanQuery}
-import graft.sources.{CellLogStore, DriverRead, LogLayout, TableState, Tables}
+import graft.sources.{CellLogStore, TableState, Tables}
 import graft.streaming.Observers
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -94,31 +94,26 @@ class GraftTable(
     def resolved: DataFrame = Resolve.resolve(src.log, desc,
         opsPresent = opsPresent, deleteCountHint = src.deleteHint)
       .where(col("row_key") === lit(key))
-    src.stored.map(_.desc).filter(_.buckets > 0) match {
-      case None => resolved
-      case Some(stored) =>
-        val layout = LogLayout.cells(stored)
-        val (keyValue, keyBytes) = key match {
-          case s: String => (UTF8String.fromString(s), s.getBytes(UTF_8))
-          case b: Array[Byte] => (b, b)
+    if (src.desc.buckets == 0) resolved
+    else {
+      val (keyValue, keyBytes) = key match {
+        case s: String => (UTF8String.fromString(s), s.getBytes(UTF_8))
+        case b: Array[Byte] => (b, b)
+      }
+      def onDriver(): Seq[InternalRow] = {
+        val ops = src.pointRows(keyValue, keyBytes).map { r =>
+          def str(i: Int) = if (r.isNullAt(i)) null else r.getUTF8String(i).toString
+          CellFold.Op(str(1), str(2), r.getLong(3), r.getInt(4), r.getBinary(5),
+            r.getLong(6))
         }
-        def onDriver(): Seq[InternalRow] = {
-          val bucket = LogLayout.bucketOf(layout.schema(layout.key).dataType,
-            stored.buckets)(keyValue)
-          val ops = DriverRead.rows(spark, layout.bucketFiles(src.log, bucket),
-            layout.schema, layout.key, keyBytes).map { r =>
-            def str(i: Int) = if (r.isNullAt(i)) null else r.getUTF8String(i).toString
-            CellFold.Op(str(1), str(2), r.getLong(3), r.getInt(4), r.getBinary(5),
-              r.getLong(6))
-          }
-          CellFold.row(ops, desc, present = opsPresent).map(c =>
-            InternalRow(keyValue, UTF8String.fromString(c.cf),
-              UTF8String.fromString(c.qualifier), c.ts, c.value, c.seq))
-        }
-        PointGet.frame(spark,
-          StructType(layout.schema.filter(_.name != "op").map(_.copy(nullable = true))),
-          src.log.queryExecution.analyzed.stats.sizeInBytes,
-          () => onDriver(), () => resolved)
+        CellFold.row(ops, desc, present = opsPresent).map(c =>
+          InternalRow(keyValue, UTF8String.fromString(c.cf),
+            UTF8String.fromString(c.qualifier), c.ts, c.value, c.seq))
+      }
+      PointGet.frame(spark,
+        StructType(src.schema.filter(_.name != "op").map(_.copy(nullable = true))),
+        src.log.queryExecution.analyzed.stats.sizeInBytes,
+        () => onDriver(), () => resolved)
     }
   }
 
@@ -132,7 +127,7 @@ class GraftTable(
     * A local batch (`Seq[CellOp]`, `Seq.toDF`) commits from the driver
     * with no Spark job; a distributed one is a Spark write. Either way
     * the stored tombstone-count hint is kept without an extra job
-    * ([[CellLogStore.appendTracked]]). */
+    * ([[CellLogStore.append]]). */
   def put(batch: DataFrame): Unit = {
     val missing = graft.model.CellOp.schema.fieldNames
       .filterNot(batch.columns.contains)
@@ -144,7 +139,7 @@ class GraftTable(
         batch.withColumn("row_key",
           graft.functions.cellfunctions.hashed_key(col("row_key")))
       else batch
-    CellLogStore.appendTracked(stored, logDir, desc, opsPresent)
+    CellLogStore.append(stored, logDir, desc, opsPresent)
   }
 
   /** Group-commit ops whose row keys are ALREADY in storage space —
@@ -153,7 +148,7 @@ class GraftTable(
     * prefix, and [[put]] would prefix them a second time, targeting
     * nonexistent rows. */
   def putStored(batch: DataFrame): Unit =
-    CellLogStore.appendTracked(batch, logDir, desc, opsPresent)
+    CellLogStore.append(batch, logDir, desc, opsPresent)
 
   def put(ops: Seq[CellOp]): Unit = {
     val session = spark
@@ -266,8 +261,7 @@ class GraftTable(
       trigger: org.apache.spark.sql.streaming.Trigger =
         org.apache.spark.sql.streaming.Trigger.AvailableNow())
       (onNotify: (DataFrame, Long) => Unit): StreamingQuery =
-    Observers.observe(
-      Observers.cellLogStream(spark, logDir, Some(desc.lgs.nonEmpty)),
+    Observers.observe(Observers.cellLogStream(spark, logDir, desc),
       columns, checkpointDir, buckets, trigger = trigger)(onNotify)
 }
 
@@ -279,8 +273,13 @@ class GraftTable(
 class GraftKvTable(val spark: SparkSession, val logDir: String) {
   import graft.operators.KvStore
 
+  /** The KV log through one state read ([[CellLogStore.Source]]); a
+    * bare directory reads as a flat, string-keyed KV log. */
+  private def source: CellLogStore.Source =
+    CellLogStore.source(spark, logDir, GraftKvTable.Kv)
+
   /** The raw KV write log. */
-  def log: DataFrame = KvStore.read(spark, logDir)
+  def log: DataFrame = source.log
 
   /** Visible (key, value) pairs at `nowUs`: newest write per key wins,
     * then the winner's own baked expiry is checked. */
@@ -295,11 +294,11 @@ class GraftKvTable(val spark: SparkSession, val logDir: String) {
 
   /** Binary point get (binary-keyed KV tables): exact-bytes equality. */
   def get(key: Array[Byte], nowUs: Long): DataFrame = {
-    val kv = KvStore.layout(spark, logDir)
-    require(kv.schema(kv.key).dataType == org.apache.spark.sql.types.BinaryType,
+    val src = source
+    require(src.desc.rawKeyBinary,
       "binary get on a readable-key KV table (keys are StringType; use " +
         "get(String, nowUs))")
-    KvStore.resolve(kv.read(spark, logDir), nowUs).where(col("key") === lit(key))
+    KvStore.resolve(src.log, nowUs).where(col("key") === lit(key))
   }
 
   /** Group-commit (key, value[, ttl_sec]) rows. Expiry is baked at
@@ -314,11 +313,11 @@ class GraftKvTable(val spark: SparkSession, val logDir: String) {
     val withTtl =
       if (batch.columns.contains("ttl_sec")) batch
       else batch.withColumn("ttl_sec", lit(0L))
-    KvStore.append(CellLogStore.withSeqs(withTtl.select(
+    putEntries(CellLogStore.withSeqs(withTtl.select(
       col("key"), col("value"),
       when(col("ttl_sec") <= 0L, lit(0L))
         .otherwise(lit(nowUs) + col("ttl_sec") * 1000000L).as("expire_ts_us")),
-      logDir), logDir)
+      logDir))
   }
 
   def put(kvs: Seq[(String, Array[Byte], Long)], nowUs: Long): Unit = {
@@ -329,12 +328,19 @@ class GraftKvTable(val spark: SparkSession, val logDir: String) {
 
   /** Append entries that already carry `expire_ts_us` (and `seq`) —
     * for replicating an existing KV log verbatim. */
-  def putEntries(batch: DataFrame): Unit = KvStore.append(batch, logDir)
+  def putEntries(batch: DataFrame): Unit =
+    CellLogStore.append(batch, logDir, GraftKvTable.Kv)
 
   /** Compaction: physically drop dead KVs (expired at `nowUs`,
     * superseded writes); live KVs keep their baked expiry. */
   def compact(outDir: String, nowUs: Long = Long.MaxValue): Unit =
-    KvStore.compact(spark, logDir, outDir, nowUs)
+    CellLogStore.compact(spark, logDir, outDir, GraftKvTable.Kv, nowUs)
+}
+
+private object GraftKvTable {
+  /** The descriptor a KV table's log is read and written through when
+    * its directory holds no state. */
+  val Kv: TableDesc = TableDesc(kvMode = true)
 }
 
 /** Entry points + the SQL façade (tera's MySQL handler analogue,
@@ -349,11 +355,6 @@ object Graft {
     */
   def createTable(spark: SparkSession, logDir: String,
       desc: TableDesc = TableDesc(), ops: Option[Set[Int]] = None): GraftTable = {
-    // like the reference master, creating over an existing table is an
-    // error — silently replacing the descriptor of a non-empty log could
-    // flip key hashing or TTL semantics under stored data
-    require(TableState.read(spark, logDir).isEmpty,
-      s"table already exists at $logDir (use openTable)")
     require(!desc.kvMode, s"use createKvTable for a KV-mode table")
     require(!(desc.hashKeys && desc.rawKeyBinary),
       "hashKeys and rawKeyBinary are mutually exclusive: the hash prefix " +
@@ -364,10 +365,23 @@ object Graft {
     require(desc.buckets == 0 || desc.lgs.isEmpty,
       "bucketed layout and locality groups are mutually exclusive " +
         "(one physical clustering per table)")
-    TableState.write(spark, logDir, TableState(desc, ops, deleteCount = Some(0L)))
+    create(spark, logDir, TableState(desc, ops, deleteCount = Some(0L)),
+      "openTable")
     SortedRunsCollect.install(spark)
     new GraftTable(spark, logDir, desc, ops)
   }
+
+  /** Store `state` as a new table's: like the reference master,
+    * creating over an existing table is an error — silently replacing
+    * the descriptor of a non-empty log could flip key hashing or TTL
+    * semantics under stored data. One check-and-write under the table's
+    * lock, so of two concurrent creates exactly one succeeds. */
+  private def create(spark: SparkSession, logDir: String, state: TableState,
+      open: String): Unit =
+    TableState.update(spark, logDir) { stored =>
+      require(stored.isEmpty, s"table already exists at $logDir (use $open)")
+      (Some(state), ())
+    }
 
   /** Open a table. A descriptor stored next to the log is authoritative
     * (like the reference's master-held schema); `desc` is the fallback
@@ -399,8 +413,8 @@ object Graft {
     * the log schema — both refused.
     */
   def alterTable(spark: SparkSession, logDir: String,
-      desc: TableDesc): GraftTable = TableState.locked(spark, logDir) {
-    val state = TableState.require(spark, logDir)
+      desc: TableDesc): GraftTable = TableState.update(spark, logDir) { before =>
+    val state = before.getOrElse(TableState.require(spark, logDir))
     val stored = state.desc
     require(!stored.kvMode && !desc.kvMode,
       "alterTable is for cell tables; a KV-mode table has no resolve knobs " +
@@ -419,8 +433,7 @@ object Graft {
       "cannot change the bucket count under stored data (files are physically " +
         "hash-clustered) — compact to a new dir with the new descriptor to " +
         "migrate")
-    TableState.write(spark, logDir, state.copy(desc = desc))
-    new GraftTable(spark, logDir, desc, state.ops)
+    (Some(state.copy(desc = desc)), new GraftTable(spark, logDir, desc, state.ops))
   }
 
   /** Bulk-load a relational DataFrame as a new cell table (the
@@ -444,11 +457,10 @@ object Graft {
     * point lookup prunes to one bucket (see [[TableDesc.buckets]]). */
   def createKvTable(spark: SparkSession, logDir: String,
       buckets: Int = 0, binaryKeys: Boolean = false): GraftKvTable = {
-    require(TableState.read(spark, logDir).isEmpty,
-      s"table already exists at $logDir (use openKvTable)")
     require(buckets >= 0, s"buckets must be >= 0, got $buckets")
-    TableState.write(spark, logDir, TableState(
-      TableDesc(kvMode = true, buckets = buckets, rawKeyBinary = binaryKeys)))
+    create(spark, logDir, TableState(
+      TableDesc(kvMode = true, buckets = buckets, rawKeyBinary = binaryKeys)),
+      "openKvTable")
     new GraftKvTable(spark, logDir)
   }
 

@@ -77,8 +77,10 @@ object CellFold {
     * resets the state; ADD/ADDINT64 sum onto it; PUT_IF_ABSENT writes
     * only into emptiness; APPEND concatenates. A null ADD, ADDINT64 or
     * APPEND operand nulls the state, as expression arithmetic and concat
-    * propagate null: a poison cell must not kill the scan. Input tuples
-    * are (ts, op, value, seq). */
+    * propagate null: a poison cell must not kill the scan. A sum past the
+    * long range raises an `ArithmeticException`, as ANSI `sum` does in
+    * resolve's counter fast paths. Input tuples are (ts, op, value,
+    * seq). */
   def column(ops: Iterator[(Long, Int, Array[Byte], Long)])
       : (Long, Array[Byte], Long) = {
     var maxTs = Long.MinValue
@@ -96,11 +98,11 @@ object CellFold {
   private def step(state: Array[Byte], op: Int, v: Array[Byte]): Array[Byte] = op match {
     case Value => v
     case Add => if (v == null) null
-      else Codecs.encodeBE64(
-        (if (state == null) 0L else Codecs.decodeBE64(state)) + Codecs.decodeBE64(v))
+      else Codecs.encodeBE64(Math.addExact(
+        if (state == null) 0L else Codecs.decodeBE64(state), Codecs.decodeBE64(v)))
     case AddInt64 => if (v == null) null
-      else Codecs.encodeLE64(
-        (if (state == null) 0L else Codecs.decodeLE64(state)) + Codecs.decodeLE64(v))
+      else Codecs.encodeLE64(Math.addExact(
+        if (state == null) 0L else Codecs.decodeLE64(state), Codecs.decodeLE64(v)))
     case PutIfAbsent => if (state == null) v else state
     case Append => if (v == null) null
       else (if (state == null) Array.emptyByteArray else state) ++ v

@@ -35,8 +35,6 @@ import org.apache.spark.sql.functions._
 object Resolve {
   import OpType._
 
-  private val minTs = Long.MinValue
-
   /** Resolve the visible versioned cells of a cell log.
     *
     * @param log         DataFrame with [[graft.model.CellOp]] schema;
@@ -165,19 +163,20 @@ object Resolve {
       case _ =>  // "window"
         val laterOps = Window.orderBy(col("seq").desc)
           .rowsBetween(Window.unboundedPreceding, -1)
+        // the newest covering delete's ts, null when no later delete is
+        // in scope: a cell survives above it, or with none at all (a
+        // sentinel ts would kill a cell written at that very ts)
         def delScope(opTag: Int, parts: Seq[String]): Option[Column] =
-          if (!present.contains(opTag)) None
-          else Some(coalesce(
+          Option.when(present.contains(opTag))(
             max(when(col("op") === opTag, col("ts")))
-              .over(laterOps.partitionBy(parts.map(col): _*)),
-            lit(minTs)))
+              .over(laterOps.partitionBy(parts.map(col): _*)))
+        val survives = (c: Column) => c.isNull || col("ts") > c
         val delCols: Seq[(String, Column, Column => Column)] = Seq(
-          delScope(DelRow, Seq("row_key")).map(("_del_row_ts", _,
-            (c: Column) => col("ts") > c)),
+          delScope(DelRow, Seq("row_key")).map(("_del_row_ts", _, survives)),
           delScope(DelColumn, Seq("row_key", "cf")).map(("_del_cf_ts", _,
-            (c: Column) => col("ts") > c)),
+            survives)),
           delScope(DelQualifiers, Seq("row_key", "cf", "qualifier"))
-            .map(("_del_qual_ts", _, (c: Column) => col("ts") > c)),
+            .map(("_del_qual_ts", _, survives)),
           (if (!present.contains(DelQualifier)) None
            else Some(("_del_ver",
             coalesce(
@@ -248,31 +247,44 @@ object Resolve {
     //    after it. One partition-only window (sorts by the grouping key,
     //    spills like any sort, never buffers a column in memory) finds the
     //    newest-VALUE bound; a hash aggregate does the rest.
-    def pureSum(df: DataFrame, dec: Column => Column, enc: Column => Column): DataFrame =
-      df.groupBy(col("row_key"), col("cf"), col("qualifier"))
+    // Both match CellFold exactly: an ADD with a null operand resets the
+    // fold to null, as a null VALUE does (later ADDs count from zero),
+    // and a sum past the long range raises, as ANSI `sum` does.
+    val keys = Seq(col("row_key"), col("cf"), col("qualifier"))
+    val tsSeq = struct(col("ts"), col("seq"))
+    def pureSum(df: DataFrame, dec: Column => Column, enc: Column => Column): DataFrame = {
+      // the newest null operand per column: found by a pushed
+      // `value IS NULL` scan (row groups without nulls are skipped) and
+      // broadcast, so the sum stays one map-side-combined aggregate
+      val resets = broadcast(df.where(col("value").isNull).groupBy(keys: _*)
+        .agg(max(tsSeq).as("_reset")))
+      df.join(resets, Seq("row_key", "cf", "qualifier"), "left")
+        .groupBy(keys: _*)
         .agg(max(col("ts")).as("ts"),
-          enc(sum(dec(col("value")))).as("value"),
+          enc(sum(when(col("_reset").isNull || tsSeq > col("_reset"),
+            dec(col("value"))))).as("value"),
           max(col("seq")).as("seq"))
         .select(outCols: _*)
+    }
 
     def seededSum(df: DataFrame, addOp: Int,
         dec: Column => Column, enc: Column => Column): DataFrame = {
-      val colWin = Window.partitionBy(col("row_key"), col("cf"), col("qualifier"))
-      val tsSeq = struct(col("ts"), col("seq"))
-      val isVal = col("op") === Value
+      val colWin = Window.partitionBy(keys: _*)
+      val isAdd = col("op") === addOp && col("value").isNotNull
       df
-        .withColumn("_vmax", max(when(isVal, tsSeq)).over(colWin))
+        .withColumn("_vmax", max(when(!isAdd, tsSeq)).over(colWin))
         .withColumn("_mts", max(col("ts")).over(colWin))
         .withColumn("_mseq", max(col("seq")).over(colWin))
-        // keep the newest VALUE and the ADDs after it (fold order (ts, seq))
-        .where((isVal && tsSeq === col("_vmax")) ||
-          (col("op") === addOp && (col("_vmax").isNull || tsSeq > col("_vmax"))))
-        .groupBy(col("row_key"), col("cf"), col("qualifier"))
+        // keep the newest reset (a VALUE or a null ADD) and the ADDs
+        // after it (fold order (ts, seq))
+        .where((!isAdd && tsSeq === col("_vmax")) ||
+          (isAdd && (col("_vmax").isNull || tsSeq > col("_vmax"))))
+        .groupBy(keys: _*)
         .agg(
           max(col("_mts")).as("ts"),
-          max(when(isVal, col("value"))).as("_seed"),
-          sum(when(col("op") === addOp, dec(col("value")))).as("_dsum"),
-          count(when(col("op") === addOp, lit(1))).as("_nadds"),
+          max(when(!isAdd, col("value"))).as("_seed"),
+          sum(when(isAdd, dec(col("value")))).as("_dsum"),
+          count(when(isAdd, lit(1))).as("_nadds"),
           max(col("_mseq")).as("seq"))
         // no trailing ADDs → the newest VALUE's bytes pass through verbatim
         // (exactly the general fold's behavior, even for non-canonical bytes)

@@ -1,14 +1,17 @@
 package graft.sources
 
 import graft.model.{OpType, TableDesc}
-import graft.operators.Resolve
+import graft.operators.{KvStore, Resolve}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
-/** Durable cell-log storage: append-only parquet plus the background
-  * compaction job. The table's state (descriptor, op-set, delete hint,
-  * seq and txn-ts allocator) is the [[TableState]] file next to the
-  * data.
+/** The one owner of a table's log, cell or KV: every read goes through
+  * one [[Source]] per call, and every commit is one read-modify-write of
+  * the table's [[TableState]] ([[TableState.update]]). The state
+  * (descriptor, op-set, delete hint, seq and txn-ts allocator) is the
+  * file next to the data.
   *
   * Reference analogues: `TabletWriter` group commit batches mutations
   * into one LevelDB write (tera src/io/tablet_writer.cc:107-230) — here
@@ -27,106 +30,144 @@ import org.apache.spark.sql.functions._
   */
 object CellLogStore {
 
-  /** Writes `batch` in the descriptor's layout ([[LogLayout.write]]:
-    * a driver commit or a Spark write), tallying what is asked for. */
-  private def writeBatch(batch: DataFrame, logDir: String, mode: SaveMode,
-      desc: TableDesc, numFiles: Int = 0, countDeletes: Boolean = false,
-      maxSeq: Boolean = false): LogLayout.Tally = {
-    if (desc.buckets > 0)
-      require(desc.lgs.isEmpty,
-        "bucketed layout and locality groups are mutually exclusive " +
-          "(one physical clustering per table)")
-    // an LG-partitioned append next to existing FLAT files would leave a
-    // mixed-depth layout that partition discovery rejects (and a
-    // basePath read would prune the flat rows as lg=null) — refuse now,
-    // while the state is still recoverable
-    if (mode == SaveMode.Append && desc.lgs.nonEmpty)
-      require(!hasFlatFiles(batch.sparkSession, logDir),
-        s"$logDir holds un-partitioned parquet but the descriptor declares " +
-          "locality groups; compact/replace the log into an LG layout " +
-          "(or open it with an LG-free descriptor) before appending")
-    LogLayout.cells(desc).write(batch, logDir, mode, numFiles, countDeletes,
-      maxSeq)
+  /** A log as one state read sees it: the `stored` state and the layout
+    * it declares. A directory without a state file is read flat, or
+    * LG-partitioned when it holds `lg=` directories, with `fallback`'s
+    * key mode and log kind (cell or KV) — so a bare binary log opened
+    * with `TableDesc(rawKeyBinary = true)` is not silently read through
+    * the string schema. Nothing is listed before a read asks for it,
+    * and the directory is probed at most once. */
+  final class Source private[CellLogStore] (spark: SparkSession,
+      logDir: String, val stored: Option[TableState], fallback: TableDesc) {
+
+    /** The layout descriptor: the stored one, or the fallback's key mode
+      * and log kind (a bare directory is never bucketed). */
+    val desc: TableDesc = stored.map(_.desc).getOrElse(TableDesc(
+      kvMode = fallback.kvMode, rawKeyBinary = fallback.rawKeyBinary))
+
+    private lazy val dir: Probe = probe(spark, logDir)
+
+    /** Whether the log is LG-partitioned: the stored descriptor says, a
+      * bare directory's `lg=` directories show. */
+    lazy val lgPartitioned: Boolean =
+      !desc.kvMode && stored.fold(dir.lgDirs)(_.desc.lgs.nonEmpty)
+
+    private val layout = LogLayout.of(desc.copy(lgs = Map.empty))
+
+    /** The stored tombstone count, when the state carries one. */
+    def deleteHint: Option[Long] = stored.flatMap(_.deleteCount)
+
+    /** The log schema (cell or KV, string or binary keys). */
+    def schema: StructType = layout.schema
+
+    /** The whole log. Built on first use: a parquet read lists its files
+      * when it is built, and a pruned read needs no full listing. */
+    lazy val log: DataFrame =
+      if (lgPartitioned) layout.readLgs(spark, logDir, None)
+      else layout.read(spark, logDir)
+
+    /** On an LG-partitioned log, a reader pruned to the named LGs
+      * ([[LogLayout.readLgs]]). */
+    def lgRead: Option[Seq[String] => DataFrame] =
+      Option.when(lgPartitioned)((wanted: Seq[String]) =>
+        layout.readLgs(spark, logDir, Some(wanted)))
+
+    /** On a bucketed log, the rows whose key is `key` (a `UTF8String`
+      * or a binary key's bytes; `keyBytes` its bytes), read on the
+      * driver from the files of its bucket in [[log]]'s listing. */
+    def pointRows(key: Any, keyBytes: Array[Byte]): Seq[InternalRow] = {
+      val bucket = LogLayout.bucketOf(layout.schema(layout.key).dataType,
+        desc.buckets)(key)
+      DriverRead.rows(spark, layout.bucketFiles(log, bucket), layout.schema,
+        layout.key, keyBytes)
+    }
+
+    /** The log as a change feed: a file stream in the log's schema. */
+    def stream: DataFrame = layout.stream(spark, logDir, lgPartitioned)
+
+    /** The layout a batch appended with `write` lands in: a KV log's
+      * own, a cell batch's `write` descriptor — refused, before any file
+      * lands, when it would mix layouts: a flat file in a bucketed
+      * location poisons every later bucketed read with
+      * INVALID_BUCKET_FILE, a bucketed file in a flat log is unreadable
+      * noise, and an LG append next to flat files leaves a mixed-depth
+      * layout that partition discovery rejects (a basePath read would
+      * prune the flat rows as lg=null). */
+    private[CellLogStore] def appendLayout(write: TableDesc): LogLayout =
+      if (desc.kvMode) layout
+      else {
+        val buckets = stored.map(_.desc.buckets).filter(_ > 0)
+        if (write.buckets > 0)
+          require(buckets.contains(write.buckets) ||
+              (buckets.isEmpty && !dir.flatFiles),
+            s"$logDir holds a ${buckets.fold("flat")(b => s"$b-bucket")} log " +
+              s"but the write descriptor says buckets=${write.buckets}; open " +
+              "the table to pick up its stored descriptor (or compact to a " +
+              "new dir to change layout)")
+        else
+          require(buckets.isEmpty,
+            s"$logDir is a bucketed table (buckets=${buckets.get}) but this " +
+              "append carries a bucket-less descriptor; open the table to " +
+              "pick up its stored descriptor before writing")
+        if (write.lgs.nonEmpty)
+          require(!dir.flatFiles,
+            s"$logDir holds un-partitioned parquet but the descriptor declares " +
+              "locality groups; compact/replace the log into an LG layout " +
+              "(or open it with an LG-free descriptor) before appending")
+        LogLayout.cells(write)
+      }
   }
 
-  /** True when the directory directly holds parquet data files (a flat,
-    * un-partitioned log). One driver-side listing. */
-  private def hasFlatFiles(spark: SparkSession, logDir: String): Boolean = {
+  /** What a log directory holds directly: parquet data files (a flat
+    * log) and `lg=` directories (an LG-partitioned one). */
+  private final case class Probe(flatFiles: Boolean, lgDirs: Boolean)
+
+  /** The one probe of a log directory's layout: one driver-side
+    * listing, made only for what the state does not say. */
+  private def probe(spark: SparkSession, logDir: String): Probe = {
     val path = new org.apache.hadoop.fs.Path(logDir)
     val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.exists(path) && fs.listStatus(path).exists(st =>
-      st.isFile && st.getPath.getName.endsWith(".parquet"))
+    val entries = if (fs.exists(path)) fs.listStatus(path).toSeq else Nil
+    Probe(entries.exists(st => st.isFile && st.getPath.getName.endsWith(".parquet")),
+      entries.exists(st => st.isDirectory && st.getPath.getName.startsWith("lg=")))
   }
 
-  /** Layout guard for an append, checked against the `stored` state
-    * (the bucketed mirror of the LG [[hasFlatFiles]] check): a flat file
-    * landing in a bucketed location poisons every later bucketed read
-    * with INVALID_BUCKET_FILE, and a bucketed file in a flat log is
-    * unreadable noise — refuse a mismatched append NOW, while the state
-    * is still recoverable. */
-  private def checkLayout(spark: SparkSession, logDir: String,
-      desc: TableDesc, stored: Option[TableState]): Unit = {
-    val buckets = stored.map(_.desc.buckets).filter(_ > 0)
-    if (desc.buckets > 0)
-      require(buckets.contains(desc.buckets) ||
-          (buckets.isEmpty && !hasFlatFiles(spark, logDir)),
-        s"$logDir holds a ${buckets.fold("flat")(b => s"$b-bucket")} log " +
-          s"but the write descriptor says buckets=${desc.buckets}; open " +
-          "the table to pick up its stored descriptor (or compact to a " +
-          "new dir to change layout)")
-    else
-      require(buckets.isEmpty,
-        s"$logDir is a bucketed table (buckets=${buckets.get}) but this " +
-          "append carries a bucket-less descriptor; open the table to " +
-          "pick up its stored descriptor before writing")
-  }
+  /** The log at `logDir` through one state read. */
+  def source(spark: SparkSession, logDir: String,
+      fallback: TableDesc = TableDesc()): Source =
+    new Source(spark, logDir, TableState.read(spark, logDir), fallback)
 
-  /** Group-commit an op batch to the log (S7). */
-  def append(batch: DataFrame, logDir: String, numFiles: Int = 0,
-      desc: TableDesc = TableDesc()): Unit =
-    commit(batch, logDir, desc, numFiles, countDeletes = false,
-      keepHint = true)
-
-  /** Group-commit a batch of a stored table whose log may hold the op
-    * tags `ops` (None = undeclared), keeping its tombstone-count hint
-    * current. Three regimes, each paying the least it can:
+  /** Group-commit a batch to the log (S7): a cell batch laid out as
+    * `desc` declares (which must agree with the stored layout), or —
+    * `desc.kvMode` — a KV batch (key, value, expire_ts_us, seq) in the
+    * stored KV layout. A cell log whose ops may hold the tags `ops`
+    * (None = undeclared) keeps its tombstone-count hint current, paying
+    * the least it can:
     *  - declared op-set WITHOUT deletes: nothing to track;
     *  - declared WITH deletes: the append's own write counts the
     *    batch's tombstones — no extra job;
     *  - undeclared: don't guess — drop the stored hint, and resolve
     *    falls back to its own probe. A wrong low hint would defeat the
     *    window strategy's OOM guard.
-    */
-  def appendTracked(batch: DataFrame, logDir: String, desc: TableDesc,
-      ops: Option[Set[Int]]): Unit = {
-    val deleteFree = ops.exists(o => !OpType.deletes.exists(o.contains))
-    commit(batch, logDir, desc, 0, countDeletes = ops.isDefined && !deleteFree,
-      keepHint = deleteFree)
-  }
-
-  /** Every append: reads the state once, writes the batch and replaces
-    * the state only when it changed — the delete hint (unless
-    * `keepHint`) and a seeded [[TableState.nextSeq]], raised above the
-    * batch's max seq so a later reservation orders after every
-    * caller-supplied seq. A table that never reserved seqs tallies no
-    * max. All under the table's [[TableState.locked]], so concurrent
-    * appends of one JVM keep the state exact. */
-  private def commit(batch: DataFrame, logDir: String, desc: TableDesc,
-      numFiles: Int, countDeletes: Boolean, keepHint: Boolean): Unit = {
+    * A table that has reserved seqs gets its [[TableState.nextSeq]]
+    * raised above the batch's max seq, so a later reservation orders
+    * after every caller-supplied seq; one that never reserved tallies
+    * no max. One state read and at most one state replace, under the
+    * table's lock, so concurrent appends of one JVM keep it exact. */
+  def append(batch: DataFrame, logDir: String, desc: TableDesc = TableDesc(),
+      ops: Option[Set[Int]] = None): Unit = {
     val spark = batch.sparkSession
-    TableState.locked(spark, logDir) {
-      val stored = TableState.read(spark, logDir)
-      checkLayout(spark, logDir, desc, stored)
-      val tally = writeBatch(batch, logDir, SaveMode.Append, desc, numFiles,
-        countDeletes, maxSeq = stored.exists(_.nextSeq.isDefined))
-      stored.foreach { s =>
-        // a count whose metrics never arrived drops the hint too
-        val next = s.written(maxSeqOf(tally, sourceOf(spark, logDir, stored,
-          desc).log)).copy(deleteCount =
-          if (keepHint) s.deleteCount
-          else for (c <- s.deleteCount; d <- tally.deletes) yield c + d)
-        if (next != s) TableState.write(spark, logDir, next)
-      }
+    val deleteFree = ops.exists(o => !OpType.deletes.exists(o.contains))
+    TableState.update(spark, logDir) { stored =>
+      val src = new Source(spark, logDir, stored, desc)
+      val tally = src.appendLayout(desc).write(batch, logDir, SaveMode.Append,
+        countDeletes = !src.desc.kvMode && ops.isDefined && !deleteFree,
+        maxSeq = stored.exists(_.nextSeq.isDefined))
+      // a count whose metrics never arrived drops the hint too
+      (stored.map(s => s.written(maxSeqOf(tally, src.log)).copy(deleteCount =
+        if (deleteFree) s.deleteCount
+        else for (c <- s.deleteCount; d <- tally.deletes) yield c + d))
+        .filterNot(stored.contains), ())
     }
   }
 
@@ -143,75 +184,46 @@ object CellLogStore {
     if (row.isNullAt(0)) Long.MinValue else row.getLong(0)
   }
 
-  /** Replace a log's content wholesale (index rebuilds, imports).
-    * Parquet Overwrite clears the directory INCLUDING the state file, so
-    * the state is read first and rewritten after the data lands; both
-    * allocator counters survive (values they handed out must never be
-    * reissued), the seq counter raised above the new batch. */
+  /** The one overwrite: replace `dir`'s content with `batch`, laid out
+    * as `desc` declares, and restate the table there as `restate` gives
+    * it from `dir`'s stored state (None = no state). Parquet Overwrite
+    * clears the directory INCLUDING the state file, so the state is read
+    * first and written after the data lands. A restated hint-less cell
+    * table gets the batch's tombstone count, tallied by the write, and a
+    * seeded seq counter rises above the batch. */
+  private def overwrite(batch: DataFrame, dir: String, desc: TableDesc)(
+      restate: Option[TableState] => Option[TableState]): Unit = {
+    val spark = batch.sparkSession
+    TableState.update(spark, dir) { stored =>
+      val next = restate(stored)
+      val count = !desc.kvMode && next.exists(_.deleteCount.isEmpty)
+      val tally = LogLayout.of(desc).write(batch, dir, SaveMode.Overwrite,
+        countDeletes = count, maxSeq = next.exists(_.nextSeq.isDefined))
+      (next.map(s => (if (count) s.copy(deleteCount = tally.deletes) else s)
+        .written(maxSeqOf(tally, new Source(spark, dir, Some(s), desc).log))), ())
+    }
+  }
+
+  /** `s` for a table whose earlier values came from `from`: both
+    * allocator counters carry over — values handed out must never be
+    * reissued. */
+  private def carried(s: TableState, from: Option[TableState]): TableState =
+    s.copy(nextTxnTs = from.flatMap(_.nextTxnTs), nextSeq = from.flatMap(_.nextSeq))
+
+  /** Replace a log's content wholesale (index rebuilds, imports), its
+    * state restated with the descriptor, the op-set and this batch's
+    * tombstone count. */
   def replace(batch: DataFrame, logDir: String, desc: TableDesc,
       ops: Option[Set[Int]] = None): Unit = {
-    val spark = batch.sparkSession
     // the hint must describe THIS batch, not assume it is delete-free:
     // a replacement carrying tombstones with a 0 hint would steer
     // resolve's "auto" to the broadcast-join path on an arbitrarily
     // delete-heavy log. A declared delete-free op-set skips the count;
     // otherwise the write job itself counts.
     val deleteFree = ops.exists(o => !OpType.deletes.exists(o.contains))
-    TableState.locked(spark, logDir) {
-      val stored = TableState.read(spark, logDir)
-      val tally = writeBatch(batch, logDir, SaveMode.Overwrite, desc,
-        countDeletes = !deleteFree,
-        maxSeq = stored.exists(_.nextSeq.isDefined))
-      TableState.write(spark, logDir, TableState(desc, ops,
-        if (deleteFree) Some(0L) else tally.deletes,
-        stored.flatMap(_.nextTxnTs), stored.flatMap(_.nextSeq))
-        .written(maxSeqOf(tally,
-          sourceOf(spark, logDir, Some(TableState(desc)), desc).log)))
-    }
+    overwrite(batch, logDir, desc)(stored => Some(carried(TableState(desc, ops,
+      Option.when(deleteFree)(0L)), stored)))
   }
-
-  /** True when the log is LG-partitioned (`lg=<name>/` directories).
-    * One driver-side directory listing — only for a directory without
-    * a state file; a stored table's state says whether it has LGs. */
-  def hasLgLayout(spark: SparkSession, logDir: String): Boolean = {
-    val path = new org.apache.hadoop.fs.Path(logDir)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.exists(path) && fs.listStatus(path).exists(st =>
-      st.isDirectory && st.getPath.getName.startsWith("lg="))
-  }
-
-  /** A cell log as one state read sees it: the `stored` state, the log
-    * laid out as that state declares, and — on an LG-partitioned log —
-    * a reader pruned to the named LGs ([[LogLayout.readLgs]]). */
-  final case class Source(stored: Option[TableState], log: DataFrame,
-      lgRead: Option[Seq[String] => DataFrame]) {
-    /** The stored tombstone count, when the state carries one. */
-    def deleteHint: Option[Long] = stored.flatMap(_.deleteCount)
-  }
-
-  /** The cell log at `logDir` through one state read. A directory
-    * without a state file is read flat, or LG-partitioned when it holds
-    * `lg=` directories, with `fallback`'s key mode — so a bare binary
-    * log opened with `TableDesc(rawKeyBinary = true)` is not silently
-    * read through the string schema. A stored state always wins. */
-  def source(spark: SparkSession, logDir: String,
-      fallback: TableDesc = TableDesc()): Source =
-    sourceOf(spark, logDir, TableState.read(spark, logDir), fallback)
-
-  private def sourceOf(spark: SparkSession, logDir: String,
-      stored: Option[TableState], fallback: TableDesc): Source = {
-    val layout = LogLayout.cells(TableDesc(
-      buckets = stored.fold(0)(_.desc.buckets),
-      rawKeyBinary = stored.fold(fallback)(_.desc).rawKeyBinary))
-    if (stored.fold(hasLgLayout(spark, logDir))(_.desc.lgs.nonEmpty))
-      Source(stored, layout.readLgs(spark, logDir, None),
-        Some((wanted: Seq[String]) =>
-          layout.readLgs(spark, logDir, Some(wanted))))
-    else Source(stored, layout.read(spark, logDir), None)
-  }
-
-  def read(spark: SparkSession, logDir: String): DataFrame =
-    source(spark, logDir).log
 
   /** Seq base for loaders that number a whole bulk load from one
     * base ([[RelationalLoader.toCellLog]]): `monotonically_increasing_id`
@@ -249,25 +261,17 @@ object CellLogStore {
       column: String, what: String, bare: Boolean)(
       counter: TableState => Option[Long],
       advance: (TableState, Long) => TableState): Long =
-    TableState.locked(spark, logDir) {
+    TableState.update(spark, logDir) { stored =>
       require(n > 0, s"must reserve at least one $what, got $n")
-      val stored =
-        if (bare) TableState.read(spark, logDir)
-        else Some(TableState.require(spark, logDir))
+      if (!bare && stored.isEmpty) TableState.require(spark, logDir)
       val base = stored.flatMap(counter).getOrElse {
-        val log = stored match {
-          case Some(s) if s.desc.kvMode =>
-            LogLayout.kv(s.desc.rawKeyBinary, s.desc.buckets).read(spark, logDir)
-          case _ => sourceOf(spark, logDir, stored, TableDesc()).log
-        }
-        val m = maxOf(log, column)
+        val m = maxOf(new Source(spark, logDir, stored, TableDesc()).log, column)
         if (m == Long.MinValue) 1L else TableState.above(m)
       }
       if (base > Long.MaxValue - n)
         throw new IllegalStateException(s"$what space exhausted: reserving " +
           s"$n from $base would pass Long.MaxValue")
-      stored.foreach(s => TableState.write(spark, logDir, advance(s, base + n)))
-      base
+      (stored.map(advance(_, base + n)), base)
     }
 
   /** Reserve `n` consecutive seqs above every seq the log holds and
@@ -314,27 +318,35 @@ object CellLogStore {
     }
   }
 
-  /** Background compaction: rewrite the log as its resolved state.
-    * Resolved cells re-enter the log as plain VALUE ops (their folds and
-    * tombstones applied), preserving `ts` and `seq` so later appends
-    * still order correctly against them. Output replaces `logDir`
-    * content at `outDir`.
+  /** Background compaction: rewrite the log as its resolved state at
+    * `outDir`. A cell log's resolved cells re-enter as plain VALUE ops
+    * (folds and tombstones applied), preserving `ts` and `seq` so later
+    * appends still order correctly against them, laid out as `desc`
+    * declares; the stored op-set and delete hint spare the resolve its
+    * op probe. A KV log (`desc.kvMode`, or a stored KV table) keeps its
+    * resolved entries — dead KVs (expired at `nowUs`, superseded
+    * writes) physically dropped (tera KvCompactStrategy::Drop,
+    * src/io/ttlkv_compact_strategy.cc:40-70), live ones keeping their
+    * baked expiry — in its own layout. Both allocator counters carry
+    * over to the output.
     */
   def compact(spark: SparkSession, logDir: String, outDir: String,
       desc: TableDesc = TableDesc(), nowUs: Long = Long.MaxValue): Unit = {
-    val src = source(spark, logDir)
-    val resolved = Resolve.resolve(src.log, desc, nowUs)
-      .select(col("row_key"), col("cf"), col("qualifier"), col("ts"),
-        lit(graft.model.OpType.Value).as("op"), col("value"), col("seq"))
-    // LG layout carries over: the compacted table prunes the same way
-    writeBatch(resolved, outDir, SaveMode.Overwrite, desc)
-    // the compacted table keeps its descriptor; its log is now VALUE-only
-    // (folds and tombstones physically applied), so declare that op-set
-    // and a zero delete count. Both allocator counters carry over:
-    // values reserved on the source but never written must not be
-    // reissued on the output
-    TableState.write(spark, outDir, TableState(desc,
-      Some(Set(graft.model.OpType.Value)), Some(0L),
-      src.stored.flatMap(_.nextTxnTs), src.stored.flatMap(_.nextSeq)))
+    val src = source(spark, logDir, desc)
+    if (src.desc.kvMode)
+      overwrite(KvStore.resolveEntries(src.log, nowUs), outDir, src.desc)(_ =>
+        src.stored.map(s => carried(TableState(s.desc), src.stored)))
+    else {
+      val resolved = Resolve.resolve(src.log, desc, nowUs,
+          opsPresent = src.stored.flatMap(_.ops),
+          deleteCountHint = src.deleteHint)
+        .select(col("row_key"), col("cf"), col("qualifier"), col("ts"),
+          lit(OpType.Value).as("op"), col("value"), col("seq"))
+      // the compacted table keeps its descriptor (and LG layout); its
+      // log is now VALUE-only, so it declares that op-set and a zero
+      // delete count
+      overwrite(resolved, outDir, desc)(_ => Some(carried(TableState(desc,
+        Some(Set(OpType.Value)), Some(0L)), src.stored)))
+    }
   }
 }

@@ -73,9 +73,7 @@ private[graft] final case class LogLayout(
     */
   def readLgs(spark: SparkSession, dir: String,
       wanted: Option[Seq[String]]): DataFrame = {
-    val withLg = spark.read
-      .schema(schema.add(StructField("lg", StringType)))
-      .parquet(dir)
+    val withLg = spark.read.schema(withLgColumn).parquet(dir)
     val pruned = wanted match {
       case Some(names) =>
         val keep = (names :+ TableDesc.RowTombstoneLg).distinct
@@ -85,22 +83,35 @@ private[graft] final case class LogLayout(
     pruned.drop("lg")
   }
 
+  private def withLgColumn: StructType = schema.add(StructField("lg", StringType))
+
+  /** Tail the log as a file stream, in the log's schema. An
+    * LG-partitioned log (`lgPartitioned`) needs the partition column in
+    * the stream schema; it is layout, not data, and is dropped. */
+  def stream(spark: SparkSession, dir: String, lgPartitioned: Boolean): DataFrame = {
+    val files = spark.readStream
+      .schema(if (lgPartitioned) withLgColumn else schema)
+      .option("maxFilesPerTrigger", "16")
+      .parquet(dir)
+    if (lgPartitioned) files.drop("lg") else files
+  }
+
   /** Write `batch` into `dir` — every log write, cell or KV. A
     * driver-resident append ([[DriverCommit.localRows]]: the batch's
     * optimized plan is a `LocalRelation` whose columns match the log
     * schema) to a flat or bucketed log is written from the driver with
     * no Spark job ([[DriverCommit]]) and tallied there. Every other
-    * write — a distributed batch, `numFiles`, Overwrite, the LG layout —
+    * write — a distributed batch, Overwrite, the LG layout —
     * is a Spark write, tallied by an [[Observation]] inside its job.
     * The tally holds what was asked for: the batch's tombstones
     * (`countDeletes`, cell logs) and its max seq (`maxSeq`; an empty
     * batch reports `Long.MinValue`); each is None when a Spark write's
     * metrics never arrive.
     */
-  def write(batch: DataFrame, dir: String, mode: SaveMode, numFiles: Int = 0,
+  def write(batch: DataFrame, dir: String, mode: SaveMode,
       countDeletes: Boolean = false, maxSeq: Boolean = false): LogLayout.Tally = {
     val local =
-      if (mode == SaveMode.Append && numFiles == 0 && lg.isEmpty)
+      if (mode == SaveMode.Append && lg.isEmpty)
         DriverCommit.localRows(batch, schema)
       else None
     local match {
@@ -123,7 +134,7 @@ private[graft] final case class LogLayout(
             maxSeq -> coalesce(max(col("seq")), lit(Long.MinValue)))
             .collect { case (true, agg) => agg }
         val obs = if (tallies.isEmpty) None else Some(Observation())
-        sparkWrite(batch, dir, mode, numFiles, df =>
+        sparkWrite(batch, dir, mode, df =>
           obs.fold(df)(df.observe(_, tallies.head, tallies.tail: _*)))
         val row = obs.flatMap(o => scala.util.Try(scala.concurrent.Await.result(
           o.future, scala.concurrent.duration.Duration(60, "s"))).toOption)
@@ -137,24 +148,22 @@ private[graft] final case class LogLayout(
     * name, safe casts widen, extra columns drop, and an unsafe cast
     * fails here, before any file lands. Then the key clustering: a hash
     * exchange on the bucket function (one file per bucket per commit),
-    * or a range exchange over `numFiles` partitions (default: the
-    * shuffle partitions), led by `lg` on an LG log so a task writes
-    * into one LG directory. Then the within-file sort. `aboveExchange`
+    * or a range exchange over the shuffle partitions, led by `lg` on an
+    * LG log so a task writes into one LG directory. Then the within-file
+    * sort. `aboveExchange`
     * wraps the batch right above the exchange: an observation there
     * counts each row once, where below a range exchange the sampling
     * job would count it twice.
     */
   private def sparkWrite(batch: DataFrame, dir: String, mode: SaveMode,
-      numFiles: Int, aboveExchange: DataFrame => DataFrame): Unit = {
+      aboveExchange: DataFrame => DataFrame): Unit = {
     val spark = batch.sparkSession
     val logRows = batch.to(StructType(schema.map(_.copy(nullable = true))))
     val rows = lg.fold(logRows)(logRows.withColumn("lg", _))
     val partCols = lg.map(_ => "lg").toSeq
     val clustered =
       if (buckets > 0) rows.repartition(buckets, col(key))
-      else rows.repartitionByRange(
-        if (numFiles > 0) numFiles
-        else spark.sessionState.conf.numShufflePartitions,
+      else rows.repartitionByRange(spark.sessionState.conf.numShufflePartitions,
         (partCols ++ rangeCols).map(col): _*)
     val sorted = aboveExchange(clustered)
       .sortWithinPartitions(sortCols.map(col): _*)
@@ -193,12 +202,22 @@ private[graft] object LogLayout {
 
   /** The cell-log layout `desc` declares: clustered by
     * (row_key, cf, qualifier), sorted by (row_key, cf, qualifier, ts,
-    * seq), bucketed or LG-partitioned when the descriptor says so. */
-  def cells(desc: TableDesc): LogLayout = LogLayout(
-    CellOp.schemaFor(desc.rawKeyBinary), "row_key",
-    Seq("row_key", "cf", "qualifier"),
-    Seq("row_key", "cf", "qualifier", "ts", "seq"), desc.buckets,
-    Some(desc.lgs).filter(_.nonEmpty).map(lgColumn))
+    * seq), bucketed or LG-partitioned when the descriptor says so — not
+    * both. */
+  def cells(desc: TableDesc): LogLayout = {
+    require(desc.buckets == 0 || desc.lgs.isEmpty,
+      "bucketed layout and locality groups are mutually exclusive " +
+        "(one physical clustering per table)")
+    LogLayout(CellOp.schemaFor(desc.rawKeyBinary), "row_key",
+      Seq("row_key", "cf", "qualifier"),
+      Seq("row_key", "cf", "qualifier", "ts", "seq"), desc.buckets,
+      Some(desc.lgs).filter(_.nonEmpty).map(lgColumn))
+  }
+
+  /** The layout `desc` declares: a KV log's ([[kv]]) or a cell log's
+    * ([[cells]]). */
+  def of(desc: TableDesc): LogLayout =
+    if (desc.kvMode) kv(desc.rawKeyBinary, desc.buckets) else cells(desc)
 
   /** A KV log's layout: clustered by key, sorted by (key, seq). */
   def kv(binaryKey: Boolean, buckets: Int): LogLayout = LogLayout(

@@ -133,11 +133,12 @@ private[graft] object Sidecar {
   * the declared op-set (so resolve skips its op probe), the tombstone
   * count hint and the allocator's two counters, txn timestamps and
   * seqs. One [[Sidecar]] file, replaced whole by every change; each
-  * read-modify-write runs under the table's [[TableState.locked]].
+  * change is one read-modify-write under the table's lock
+  * ([[TableState.update]]).
   *
   * @param deleteCount tombstones in the log, when known — a strategy
   *   hint for resolve's "auto" delete strategy on flat and LG logs,
-  *   kept by the write path ([[CellLogStore.appendTracked]]). A table
+  *   kept by the write path ([[CellLogStore.append]]). A table
   *   whose state predates the hint stays hint-less.
   * @param nextTxnTs the first unreserved batch-txn timestamp
   *   ([[CellLogStore.allocateTxnTs]]), once seeded
@@ -184,6 +185,17 @@ private[graft] object TableState {
 
   def require(spark: SparkSession, logDir: String): TableState =
     parse(File.require(spark, logDir))
+
+  /** Every change of a table's state: one read-modify-write under the
+    * table's [[locked]]. `change` gets the stored state and returns the
+    * state to store (None = store nothing) with its result. */
+  def update[A](spark: SparkSession, logDir: String)(
+      change: Option[TableState] => (Option[TableState], A)): A =
+    locked(spark, logDir) {
+      val (next, out) = change(read(spark, logDir))
+      next.foreach(write(spark, logDir, _))
+      out
+    }
 
   def write(spark: SparkSession, logDir: String, s: TableState): Unit = {
     def spec(c: CfSpec) = s"${c.maxVersions},${c.minVersions},${c.ttlSec}"

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.model.{CellOp, TableDesc}
+import graft.model.TableDesc
 import graft.operators.Resolve
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -266,7 +266,7 @@ object Observers {
       trigger: Trigger = Trigger.AvailableNow())
       (onNotify: DataFrame => Unit): StreamingQuery =
     startGuarded(table.spark, checkpointDir) {
-    cellLogStream(table.spark, table.logDir, Some(table.desc.lgs.nonEmpty))
+    cellLogStream(table.spark, table.logDir, table.desc)
       .where(col("cf") === NotifyCf &&
         col("op") === graft.model.OpType.Value)
       .writeStream
@@ -330,38 +330,12 @@ object Observers {
         col("qualifier"),
         col("ts"))
 
-  /** Tail a cell-log parquet directory as a change-feed stream.
-    *
-    * @param lgPartitioned whether the log is LG-partitioned. Callers
-    *   holding a table pass `desc.lgs.nonEmpty`; otherwise the stored
-    *   descriptor decides, and only a bare descriptor-less log falls
-    *   back to directory sniffing — an observer legitimately starts
-    *   BEFORE the table's first append, when no `lg=` directory exists
-    *   yet to sniff.
-    */
+  /** Tail a cell-log parquet directory as a change-feed stream, in the
+    * layout its state declares ([[graft.sources.CellLogStore.Source.stream]]);
+    * `fallback` gives a directory without state its key mode. */
   def cellLogStream(spark: SparkSession, logDir: String,
-      lgPartitioned: Option[Boolean] = None): DataFrame = {
-    // the stored descriptor decides the key mode: a binary-raw-key log's
-    // row_key must stream as BinaryType, exactly like the batch readers
-    val stored = graft.sources.TableState.read(spark, logDir).map(_.desc)
-    val schema = CellOp.schemaFor(stored.exists(_.rawKeyBinary))
-    // LG-partitioned logs (lg=<name>/ dirs) need the partition column
-    // in the stream schema; it is layout, not data — drop it.
-    if (lgPartitioned.orElse(stored.map(_.lgs.nonEmpty))
-      .getOrElse(graft.sources.CellLogStore.hasLgLayout(spark, logDir)))
-      spark.readStream
-        .schema(schema.add(
-          org.apache.spark.sql.types.StructField("lg",
-            org.apache.spark.sql.types.StringType)))
-        .option("maxFilesPerTrigger", "16")
-        .parquet(logDir)
-        .drop("lg")
-    else
-      spark.readStream
-        .schema(schema)
-        .option("maxFilesPerTrigger", "16")
-        .parquet(logDir)
-  }
+      fallback: TableDesc = TableDesc()): DataFrame =
+    graft.sources.CellLogStore.source(spark, logDir, fallback).stream
 
   /** One observed notification — what `OnNotify` sees. */
   case class Notification(

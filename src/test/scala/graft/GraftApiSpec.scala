@@ -1531,4 +1531,80 @@ class GraftApiSpec extends AnyFunSuite {
       assert(failure(t.get(k).count()).contains("INVALID_BUCKET_FILE"), k)
     }
   }
+
+  test("compacting a created table runs no op-probe job") {
+    val dir = Files.createTempDirectory("graft-compact-probe").toString
+    val t = Graft.createTable(spark, dir, model.TableDesc(),
+      Some(Set(OpType.Value, OpType.Add, OpType.DelRow)))
+    t.put(Seq(
+      CellOp("a", "cf", "q", 1L, OpType.Value, "x".getBytes, 1L),
+      CellOp("a", "cf", "n", 1L, OpType.Add, Codecs.encodeBE64(2L), 2L),
+      CellOp("b", "cf", "q", 1L, OpType.Value, "y".getBytes, 3L),
+      CellOp("b", "cf", "", 2L, OpType.DelRow, null, 4L)))
+    // every plan executed while the compaction runs
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = plans.add(qe.executedPlan.toString)
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = plans.add(qe.executedPlan.toString)
+    }
+    org.apache.spark.sql.graft.Shim.waitListenerBus(spark)
+    spark.listenerManager.register(listener)
+    val out = Files.createTempDirectory("graft-compact-probe-out").toString
+    try {
+      t.compact(out)
+      org.apache.spark.sql.graft.Shim.waitListenerBus(spark)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    assert(plans.asScala.nonEmpty)
+    assert(!plans.asScala.exists(_.contains("collect_set")),
+      plans.asScala.mkString("\n---\n"))
+    assert(Graft.openTable(spark, out).cells().count() == 2)
+  }
+
+  test("two concurrent creates of one table: exactly one wins, its descriptor stored") {
+    import graft.model.{CfSpec, TableDesc}
+    (1 to 20).foreach { round =>
+      val dir = Files.createTempDirectory("graft-create-race").toString
+      val descs = Seq(TableDesc(CfSpec(maxVersions = 2)),
+        TableDesc(CfSpec(maxVersions = 3)))
+      val start = new java.util.concurrent.CyclicBarrier(descs.size)
+      val results = descs.map { d =>
+        val out = new java.util.concurrent.atomic.AtomicReference[Either[Throwable, TableDesc]]()
+        val th = new Thread(() => out.set(
+          try { start.await(); Graft.createTable(spark, dir, d); Right(d) }
+          catch { case e: Throwable => Left(e) }))
+        th.start()
+        (th, out)
+      }
+      results.foreach(_._1.join())
+      val outcomes = results.map(_._2.get)
+      val won = outcomes.collect { case Right(d) => d }
+      assert(won.size == 1, s"round $round: $outcomes")
+      outcomes.collect { case Left(e) => e }.foreach(e =>
+        assert(e.isInstanceOf[IllegalArgumentException] &&
+          e.getMessage.contains("already exists"), e))
+      assert(graft.sources.TableState.read(spark, dir).map(_.desc) == won.headOption,
+        s"round $round")
+    }
+  }
+
+  test("an LG-projected scan lists the log once") {
+    import graft.model.TableDesc
+    import org.apache.spark.metrics.source.HiveCatalogMetrics
+    val dir = Files.createTempDirectory("graft-lg-listing").toString
+    val t = Graft.createTable(spark, dir,
+      TableDesc(lgs = Map("a" -> "hot", "b" -> "cold")), Some(Set(OpType.Value)))
+    (0 until 3).foreach(b => t.put(Seq(
+      CellOp(s"r$b", "a", "q", 1L, OpType.Value, "x".getBytes, 2L * b),
+      CellOp(s"r$b", "b", "q", 1L, OpType.Value, "y".getBytes, 2L * b + 1))))
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+      .filter(_.toString.endsWith(".parquet")).count()
+    HiveCatalogMetrics.reset()
+    val got = t.scan.addColumnFamily("a").run()
+    val listed = HiveCatalogMetrics.METRIC_FILES_DISCOVERED.getCount
+    assert(got.count() == 3)
+    assert(listed == files, s"listed $listed files for a $files-file log")
+  }
 }

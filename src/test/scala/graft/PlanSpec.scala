@@ -40,7 +40,7 @@ class PlanSpec extends AnyFunSuite {
     val ops = (0 until 100).map(i =>
       CellOp(f"r$i%03d", "cf", "q", 1L, OpType.Value, s"v$i".getBytes, i.toLong))
     CellLogStore.append(ops.toDF(), dir)
-    val scan = ScanQuery(CellLogStore.read(spark, dir),
+    val scan = ScanQuery(CellLogStore.source(spark, dir).log,
         opsPresent = Some(Set(OpType.Value)))
       .withStart("r010").withStop("r020")
       .run()
@@ -559,7 +559,7 @@ class PlanSpec extends AnyFunSuite {
     val ops = (0 until 100).map(i =>
       CellOp(f"r$i%03d", "cf", "q", 1L, OpType.Value, s"v$i".getBytes, i.toLong))
     CellLogStore.append(ops.toDF(), dir)
-    val q = ScanQuery(CellLogStore.read(spark, dir),
+    val q = ScanQuery(CellLogStore.source(spark, dir).log,
       TableDesc(graft.model.CfSpec(maxVersions = Int.MaxValue)),
       opsPresent = Some(Set(OpType.Value)))
     // ordered (default) pays a range-exchange sort to reproduce the
@@ -578,7 +578,7 @@ class PlanSpec extends AnyFunSuite {
     val ops = (0 until 100).map(i =>
       CellOp(f"r$i%03d", "cf", "q", 1L, OpType.Value, s"v$i".getBytes, i.toLong))
     CellLogStore.append(ops.toDF(), dir)
-    val scan = ScanQuery(CellLogStore.read(spark, dir),
+    val scan = ScanQuery(CellLogStore.source(spark, dir).log,
         opsPresent = Some(Set(OpType.Value)))
       .withResumeAfter("r049").withLimit(10).run()
     val leaves = scan.queryExecution.executedPlan.collectLeaves().mkString("\n")
@@ -589,7 +589,7 @@ class PlanSpec extends AnyFunSuite {
 
     // afterPage's row cut reaches the scan the same way: the one-row
     // resume handshake lands as a literal >= bound, not a crossJoin
-    val q = ScanQuery(CellLogStore.read(spark, dir),
+    val q = ScanQuery(CellLogStore.source(spark, dir).log,
       opsPresent = Some(Set(OpType.Value)))
     val page1 = q.withLimit(10).run()
     val resumed = q.afterPage(page1).withLimit(10).run()

@@ -63,14 +63,15 @@ class ResolveFuzzSpec extends AnyFunSuite {
           surviving.sortBy(c => (c.ts, c.seq)).foreach { c =>
             c.op match {
               case Value => state = c.value
+              // a sum past the long range raises
               case Add => state = if (c.value == null) null
-                else Codecs.encodeBE64(
-                  (if (state == null) 0L else Codecs.decodeBE64(state)) +
-                    Codecs.decodeBE64(c.value))
+                else Codecs.encodeBE64(Math.addExact(
+                  if (state == null) 0L else Codecs.decodeBE64(state),
+                  Codecs.decodeBE64(c.value)))
               case AddInt64 => state = if (c.value == null) null
-                else Codecs.encodeLE64(
-                  (if (state == null) 0L else Codecs.decodeLE64(state)) +
-                    Codecs.decodeLE64(c.value))
+                else Codecs.encodeLE64(Math.addExact(
+                  if (state == null) 0L else Codecs.decodeLE64(state),
+                  Codecs.decodeLE64(c.value)))
               case PutIfAbsent => if (state == null) state = c.value
               // a null operand nulls the state (expression concat
               // propagates null) — the poison must not kill the fold
@@ -334,5 +335,107 @@ class ResolveFuzzSpec extends AnyFunSuite {
           want.map(c => (c._2, c._3, c._4, c._5)), what)
       }
     }
+  }
+
+  /** Spark resolve, as reference tuples. */
+  private def sparkCells(log: Seq[CellOp], desc: TableDesc = TableDesc(),
+      ops: Option[Set[Int]] = None, strategy: String = "auto")
+      : Set[(String, String, String, Long, Option[Seq[Byte]])] = {
+    import spark.implicits._
+    Resolve.resolve(log.toDF(), desc, opsPresent = ops, deleteStrategy = strategy)
+      .collect().map { r =>
+        (r.getString(0), r.getString(1), r.getString(2), r.getLong(3),
+          Option(r.getAs[Array[Byte]]("value")).map(_.toSeq))
+      }.toSet
+  }
+
+  test("a cell at ts = Long.MinValue survives a tombstone of another row") {
+    val log = Seq(
+      CellOp("r", "cf", "q", Long.MinValue, Value, "v".getBytes, 1L),
+      CellOp("s", "cf", "q", 5L, Value, "w".getBytes, 2L),
+      CellOp("s", "", "", 9L, DelRow, null, 3L),
+      CellOp("t", "cf", "q", Long.MinValue, Value, "x".getBytes, 4L),
+      CellOp("t", "cf", "", Long.MinValue, DelColumn, null, 5L))
+    val want = refResolve(log, TableDesc(), Long.MaxValue, None)
+    assert(want.map(_._1) == Set("r"))
+    Seq("window", "join").foreach { strategy =>
+      assert(sparkCells(log, strategy = strategy) == want, strategy)
+    }
+    // a bucketed get: the driver fold and the distributed plan agree
+    val dir = java.nio.file.Files.createTempDirectory("fuzz-min-ts").toString
+    val t = Graft.createTable(spark, dir, TableDesc(buckets = 2),
+      Some(Set(Value, DelRow, DelColumn)))
+    t.put(log)
+    Seq("r", "s", "t").foreach { k =>
+      assert(t.get(k).collect().length == t.get(k).count(), k)
+    }
+    assert(t.get("r").count() == 1)
+  }
+
+  test("counter fast paths == CellFold on null operands and overflow") {
+    import spark.implicits._
+    val be = Codecs.encodeBE64 _
+    val le = Codecs.encodeLE64 _
+    // a null operand resets the fold to null; later adds count from zero
+    val logs: Seq[(Set[Int], Seq[CellOp])] = Seq(
+      Set(Add) -> Seq(CellOp("r", "cf", "q", 1L, Add, be(5L), 1L),
+        CellOp("r", "cf", "q", 2L, Add, null, 2L)),
+      Set(Add) -> Seq(CellOp("r", "cf", "q", 1L, Add, be(5L), 1L),
+        CellOp("r", "cf", "q", 2L, Add, null, 2L),
+        CellOp("r", "cf", "q", 3L, Add, be(3L), 3L),
+        CellOp("r", "cf", "p", 1L, Add, be(7L), 4L)),
+      Set(AddInt64) -> Seq(CellOp("r", "cf", "q", 2L, AddInt64, null, 1L),
+        CellOp("r", "cf", "q", 1L, AddInt64, le(4L), 2L)),
+      Set(Value, Add) -> Seq(CellOp("r", "cf", "q", 1L, Value, be(10L), 1L),
+        CellOp("r", "cf", "q", 2L, Add, be(1L), 2L),
+        CellOp("r", "cf", "q", 3L, Add, null, 3L)),
+      Set(Value, AddInt64) -> Seq(CellOp("r", "cf", "q", 1L, Value, le(10L), 1L),
+        CellOp("r", "cf", "q", 2L, AddInt64, null, 2L),
+        CellOp("r", "cf", "q", 3L, AddInt64, le(6L), 3L)))
+    logs.foreach { case (ops, log) =>
+      val want = refResolve(log, TableDesc(), Long.MaxValue, None)
+      assert(sparkCells(log, ops = Some(ops)) == want, log)
+      assert(foldRows(log, TableDesc(), Long.MaxValue, None, Some(ops)) == want, log)
+    }
+    // the probe case: a 2-bucket {Add} table, collected and distributed
+    val dir = java.nio.file.Files.createTempDirectory("fuzz-null-add").toString
+    val t = Graft.createTable(spark, dir, TableDesc(buckets = 2), Some(Set(Add)))
+    t.put(logs.head._2)
+    val collected = t.get("r").collect().map(r => Option(r.getAs[Array[Byte]]("value")))
+    val distributed = t.get("r").rdd.collect().map(r => Option(r.getAs[Array[Byte]]("value")))
+    assert(collected.toSeq == Seq(None) && distributed.toSeq == Seq(None))
+    // a sum past the long range raises in every form
+    def raises(body: => Any): Boolean = {
+      val e = intercept[Throwable](body)
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[ArithmeticException])
+    }
+    Seq(Set(Add) -> Seq(CellOp("r", "cf", "q", 1L, Add, be(Long.MaxValue), 1L),
+        CellOp("r", "cf", "q", 2L, Add, be(1L), 2L)),
+      Set(Value, Add) -> Seq(CellOp("r", "cf", "q", 1L, Value, be(Long.MaxValue), 1L),
+        CellOp("r", "cf", "q", 2L, Add, be(1L), 2L)),
+      Set(AddInt64, Append) -> Seq(
+        CellOp("r", "cf", "q", 1L, AddInt64, le(Long.MaxValue), 1L),
+        CellOp("r", "cf", "q", 2L, AddInt64, le(1L), 2L))).foreach { case (ops, log) =>
+      assert(raises(sparkCells(log, ops = Some(ops))), log)
+      assert(raises(foldRows(log, TableDesc(), Long.MaxValue, None, Some(ops))), log)
+      assert(raises(refResolve(log, TableDesc(), Long.MaxValue, None)), log)
+    }
+    // random counter mixes with null operands
+    val rng = new scala.util.Random(20261020L)
+    val mixes = Seq(Seq(Add), Seq(AddInt64), Seq(Value, Add), Seq(Value, AddInt64))
+    (1 to 16).foreach { trial =>
+      val mix = mixes(trial % mixes.size)
+      val log = counterMixLog(rng, 10 + rng.nextInt(30), mix).map(o =>
+        if (o.op != Value && rng.nextInt(5) == 0) o.copy(value = null) else o)
+      val want = refResolve(log, TableDesc(), Long.MaxValue, None)
+      assert(sparkCells(log, ops = Some(mix.toSet)) == want, s"trial $trial mix=$mix")
+      assert(foldRows(log, TableDesc(), Long.MaxValue, None, Some(mix.toSet)) == want,
+        s"trial $trial mix=$mix")
+    }
+    // the null-reset pass keeps the pure sum one map-side-combined aggregate
+    val plan = Resolve.resolve(logs.head._2.toDF(), opsPresent = Some(Set(Add)))
+      .queryExecution.executedPlan.toString
+    assert(plan.contains("partial_sum") && !plan.contains("Window"), plan)
   }
 }

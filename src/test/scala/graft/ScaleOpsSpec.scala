@@ -84,7 +84,10 @@ class ScaleOpsSpec extends AnyFunSuite {
       lit(0L).as("ts"), lit(OpType.Value).as("op"),
       encode(col("id").cast("string"), "UTF-8").as("value"),
       col("id").as("seq"))
-    CellLogStore.append(batch, dir, numFiles = 8)
+    // a Spark-path append range-clusters over the shuffle partitions
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try CellLogStore.append(batch, dir)
+    finally spark.conf.set("spark.sql.shuffle.partitions", "4")
 
     val conf = spark.sessionState.newHadoopConf()
     val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)

@@ -1157,7 +1157,7 @@ class StreamingSpec extends AnyFunSuite {
     CellLogStore.compact(spark, logDir, outDir)
 
     def state(dir: String): Set[(String, Long, String)] =
-      Resolve.resolve(CellLogStore.read(spark, dir)).collect().map { r =>
+      Resolve.resolve(CellLogStore.source(spark, dir).log).collect().map { r =>
         val v = r.getAs[Array[Byte]]("value")
         val decoded = if (r.getString(0) == "r2")
           graft.functions.Codecs.decodeBE64(v).toString
@@ -1168,7 +1168,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(state(outDir) == state(logDir))
     assert(state(outDir) == Set(("r1", 20L, "new"), ("r2", 20L, "12")))
     // history physically gone: compacted log has exactly the live cells
-    assert(CellLogStore.read(spark, outDir).count() == 2)
+    assert(CellLogStore.source(spark, outDir).log.count() == 2)
   }
 
   test("streaming BPE token counts equal the batch accounting row for row, stateless") {
