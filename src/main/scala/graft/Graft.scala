@@ -38,9 +38,8 @@ class GraftTable(
 
   /** The log and the stored tombstone count through ONE state read per
     * call (a driver-side file read, no Spark job), so the count tracks
-    * appends; it lets resolve's "auto" delete strategy size itself
-    * without a count job on a flat or LG log (a bucketed read never
-    * needs it). The stored state lays the log out; this table's `desc`
+    * appends; it lets resolve's delete strategy size itself on a flat
+    * or LG log (a bucketed read never needs it). The stored state lays the log out; this table's `desc`
     * is the fallback for a bare directory. */
   private def source: CellLogStore.Source =
     CellLogStore.source(spark, logDir, desc)

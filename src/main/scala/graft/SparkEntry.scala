@@ -858,10 +858,10 @@ object SparkEntry {
         .orderBy(col("row_key"), col("qualifier"))
     }),
     "q_r3_tombstones" -> ((s, dir) => {
-      Resolve.resolve(CellLogs.tombstoneLog(s, dir), TableDesc(CfSpec(maxVersions = 3)),
-          // dels here are dense (one per column for half the keys):
-          // the ordered-window strategy beats the sparse-delete join
-          opsPresent = CellLogs.tombstoneOps, deleteStrategy = "window")
+      // dels here are dense (one per column for half the keys): read
+      // clustered by row_key, the log takes the ordered-window strategy
+      Resolve.resolve(CellLogs.tombstoneLog(s, dir).repartition(col("row_key")),
+          TableDesc(CfSpec(maxVersions = 3)), opsPresent = CellLogs.tombstoneOps)
         .select(col("row_key"), col("qualifier"), col("ts"),
           decode(col("value"), "UTF-8").as("value"))
         .orderBy(col("row_key"), col("qualifier"), col("ts"))
@@ -885,7 +885,7 @@ object SparkEntry {
       // deletes here are sparse (k%3 / k%5) → broadcast-join strategy
       Resolve.resolve(CellLogs.delGranularityLog(s, dir),
           TableDesc(CfSpec(maxVersions = Int.MaxValue)),
-          opsPresent = CellLogs.delGranularityOps, deleteStrategy = "join")
+          opsPresent = CellLogs.delGranularityOps)
         .select(col("row_key"), col("cf"), col("qualifier"), col("ts"),
           decode(col("value"), "UTF-8").as("value"))
         .orderBy(col("row_key"), col("cf"), col("qualifier"), col("ts"))

@@ -2,7 +2,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. Each query is
+  * driven through `collect()` in a session with the engine's
+  * root-collect strategy installed, as a user's session gets it, so an
+  * ordered query is checked through the sorted-run merge
+  * (`SortedRunsCollectExec`) that users' ordered collects take; the
+  * collected rows are then written with the frame's schema. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -17,16 +22,25 @@ object Verify {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    org.apache.spark.sql.graft.SortedRunsCollect.install(spark)
     new java.io.File(outDir).mkdirs()
+    var (collected, merged) = (0, 0)
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      try {
+        val df = fn(spark, sfDir)
+        val rows = df.collect()
+        collected += 1
+        if (df.queryExecution.executedPlan.toString.contains("SortedRunsCollect"))
+          merged += 1
+        spark.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
+          .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
+    println(s"[verify] $collected queries collected, $merged through the sorted-run merge")
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -69,19 +69,18 @@ object PercolatorRead {
     *
     * Output: (row_key, cf, qualifier, lock_ts, primary) — `primary` is
     * the lock payload, the txn's primary row (global_txn_internal.h:47-53).
+    * Building the frame runs no job: the lock log's op-set is declared,
+    * so its resolve plans the tombstone join (lock tombstones are one per
+    * released lock, sparse by construction) without counting them, or
+    * the window when the log is clustered on `row_key`.
     */
   def pendingLocks(log: DataFrame, snapshotTs: Long): DataFrame = {
     val lockLog = log.where(col("qualifier").startsWith("!L") &&
       col("ts") <= snapshotTs)
-    // deleteStrategy pinned to "join": lock tombstones are one per
-    // released lock by construction (sparse), and "auto"'s sizing count
-    // would run an eager job at PLAN time for every prewrite/commit/
-    // cleanup that merely builds on this frame
     val visible = Resolve.resolve(lockLog,
       graft.model.TableDesc(graft.model.CfSpec(maxVersions = Int.MaxValue)),
       opsPresent = Some(Set(graft.model.OpType.Value,
-        graft.model.OpType.DelQualifiers, graft.model.OpType.DelQualifier)),
-      deleteStrategy = "join")
+        graft.model.OpType.DelQualifiers, graft.model.OpType.DelQualifier)))
     // the lock payload names the txn's primary ROW KEY, so it carries
     // the log's key type: raw bytes on a binary-raw-key log (a UTF-8
     // decode would throw on arbitrary key bytes), decoded text on a

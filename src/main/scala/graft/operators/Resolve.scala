@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.plans.physical.ClusteredDistribution
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.reflect.runtime.universe.TypeTag
 
 /** The resolve pipeline — the engine's core bespoke operator.
   *
@@ -37,6 +38,14 @@ object Resolve {
 
   /** Resolve the visible versioned cells of a cell log.
     *
+    * The physical form follows from the input alone. The op-set picks
+    * the fold: a `max_by` aggregate, the uncapped pass-through, a
+    * version-ranking window, the pure sum, or the streamed
+    * [[CellFold.column]]. The tombstone strategy is window when the
+    * input is clustered on `row_key` or its known delete count exceeds
+    * 100,000, else join. Only an undeclared op-set (`opsPresent =
+    * None`) runs a job while the plan is built: its one probe.
+    *
     * @param log         DataFrame with [[graft.model.CellOp]] schema;
     *                    `seq` must be unique within the log
     * @param desc        per-CF max/min versions and TTL
@@ -49,6 +58,11 @@ object Resolve {
     *                    statically; `None` probes with a cheap
     *                    distinct-scan of the op column. Drives the
     *                    adaptive step elision.
+    * @param deleteCountHint known tombstone count of the log (a stored
+    *                    table's delete hint): sizes the tombstone
+    *                    strategy of an unclustered log. A HINT only —
+    *                    both strategies are exact, so a stale count
+    *                    cannot affect correctness.
     * @return visible cells (row_key, cf, qualifier, ts, value, seq)
     */
   def resolve(
@@ -57,12 +71,6 @@ object Resolve {
       nowUs: Long = Long.MaxValue,
       snapshotSeq: Option[Long] = None,
       opsPresent: Option[Set[Int]] = None,
-      deleteStrategy: String = "auto",
-      /** Known tombstone count of the log, when carried by a stored
-        * table's descriptor — lets "auto" size its strategy on an
-        * unclustered log without running a count job. A strategy HINT
-        * only: both strategies are exact, so a stale count cannot
-        * affect correctness. */
       deleteCountHint: Option[Long] = None): DataFrame = {
 
     val bounded = snapshotSeq.fold(log)(s => log.where(col("seq") <= s))
@@ -104,7 +112,7 @@ object Resolve {
     //    left-join them to the data cells — no sort at all; the dels
     //    side is usually broadcast-sized. Wins when deletes are sparse,
     //    which is the realistic shape of a mutation log.
-    // "auto" picks by the input's physical layout first, its tombstone
+    // The input picks: its physical layout first, its known tombstone
     // count second:
     //  - input already clustered on row_key (a bucketed scan, through
     //    any row_key/seq/range filter): window. Every delete window's
@@ -112,28 +120,23 @@ object Resolve {
     //    ZERO exchange and drop tombstoned cells in the same ordered
     //    pass that reads them — tera's ScanDrop shape — where a join
     //    would add one broadcast job per granularity, each re-scanning
-    //    the same bucket files. No count is needed.
-    //  - otherwise (flat / LG-partitioned logs): count the deletes (the
-    //    ad-hoc probe, the stored hint, or a pushed-filter scan of the
-    //    op column) and pick join only when the tombstone side is
-    //    broadcast-sized — then the data side never re-sorts or
-    //    re-shuffles for deletes at all, where the window's sorts on a
-    //    shuffled log would cost more.
+    //    the same bucket files.
+    //  - otherwise (flat / LG-partitioned logs): join, unless a known
+    //    count (the ad-hoc probe's, else the stored hint) puts the
+    //    tombstone side past broadcast size — then the window's sorts
+    //    cost less than collecting that many tombstones per scope. No
+    //    count job runs: a sparse tombstone side is the realistic shape
+    //    of a mutation log, and a plan build stays job-free.
     val presentDels = deletes.filter(present.contains)
     val keepData = col("op").isin(dataOps.filter(present.contains): _*)
 
     val strategy =
       if (presentDels.isEmpty) "none"
-      else deleteStrategy match {
-        case "auto" if clusteredOnRowKey(bounded) => "window"
-        case "auto" =>
-          // the probe's count is EXACT and already paid for — a stored
-          // hint (possibly stale) only decides when no probe ran
-          val n = probedDelCount.orElse(deleteCountHint).getOrElse(
-            bounded.where(col("op").isin(presentDels: _*)).count())
-          if (n <= 100000L) "join" else "window"
-        case s => s
-      }
+      else if (clusteredOnRowKey(bounded)) "window"
+      // the probe's count is EXACT and already paid for — a stored
+      // hint (possibly stale) only decides when no probe ran
+      else if (probedDelCount.orElse(deleteCountHint).exists(_ > 100000L)) "window"
+      else "join"
 
     val alive = strategy match {
       case "none" => bounded.where(keepData)
@@ -235,21 +238,14 @@ object Resolve {
         .where(col("_vrank") <= cfKnob(_.maxVersions.toLong))
         .select(outCols: _*)
 
-    // Counter fast paths. NO fold path buffers a column's history: the
-    // mixed-op fallback below streams each column's sorted ops (O(1)
-    // state), and for the dominant counter shapes the fold is
-    // expressible as plain associative aggregation, which Spark
-    // executes as a partial (map-side) + final hash aggregate:
-    //  - ops ⊆ {Add} (or {AddInt64}): the fold IS the sum of the decoded
-    //    operands — no sort, no window, no history buffer;
-    //  - ops ⊆ {Value, Add}: a VALUE resets the fold, so the result is the
-    //    newest VALUE (by (ts, seq), the fold order) plus the sum of ADDs
-    //    after it. One partition-only window (sorts by the grouping key,
-    //    spills like any sort, never buffers a column in memory) finds the
-    //    newest-VALUE bound; a hash aggregate does the rest.
-    // Both match CellFold exactly: an ADD with a null operand resets the
-    // fold to null, as a null VALUE does (later ADDs count from zero),
-    // and a sum past the long range raises, as ANSI `sum` does.
+    // Pure-counter fast path. NO fold path buffers a column's history:
+    // the streamed fold ([[streamed]]) keeps O(1) state per column; for
+    // ops ⊆ {Add} (or {AddInt64}) the fold IS the sum of the decoded
+    // operands, which Spark executes as a partial (map-side) + final
+    // hash aggregate — no sort, no window. It matches CellFold exactly:
+    // an ADD with a null operand resets the fold to null (later ADDs
+    // count from zero), and a sum past the long range raises, as ANSI
+    // `sum` does.
     val keys = Seq(col("row_key"), col("cf"), col("qualifier"))
     val tsSeq = struct(col("ts"), col("seq"))
     def pureSum(df: DataFrame, dec: Column => Column, enc: Column => Column): DataFrame = {
@@ -267,91 +263,12 @@ object Resolve {
         .select(outCols: _*)
     }
 
-    def seededSum(df: DataFrame, addOp: Int,
-        dec: Column => Column, enc: Column => Column): DataFrame = {
-      val colWin = Window.partitionBy(keys: _*)
-      val isAdd = col("op") === addOp && col("value").isNotNull
-      df
-        .withColumn("_vmax", max(when(!isAdd, tsSeq)).over(colWin))
-        .withColumn("_mts", max(col("ts")).over(colWin))
-        .withColumn("_mseq", max(col("seq")).over(colWin))
-        // keep the newest reset (a VALUE or a null ADD) and the ADDs
-        // after it (fold order (ts, seq))
-        .where((!isAdd && tsSeq === col("_vmax")) ||
-          (isAdd && (col("_vmax").isNull || tsSeq > col("_vmax"))))
-        .groupBy(keys: _*)
-        .agg(
-          max(col("_mts")).as("ts"),
-          max(when(!isAdd, col("value"))).as("_seed"),
-          sum(when(isAdd, dec(col("value")))).as("_dsum"),
-          count(when(isAdd, lit(1))).as("_nadds"),
-          max(col("_mseq")).as("seq"))
-        // no trailing ADDs → the newest VALUE's bytes pass through verbatim
-        // (exactly the general fold's behavior, even for non-canonical bytes)
-        .withColumn("value", when(col("_nadds") === 0, col("_seed"))
-          .otherwise(enc(coalesce(dec(col("_seed")), lit(0L)) + col("_dsum"))))
-        .select(outCols: _*)
-    }
-
     def folded(df: DataFrame, ops: Set[Int]): DataFrame =
       if (ops.subsetOf(Set(Add))) pureSum(df, be64_decode, be64_encode)
       else if (ops.subsetOf(Set(AddInt64))) pureSum(df, le64_decode, le64_encode)
-      else if (ops.subsetOf(Set(Value, Add)))
-        seededSum(df, Add, be64_decode, be64_encode)
-      else if (ops.subsetOf(Set(Value, AddInt64)))
-        seededSum(df, AddInt64, le64_decode, le64_encode)
-      else {
-        // genuinely mixed columns (PutIfAbsent/Append/both Add kinds):
-        // a STREAMING fold over each column's (ts, seq)-sorted iterator
-        // — O(1) state per column, like the reference's scan-loop merge
-        // (tera src/io/atomic_merge_strategy.cc:36-103), where the
-        // previous collect_list fold buffered the whole history in one
-        // aggregation buffer (an OOM on a hot column with millions of
-        // ops between compactions). groupByKey plans a clustered
-        // distribution — a bucketed table satisfies it straight from
-        // the scan (zero shuffle) — and the per-group sort is a
-        // spillable SortExec, never an in-memory array. The fold body is
-        // CellFold.column, the one a driver-side point get runs.
-        val session = df.sparkSession
-        import session.implicits._
-        // grouping COLUMNS, not a key lambda: an opaque groupByKey key
-        // is an appended attribute EnsureRequirements cannot equate
-        // with row_key, which would force the shuffle back in.
-        // op and value extend the sort key past (ts, seq): seqs the
-        // engine reserves (CellLogStore.reserveSeqs) never repeat,
-        // but caller-supplied seqs (put batches, BatchTxn/notify
-        // bases) can, so two cells CAN share (ts, seq) — the
-        // full-struct key keeps the fold order total and deterministic,
-        // like the old whole-struct collect_list sort did.
-        // Keyed by the log's ACTUAL key type: a Dataset encoder over
-        // String would silently up-cast a binary raw key, replacing
-        // invalid-UTF-8 bytes and collapsing distinct keys.
-        val selected = df.select(col("row_key"), col("cf"), col("qualifier"),
-          col("ts"), col("op"), col("value"), col("seq"))
-        val sortKeys = Seq(col("ts"), col("seq"), col("op"), col("value"))
-        val grouped = selected.groupBy(col("row_key"), col("cf"), col("qualifier"))
-        val result =
-          if (df.schema("row_key").dataType ==
-              org.apache.spark.sql.types.BinaryType)
-            grouped
-              .as[(Array[Byte], String, String),
-                (Array[Byte], String, String, Long, Int, Array[Byte], Long)]
-              .flatMapSortedGroups(sortKeys: _*) { case ((rk, cfn, q), it) =>
-                val (ts, v, seq) = CellFold.column(it.map(r => (r._4, r._5, r._6, r._7)))
-                Iterator((rk, cfn, q, ts, v, seq))
-              }
-              .toDF("row_key", "cf", "qualifier", "ts", "value", "seq")
-          else
-            grouped
-              .as[(String, String, String),
-                (String, String, String, Long, Int, Array[Byte], Long)]
-              .flatMapSortedGroups(sortKeys: _*) { case ((rk, cfn, q), it) =>
-                val (ts, v, seq) = CellFold.column(it.map(r => (r._4, r._5, r._6, r._7)))
-                Iterator((rk, cfn, q, ts, v, seq))
-              }
-              .toDF("row_key", "cf", "qualifier", "ts", "value", "seq")
-        result.select(outCols: _*)
-      }
+      else if (df.schema("row_key").dataType ==
+          org.apache.spark.sql.types.BinaryType) streamed[Array[Byte]](df)
+      else streamed[String](df)
 
     val presentData = present.intersect(dataOps.toSet)
     if (!hasAtomic) cappedPlain(surviving)
@@ -365,6 +282,42 @@ object Resolve {
         .unionAll(folded(marked.where(col("_has_atomic") === 1).drop("_has_atomic"),
           presentData))
     }
+  }
+
+  /** The fold of every atomic column `pureSum` does not take (a VALUE
+    * among Adds, PutIfAbsent, Append, both Add kinds): a STREAMING fold
+    * over each column's (ts, seq)-sorted iterator — O(1) state per column, like the reference's
+    * scan-loop merge (tera src/io/atomic_merge_strategy.cc:36-103). The
+    * fold body is [[CellFold.column]], the one a driver-side point get
+    * runs. `groupBy(...).as` plans a clustered distribution — a
+    * bucketed table satisfies it straight from the scan (zero shuffle)
+    * — and the per-group sort is a spillable SortExec, never an
+    * in-memory array.
+    *
+    * `K` is the log's ACTUAL key type: a Dataset encoder over String
+    * would silently up-cast a binary raw key, replacing invalid-UTF-8
+    * bytes and collapsing distinct keys. */
+  private def streamed[K: TypeTag](df: DataFrame): DataFrame = {
+    val session = df.sparkSession
+    import session.implicits._
+    // grouping COLUMNS, not a key lambda: an opaque groupByKey key is an
+    // appended attribute EnsureRequirements cannot equate with row_key,
+    // which would force the shuffle back in.
+    // op and value extend the sort key past (ts, seq): seqs the engine
+    // reserves (CellLogStore.reserveSeqs) never repeat, but
+    // caller-supplied seqs (put batches, BatchTxn/notify bases) can, so
+    // two cells CAN share (ts, seq) — the full-struct key keeps the fold
+    // order total and deterministic.
+    df.select(col("row_key"), col("cf"), col("qualifier"), col("ts"),
+        col("op"), col("value"), col("seq"))
+      .groupBy(col("row_key"), col("cf"), col("qualifier"))
+      .as[(K, String, String), (K, String, String, Long, Int, Array[Byte], Long)]
+      .flatMapSortedGroups(col("ts"), col("seq"), col("op"), col("value")) {
+        case ((rk, cfn, q), it) =>
+          val (ts, v, seq) = CellFold.column(it.map(r => (r._4, r._5, r._6, r._7)))
+          Iterator((rk, cfn, q, ts, v, seq))
+      }
+      .toDF("row_key", "cf", "qualifier", "ts", "value", "seq")
   }
 
   /** True when the log's physical plan already delivers its rows

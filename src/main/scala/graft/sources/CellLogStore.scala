@@ -217,7 +217,7 @@ object CellLogStore {
       ops: Option[Set[Int]] = None): Unit = {
     // the hint must describe THIS batch, not assume it is delete-free:
     // a replacement carrying tombstones with a 0 hint would steer
-    // resolve's "auto" to the broadcast-join path on an arbitrarily
+    // resolve to the broadcast-join path on an arbitrarily
     // delete-heavy log. A declared delete-free op-set skips the count;
     // otherwise the write job itself counts.
     val deleteFree = ops.exists(o => !OpType.deletes.exists(o.contains))
@@ -294,9 +294,10 @@ object CellLogStore {
     * driver-resident frame (a `LocalRelation`) reserves its row count
     * and is numbered on the driver, so it stays driver-resident and
     * commits with no Spark job. Any other frame reserves
-    * `numPartitions << 33` and is numbered by
-    * `monotonically_increasing_id`; learning its partition count plans
-    * it, and runs its shuffle stages when it has any. */
+    * `numPartitions << 33` and its rows are numbered `base +
+    * (partition << 33) + row index` in the very RDD whose partition
+    * count was read: learning that count runs the frame's shuffle
+    * stages when it has any, and the write reuses their output. */
   def withSeqs(frame: DataFrame, logDir: String): DataFrame = {
     val spark = frame.sparkSession
     frame.queryExecution.optimizedPlan match {
@@ -312,9 +313,14 @@ object CellLogStore {
               nullable = false))
         }
       case _ =>
-        val parts = frame.rdd.getNumPartitions max 1
-        frame.withColumn("seq", lit(reserveSeqs(spark, logDir,
-          parts.toLong << 33)) + monotonically_increasing_id())
+        val rows = frame.rdd
+        val base = reserveSeqs(spark, logDir, (rows.getNumPartitions max 1).toLong << 33)
+        spark.createDataFrame(
+          rows.mapPartitionsWithIndex { (p, it) =>
+            var seq = base + (p.toLong << 33) - 1
+            it.map { r => seq += 1; org.apache.spark.sql.Row.fromSeq(r.toSeq :+ seq) }
+          },
+          frame.schema.add("seq", org.apache.spark.sql.types.LongType, nullable = false))
     }
   }
 

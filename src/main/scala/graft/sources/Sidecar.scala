@@ -137,7 +137,7 @@ private[graft] object Sidecar {
   * ([[TableState.update]]).
   *
   * @param deleteCount tombstones in the log, when known — a strategy
-  *   hint for resolve's "auto" delete strategy on flat and LG logs,
+  *   hint for resolve's delete strategy on flat and LG logs,
   *   kept by the write path ([[CellLogStore.append]]). A table
   *   whose state predates the hint stays hint-less.
   * @param nextTxnTs the first unreserved batch-txn timestamp

@@ -577,6 +577,37 @@ class GraftApiSpec extends AnyFunSuite {
     assert(kvSet(c2, 35000000L) == Set(("a", "1b")))
   }
 
+  test("a KV put of a shuffled frame runs its shuffle once and numbers above the table") {
+    val dir = Files.createTempDirectory("graft-kv-shuffled").toString
+    val t = Graft.createKvTable(spark, dir)
+    t.put(Seq(("a", "1".getBytes, 0L), ("b", "2".getBytes, 0L)), nowUs = 1L)
+    val before = t.log.agg(max(col("seq"))).collect()(0).getLong(0)
+    // the repartition's map side is the only stage of 3 tasks
+    val frame = spark.range(0, 1000, 1, 3).repartition(2)
+      .select(concat(lit("k"), col("id").cast("string")).as("key"),
+        col("id").cast("string").cast("binary").as("value"))
+    val mapRuns = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(
+          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.numTasks == 3 &&
+            e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten > 0)
+          mapRuns.incrementAndGet()
+    }
+    org.apache.spark.sql.graft.Shim.waitListenerBus(spark)
+    spark.sparkContext.addSparkListener(listener)
+    val jobs =
+      try jobsDuring(t.put(frame, nowUs = 2L))
+      finally spark.sparkContext.removeSparkListener(listener)
+    assert(mapRuns.get() == 1, s"the repartition's map stage ran ${mapRuns.get()} times")
+    assert(jobs < 5, s"$jobs jobs")
+    info(s"$jobs jobs for a KV put of a repartitioned frame")
+    val seqs = t.log.where(col("key").startsWith("k")).select(col("seq"))
+      .collect().map(_.getLong(0))
+    assert(seqs.length == 1000 && seqs.distinct.length == 1000)
+    assert(seqs.min > before, s"seq ${seqs.min} not above $before")
+  }
+
   test("bucketed MIXED-op fold: streaming fold plans without a hash exchange") {
     val dir = Files.createTempDirectory("graft-bkt-mixed").toString
     val t = Graft.createTable(spark, dir, model.TableDesc(buckets = 4),

@@ -114,7 +114,8 @@ class PlanSpec extends AnyFunSuite {
         if (i % 10 == 0 || i % 7 == 0) null else s"v$i".getBytes, i.toLong)).toDF()
     val plan = planOf(Resolve.resolve(log, TableDesc(graft.model.CfSpec(maxVersions = 2)),
       opsPresent = Some(Set(OpType.Value, OpType.DelRow, OpType.DelQualifiers)),
-      deleteStrategy = "window"))
+      // a delete count past the join threshold takes the window
+      deleteCountHint = Some(100001L)))
     // one exchange for the local relation input: the row_key hash
     // partitioning satisfies every finer-keyed window downstream
     val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).size
@@ -128,8 +129,7 @@ class PlanSpec extends AnyFunSuite {
         s"v$i".getBytes, i.toLong)) :+
       CellOp("r1", "cf", "", 1000, OpType.DelRow, null, 1000L)).toDF()
     val plan = planOf(Resolve.resolve(log,
-      opsPresent = Some(Set(OpType.Value, OpType.DelRow)),
-      deleteStrategy = "join"))
+      opsPresent = Some(Set(OpType.Value, OpType.DelRow))))
     assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastNestedLoopJoin"),
       plan)
   }
@@ -147,8 +147,8 @@ class PlanSpec extends AnyFunSuite {
       CellOp("r007", "", "", 2L, OpType.DelRow, null, 300L),
       CellOp("r042", "cf", "q0", 2L, OpType.DelQualifiers, null, 301L)).toDF())
 
-    // the bucketed scan is already clustered on row_key, so "auto"
-    // resolves the tombstones in the ordered window: no hash exchange,
+    // the bucketed scan is already clustered on row_key, so resolve
+    // drops tombstoned cells in the ordered window: no hash exchange,
     // no BroadcastExchange, one scan pruned to the key's bucket
     val gets = Seq(
       "get" -> t.get("r042"),

@@ -140,9 +140,11 @@ class ResolveFuzzSpec extends AnyFunSuite {
       val snapshot = if (rng.nextInt(4) == 0) Some(n.toLong / 2) else None
 
       // alternate tombstone strategies (window / join): both must match
-      // the reference exactly
-      val got = Resolve.resolve(log.toDF(), desc, nowUs, snapshot,
-          deleteStrategy = if (trial % 3 == 0) "window" else "join")
+      // the reference exactly. A log clustered on row_key takes the
+      // window; the probe's small delete count takes the join.
+      val got = Resolve.resolve(
+          if (trial % 3 == 0) log.toDF().repartition(col("row_key")) else log.toDF(),
+          desc, nowUs, snapshot)
         .collect().map { r =>
           (r.getString(0), r.getString(1), r.getString(2), r.getLong(3),
             Option(r.getAs[Array[Byte]]("value")).map(_.toSeq))
@@ -182,12 +184,12 @@ class ResolveFuzzSpec extends AnyFunSuite {
     }
   }
 
-  /** Restricted-op generator exercising the counter fold fast paths
-    * (pure sum / seeded sum): mixes of {Add}, {AddInt64}, {Value, Add},
+  /** Restricted-op generator exercising the counter folds (the pure
+    * sum and the streamed fold): mixes of {Add}, {AddInt64}, {Value, Add},
     * {Value, AddInt64}, optionally with deletes, and VALUE seeds that are
     * canonical 8-byte ints half the time and arbitrary strings the other
     * half (the general fold passes a trailing VALUE's bytes through
-    * verbatim — the fast path must too).
+    * verbatim — every form must too).
     */
   private def counterMixLog(rng: scala.util.Random, n: Int,
       mix: Seq[Int]): Seq[CellOp] = {
@@ -337,12 +339,15 @@ class ResolveFuzzSpec extends AnyFunSuite {
     }
   }
 
-  /** Spark resolve, as reference tuples. */
+  /** Spark resolve, as reference tuples. `strategy` "window" reads the
+    * log clustered on row_key, which takes the window tombstone
+    * strategy; any other value reads it as is (a small log: join). */
   private def sparkCells(log: Seq[CellOp], desc: TableDesc = TableDesc(),
       ops: Option[Set[Int]] = None, strategy: String = "auto")
       : Set[(String, String, String, Long, Option[Seq[Byte]])] = {
     import spark.implicits._
-    Resolve.resolve(log.toDF(), desc, opsPresent = ops, deleteStrategy = strategy)
+    val input = if (strategy == "window") log.toDF().repartition(col("row_key")) else log.toDF()
+    Resolve.resolve(input, desc, opsPresent = ops)
       .collect().map { r =>
         (r.getString(0), r.getString(1), r.getString(2), r.getLong(3),
           Option(r.getAs[Array[Byte]]("value")).map(_.toSeq))
@@ -437,5 +442,36 @@ class ResolveFuzzSpec extends AnyFunSuite {
     val plan = Resolve.resolve(logs.head._2.toDF(), opsPresent = Some(Set(Add)))
       .queryExecution.executedPlan.toString
     assert(plan.contains("partial_sum") && !plan.contains("Window"), plan)
+  }
+
+  test("bucketed {Value, Add} table with a null operand: every read agrees with the reference") {
+    val be = Codecs.encodeBE64 _
+    val log = Seq(
+      CellOp("r", "cf", "q", 1L, Value, be(10L), 1L),
+      CellOp("r", "cf", "q", 2L, Add, be(1L), 2L),
+      CellOp("r", "cf", "q", 3L, Add, null, 3L),
+      CellOp("r", "cf", "q", 4L, Add, be(4L), 4L),
+      CellOp("r", "cf", "p", 1L, Add, be(7L), 5L),
+      CellOp("r", "cf", "v", 1L, Value, "plain".getBytes, 6L),
+      CellOp("s", "cf", "q", 1L, Value, be(3L), 7L),
+      CellOp("s", "cf", "q", 2L, Add, be(2L), 8L),
+      CellOp("s", "cf", "n", 1L, Add, null, 9L))
+    val dir = java.nio.file.Files.createTempDirectory("fuzz-value-add").toString
+    val t = Graft.createTable(spark, dir, TableDesc(buckets = 2), Some(Set(Value, Add)))
+    t.put(log)
+    def cells(rows: Array[org.apache.spark.sql.Row]) = rows.map { r =>
+      (r.getString(0), r.getString(1), r.getString(2), r.getLong(3),
+        Option(r.getAs[Array[Byte]]("value")).map(_.toSeq))
+    }.toSet
+    Seq("r", "s", "absent").foreach { k =>
+      val driver = cells(t.get(k).collect())
+      assert(driver == cells(t.get(k).rdd.collect()), k)
+      assert(driver == cells(t.cells().where(col("row_key") === k).collect()), k)
+      assert(driver == refResolve(log.filter(_.row_key == k), TableDesc(), Long.MaxValue, None), k)
+    }
+    // the streamed fold reads the bucketed scan with no exchange
+    val plan = t.cells().queryExecution.executedPlan.toString
+    assert(plan.contains("MapGroups"), plan)
+    assert(!plan.contains("Exchange hashpartitioning"), plan)
   }
 }

@@ -195,4 +195,15 @@ class ResolveSpec extends AnyFunSuite {
     val q1 = cells("cf")("q1")
     assert(q1.map(_.getLong(0)).toSeq == Seq(20L, 10L))
   }
+
+  test("resolving a declared-op log with tombstones and no hint starts no Spark job until it runs") {
+    val dir = java.nio.file.Files.createTempDirectory("resolve-plan-jobs").toString
+    df(v("r1", "q", 10, 1, "a"), del(DelRow, "r1", "", 10, 2), v("r2", "q", 10, 3, "b"))
+      .write.mode("overwrite").parquet(dir)
+    val log = spark.read.parquet(dir)
+    val (res, jobs) = JobCount.during(spark)(
+      Resolve.resolve(log, opsPresent = Some(Set(Value, DelRow))))
+    assert(jobs == 0, s"$jobs jobs while the plan was built")
+    assert(visible(res) == Set(("r2", "cf", "q", 10L, "b")))
+  }
 }

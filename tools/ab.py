@@ -11,7 +11,10 @@ own CARGO_TARGET_DIR (<build-root>/parent, <build-root>/change), so
 neither recompiles the other. For every end-to-end metric that
 BENCHMARK.json (of the change checkout) declares, prints the two
 medians, the parent's interquartile range, the change's wins out of N
-and the failed-op totals of each side. Exits 1 when any run exits
+and the failed-op totals of each side. For the op kinds get,
+snapshot_get, scan and put it also prints each side's median `p50_ms`,
+read from the `counts` of run.py's details line (the line before the
+result), where the workload reports them. Exits 1 when any run exits
 non-zero or reports an incorrect result.
 """
 import argparse
@@ -22,21 +25,28 @@ import subprocess
 import sys
 
 
+OP_KINDS = ("get", "snapshot_get", "scan", "put")
+
+
 def run_side(checkout, build_dir, workload, seed, seconds):
-    """One run of perfbench/run.py in `checkout`: (exit code, result or None)."""
+    """One run of perfbench/run.py in `checkout`: (exit code, result or
+    None, the details line's counts or {})."""
     env = dict(os.environ, CARGO_TARGET_DIR=build_dir)
     proc = subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", workload,
          "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
         cwd=checkout, env=env, capture_output=True, text=True)
     lines = proc.stdout.strip().splitlines()
-    try:
-        result = json.loads(lines[-1]) if lines else None
-    except json.JSONDecodeError:
-        result = None
+
+    def parse(i):
+        try:
+            return json.loads(lines[i]) if len(lines) >= -i else None
+        except json.JSONDecodeError:
+            return None
+    result, detail = parse(-1), parse(-2)
     if proc.returncode != 0:
         sys.stderr.write(proc.stderr[-3000:])
-    return proc.returncode, result
+    return proc.returncode, result, (detail or {}).get("counts") or {}
 
 
 def quartiles(xs):
@@ -64,16 +74,18 @@ def main():
         bench = json.load(f)
 
     runs = {"parent": [], "change": []}
+    counts = {"parent": [], "change": []}
     ok = True
     for i in range(args.pairs):
         order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
         for side in order:
             build = os.path.abspath(os.path.join(args.build_root, side))
-            code, res = run_side(sides[side], build, args.workload, args.seed,
-                                 args.seconds)
+            code, res, cnt = run_side(sides[side], build, args.workload,
+                                      args.seed, args.seconds)
             correct = res is not None and res.get("correct") is True
             ok = ok and code == 0 and correct
             runs[side].append(res)
+            counts[side].append(cnt)
             print(f"pair {i + 1} {side}: exit {code}, correct {correct}, "
                   f"failed {res and res.get('failed')}", file=sys.stderr)
 
@@ -98,6 +110,13 @@ def main():
               f"change {statistics.median(chg):10.4g}  "
               f"parent IQR {q3 - q1:8.3g}  change wins {wins}/{len(pairs)}  "
               f"({m['better']} is better)")
+    for kind in OP_KINDS:
+        key = f"{kind}.p50_ms"
+        vals = {s: [c[key] for c in counts[s] if key in c] for s in counts}
+        if vals["parent"] and vals["change"]:
+            print(f"  {key:18s} parent {statistics.median(vals['parent']):10.4g}  "
+                  f"change {statistics.median(vals['change']):10.4g}  "
+                  f"(median of {len(vals['parent'])}/{len(vals['change'])} runs)")
     return 0 if ok else 1
 
 
