@@ -1,17 +1,13 @@
 package graft
 
-import java.nio.charset.StandardCharsets.UTF_8
-
 import graft.model.{CellOp, OpType, TableDesc}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import graft.operators.{CellFold, Resolve, ScanFilter, ScanQuery}
+import graft.operators.{CellFold, CellRead, Resolve, ScanFilter, ScanQuery}
 import graft.sources.{CellLogStore, TableState, Tables}
 import graft.streaming.Observers
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.{PointGet, SortedRunsCollect}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.graft.SortedRunsCollect
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -59,7 +55,7 @@ class GraftTable(
   def scan: ScanQuery = {
     val src = source
     ScanQuery(src.log, desc, opsPresent = opsPresent,
-      deleteCountHint = src.deleteHint, lgRead = src.lgRead)
+      deleteCountHint = src.deleteHint, table = Some(src))
   }
 
   /** Storage form of a logical row key: murmur-hex-prefixed on a
@@ -83,38 +79,16 @@ class GraftTable(
   }
 
   /** The resolved cells of one storage key (a String, or a binary key's
-    * bytes). On a bucketed table the frame is one [[PointGet]] leaf over
+    * bytes). On a bucketed table the frame is one [[CellRead]] leaf over
     * the files listed now: its `collect()` reads the key's bucket on the
     * driver ([[graft.sources.DriverRead]]) and folds the row with
     * [[CellFold]], with no Spark job; every other consumer runs the
     * bucket-pruned resolve plan over the same files. */
-  private def pointGet(key: Any): DataFrame = {
-    val src = source
-    def resolved: DataFrame = Resolve.resolve(src.log, desc,
-        opsPresent = opsPresent, deleteCountHint = src.deleteHint)
-      .where(col("row_key") === lit(key))
-    if (src.desc.buckets == 0) resolved
-    else {
-      val (keyValue, keyBytes) = key match {
-        case s: String => (UTF8String.fromString(s), s.getBytes(UTF_8))
-        case b: Array[Byte] => (b, b)
-      }
-      def onDriver(): Seq[InternalRow] = {
-        val ops = src.pointRows(keyValue, keyBytes).map { r =>
-          def str(i: Int) = if (r.isNullAt(i)) null else r.getUTF8String(i).toString
-          CellFold.Op(str(1), str(2), r.getLong(3), r.getInt(4), r.getBinary(5),
-            r.getLong(6))
-        }
-        CellFold.row(ops, desc, present = opsPresent).map(c =>
-          InternalRow(keyValue, UTF8String.fromString(c.cf),
-            UTF8String.fromString(c.qualifier), c.ts, c.value, c.seq))
-      }
-      PointGet.frame(spark,
-        StructType(src.schema.filter(_.name != "op").map(_.copy(nullable = true))),
-        src.log.queryExecution.analyzed.stats.sizeInBytes,
-        () => onDriver(), () => resolved)
-    }
-  }
+  private def pointGet(key: Any): DataFrame =
+    CellRead.frame(source, desc, opsPresent, None, Long.MaxValue, CellRead.Point(key match {
+      case s: String => UTF8String.fromString(s)
+      case b: Array[Byte] => b
+    }))
 
   /** Wide-row view of a point get (`RowReader::ToMap`). */
   def getRow(rowKey: String): DataFrame =
@@ -165,12 +139,16 @@ class GraftTable(
   def allocateTxnTs(n: Int = 1): Long =
     CellLogStore.allocateTxnTs(spark, logDir, n)
 
-  /** Time-travel read bound by sequence number (tera snapshots). */
-  def snapshot(seq: Long): DataFrame = {
-    val src = source
-    Resolve.resolve(src.log, desc, snapshotSeq = Some(seq),
-      opsPresent = opsPresent, deleteCountHint = src.deleteHint)
-  }
+  /** Time-travel read bound by sequence number (tera snapshots). On a
+    * bucketed table the frame is one [[CellRead]] leaf over the files
+    * listed now: a `collect()` of it filtered to one key
+    * (`.where(col("row_key") === k)`, any other conjuncts and
+    * projections on top) reads the key's bucket on the driver and folds
+    * the row as of `seq`, with no Spark job; every other consumer runs
+    * the resolve plan over the same files, bucket-pruned by such a
+    * filter. */
+  def snapshot(seq: Long): DataFrame =
+    CellRead.frame(source, desc, opsPresent, Some(seq), Long.MaxValue, CellRead.AnyKey)
 
   /** Background compaction into `outDir` (physically applies folds,
     * drops dead versions — keeps read amplification bounded). */

@@ -1,10 +1,17 @@
 package graft.operators
 
+import java.nio.charset.StandardCharsets
+
 import graft.functions.cellfunctions._
 import graft.model.TableDesc
+import graft.sources.{CellLogStore, DriverRead}
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CellReadExec
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Typed constants for value filters — the engine-side equivalent of the
   * reference's typed comparators (tera include/tera/filter_comparator.h:
@@ -126,7 +133,7 @@ object ScanFilter {
   * post-filter → max_qualifiers → limit.
   */
 case class ScanQuery(
-    log: ScanQuery.LogRef,
+    log: DataFrame,
     desc: TableDesc = TableDesc(),
     startKey: Option[String] = None,
     stopKey: Option[String] = None,
@@ -174,12 +181,12 @@ case class ScanQuery(
       * identical; [[withLimit]] keeps its reference semantics (first k
       * in key order) only while `ordered` stays true. */
     ordered: Boolean = true,
-    /** LG-pruned log source for an LG-partitioned table: given the LG
-      * names a projected scan touches, returns the log restricted to
-      * those LG partition directories (plus the row-tombstone LG) —
-      * [[graft.sources.CellLogStore.Source]]. `None` = single-LG
-      * layout, `log` is the whole table. */
-    lgRead: Option[Seq[String] => DataFrame] = None) {
+    /** The stored table `log` reads ([[graft.sources.CellLogStore.Source]]),
+      * when the scan is a table's: an LG-partitioned table's projected
+      * scan reads only the LG directories it needs, and a key-bound
+      * scan of a bucketed table is answered on the driver when
+      * collected ([[CellRead]]). `None`: `log` is an ad-hoc frame. */
+    table: Option[CellLogStore.Source] = None) {
 
   def withStart(k: String): ScanQuery = copy(startKey = Some(k))
   def withStop(k: String): ScanQuery = copy(stopKey = Some(k))
@@ -232,42 +239,85 @@ case class ScanQuery(
     * non-point [start, stop) range selects a hashed-space range, not a
     * logical one. For exact single-row reads use [[forRow]], which
     * takes the successor in storage space.
+    *
+    * A key-bound scan (start, stop, point or resume-after-key; not
+    * [[afterPage]]) of a bucketed table's `scan` is one [[CellRead]]
+    * leaf under the key sort and limit: its `collect()` reads the range
+    * from every bucket's files on the driver, folds each row with
+    * [[CellFold.row]] and applies the row steps, with no Spark job,
+    * unless the range's pages hold more than [[CellRead.MaxRangeRows]]
+    * rows. Every other consumer (`count`, `rdd`, joins) and every other
+    * scan runs the Spark plan.
     */
-  /** CFs a filter tree's verdict reads (it may look at columns OUTSIDE
-    * the projection — P9 evaluates the filter before projecting). */
-  private def filterCfs(f: ScanFilter): Seq[String] = f match {
-    case ScanFilter.And(cs) => cs.flatMap(filterCfs)
-    case ScanFilter.Or(cs)  => cs.flatMap(filterCfs)
-    case ScanFilter.ValueFilter(cf, _, _, _, _) => Seq(cf)
-    case ScanFilter.ValueRegex(cf, _, _, _)     => Seq(cf)
-    case ScanFilter.ValueSubstring(cf, _, _, _) => Seq(cf)
-    case ScanFilter.RowKeyPrefix(_)             => Nil
+  def run(): DataFrame = {
+    val cells = driverRead.getOrElse(resolvedCells())
+    // O1 key order (a limit then plans TakeOrdered); the unordered
+    // opt-out keeps bulk scans shuffle-free — the store's range-
+    // clustered files already carry per-file key order
+    val finalDf =
+      if (ordered)
+        cells.orderBy(col("row_key"), col("cf"), col("qualifier"), col("ts").desc)
+      else cells
+    limitRows.fold(finalDf)(finalDf.limit)
   }
 
-  def run(): DataFrame = {
+  /** A table's key-bound scan (a start, stop, point or resume-after-key
+    * bound; not [[afterPage]]): on a bucketed table one [[CellRead]]
+    * leaf, whose root collect reads the range on the driver. */
+  private def driverRead: Option[DataFrame] =
+    table.filter(_ => keyBounds.nonEmpty && resumeAfterPage.isEmpty)
+      .map(CellRead.frame(_, desc, opsPresent, snapshotSeq, nowUs, CellRead.Range(this)))
+
+  private def storageKey: String => String =
+    if (desc.hashKeys) graft.functions.Codecs.hashedKey else identity
+
+  private def utf8(k: String): Array[Byte] = k.getBytes(StandardCharsets.UTF_8)
+
+  /** The key bounds of this scan, as the driver read applies them: the
+    * same storage-space bounds [[resolvedCells]] prunes the log by. */
+  private[operators] def keyBounds: Seq[DriverRead.Bound] = {
+    import DriverRead.Bound._
+    startKey.map(k => AtLeast(utf8(storageKey(k)))).toSeq ++
+      stopKey.map(k => Below(utf8(storageKey(k)))) ++
+      pointKey.toSeq.flatMap(k => Seq(AtLeast(utf8(storageKey(k))),
+        Below(utf8(storageKey(k) + "\u0000")))) ++
+      startKeyBin.map(AtLeast) ++ stopKeyBin.map(Below) ++
+      pointKeyBin.toSeq.flatMap(k => Seq(AtLeast(k), Below(k :+ 0.toByte))) ++
+      resumeAfterKey.map(k => Above(utf8(k))) ++ resumeAfterKeyBin.map(Above)
+  }
+
+  /** The one key a point scan holds (its bucket's files hold it). */
+  private[operators] def keyPoint: Option[Any] =
+    pointKey.map(k => UTF8String.fromString(storageKey(k))).orElse(pointKeyBin)
+
+  /** The resolved cells of the scan, its row steps applied, before the
+    * key order and limit: the Spark plan. */
+  private[operators] def resolvedCells(): DataFrame = {
     // LG pruning FIRST: a projected scan of an LG-partitioned table
     // reads only the LG directories holding its CFs — projection plus
     // any CFs the row filter's verdict needs (tera opens only those
     // LGs' LevelDBs, src/io/tablet_io.cc:1018-1024)
     val projCfs = cfSet ++ columnSet.map(_._1)
-    val source = lgRead match {
+    val source = table.flatMap(_.lgRead) match {
       case Some(readPruned) if projCfs.nonEmpty =>
-        val needCfs = (projCfs ++ rowFilter.toSeq.flatMap(filterCfs)).distinct
+        // plus the CFs the verdict reads (it may look at columns OUTSIDE
+        // the projection — P9 evaluates the filter before projecting)
+        val filterCfs = rowFilter.toSeq.flatMap(ScanQuery.leaves)
+          .flatMap(ScanQuery.test(_)._1.map(_._1))
+        val needCfs = (projCfs ++ filterCfs).distinct
         readPruned(needCfs.map(desc.lgOf).distinct)
-      case _ => log.df
+      case _ => log
     }
 
     // row-range predicates prune BEFORE resolve: every op of a row shares
     // its row_key, so the bound commutes with resolution and reaches the
     // parquet scan as a pushed filter.
-    val bound: String => String =
-      if (desc.hashKeys) graft.functions.Codecs.hashedKey else identity
     var pruned = source
-    startKey.foreach(k => pruned = pruned.where(col("row_key") >= bound(k)))
-    stopKey.foreach(k => pruned = pruned.where(col("row_key") < bound(k)))
+    startKey.foreach(k => pruned = pruned.where(col("row_key") >= storageKey(k)))
+    stopKey.foreach(k => pruned = pruned.where(col("row_key") < storageKey(k)))
     pointKey.foreach { k =>
-      pruned = pruned.where(col("row_key") >= bound(k) &&
-        col("row_key") < bound(k) + "\u0000")
+      pruned = pruned.where(col("row_key") >= storageKey(k) &&
+        col("row_key") < storageKey(k) + "\u0000")
     }
 
     // binary bounds: literal byte comparisons — Spark BinaryType order
@@ -340,56 +390,23 @@ case class ScanQuery(
       case None => resolved
       case Some(f) =>
         val wRow = Window.partitionBy(col("row_key"))
-        def columnVerdict(cf: String, q: String, pred: Column,
-            ifMissing: Boolean): Column = {
-          val isTarget = col("cf") === cf && col("qualifier") === q
-          val present = max(when(isTarget, 1).otherwise(0)).over(wRow) === 1
-          val ok = max(when(isTarget && pred, 1).otherwise(0)).over(wRow) === 1
-          when(present, ok).otherwise(lit(!ifMissing))
+        val leaves = ScanQuery.leaves(f).map { leaf =>
+          val (target, pred, ifMissing) = ScanQuery.test(leaf)
+          target.fold(pred) { case (cf, q) =>
+            val isTarget = col("cf") === cf && col("qualifier") === q
+            val present = max(when(isTarget, 1).otherwise(0)).over(wRow) === 1
+            val ok = max(when(isTarget && pred, 1).otherwise(0)).over(wRow) === 1
+            when(present, ok).otherwise(lit(!ifMissing))
+          }
         }
-        // byte-preserving cast, not decode(): one non-UTF-8 cell in the
-        // column must not error the scan (ANSI decode throws); regex /
-        // substring then see the replacement-char rendering, matching
-        // the reference's byte-level filters on binary content
-        def utf8(c: Column): Column = c.cast("string")
-        def verdict(node: ScanFilter): Column = node match {
-          case ScanFilter.And(cs) => cs.map(verdict).reduce(_ && _)
-          case ScanFilter.Or(cs)  => cs.map(verdict).reduce(_ || _)
-          case ScanFilter.ValueFilter(cf, q, cmp, tv, ifMissing) =>
-            val decoded = tv.decode(col("value"))
-            val pred = cmp match {
-              case "<"  => decoded < tv.literal
-              case "<=" => decoded <= tv.literal
-              case "==" => decoded === tv.literal
-              case "!=" => decoded =!= tv.literal
-              case ">=" => decoded >= tv.literal
-              case ">"  => decoded > tv.literal
-            }
-            columnVerdict(cf, q, pred, ifMissing)
-          case ScanFilter.RowKeyPrefix(p) => col("row_key").startsWith(p)
-          case ScanFilter.ValueRegex(cf, q, pat, ifMissing) =>
-            columnVerdict(cf, q, utf8(col("value")).rlike(pat), ifMissing)
-          case ScanFilter.ValueSubstring(cf, q, sub, ifMissing) =>
-            columnVerdict(cf, q, utf8(col("value")).contains(sub), ifMissing)
-        }
-        resolved.withColumn("_pass", verdict(f)).where(col("_pass")).drop("_pass")
+        resolved.withColumn("_pass",
+          ScanQuery.verdict[Column](f, leaves.iterator, _ && _, _ || _))
+          .where(col("_pass")).drop("_pass")
     }
 
     // projection AFTER the verdict: the filter saw the whole row
-    val projected = (cfSet, columnSet) match {
-      case (Nil, Nil) => filtered
-      case (cfs, cols) =>
-        val cfPred = if (cfs.isEmpty) lit(false) else col("cf").isin(cfs: _*)
-        val colPred =
-          if (cols.isEmpty) lit(false)
-          else cols.map { case (cf, q) => col("cf") === cf && col("qualifier") === q }
-            .reduce(_ || _)
-        filtered.where(cfPred || colPred)
-    }
-
-    val timed = tsRange.fold(projected) { case (from, to) =>
-      projected.where(col("ts").between(from, to))
-    }
+    val projected = projection.fold(filtered)(filtered.where)
+    val timed = timeRange.fold(projected)(projected.where)
 
     // Cross-page semantics under afterPage: the rank is computed over
     // the cells REMAINING after the resume cut, so a page boundary
@@ -401,37 +418,126 @@ case class ScanQuery(
     // mid-row while its version cap does not (ours likewise: resolve
     // sees the boundary row IN FULL, so maxVersions stays exact).
     // Covered by "maxQualifiers across an afterPage boundary" spec.
-    val qualCapped = maxQualifiers.fold(timed) { k =>
+    maxQualifiers.fold(timed) { k =>
       val wq = Window.partitionBy(col("row_key"), col("cf")).orderBy(col("qualifier"))
       timed.withColumn("_qrank", dense_rank().over(wq))
         .where(col("_qrank") <= k)
         .drop("_qrank")
     }
+  }
 
-    // O1 key order (a limit then plans TakeOrdered); the unordered
-    // opt-out keeps bulk scans shuffle-free — the store's range-
-    // clustered files already carry per-file key order
-    val finalDf =
-      if (ordered)
-        qualCapped.orderBy(col("row_key"), col("cf"), col("qualifier"),
-          col("ts").desc)
-      else qualCapped
-    limitRows.fold(finalDf)(finalDf.limit)
+  /** The cf/column projection's cell predicate. */
+  private def projection: Option[Column] = (cfSet, columnSet) match {
+    case (Nil, Nil) => None
+    case (cfs, cols) =>
+      val cfPred = if (cfs.isEmpty) lit(false) else col("cf").isin(cfs: _*)
+      val colPred =
+        if (cols.isEmpty) lit(false)
+        else cols.map { case (cf, q) => col("cf") === cf && col("qualifier") === q }
+          .reduce(_ || _)
+      Some(cfPred || colPred)
+  }
+
+  /** The time range's cell predicate. */
+  private def timeRange: Option[Column] =
+    tsRange.map { case (from, to) => col("ts").between(from, to) }
+
+  /** The row steps of [[resolvedCells]] on the driver, as a function of
+    * one row's folded cells (cell rows of `schema`: row_key, cf,
+    * qualifier, ts, value, seq), in the scan loop's order: verdict,
+    * projection, time range, qualifier cap. The verdict's leaf tests and
+    * the projection and time predicates are the Catalyst expressions
+    * the Spark plan evaluates, bound to the cell row. */
+  private[operators] def rowSteps(schema: StructType): Seq[InternalRow] => Seq[InternalRow] = {
+    val leaves = rowFilter.toSeq.flatMap(ScanQuery.leaves).map(ScanQuery.test)
+    val cellPreds = projection.toSeq ++ timeRange
+    val tests = CellReadExec.boundTests(log.sparkSession, schema,
+      leaves.map(_._2) ++ cellPreds)
+    val columns = leaves.map(_._1.map { case (cf, q) =>
+      (UTF8String.fromString(cf), UTF8String.fromString(q)) })
+    def isTrue(r: InternalRow, i: Int) = !r.isNullAt(i) && r.getBoolean(i)
+    cells => {
+      val row = cells.toIndexedSeq
+      val results = row.map(tests)
+      def leaf(n: Int): Boolean = columns(n) match {
+        case None => isTrue(results.head, n)
+        case Some((cf, q)) =>
+          val targets = results.indices.filter(c =>
+            row(c).getUTF8String(1) == cf && row(c).getUTF8String(2) == q)
+          if (targets.isEmpty) !leaves(n)._3 else targets.exists(c => isTrue(results(c), n))
+      }
+      if (row.isEmpty || !rowFilter.forall(f =>
+          ScanQuery.verdict[Boolean](f, leaves.indices.iterator.map(leaf), _ && _, _ || _))) Nil
+      else {
+        val kept: Seq[InternalRow] = results.indices.filter(c =>
+          cellPreds.indices.forall(p => isTrue(results(c), leaves.length + p))).map(row)
+        maxQualifiers.fold(kept)(k => ScanQuery.capQualifiers(kept, k))
+      }
+    }
   }
 }
 
 object ScanQuery {
-  /** Lazily-resolved log source. A parquet `DataFrame` lists its files
-    * at CONSTRUCTION, so an eager field would charge every builder for
-    * a full-table listing even when `run()` takes the LG-pruned branch
-    * and reads only a subset of partition directories — on an object
-    * store with many files that listing is the expensive part. The
-    * by-name conversion keeps every existing `ScanQuery(df, ...)` call
-    * site source-compatible while deferring the listing to first use.
-    */
-  final class LogRef(thunk: () => DataFrame) {
-    lazy val df: DataFrame = thunk()
+
+  /** A filter tree's leaves, left to right. */
+  private def leaves(f: ScanFilter): Seq[ScanFilter] = f match {
+    case ScanFilter.And(cs) => cs.flatMap(leaves)
+    case ScanFilter.Or(cs) => cs.flatMap(leaves)
+    case leaf => Seq(leaf)
   }
-  import scala.language.implicitConversions
-  implicit def logRef(df: => DataFrame): LogRef = new LogRef(() => df)
+
+  /** A filter tree's verdict from its leaves' verdicts, given left to
+    * right. */
+  private def verdict[A](f: ScanFilter, leafVerdicts: Iterator[A],
+      and: (A, A) => A, or: (A, A) => A): A = f match {
+    case ScanFilter.And(cs) => cs.map(verdict(_, leafVerdicts, and, or)).reduce(and)
+    case ScanFilter.Or(cs) => cs.map(verdict(_, leafVerdicts, and, or)).reduce(or)
+    case _ => leafVerdicts.next()
+  }
+
+  /** A filter leaf's test: the (cf, qualifier) column whose cells it
+    * tests (None: a test of the row key, which every cell carries), its
+    * predicate over a cell, and its verdict when the row has no cell in
+    * that column. */
+  private def test(leaf: ScanFilter): (Option[(String, String)], Column, Boolean) = {
+    // byte-preserving cast, not decode(): one non-UTF-8 cell in the
+    // column must not error the scan (ANSI decode throws); regex /
+    // substring then see the replacement-char rendering, matching
+    // the reference's byte-level filters on binary content
+    def utf8(c: Column): Column = c.cast("string")
+    leaf match {
+      case ScanFilter.ValueFilter(cf, q, cmp, tv, ifMissing) =>
+        val decoded = tv.decode(col("value"))
+        val pred = cmp match {
+          case "<"  => decoded < tv.literal
+          case "<=" => decoded <= tv.literal
+          case "==" => decoded === tv.literal
+          case "!=" => decoded =!= tv.literal
+          case ">=" => decoded >= tv.literal
+          case ">"  => decoded > tv.literal
+        }
+        (Some((cf, q)), pred, ifMissing)
+      case ScanFilter.RowKeyPrefix(p) => (None, col("row_key").startsWith(p), false)
+      case ScanFilter.ValueRegex(cf, q, pat, ifMissing) =>
+        (Some((cf, q)), utf8(col("value")).rlike(pat), ifMissing)
+      case ScanFilter.ValueSubstring(cf, q, sub, ifMissing) =>
+        (Some((cf, q)), utf8(col("value")).contains(sub), ifMissing)
+      case _: ScanFilter.And | _: ScanFilter.Or =>
+        throw new IllegalArgumentException(s"not a filter leaf: $leaf")
+    }
+  }
+
+  /** One row's cells (cell rows) whose qualifier ranks among the first
+    * `k` of its cf, qualifiers ranked ascending with null first — the
+    * Spark plan's `dense_rank` over (row_key, cf) ordered by qualifier. */
+  private def capQualifiers(cells: Seq[InternalRow], k: Int): Seq[InternalRow] = {
+    val order: Ordering[UTF8String] = Ordering.fromLessThan[UTF8String] {
+      (a, b) => b != null && (a == null || a.compareTo(b) < 0)
+    }
+    val kept = cells.groupBy(c => Option(c.getUTF8String(1))).values.flatMap { cf =>
+      cf.map(_.getUTF8String(2)).distinct.sorted(order).take(k)
+        .map(q => (Option(cf.head.getUTF8String(1)), Option(q)))
+    }.toSet
+    cells.filter(c => kept((Option(c.getUTF8String(1)), Option(c.getUTF8String(2)))))
+  }
 }

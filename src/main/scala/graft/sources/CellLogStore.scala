@@ -37,7 +37,7 @@ object CellLogStore {
     * with `TableDesc(rawKeyBinary = true)` is not silently read through
     * the string schema. Nothing is listed before a read asks for it,
     * and the directory is probed at most once. */
-  final class Source private[CellLogStore] (spark: SparkSession,
+  final class Source private[CellLogStore] (val spark: SparkSession,
       logDir: String, val stored: Option[TableState], fallback: TableDesc) {
 
     /** The layout descriptor: the stored one, or the fallback's key mode
@@ -60,26 +60,46 @@ object CellLogStore {
     /** The log schema (cell or KV, string or binary keys). */
     def schema: StructType = layout.schema
 
-    /** The whole log. Built on first use: a parquet read lists its files
-      * when it is built, and a pruned read needs no full listing. */
+    private lazy val conf = spark.sessionState.newHadoopConf()
+
+    /** A bucketed log's data files: one listing, made on first use and
+      * shared by every read of this source — the driver reads and the
+      * Spark plan's file index alike. */
+    private lazy val listing: LogLayout.Listing = LogLayout.list(conf, logDir)
+
+    /** An LG-partitioned log with its `lg` column: one listing, shared by
+      * the whole log and every LG-pruned read. */
+    private lazy val lgLog: DataFrame = layout.readLgs(spark, logDir)
+
+    /** The whole log. Built on first use: a flat read lists its files
+      * when it is built, a bucketed one reads [[listing]]. */
     lazy val log: DataFrame =
-      if (lgPartitioned) layout.readLgs(spark, logDir, None)
+      if (lgPartitioned) layout.pruneLgs(lgLog, None)
+      else if (desc.buckets > 0) layout.read(spark, listing)
       else layout.read(spark, logDir)
 
     /** On an LG-partitioned log, a reader pruned to the named LGs
-      * ([[LogLayout.readLgs]]). */
+      * ([[LogLayout.pruneLgs]]). */
     def lgRead: Option[Seq[String] => DataFrame] =
       Option.when(lgPartitioned)((wanted: Seq[String]) =>
-        layout.readLgs(spark, logDir, Some(wanted)))
+        layout.pruneLgs(lgLog, Some(wanted)))
 
-    /** On a bucketed log, the rows whose key is `key` (a `UTF8String`
-      * or a binary key's bytes; `keyBytes` its bytes), read on the
-      * driver from the files of its bucket in [[log]]'s listing. */
-    def pointRows(key: Any, keyBytes: Array[Byte]): Seq[InternalRow] = {
-      val bucket = LogLayout.bucketOf(layout.schema(layout.key).dataType,
-        desc.buckets)(key)
-      DriverRead.rows(spark, layout.bucketFiles(log, bucket), layout.schema,
-        layout.key, keyBytes)
+    /** The bytes of a bucketed log's files, from its listing (taking it
+      * now, when no read has). */
+    def sizeInBytes: BigInt = listing.files.iterator.map(f => BigInt(f.getLen)).sum
+
+    /** On a bucketed log, its rows whose key passes every one of
+      * `bounds`, read on the driver ([[DriverRead]]) from the files of
+      * [[listing]]: all of them, or only the bucket of `point` (a
+      * `UTF8String` or a binary key's bytes) when the bounds hold that
+      * one key. None when the rows of the pages the bounds keep number
+      * more than `maxRows`. */
+    def keyRows(bounds: Seq[DriverRead.Bound], point: Option[Any],
+        maxRows: Long = Long.MaxValue): Option[Seq[InternalRow]] = {
+      val bucket = point.map(LogLayout.bucketOf(layout.schema(layout.key).dataType,
+        desc.buckets))
+      DriverRead.rows(conf, LogLayout.bucketFiles(listing.files, bucket), layout.schema,
+        layout.key, bounds, maxRows)
     }
 
     /** The log as a change feed: a file stream in the log's schema. */

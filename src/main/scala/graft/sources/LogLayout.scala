@@ -1,13 +1,15 @@
 package graft.sources
 
 import graft.model.{CellOp, KvEntry, OpType, TableDesc}
-import org.apache.hadoop.fs.FileStatus
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.catalyst.expressions.BoundReference
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.datasources.{BucketingUtils, DataSource, HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.{BucketingUtils, DataSource, FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Shim
 import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
@@ -41,39 +43,39 @@ private[graft] final case class LogLayout(
   private def bucketSpec: Option[BucketSpec] =
     Some(buckets).filter(_ > 0).map(BucketSpec(_, Seq(key), sortCols))
 
-  /** Read a flat or bucketed log. */
+  /** Read a flat log. */
   def read(spark: SparkSession, dir: String): DataFrame =
     spark.baseRelationToDataFrame(DataSource(spark, "parquet",
-      paths = Seq(dir), userSpecifiedSchema = Some(schema),
-      bucketSpec = bucketSpec).resolveRelation(checkFilesExist = false))
+      paths = Seq(dir), userSpecifiedSchema = Some(schema))
+      .resolveRelation(checkFilesExist = false))
 
-  /** The files of `log` (a [[read]] of this bucketed log) that hold
-    * bucket `bucket`: the listing the read took, so Spark's hidden-file
-    * rule applies. A listed file with no bucket id in its name fails as
-    * Spark's bucketed scan fails (`INVALID_BUCKET_FILE`), whichever
-    * bucket is asked for. */
-  def bucketFiles(log: DataFrame, bucket: Int): Seq[FileStatus] = {
-    val index = log.queryExecution.analyzed.collectFirst {
-      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) => fs.location
-    }.getOrElse(throw new IllegalArgumentException(
-      s"not a file-source log read: ${log.queryExecution.analyzed}"))
-    index.listFiles(Nil, Nil).flatMap(_.files).map(_.fileStatus).filter { f =>
-      val id = BucketingUtils.getBucketId(f.getPath.getName).getOrElse(
-        throw Shim.invalidBucketFile(f.getPath.toUri.toString))
-      id == bucket
+  /** Read a bucketed log from its [[LogLayout.Listing]]: the relation's
+    * file index serves that listing, so the read lists nothing itself. */
+  def read(spark: SparkSession, listing: LogLayout.Listing): DataFrame = {
+    val served = new FileStatusCache {
+      override def getLeafFiles(path: Path): Option[Array[FileStatus]] =
+        Option.when(path == listing.root)(listing.files.toArray)
+      override def putLeafFiles(path: Path, leafFiles: Array[FileStatus]): Unit = ()
+      override def invalidateAll(): Unit = ()
     }
+    spark.baseRelationToDataFrame(HadoopFsRelation(
+      new InMemoryFileIndex(spark, Seq(listing.root), Map.empty, Some(schema), served),
+      new StructType(), schema, bucketSpec, new ParquetFileFormat, Map.empty)(spark))
   }
 
-  /** Read an LG-partitioned log, pruned to `wanted` LGs (None = all).
-    * The wanted set always includes [[TableDesc.RowTombstoneLg]] — a
-    * row-wide delete must be visible to every CF's resolve. The filter
-    * lands on the partition column, so unwanted LG directories are
-    * pruned at file-listing time, never opened (tera: a projected scan
-    * opens only the LGs holding its CFs, src/io/tablet_io.cc:1018-1024).
+  /** Read an LG-partitioned log, with its `lg` partition column. */
+  def readLgs(spark: SparkSession, dir: String): DataFrame =
+    spark.read.schema(withLgColumn).parquet(dir)
+
+  /** An LG-partitioned log read ([[readLgs]]) pruned to `wanted` LGs
+    * (None = all). The wanted set always includes
+    * [[TableDesc.RowTombstoneLg]] — a row-wide delete must be visible to
+    * every CF's resolve. The filter lands on the partition column, so
+    * unwanted LG directories are pruned at file-listing time, never
+    * opened (tera: a projected scan opens only the LGs holding its CFs,
+    * src/io/tablet_io.cc:1018-1024).
     */
-  def readLgs(spark: SparkSession, dir: String,
-      wanted: Option[Seq[String]]): DataFrame = {
-    val withLg = spark.read.schema(withLgColumn).parquet(dir)
+  def pruneLgs(withLg: DataFrame, wanted: Option[Seq[String]]): DataFrame = {
     val pruned = wanted match {
       case Some(names) =>
         val keep = (names :+ TableDesc.RowTombstoneLg).distinct
@@ -180,6 +182,34 @@ private[graft] object LogLayout {
   /** What a [[LogLayout.write]] tallied: the batch's tombstones and its
     * max seq, each when asked for and known. */
   final case class Tally(deletes: Option[Long], maxSeq: Option[Long])
+
+  /** The files of a bucketed log's listing that hold bucket `bucket`
+    * (all of them when None). A listed file with no bucket id in its
+    * name fails as Spark's bucketed scan fails (`INVALID_BUCKET_FILE`),
+    * whichever bucket is asked for. */
+  def bucketFiles(files: Seq[FileStatus], bucket: Option[Int]): Seq[FileStatus] =
+    files.filter { f =>
+      val id = BucketingUtils.getBucketId(f.getPath.getName).getOrElse(
+        throw Shim.invalidBucketFile(f.getPath.toUri.toString))
+      bucket.forall(_ == id)
+    }
+
+  /** The data files of a log directory (`root`, qualified), as a
+    * parquet read of it sees them. */
+  final case class Listing(root: Path, files: Seq[FileStatus])
+
+  /** One `listStatus` of `dir`, keeping Spark's rule for hidden names
+    * ([[Shim.hiddenFile]]) and skipping empty files, as a parquet read
+    * does. A directory that does not exist lists empty. */
+  def list(conf: Configuration, dir: String): Listing = {
+    val path = new Path(dir)
+    val fs = path.getFileSystem(conf)
+    val root = fs.makeQualified(path)
+    val all = try fs.listStatus(root).toSeq
+      catch { case _: java.io.FileNotFoundException => Nil }
+    Listing(root, all.filter(f =>
+      f.isFile && f.getLen > 0 && !Shim.hiddenFile(f.getPath.getName)))
+  }
 
   /** Spark's bucket id of a `keyType` key among `buckets` — the
     * function `bucketBy` writes and bucket pruning reads,

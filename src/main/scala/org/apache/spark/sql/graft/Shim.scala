@@ -19,6 +19,14 @@ object Shim {
   def invalidBucketFile(path: String): Throwable =
     org.apache.spark.sql.errors.QueryExecutionErrors.invalidBucketFile(path)
 
+  /** Whether a parquet read of a directory skips the file `name`:
+    * Spark's listing rule (hidden `_`/`.` names, `._COPYING_` copies in
+    * flight) with its data-path rule, which also drops the `_metadata`
+    * summaries the listing keeps. */
+  def hiddenFile(name: String): Boolean =
+    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name) ||
+      (name.startsWith("_") && !name.contains("=")) || name.startsWith(".")
+
   /** Drain the listener bus (`private[spark]`) — metrics assertions
     * (e.g. the resource-contract specs summing task-result bytes) must
     * flush async listener events before reading their accumulators. */

@@ -1,7 +1,7 @@
 package graft
 
 import graft.model.{CellOp, OpType, TableDesc}
-import graft.operators.{Resolve, ScanQuery}
+import graft.operators.{Resolve, ScanFilter, ScanQuery, TypedValue}
 import graft.sources.{CellLogStore, Tables}
 import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
@@ -806,7 +806,8 @@ class PlanSpec extends AnyFunSuite {
     t.put((0 until 400).map(i => CellOp(f"r$i%04d", "cf", "q", 1L,
       OpType.Value, s"v$i".getBytes, i.toLong)).toDF().repartition(4))
     t.put(Seq(CellOp("r0150", "", "", 2L, OpType.DelRow, null, 1000L)))
-    val df = t.scan.withStart("r0100").withStop("r0200").run()
+    // no key bound: the Spark plan (a key-bound scan reads on the driver)
+    val df = t.scan.withFilter(ScanFilter.RowKeyPrefix("r01")).run()
     val before = planOf(df)
     assert(before.contains("SortedRunsCollect"), before)
     assert(!before.toLowerCase.contains("rangepartitioning"), before)
@@ -815,6 +816,177 @@ class PlanSpec extends AnyFunSuite {
     assert(keys == (100 until 200).filter(_ != 150).map(i => f"r$i%04d"))
     val after = planOf(df)
     assert(!after.contains("Exchange"), after)
+  }
+
+  test("a projected ordered scan collect merges sorted runs: one job, no range exchange") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("plan-merge-project").toString
+    // uncapped versions of VALUE ops resolve with no exchange, so the
+    // merge's one job is the whole collect
+    val t = Graft.createTable(spark, dir,
+      TableDesc(graft.model.CfSpec(maxVersions = Int.MaxValue)),
+      ops = Some(Set(OpType.Value)))
+    t.put((0 until 200).map(i => CellOp(f"r$i%04d", "cf", "q", 1L,
+      OpType.Value, s"v$i".getBytes, i.toLong)).toDF().repartition(4))
+    val df = t.scan.withStart("r0050").withStop("r0150").run()
+      .select(col("row_key"), col("value"))
+    val plan = planOf(df)
+    assert(plan.contains("SortedRunsCollect"), plan)
+    assert(!plan.toLowerCase.contains("rangepartitioning"), plan)
+    val (rows, jobs) = JobCount.during(spark)(df.collect().toSeq)
+    assert(jobs == 1, s"projected ordered scan ran $jobs jobs")
+    assert(rows.map(_.getString(0)) == (50 until 150).map(i => f"r$i%04d"))
+    assert(rows.map(r => new String(r.getAs[Array[Byte]](1))) ==
+      (50 until 150).map(i => s"v$i"))
+  }
+
+  /** A bucketed table whose rows r0000..r0399 (cf a and b) sit in
+    * several files per bucket, with overwrites and tombstones. */
+  private def bucketedTable(name: String): GraftTable = {
+    import spark.implicits._
+    val dir = Files.createTempDirectory(name).toString
+    val t = Graft.createTable(spark, dir, TableDesc(buckets = 4),
+      Some(Set(OpType.Value, OpType.DelRow, OpType.DelQualifiers)))
+    t.put((0 until 400).flatMap(i => Seq(
+      CellOp(f"r$i%04d", "a", "s", 1L, OpType.Value, (if (i % 5 == 0) "P" else "O").getBytes,
+        2L * i),
+      CellOp(f"r$i%04d", "b", "n", 1L, OpType.Value, s"$i".getBytes, 2L * i + 1)))
+      .toDF().repartition(3))
+    t.put((0 until 400 by 7).map(i => CellOp(f"r$i%04d", "a", "s", 2L, OpType.Value,
+      "P".getBytes, 1000L + i)))
+    t.put(Seq(CellOp("r0120", "", "", 3L, OpType.DelRow, null, 2000L),
+      CellOp("r0121", "a", "s", 3L, OpType.DelQualifiers, null, 2001L)))
+    t
+  }
+
+  test("bucketed snapshot get: collect starts no job, count and rdd read one bucket") {
+    val t = bucketedTable("plan-snap-get")
+    Seq(("r0007", 1500L), ("r0120", 1999L), ("r0120", 2000L), ("r0121", 3000L),
+        ("r0399", 10L)).foreach { case (k, s) =>
+      val df = t.snapshot(s).where(col("row_key") === k)
+      val (rows, jobs) = JobCount.during(spark)(df.collect().toSeq)
+      assert(jobs == 0, s"$k@$s: snapshot get ran $jobs jobs")
+      def cells(rs: Seq[org.apache.spark.sql.Row]) = rs.map(r => (r.getString(1),
+        r.getString(2), r.getLong(3), new String(r.getAs[Array[Byte]](4)))).sorted
+      assert(cells(rows) == cells(df.rdd.collect().toSeq), s"$k@$s")
+      assert(df.count() == rows.length, s"$k@$s")
+      // other conjuncts and projections run on the collected rows
+      val projected = t.snapshot(s).where(col("row_key") === k && col("cf") === "a")
+        .select(col("qualifier"))
+      val (qs, pjobs) = JobCount.during(spark)(projected.collect().map(_.getString(0)).toSeq)
+      assert(pjobs == 0 && qs == cells(rows).filter(_._1 == "a").map(_._2), s"$k@$s")
+      val counted = df.groupBy().count()
+      val plan = planOf(counted) + planOf(df)
+      assert(plan.contains("SelectedBucketsCount: 1 out of 4"), plan)
+    }
+    // no key: the resolve plan
+    val (_, jobs) = JobCount.during(spark)(t.snapshot(1500L).collect())
+    assert(jobs > 0)
+  }
+
+  test("bucketed key-bound scan: collect starts no job; an unbounded scan runs the Spark plan") {
+    val t = bucketedTable("plan-scan-driver")
+    def scan = t.scan.addColumnFamily("a")
+      .withFilter(ScanFilter.ValueFilter("a", "s", "!=", TypedValue.Utf8("P")))
+    def rows(df: org.apache.spark.sql.DataFrame) = JobCount.during(spark)(
+      df.collect().toSeq.map(r => (r.getString(0), r.getString(1), r.getString(2),
+        r.getLong(3), new String(r.getAs[Array[Byte]](4)))))
+    val bounded = scan.withStart("r0100").withStop("r0200").run()
+    val (got, jobs) = rows(bounded)
+    assert(jobs == 0, s"bounded scan ran $jobs jobs")
+    val want = (100 until 200).filter(i => i % 5 != 0 && i % 7 != 0 && i != 120 && i != 121)
+      .map(i => (f"r$i%04d", "a", "s", 1L, "O"))
+    assert(got == want)
+    assert(bounded.count() == want.length)
+    assert(bounded.rdd.collect().map(_.getString(0)).toSeq == want.map(_._1))
+    // resume-after-key, point and limit bounds read on the driver too
+    Seq(scan.withResumeAfter("r0390"), scan.forRow("r0101"),
+        scan.withStart("r0100").withLimit(3)).foreach { q =>
+      val (_, j) = rows(q.run())
+      assert(j == 0, s"$q ran $j jobs")
+    }
+    // no key bound: the Spark plan, whose collect merges sorted runs
+    val (all, ajobs) = rows(scan.run())
+    assert(ajobs == 1, s"unbounded scan ran $ajobs jobs")
+    assert(all.map(_._1) == (0 until 400).filter(i =>
+      i % 5 != 0 && i % 7 != 0 && i != 120 && i != 121).map(i => f"r$i%04d"))
+  }
+
+  test("a driver range read declines past its row bound") {
+    val t = bucketedTable("plan-scan-bound")
+    val src = CellLogStore.source(spark, t.logDir)
+    val range = Seq(graft.sources.DriverRead.Bound.AtLeast("r0100".getBytes),
+      graft.sources.DriverRead.Bound.Below("r0200".getBytes))
+    val read = src.keyRows(range, None)
+    assert(read.exists(_.nonEmpty))
+    // the pages the bounds keep hold every row of the small files
+    assert(src.keyRows(range, None, maxRows = read.get.length - 1).isEmpty)
+  }
+
+  test("a key-bound scan past its row bound collects through the Spark plan") {
+    val t = bucketedTable("plan-scan-past-bound")
+    val q = t.scan.addColumnFamily("a").withStart("r0100").withStop("r0200")
+    def frame(maxRows: Long) = graft.operators.CellRead.frame(q.table.get, q.desc,
+      q.opsPresent, q.snapshotSeq, q.nowUs, graft.operators.CellRead.Range(q, maxRows))
+      .orderBy(col("row_key"), col("cf"), col("qualifier"), col("ts").desc)
+    def keys(rs: Array[org.apache.spark.sql.Row]) = rs.map(r =>
+      (r.getString(0), r.getLong(3), new String(r.getAs[Array[Byte]](4)))).toSeq
+    val want = (100 until 200).filter(i => i != 120 && i != 121)
+      .map(i => (f"r$i%04d", if (i % 7 == 0) 2L else 1L,
+        if (i % 5 == 0 || i % 7 == 0) "P" else "O"))
+    Seq[(org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame, Int)](
+        (identity, want.length), (_.limit(5), 5)).foreach { case (shape, n) =>
+      val (viaSpark, jobs) = JobCount.during(spark)(keys(shape(frame(10)).collect()))
+      assert(jobs > 0, "a range past its row bound answered on the driver")
+      val (onDriver, djobs) = JobCount.during(spark)(keys(shape(frame(Long.MaxValue)).collect()))
+      assert(djobs == 0, s"a range inside its row bound ran $djobs jobs")
+      assert(viaSpark == want.take(n) && onDriver == viaSpark)
+      assert(keys(shape(frame(10)).rdd.collect()) == viaSpark)
+    }
+  }
+
+  test("snapshot frames of same-count bucketed tables join on row_key with no exchange") {
+    import spark.implicits._
+    def mk(rows: Seq[(String, String)]): GraftTable = {
+      val dir = Files.createTempDirectory("plan-snap-join").toString
+      val t = Graft.createTable(spark, dir, TableDesc(buckets = 4),
+        ops = Some(Set(OpType.Value)))
+      t.put(rows.zipWithIndex.map { case ((k, v), i) =>
+        CellOp(k, "cf", "q", 100, OpType.Value, v.getBytes, i + 1) }.toDF())
+      t
+    }
+    val a = mk(Seq("r1" -> "a1", "r2" -> "a2"))
+    val b = mk(Seq("r1" -> "b1", "r3" -> "b3"))
+    // tiny sides would broadcast under any layout
+    val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val joined = a.snapshot(10L).select(col("row_key"), col("value").as("va"))
+        .join(b.snapshot(10L).select(col("row_key"), col("value").as("vb")), "row_key")
+      val plan = planOf(joined)
+      assert(plan.contains("SortMergeJoin"), plan)
+      assert(!plan.contains("Exchange"), plan)
+      assert(joined.collect().map(_.getString(0)).toSeq == Seq("r1"))
+      // an unordered key-bound scan keeps the bucketed layout too
+      val grouped = a.scan.unordered.withStart("r1").run().groupBy("row_key").count()
+      assert(!planOf(grouped).contains("Exchange"), planOf(grouped))
+      assert(grouped.collect().map(_.getString(0)).sorted.toSeq == Seq("r1", "r2"))
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+  }
+
+  test("an ordered collect with a nondeterministic column merges sorted runs") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("plan-merge-rand").toString
+    val t = Graft.createTable(spark, dir, TableDesc(), ops = Some(Set(OpType.Value)))
+    t.put((0 until 50).map(i => CellOp(f"r$i%04d", "cf", "q", 1L,
+      OpType.Value, s"v$i".getBytes, i.toLong)).toDF().repartition(3))
+    Seq(t.scan.run().withColumn("r", rand()), t.scan.run().withColumn("r", uuid()))
+      .foreach { df =>
+        assert(planOf(df).contains("SortedRunsCollect"), planOf(df))
+        val rows = df.collect()
+        assert(rows.map(_.getString(0)).toSeq == (0 until 50).map(i => f"r$i%04d"))
+        assert(rows.forall(!_.isNullAt(rows.head.length - 1)))
+      }
   }
 
   test("ordered scan with a limit still plans TakeOrderedAndProject") {

@@ -339,6 +339,47 @@ class ResolveFuzzSpec extends AnyFunSuite {
     }
   }
 
+  test("bucketed snapshot get: driver collect == rdd == count == reference, by key mode") {
+    val session = spark
+    import session.implicits._
+    val rng = new scala.util.Random(20261020L)
+    type Cells = Set[(String, String, Long, Option[Seq[Byte]])]
+    def cells(rows: Array[org.apache.spark.sql.Row]): Cells = rows.map { r =>
+      (r.getString(1), r.getString(2), r.getLong(3),
+        Option(r.getAs[Array[Byte]]("value")).map(_.toSeq))
+    }.toSet
+    for (mode <- Seq("string", "binary", "hashed"); trial <- 1 to 3) {
+      val log = randomLog(rng, 30 + rng.nextInt(40))
+      val base = randomDesc(rng)
+      val desc = mode match {
+        case "binary" => base.copy(buckets = 2, rawKeyBinary = true)
+        case "hashed" => base.copy(buckets = 2, hashKeys = true)
+        case _ => base.copy(buckets = 2)
+      }
+      def binKey(row: String): Array[Byte] = Array[Byte](-1, 0) ++ row.getBytes("UTF-8")
+      val dir = java.nio.file.Files.createTempDirectory(s"fuzz-snap-$mode").toString
+      val t = Graft.createTable(spark, dir, desc,
+        ops = if (trial % 2 == 0) Some((0 to 8).toSet) else None)
+      log.grouped(log.size / 3 + 1).foreach { part =>
+        t.put(if (mode != "binary") part.toDF()
+          else part.map(o => (binKey(o.row_key), o.cf, o.qualifier, o.ts, o.op, o.value, o.seq))
+            .toDF("row_key", "cf", "qualifier", "ts", "op", "value", "seq"))
+      }
+      for (row <- Seq("r0", "r1", "r2", "absent"); _ <- 1 to 3) {
+        val snap = rng.nextLong(log.size + 2L)
+        val key = if (mode == "binary") lit(binKey(row)) else lit(t.storageKey(row))
+        val frame = t.snapshot(snap).where(col("row_key") === key)
+        val what = s"$mode trial $trial row $row snapshot $snap desc=$desc"
+        val (driver, jobs) = JobCount.during(spark)(cells(frame.collect()))
+        assert(jobs == 0, s"$what: driver collect ran $jobs jobs")
+        assert(driver == cells(frame.rdd.collect()), what)
+        assert(driver.size == frame.count(), what)
+        val want = refResolve(log.filter(_.row_key == row), desc, Long.MaxValue, Some(snap))
+        assert(driver == want.map(c => (c._2, c._3, c._4, c._5)), what)
+      }
+    }
+  }
+
   /** Spark resolve, as reference tuples. `strategy` "window" reads the
     * log clustered on row_key, which takes the window tombstone
     * strategy; any other value reads it as is (a small log: join). */

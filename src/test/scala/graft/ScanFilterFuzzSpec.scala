@@ -278,6 +278,148 @@ class ScanFilterFuzzSpec extends AnyFunSuite {
     }
   }
 
+  test("bucketed driver collect == rdd == the in-memory evaluator on 75 key-bound scans") {
+    import graft.model.TableDesc
+    val session = spark
+    import session.implicits._
+    val rng = new scala.util.Random(20261019L)
+    val cmpU = (a: Seq[Byte], b: Seq[Byte]) =>
+      java.util.Arrays.compareUnsigned(a.toArray, b.toArray)
+    for ((mode, desc) <- Seq("string" -> TableDesc(buckets = 3),
+        "hashed" -> TableDesc(buckets = 3, hashKeys = true),
+        "binary" -> TableDesc(buckets = 3, rawKeyBinary = true))) {
+      val binary = desc.rawKeyBinary
+      val logical: Seq[Seq[Byte]] =
+        if (binary) Seq.fill(12)(Array.fill(1 + rng.nextInt(3))(
+          rng.nextInt(256).toByte).toSeq).distinct
+        else (0 until 12).map(i => s"r$i".getBytes("UTF-8").toSeq)
+      // the keys as the log stores them (and a scan emits them)
+      def stored(k: Seq[Byte]): Seq[Byte] =
+        if (desc.hashKeys) Codecs.hashedKey(new String(k.toArray, "UTF-8"))
+          .getBytes("UTF-8").toSeq
+        else k
+      val dir = java.nio.file.Files.createTempDirectory(s"fuzz-bkt-$mode").toString
+      val t = Graft.createTable(spark, dir, desc,
+        Some(Set(OpType.Value, OpType.DelRow, OpType.DelQualifiers)))
+      // four commits: each lands one file per touched bucket, and later
+      // ones overwrite and delete what earlier ones wrote
+      var seq = 0L
+      val log = (0 until 4).flatMap { round =>
+        val ops = logical.flatMap { k =>
+          for {
+            cf <- cfs; q <- Seq("q0", "q1", "q2")
+            if rng.nextInt(10) < (if (round == 0) 8 else 3)
+          } yield {
+            seq += 1
+            val kind = if (round == 0) 0 else rng.nextInt(12)
+            if (kind == 0 && rng.nextInt(3) == 0 && round > 0)
+              (k, "", "", 1L + rng.nextInt(6), OpType.DelRow, null, seq)
+            else if (kind == 1)
+              (k, cf, q, 1L + rng.nextInt(6), OpType.DelQualifiers, null, seq)
+            else (k, cf, q, 1L + rng.nextInt(5), OpType.Value, randomValue(rng), seq)
+          }
+        }
+        val df = ops.map { case (k, cf, q, ts, op, v, sq) =>
+          (new String(k.toArray, "ISO-8859-1"), cf, q, ts, op, v, sq) }
+          .toDF("row_key", "cf", "qualifier", "ts", "op", "value", "seq")
+        t.put(if (binary) df.withColumn("row_key",
+          org.apache.spark.sql.functions.encode(
+            org.apache.spark.sql.functions.col("row_key"), "ISO-8859-1"))
+        else df)
+        ops.map { case (k, cf, q, ts, op, v, sq) => (stored(k), cf, q, ts, op, v, sq) }
+      }
+
+      /** The visible cells of the log at `snap` (max_versions = 1). */
+      def resolved(snap: Option[Long]) = {
+        val live = log.filter(o => snap.forall(o._7 <= _))
+        val dels = live.filter(_._5 != OpType.Value)
+        live.filter(_._5 == OpType.Value).filterNot { c =>
+          dels.exists(d => d._1 == c._1 && d._7 > c._7 && d._4 >= c._4 &&
+            (d._5 == OpType.DelRow || (d._2 == c._2 && d._3 == c._3)))
+        }.groupBy(c => (c._1, c._2, c._3)).values.map(_.maxBy(c => (c._4, c._7))).toSeq
+      }
+
+      (1 to 25).foreach { trial =>
+        val tree = if (rng.nextBoolean()) Some(randomTree(rng, 2, rowKeyLeaves = !binary))
+          else None
+        val cfSel = if (rng.nextInt(3) == 0) Seq(cfs(rng.nextInt(2))) else Nil
+        val colSel = if (rng.nextInt(3) == 0)
+          Seq((cfs(rng.nextInt(2)), s"q${rng.nextInt(3)}")) else Nil
+        val tsR = if (rng.nextBoolean())
+          Some((1L + rng.nextInt(3), 3L + rng.nextInt(3))) else None
+        val maxQ = if (rng.nextInt(3) == 0) Some(rng.nextInt(2) + 1) else None
+        val limit = if (rng.nextInt(4) == 0) Some(1 + rng.nextInt(8)) else None
+        val snap = if (rng.nextBoolean()) Some(rng.nextLong(seq + 1)) else None
+        def anyKey = logical(rng.nextInt(logical.size))
+        val point = if (rng.nextInt(5) == 0) Some(anyKey) else None
+        val start = if (point.isEmpty && rng.nextBoolean()) Some(anyKey) else None
+        val stop = if (point.isEmpty && (start.isEmpty || rng.nextBoolean()))
+          Some(anyKey) else None
+        val resume = if (rng.nextInt(4) == 0) Some(stored(anyKey)) else None
+
+        var q = t.scan
+        def str(k: Seq[Byte]) = new String(k.toArray, "UTF-8")
+        if (binary) {
+          point.foreach(k => q = q.forRowBin(k.toArray))
+          start.foreach(k => q = q.withStartBin(k.toArray))
+          stop.foreach(k => q = q.withStopBin(k.toArray))
+          resume.foreach(k => q = q.withResumeAfterBin(k.toArray))
+        } else {
+          point.foreach(k => q = q.forRow(str(k)))
+          start.foreach(k => q = q.withStart(str(k)))
+          stop.foreach(k => q = q.withStop(str(k)))
+          resume.foreach(k => q = q.withResumeAfter(str(k)))
+        }
+        tree.foreach(f => q = q.withFilter(f))
+        cfSel.foreach(cf => q = q.addColumnFamily(cf))
+        colSel.foreach { case (cf, c) => q = q.addColumn(cf, c) }
+        tsR.foreach { case (a, b) => q = q.withTimeRange(a, b) }
+        maxQ.foreach(k => q = q.withMaxQualifiers(k))
+        limit.foreach(n => q = q.withLimit(n))
+        snap.foreach(s => q = q.withSnapshot(s))
+        val df = q.run()
+        def cells(rows: Seq[org.apache.spark.sql.Row]) = rows.map(r => (
+          (if (binary) r.getAs[Array[Byte]](0).toSeq else r.getString(0).getBytes("UTF-8").toSeq),
+          r.getString(1), r.getString(2), r.getLong(3), r.getAs[Array[Byte]](4).toSeq))
+        val (got, jobs) = JobCount.during(spark)(cells(df.collect().toSeq))
+        val what = s"$mode trial $trial (point=$point start=$start stop=$stop " +
+          s"resume=$resume snap=$snap cf=$cfSel col=$colSel ts=$tsR maxQ=$maxQ " +
+          s"limit=$limit tree=$tree)"
+        assert(jobs == 0, s"$what: driver collect ran $jobs jobs")
+        assert(got == cells(df.rdd.collect().toSeq), s"$what: rdd differs")
+
+        // reference: bounds in storage space, verdict, projection, ts
+        // range, qualifier cap, key order, limit
+        val inRange = resolved(snap).filter { c =>
+          point.forall(p => c._1 == stored(p)) &&
+            start.forall(s => cmpU(c._1, stored(s)) >= 0) &&
+            stop.forall(s => cmpU(c._1, stored(s)) < 0) &&
+            resume.forall(s => cmpU(c._1, s) > 0)
+        }
+        val byRow = inRange.groupBy(_._1)
+        val passing = inRange.filter(c => tree.forall(f => evalVerdict(f,
+          new String(c._1.toArray, "UTF-8"),
+          byRow(c._1).map(o => (o._2, o._3) -> o._6).toMap)))
+        val projected = passing.filter(c => (cfSel.isEmpty && colSel.isEmpty) ||
+          cfSel.contains(c._2) || colSel.contains((c._2, c._3)))
+        val timed = projected.filter(c => tsR.forall { case (a, b) => c._4 >= a && c._4 <= b })
+        val capped = maxQ.fold(timed) { k =>
+          timed.groupBy(c => (c._1, c._2)).values.flatMap { cs =>
+            val keep = cs.map(_._3).distinct.sorted.take(k).toSet
+            cs.filter(c => keep(c._3))
+          }.toSeq
+        }
+        val sorted = capped.sortWith { (a, b) =>
+          val k = cmpU(a._1, b._1)
+          if (k != 0) k < 0
+          else Ordering[(String, String, Long)].lt((a._2, a._3, -a._4), (b._2, b._3, -b._4))
+        }
+        val want = limit.fold(sorted)(sorted.take).map(c => (c._1, c._2, c._3, c._4, c._6.toSeq))
+        assert(got == want, s"$what\ngot:  $got\nwant: $want")
+      }
+    }
+  }
+
   test("filter-tree verdicts match the in-memory evaluator on 40 random scans") {
     import spark.implicits._
     val rng = new scala.util.Random(20260814L)

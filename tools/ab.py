@@ -13,8 +13,10 @@ BENCHMARK.json (of the change checkout) declares, prints the two
 medians, the parent's interquartile range, the change's wins out of N
 and the failed-op totals of each side. For the op kinds get,
 snapshot_get, scan and put it also prints each side's median `p50_ms`,
-read from the `counts` of run.py's details line (the line before the
-result), where the workload reports them. Exits 1 when any run exits
+and each side's median `log_files` (the files the table held when the
+timed phase ended, so pairs compare at equal file counts), read from
+the `counts` of run.py's details line (the line before the result),
+where the workload reports them. Exits 1 when any run exits
 non-zero or reports an incorrect result.
 """
 import argparse
@@ -110,8 +112,7 @@ def main():
               f"change {statistics.median(chg):10.4g}  "
               f"parent IQR {q3 - q1:8.3g}  change wins {wins}/{len(pairs)}  "
               f"({m['better']} is better)")
-    for kind in OP_KINDS:
-        key = f"{kind}.p50_ms"
+    for key in [f"{kind}.p50_ms" for kind in OP_KINDS] + ["log_files"]:
         vals = {s: [c[key] for c in counts[s] if key in c] for s in counts}
         if vals["parent"] and vals["change"]:
             print(f"  {key:18s} parent {statistics.median(vals['parent']):10.4g}  "
