@@ -34,21 +34,21 @@ class GraftTable(
 
   /** The log and the stored tombstone count through ONE state read per
     * call (a driver-side file read, no Spark job), so the count tracks
-    * appends; it lets resolve's delete strategy size itself on a flat
-    * or LG log (a bucketed read never needs it). The stored state lays the log out; this table's `desc`
-    * is the fallback for a bare directory. */
+    * appends. The count sizes resolve's delete strategy on a flat or LG
+    * log; a bucketed read never needs it. The stored state lays the log
+    * out; this table's `desc` is the fallback for a bare directory. */
   private def source: CellLogStore.Source =
     CellLogStore.source(spark, logDir, desc)
 
   /** The raw tagged mutation log. */
   def log: DataFrame = source.log
 
-  /** Resolved visible cells (versions/TTL/tombstones/folds applied). */
-  def cells(nowUs: Long = Long.MaxValue): DataFrame = {
-    val src = source
-    Resolve.resolve(src.log, desc, nowUs, opsPresent = opsPresent,
-      deleteCountHint = src.deleteHint)
-  }
+  /** Resolved visible cells (versions/TTL/tombstones/folds applied). On
+    * a bucketed table the frame is one [[CellRead]] leaf over the files
+    * listed now, like [[snapshot]]'s: a `collect()` of it filtered to
+    * one key reads the key's bucket on the driver with no Spark job. */
+  def cells(nowUs: Long = Long.MaxValue): DataFrame =
+    CellRead.frame(source, desc, opsPresent, None, nowUs, CellRead.AnyKey)
 
   /** Scan builder over this table. On an LG-partitioned table a
     * CF-projected scan reads only the matching `lg=` directories. */

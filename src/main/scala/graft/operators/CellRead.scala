@@ -27,9 +27,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * key-bound leaf reads the bound's rows on the driver, folds each row
   * with [[CellFold.row]] and applies the steps, with no Spark job
   * ([[CellReadExec]]). A leaf with no key bound takes a point key from a
-  * `row_key = literal` filter right above it. Every other consumer runs
-  * [[plan]], the Resolve/ScanQuery plan of the same cells, built when
-  * first needed.
+  * `row_key = literal` filter right above it. Under every other
+  * consumer the optimizer puts [[plan]], the Resolve/ScanQuery plan of
+  * the same cells, in the leaf's place
+  * ([[org.apache.spark.sql.graft.InlineCellReads]]).
   */
 final case class CellRead(
     output: Seq[Attribute],

@@ -7,10 +7,11 @@ import graft.model.TableDesc
 import graft.sources.{CellLogStore, DriverRead}
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.CellReadExec
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.graft.{CellReadExec, Shim}
+import org.apache.spark.sql.types.{StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Typed constants for value filters — the engine-side equivalent of the
@@ -311,29 +312,23 @@ case class ScanQuery(
 
     // row-range predicates prune BEFORE resolve: every op of a row shares
     // its row_key, so the bound commutes with resolution and reaches the
-    // parquet scan as a pushed filter.
-    var pruned = source
-    startKey.foreach(k => pruned = pruned.where(col("row_key") >= storageKey(k)))
-    stopKey.foreach(k => pruned = pruned.where(col("row_key") < storageKey(k)))
-    pointKey.foreach { k =>
-      pruned = pruned.where(col("row_key") >= storageKey(k) &&
-        col("row_key") < storageKey(k) + "\u0000")
+    // parquet scan as a pushed filter. They are the driver read's bounds
+    // (storage space; a point is [k, k ++ 0x00); resume-after-key is
+    // strictly after a fully consumed row), compared as the log's key
+    // type: Spark's string and binary orders are both memcmp
+    // (BinaryRawKeyOperator, raw_key_operator.h:27-29)
+    val keyType = source.schema("row_key").dataType
+    def key(k: Array[Byte]): Column = Shim.column(Literal(
+      if (keyType == StringType) UTF8String.fromBytes(k) else k, keyType))
+    var pruned = keyBounds.foldLeft(source) { (df, bound) =>
+      import DriverRead.Bound._
+      df.where(bound match {
+        case Eq(k) => col("row_key") === key(k)
+        case AtLeast(k) => col("row_key") >= key(k)
+        case Above(k) => col("row_key") > key(k)
+        case Below(k) => col("row_key") < key(k)
+      })
     }
-
-    // binary bounds: literal byte comparisons — Spark BinaryType order
-    // is unsigned-lexicographic, i.e. memcmp (BinaryRawKeyOperator,
-    // raw_key_operator.h:27-29); the point successor is key ++ 0x00 so
-    // [k, k++0x00) holds exactly k (any longer key extends past it)
-    startKeyBin.foreach(k => pruned = pruned.where(col("row_key") >= lit(k)))
-    stopKeyBin.foreach(k => pruned = pruned.where(col("row_key") < lit(k)))
-    pointKeyBin.foreach { k =>
-      pruned = pruned.where(col("row_key") >= lit(k) &&
-        col("row_key") < lit(k :+ 0.toByte))
-    }
-    // resume-after-KEY bounds are STORAGE-space (what the scan emitted):
-    // no hash re-prefixing, strictly-after-a-fully-consumed-ROW semantics
-    resumeAfterKey.foreach(k => pruned = pruned.where(col("row_key") > k))
-    resumeAfterKeyBin.foreach(k => pruned = pruned.where(col("row_key") > lit(k)))
 
     // afterPage resumes at CELL granularity (the reference's
     // next_start_point is the last CELL returned, scan_impl.cc:84-89):

@@ -4,25 +4,23 @@ import graft.operators.CellRead
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeMap, BindReferences, Expression, InterpretedOrdering, InterpretedProjection, NamedExpression, Predicate, SortOrder, SubqueryExpression, Unevaluable, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, BindReferences, Expression, InterpretedOrdering, InterpretedProjection, Predicate, SubqueryExpression, Unevaluable, UnsafeProjection}
 import org.apache.spark.sql.catalyst.expressions.IntegerLiteral
 import org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions
+import org.apache.spark.sql.catalyst.planning.PhysicalOperation
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, GlobalLimit, LocalLimit, LocalRelation, LogicalPlan, Project, Sort}
-import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, UnknownPartitioning}
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
-import org.apache.spark.sql.execution.{LeafExecNode, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan}
 import org.apache.spark.sql.types.StructType
 
-/** The physical [[CellRead]]. A root collect's node has `onDriver`:
-  * `executeCollect` runs it and, when it answers, returns its rows with
-  * no Spark job; otherwise, and for every other consumer (`doExecute`),
-  * it runs `plan`'s Spark plan, built on first use. That plan is
-  * prepared without adaptive execution, so its partitioning and
-  * ordering hold when it runs; a node without `onDriver` reports them,
-  * so a join or grouping on `row_key` of bucketed reads plans no
-  * exchange. A root collect's node reports none: nothing above it
-  * reads them, and building the plan for them costs what the driver
-  * read saves.
+/** The physical [[CellRead]] of a root collect the driver answers
+  * ([[CellReadExec.collect]]): `executeCollect` runs `onDriver` and,
+  * when it answers, returns its rows with no Spark job; otherwise, and
+  * for any other use of the node (`doExecute`: `toLocalIterator`, a
+  * cached frame), it runs `plan`'s Spark plan, built on first use. A
+  * leaf under any other consumer never reaches the planner:
+  * [[InlineCellReads]] puts its Spark plan in its place.
   *
   * Simple and extended explain (`toString`, `explain()`) show that plan
   * under this node, so plan audits see its scan. The formatted explain
@@ -31,49 +29,21 @@ import org.apache.spark.sql.types.StructType
   * collect about as much as the read itself.
   */
 case class CellReadExec(output: Seq[Attribute],
-    @transient onDriver: Option[() => Option[Seq[InternalRow]]],
+    @transient onDriver: () => Option[Seq[InternalRow]],
     @transient plan: () => DataFrame)
     extends LeafExecNode {
 
   // the driver-side halves never ship: a task that captures this node
   // (a parent's closure) reads neither
-  @transient private lazy val distributed: SparkPlan = {
-    val df = plan()
-    require(df.schema.map(_.dataType) == output.map(_.dataType),
-      s"cell read plan ${df.schema.simpleString} does not match " +
-        output.mkString("[", ", ", "]"))
-    QueryExecution.prepareExecutedPlan(
-      df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-      df.queryExecution.sparkPlan)
-  }
+  @transient private lazy val executed: SparkPlan = plan().queryExecution.executedPlan
 
-  /** `e` over this node's output: the plan's output attributes, by
-    * position, may carry other ids. None when `e` reads anything else. */
-  private def mapped[E <: Expression](e: E): Option[E] = {
-    val ids = AttributeMap(distributed.output.zip(output))
-    val m = e.transform { case a: Attribute if ids.contains(a) => ids(a) }
-    Option.when(m.references.subsetOf(outputSet))(m.asInstanceOf[E])
-  }
+  override protected def doExecute(): RDD[InternalRow] = executed.execute()
 
-  override def outputPartitioning: Partitioning =
-    if (onDriver.isDefined) super.outputPartitioning
-    else distributed.outputPartitioning match {
-      case p: Expression => mapped(p).map(_.asInstanceOf[Partitioning])
-        .getOrElse(UnknownPartitioning(distributed.outputPartitioning.numPartitions))
-      case p => p
-    }
-
-  override def outputOrdering: Seq[SortOrder] =
-    if (onDriver.isDefined) Nil
-    else distributed.outputOrdering.map(mapped(_)).takeWhile(_.isDefined).flatten
-
-  override protected def doExecute(): RDD[InternalRow] = distributed.execute()
-
-  override def executeCollect(): Array[InternalRow] = onDriver.flatMap(_()) match {
+  override def executeCollect(): Array[InternalRow] = onDriver() match {
     case Some(rows) =>
       val toUnsafe = UnsafeProjection.create(schema)
       rows.iterator.map(r => toUnsafe(r).copy()).toArray
-    case None => distributed.executeCollect()
+    case None => executed.executeCollect()
   }
 
   override def simpleString(maxFields: Int): String =
@@ -88,7 +58,7 @@ case class CellReadExec(output: Seq[Attribute],
     if (!printNodeId) {
       lastChildren.add(true)
       lastChildren.add(true)
-      distributed.generateTreeString(depth + 2, lastChildren, append, verbose,
+      executed.generateTreeString(depth + 2, lastChildren, append, verbose,
         "", addSuffix, maxFields, printNodeId, printOutputColumns, indent)
       lastChildren.remove(lastChildren.size() - 1)
       lastChildren.remove(lastChildren.size() - 1)
@@ -98,8 +68,8 @@ case class CellReadExec(output: Seq[Attribute],
 
 object CellReadExec {
 
-  /** A frame over `leaf`, in `spark`, whose planner gets the strategy
-    * that plans it ([[SortedRunsCollect]]). */
+  /** A frame over `leaf`, in `spark`, whose session gets the strategy
+    * and the rule that plan it ([[SortedRunsCollect.install]]). */
   def frame(spark: SparkSession, leaf: CellRead): DataFrame = {
     SortedRunsCollect.install(spark)
     org.apache.spark.sql.classic.Dataset.ofRows(
@@ -127,17 +97,7 @@ object CellReadExec {
       case _ => None
     }
     leafOf(root).filter(_.keyed).map(leaf => CellReadExec(root.output,
-      Some(() => leaf.onDriver().map(evaluate(root, _))), () => inline(root)))
-  }
-
-  /** Any other consumer of a leaf: the filters and projections right
-    * above it (so a key filter still prunes the Spark plan's buckets)
-    * with the leaf, as one Spark plan. */
-  def distributed(projects: Seq[NamedExpression], filters: Seq[Expression],
-      leaf: CellRead): CellReadExec = {
-    val chain = Project(projects, filters.reduceOption(And).fold[LogicalPlan](leaf)(
-      Filter(_, leaf)))
-    CellReadExec(chain.output, None, () => inline(chain))
+      () => leaf.onDriver().map(evaluate(root, _)), () => inline(root)))
   }
 
   /** `columns` as one interpreted projection of a row of `schema`,
@@ -187,7 +147,7 @@ object CellReadExec {
   /** `p` with each [[CellRead]] replaced by its Spark plan, the leaf's
     * attribute ids kept by aliases, so the operators above read it
     * unchanged. */
-  private def inline(p: LogicalPlan): DataFrame = {
+  private[graft] def inline(p: LogicalPlan): DataFrame = {
     var session: SparkSession = null
     val inlined = p.transformUp { case c: CellRead =>
       val base = c.plan()
@@ -202,4 +162,27 @@ object CellReadExec {
     org.apache.spark.sql.classic.Dataset.ofRows(
       session.asInstanceOf[org.apache.spark.sql.classic.SparkSession], inlined)
   }
+}
+
+/** Every [[CellRead]] leaf but that of a root collect the driver
+  * answers (the strategy's own test, [[CellReadExec.collect]], on the
+  * same root), replaced by the optimized Spark plan of the leaf with the
+  * filters and projections right above it ([[CellReadExec.inline]]), so
+  * Spark plans the query whole: a key filter prunes the parquet scan's
+  * buckets, and a join or grouping on `row_key` of bucketed reads keeps
+  * the scans bucketed and plans no exchange. The rule runs in the
+  * session's extra optimizations ([[SortedRunsCollect.install]]), after
+  * Spark's own batches, so the chain is optimized on its own; that
+  * optimizer may rename the chain's output, which is aliased back to its
+  * ids. */
+object InlineCellReads extends Rule[LogicalPlan] {
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    if (CellReadExec.collect(plan).isDefined) plan
+    else plan.transformDown {
+      case chain @ PhysicalOperation(_, _, _: CellRead) =>
+        val optimized = CellReadExec.inline(chain).queryExecution.optimizedPlan
+        Project(chain.output.zip(optimized.output).map { case (a, b) =>
+          if (a.exprId == b.exprId) b else Alias(b, a.name)(exprId = a.exprId)
+        }, optimized)
+    }
 }

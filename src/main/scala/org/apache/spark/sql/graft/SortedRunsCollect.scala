@@ -2,7 +2,6 @@ package org.apache.spark.sql.graft
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
-import graft.operators.CellRead
 import org.apache.spark.SparkEnv
 import org.apache.spark.io.CompressionCodec
 import org.apache.spark.rdd.RDD
@@ -10,7 +9,6 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, NamedExpression, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
-import org.apache.spark.sql.catalyst.planning.PhysicalOperation
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, ReturnAnswer, Sort}
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, RangePartitioning, UnknownPartitioning}
 import org.apache.spark.sql.execution.{ProjectExec, SortExec, SparkPlan, SparkStrategy, UnaryExecNode}
@@ -31,11 +29,11 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
   * Limit, which the sort cases do not match), and streaming plans are
   * left alone.
   *
-  * The same strategy plans a [[graft.operators.CellRead]] leaf: a root
-  * collect of a key-bound leaf (under filters, projections, sorts and
-  * limits) as a [[CellReadExec]] that reads on the driver with no job —
-  * one strategy for root collects served on the driver — and under any
-  * other consumer as one that runs the leaf's Spark plan.
+  * The same strategy plans a root collect of a key-bound
+  * [[graft.operators.CellRead]] leaf (under filters, projections, sorts
+  * and limits) as a [[CellReadExec]] that reads on the driver with no
+  * job — one strategy for root collects served on the driver. Every
+  * other leaf is inlined before planning ([[InlineCellReads]]).
   */
 object SortedRunsCollect extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
@@ -44,8 +42,6 @@ object SortedRunsCollect extends SparkStrategy {
       SortedRunsCollectExec(order, child.output, planLater(child)) :: Nil
     case ReturnAnswer(Project(list, Sort(order, true, child, _))) if !child.isStreaming =>
       SortedRunsCollectExec(order, list, planLater(child)) :: Nil
-    case PhysicalOperation(projects, filters, leaf: CellRead) =>
-      CellReadExec.distributed(projects, filters, leaf) :: Nil
     case _ => Nil
   }
 
@@ -56,13 +52,16 @@ object SortedRunsCollect extends SparkStrategy {
     }
   }
 
-  /** Add the strategy to the session's extra strategies, once. */
+  /** Add the strategy to the session's extra strategies and
+    * [[InlineCellReads]] to its extra optimizations, once. */
   def install(spark: SparkSession): Unit = {
     val exp = spark.experimental
     if (!exp.extraStrategies.contains(SortedRunsCollect))
       exp.synchronized {
-        if (!exp.extraStrategies.contains(SortedRunsCollect))
+        if (!exp.extraStrategies.contains(SortedRunsCollect)) {
+          exp.extraOptimizations = exp.extraOptimizations :+ InlineCellReads
           exp.extraStrategies = exp.extraStrategies :+ SortedRunsCollect
+        }
       }
   }
 }

@@ -181,9 +181,15 @@ class GraftApiSpec extends AnyFunSuite {
   }
 
   test("secondary index: build, incremental maintain, stale-entry-safe lookup") {
-    val dir = Files.createTempDirectory("graft-ix-base").toString
+    // flat, and 4-bucket: there the index build writes a batch read
+    // from a cells() leaf
+    Seq(Graft.openTable(spark, Files.createTempDirectory("graft-ix-base").toString),
+      Graft.createTable(spark, Files.createTempDirectory("graft-ix-bucketed").toString,
+        graft.model.TableDesc(buckets = 4))).foreach(secondaryIndex)
+  }
+
+  private def secondaryIndex(t: GraftTable): Unit = {
     val ixDir = Files.createTempDirectory("graft-ix").toString
-    val t = Graft.openTable(spark, dir)
     t.put(Seq(
       CellOp("r1", "c", "seg", 100, OpType.Value, "A".getBytes, 1),
       CellOp("r2", "c", "seg", 100, OpType.Value, "B".getBytes, 2),

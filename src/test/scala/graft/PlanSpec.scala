@@ -1,6 +1,6 @@
 package graft
 
-import graft.model.{CellOp, OpType, TableDesc}
+import graft.model.{CellOp, CfSpec, OpType, TableDesc}
 import graft.operators.{Resolve, ScanFilter, ScanQuery, TypedValue}
 import graft.sources.{CellLogStore, Tables}
 import java.nio.file.Files
@@ -861,9 +861,12 @@ class PlanSpec extends AnyFunSuite {
 
   test("bucketed snapshot get: collect starts no job, count and rdd read one bucket") {
     val t = bucketedTable("plan-snap-get")
-    Seq(("r0007", 1500L), ("r0120", 1999L), ("r0120", 2000L), ("r0121", 3000L),
-        ("r0399", 10L)).foreach { case (k, s) =>
-      val df = t.snapshot(s).where(col("row_key") === k)
+    // a snapshot bound, or None: the current cells() under the same filter
+    Seq(("r0007", Some(1500L)), ("r0120", Some(1999L)), ("r0120", Some(2000L)),
+        ("r0121", Some(3000L)), ("r0399", Some(10L)), ("r0007", None), ("r0120", None),
+        ("r0121", None)).foreach { case (k, s) =>
+      def read = s.fold(t.cells())(t.snapshot)
+      val df = read.where(col("row_key") === k)
       val (rows, jobs) = JobCount.during(spark)(df.collect().toSeq)
       assert(jobs == 0, s"$k@$s: snapshot get ran $jobs jobs")
       def cells(rs: Seq[org.apache.spark.sql.Row]) = rs.map(r => (r.getString(1),
@@ -871,7 +874,7 @@ class PlanSpec extends AnyFunSuite {
       assert(cells(rows) == cells(df.rdd.collect().toSeq), s"$k@$s")
       assert(df.count() == rows.length, s"$k@$s")
       // other conjuncts and projections run on the collected rows
-      val projected = t.snapshot(s).where(col("row_key") === k && col("cf") === "a")
+      val projected = read.where(col("row_key") === k && col("cf") === "a")
         .select(col("qualifier"))
       val (qs, pjobs) = JobCount.during(spark)(projected.collect().map(_.getString(0)).toSeq)
       assert(pjobs == 0 && qs == cells(rows).filter(_._1 == "a").map(_._2), s"$k@$s")
@@ -947,30 +950,35 @@ class PlanSpec extends AnyFunSuite {
 
   test("snapshot frames of same-count bucketed tables join on row_key with no exchange") {
     import spark.implicits._
-    def mk(rows: Seq[(String, String)]): GraftTable = {
+    def mk(desc: TableDesc, rows: Seq[(String, String)]): GraftTable = {
       val dir = Files.createTempDirectory("plan-snap-join").toString
-      val t = Graft.createTable(spark, dir, TableDesc(buckets = 4),
-        ops = Some(Set(OpType.Value)))
+      val t = Graft.createTable(spark, dir, desc, ops = Some(Set(OpType.Value)))
       t.put(rows.zipWithIndex.map { case ((k, v), i) =>
         CellOp(k, "cf", "q", 100, OpType.Value, v.getBytes, i + 1) }.toDF())
       t
     }
-    val a = mk(Seq("r1" -> "a1", "r2" -> "a2"))
-    val b = mk(Seq("r1" -> "b1", "r3" -> "b3"))
     // tiny sides would broadcast under any layout
     val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val joined = a.snapshot(10L).select(col("row_key"), col("value").as("va"))
-        .join(b.snapshot(10L).select(col("row_key"), col("value").as("vb")), "row_key")
-      val plan = planOf(joined)
-      assert(plan.contains("SortMergeJoin"), plan)
-      assert(!plan.contains("Exchange"), plan)
-      assert(joined.collect().map(_.getString(0)).toSeq == Seq("r1"))
-      // an unordered key-bound scan keeps the bucketed layout too
-      val grouped = a.scan.unordered.withStart("r1").run().groupBy("row_key").count()
-      assert(!planOf(grouped).contains("Exchange"), planOf(grouped))
-      assert(grouped.collect().map(_.getString(0)).sorted.toSeq == Seq("r1", "r2"))
+      // a version-capped resolve, and a pass-through one (uncapped
+      // versions of Value ops), whose plan needs no clustering of its own
+      Seq(TableDesc(buckets = 4), TableDesc(CfSpec(maxVersions = Int.MaxValue), buckets = 4))
+          .foreach { desc =>
+        val a = mk(desc, Seq("r1" -> "a1", "r2" -> "a2"))
+        val b = mk(desc, Seq("r1" -> "b1", "r3" -> "b3"))
+        val joined = a.snapshot(10L).select(col("row_key"), col("value").as("va"))
+          .join(b.snapshot(10L).select(col("row_key"), col("value").as("vb")), "row_key")
+        val plan = planOf(joined)
+        assert(plan.contains("SortMergeJoin"), plan)
+        assert(!plan.contains("Exchange") && !plan.contains("CellRead"), plan)
+        assert("Bucketed: true".r.findAllIn(plan).length == 2, plan)
+        assert(joined.collect().map(_.getString(0)).toSeq == Seq("r1"))
+        // an unordered key-bound scan keeps the bucketed layout too
+        val grouped = a.scan.unordered.withStart("r1").run().groupBy("row_key").count()
+        assert(!planOf(grouped).contains("Exchange"), planOf(grouped))
+        assert(grouped.collect().map(_.getString(0)).sorted.toSeq == Seq("r1", "r2"))
+      }
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
   }
 
