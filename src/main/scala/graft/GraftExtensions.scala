@@ -25,7 +25,8 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * resolve in any database context and survive `newSession()`. The
   * planner strategy for root collects served on the driver
   * ([[org.apache.spark.sql.graft.SortedRunsCollect]]: ordered collects
-  * and point gets) is injected too.
+  * and point gets) is injected too, with the rule that inlines every
+  * other bucketed read ([[org.apache.spark.sql.graft.InlineCellReads]]).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -37,5 +38,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     }
     ext.injectPlannerStrategy(_ =>
       org.apache.spark.sql.graft.SortedRunsCollect)
+    ext.injectPreCBORule(_ => org.apache.spark.sql.graft.InlineCellReads)
   }
 }

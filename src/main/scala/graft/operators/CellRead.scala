@@ -72,8 +72,9 @@ final case class CellRead(
   def plan(): DataFrame = key match {
     case Range(query, _) => query.resolvedCells()
     case _ =>
+      // an undeclared op-set is probed once per source, not per plan
       val resolved = Resolve.resolve(source.log, desc, nowUs, snapshotSeq,
-        opsPresent, deleteCountHint = source.deleteHint)
+        opsPresent.orElse(Some(source.opsPresent(snapshotSeq))), source.deleteHint)
       key match {
         case Point(k) =>
           resolved.where(col("row_key") === Shim.column(Literal(k, keyAttr.dataType)))

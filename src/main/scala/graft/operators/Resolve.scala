@@ -81,11 +81,7 @@ object Resolve {
     // both on their descriptor and never reach this
     val (present: Set[Int], probedDelCount: Option[Long]) = opsPresent match {
       case Some(p) => (p, None)
-      case None =>
-        val row = bounded.agg(
-          collect_set(col("op")),
-          count(when(col("op").isin(deletes: _*), 1))).collect()(0)
-        (row.getSeq[Int](0).toSet, Some(row.getLong(1)))
+      case None => probe(bounded) match { case (p, dels) => (p, Some(dels)) }
     }
     val hasAtomic = present.exists(atomics.contains)
     val hasValue = present.contains(Value)
@@ -318,6 +314,15 @@ object Resolve {
           Iterator((rk, cfn, q, ts, v, seq))
       }
       .toDF("row_key", "cf", "qualifier", "ts", "value", "seq")
+  }
+
+  /** The op tags present in `log` and its tombstone count: the one job
+    * an undeclared op-set costs [[resolve]]. */
+  def probe(log: DataFrame): (Set[Int], Long) = {
+    val row = log.agg(
+      collect_set(col("op")),
+      count(when(col("op").isin(deletes: _*), 1))).collect()(0)
+    (row.getSeq[Int](0).toSet, row.getLong(1))
   }
 
   /** True when the log's physical plan already delivers its rows

@@ -57,6 +57,14 @@ object CellLogStore {
     /** The stored tombstone count, when the state carries one. */
     def deleteHint: Option[Long] = stored.flatMap(_.deleteCount)
 
+    private val probed = scala.collection.concurrent.TrieMap.empty[Option[Long], Set[Int]]
+
+    /** The op tags of the log's ops with `seq <= snapshotSeq`
+      * ([[Resolve.probe]]), probed once per bound for every read over
+      * this source and every copy the optimizer makes of one. */
+    def opsPresent(snapshotSeq: Option[Long]): Set[Int] = probed.getOrElseUpdate(snapshotSeq,
+      Resolve.probe(snapshotSeq.fold(log)(s => log.where(col("seq") <= s)))._1)
+
     /** The log schema (cell or KV, string or binary keys). */
     def schema: StructType = layout.schema
 

@@ -171,18 +171,18 @@ object CellReadExec {
   * Spark plans the query whole: a key filter prunes the parquet scan's
   * buckets, and a join or grouping on `row_key` of bucketed reads keeps
   * the scans bucketed and plans no exchange. The rule runs in the
-  * session's extra optimizations ([[SortedRunsCollect.install]]), after
-  * Spark's own batches, so the chain is optimized on its own; that
-  * optimizer may rename the chain's output, which is aliased back to its
-  * ids. */
+  * session's extra optimizations ([[SortedRunsCollect.install]]), or once
+  * after the operator optimizations under [[graft.GraftExtensions]], so
+  * the chain is optimized on its own; its plan keeps the chain's output
+  * ids (an id that optimizer renamed is aliased back). */
 object InlineCellReads extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan =
     if (CellReadExec.collect(plan).isDefined) plan
     else plan.transformDown {
       case chain @ PhysicalOperation(_, _, _: CellRead) =>
         val optimized = CellReadExec.inline(chain).queryExecution.optimizedPlan
-        Project(chain.output.zip(optimized.output).map { case (a, b) =>
-          if (a.exprId == b.exprId) b else Alias(b, a.name)(exprId = a.exprId)
-        }, optimized)
+        if (optimized.output.map(_.exprId) == chain.output.map(_.exprId)) optimized
+        else Project(chain.output.zip(optimized.output).map { case (a, b) =>
+          Alias(b, a.name)(exprId = a.exprId) }, optimized)
     }
 }

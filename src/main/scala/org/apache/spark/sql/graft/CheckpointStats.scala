@@ -82,9 +82,12 @@ object CheckpointStats extends org.apache.spark.internal.Logging {
     * stats and partitioning) carries over unchanged. The public
     * alternative, `createDataFrame(df.rdd, schema)`, erases
     * partitioning — the one property the iterative loops exist to
-    * preserve. */
+    * preserve. The target gets what plans a bucketed read
+    * ([[SortedRunsCollect.install]]), which a `newSession()` lacks. */
   def rebind(df: DataFrame,
-      target: org.apache.spark.sql.SparkSession): DataFrame =
+      target: org.apache.spark.sql.SparkSession): DataFrame = {
+    SortedRunsCollect.install(target)
     Dataset.ofRows(target.asInstanceOf[SparkSession],
       df.queryExecution.analyzed)
+  }
 }

@@ -986,10 +986,40 @@ class GraftApiSpec extends AnyFunSuite {
       assert(ordered.queryExecution.executedPlan.toString
         .contains("SortedRunsCollect"), ordered.queryExecution.executedPlan)
       assert(ordered.collect().map(_.getLong(0)).toSeq == (9L to 0L by -1L))
+      // and the rule that inlines a bucketed read: a derived session has
+      // the extensions but a fresh set of extra strategies and rules
+      val t = Graft.createTable(ext, Files.createTempDirectory("graft-ext").toString,
+        graft.model.TableDesc(buckets = 4), Some(Set(OpType.Value)))
+      t.put(Seq(CellOp("k1", "cf", "q", 1L, OpType.Value, "v1".getBytes, 1L),
+        CellOp("k2", "cf", "q", 1L, OpType.Value, "v2".getBytes, 2L)))
+      t.cells().createOrReplaceGlobalTempView("graft_ext_cells")
+      val view = derived.table("global_temp.graft_ext_cells")
+      assert(view.count() == 2L)
+      assert(view.where(col("row_key") === "k2").collect().map(_.getString(0)).toSeq ==
+        Seq("k2"))
+      ext.catalog.dropGlobalTempView("graft_ext_cells")
     } finally {
       SparkSession.setActiveSession(prior)
       SparkSession.setDefaultSession(prior)
     }
+  }
+
+  test("shortestPaths over a bucketed table's cells() equals the flat table's") {
+    // one edge per cell (row_key -> qualifier); string ids take the
+    // distributed loop, which moves the edge frame into its own session
+    val edges = Seq("a" -> "b", "b" -> "c", "c" -> "d", "a" -> "e", "e" -> "d", "x" -> "y")
+    def dists(buckets: Int): Seq[(String, Long)] = {
+      val t = Graft.createTable(spark, Files.createTempDirectory(s"graft-sssp-$buckets").toString,
+        graft.model.TableDesc(buckets = buckets), Some(Set(OpType.Value)))
+      t.put(edges.zipWithIndex.map { case ((s, d), i) =>
+        CellOp(s, "e", d, 1L, OpType.Value, "1".getBytes, i + 1L) })
+      val e = t.cells().select(col("row_key").as("src"), col("qualifier").as("dst"))
+      graft.operators.Graph.shortestPaths(e, spark.range(1).select(lit("a").as("node")))
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq.sorted
+    }
+    val flat = dists(0)
+    assert(flat == Seq("a" -> 0L, "b" -> 1L, "c" -> 2L, "d" -> 2L, "e" -> 1L))
+    assert(dists(4) == flat)
   }
 
   test("clearCaches: drive → clear → re-drive round-trips and releases the pinned checkpoint blocks") {

@@ -887,6 +887,34 @@ class PlanSpec extends AnyFunSuite {
     assert(jobs > 0)
   }
 
+  test("a bucketed read of an undeclared op-set probes once, not on every action") {
+    import spark.implicits._
+    val ops = (0 until 50).map(i => CellOp(f"r$i%04d", "a", "s", 1L, OpType.Value,
+      s"v$i".getBytes, i + 1L)) :+ CellOp("r0007", "", "", 2L, OpType.DelRow, null, 100L)
+    def mk(name: String, declared: Option[Set[Int]]): GraftTable = {
+      val t = Graft.createTable(spark, Files.createTempDirectory(name).toString,
+        TableDesc(buckets = 4), declared)
+      t.put(ops.toDF())
+      t
+    }
+    def actions(t: GraftTable) = JobCount.during(spark) {
+      val df = t.cells()
+      (df.count(), df.count(), df.collect().map(_.getString(0)).toSeq.sorted)
+    }
+    val (want, declaredJobs) = actions(mk("plan-ops-declared",
+      Some(Set(OpType.Value, OpType.DelRow))))
+    val probed = mk("plan-ops-probed", None)
+    val (_, probeJobs) = JobCount.during(spark)(Resolve.probe(probed.log))
+    val (got, jobs) = actions(probed)
+    assert(got == want && want._1 == 49L)
+    assert(jobs == declaredJobs + probeJobs,
+      s"$jobs jobs: $declaredJobs with the op-set declared, $probeJobs per probe")
+    // a read the driver answers needs no probe
+    val (row, getJobs) = JobCount.during(spark)(
+      probed.cells().where(col("row_key") === "r0003").collect())
+    assert(getJobs == 0 && row.map(_.getString(0)).toSeq == Seq("r0003"))
+  }
+
   test("bucketed key-bound scan: collect starts no job; an unbounded scan runs the Spark plan") {
     val t = bucketedTable("plan-scan-driver")
     def scan = t.scan.addColumnFamily("a")
